@@ -1,34 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+import graft.tools.Measure
+import graft.tools.Measure.loadavg
+
 object Bench {
-  // pinned-protocol context: OS load (1/5/15-min averages) so a
-  // noisy-VM run is distinguishable from a plan regression when two
-  // rounds' numbers are compared
-  private def loadavg: String = scala.util.Try(
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg"))).trim
-      .split(" ").take(3).mkString(",")).getOrElse("")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // production-executor broadcast band (see GraftSession): lets
-      // 10–60 MB filtered dims hash-join map-side; size-gated, so
-      // still shuffle-safe when a side outgrows it
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // local[32] scan sizing: the generated tables arrive as ~15–75MB
-      // files, which the 128 MB default packs into a handful of scan
-      // tasks — most of the 32 cores sit idle through every scan
-      // stage. 32 MB splits keep scan parallelism ≥ cores here; a
-      // real cluster keeps the default (at 100 TB, 32 MB would mean
-      // millions of tasks — this is harness sizing, not a plan rule)
-      .config("spark.sql.files.maxPartitionBytes", 32 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = Measure.start(session("graft-bench"))
     // Warm the session so the first measured queries aren't charged
     // one-time JVM setup: codegen/Janino, parquet footers, and the
     // broadcast/shuffle/window executor paths. Warmup work runs on
@@ -164,4 +145,21 @@ object Bench {
     println(summary)
     spark.stop()
   }
+
+  /** Bench's session. Profile and ServerBench time queries on the same
+    * one, so their numbers are Bench's numbers.
+    */
+  private[graft] def session(appName: String): SparkSession.Builder =
+    GraftSession.local(appName)
+      // production-executor broadcast band (see GraftSession): lets
+      // 10–60 MB filtered dims hash-join map-side; size-gated, so
+      // still shuffle-safe when a side outgrows it
+      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
+      // local[32] scan sizing: the generated tables arrive as ~15–75MB
+      // files, which the 128 MB default packs into a handful of scan
+      // tasks — most of the 32 cores sit idle through every scan
+      // stage. 32 MB splits keep scan parallelism ≥ cores here; a
+      // real cluster keeps the default (at 100 TB, 32 MB would mean
+      // millions of tasks — this is harness sizing, not a plan rule)
+      .config("spark.sql.files.maxPartitionBytes", 32 * 1024 * 1024)
 }

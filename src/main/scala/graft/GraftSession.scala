@@ -37,4 +37,21 @@ object GraftSession {
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
       // µs parquet timestamps interop cleanly with arrow/duckdb
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+
+  /** Cores for a local session: SPARK_GRAFT_CPUS, else every core the
+    * JVM sees.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The bare local session the mains run on: `local[cpus]`, one
+    * shuffle partition per core, no UI. No graft defaults are added;
+    * each main chains the configs it needs.
+    */
+  def local(appName: String): SparkSession.Builder =
+    SparkSession.builder()
+      .appName(appName)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.ui.enabled", "false")
 }

@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
+
+import graft.TempDirs.tempDir
 
 /** Source/sink queries (SURVEY §2.D): these run a real write+read
   * through the format under test and are then checked against the
@@ -16,7 +16,7 @@ object QueriesFormats {
     // -------------------------------------------------- D1/D2 arrow ipc
     QueryDef("q_arrow_roundtrip",
       (s, d) => {
-        val dir = Files.createTempDirectory("graft-arrow-rt").toString
+        val dir = tempDir("graft-arrow-rt")
         Tables.lineitem(s, d)
           .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
             "l_returnflag", "l_shipdate")
@@ -34,7 +34,7 @@ object QueriesFormats {
     // write_to_dataset / ParquetDataset filters).
     QueryDef("q_partitioned_dataset",
       (s, d) => {
-        val dir = Files.createTempDirectory("graft-partds").toString
+        val dir = tempDir("graft-partds")
         // repartition by the partition column first: one writer task
         // per partition value instead of every task writing every
         // value (tasks × values small files — the classic partitioned-
@@ -85,7 +85,7 @@ object QueriesFormats {
     // batch path (one scan partition per sealed object).
     QueryDef("q_plasma_roundtrip",
       (s, d) => {
-        val dir = Files.createTempDirectory("graft-plasma-q").toString
+        val dir = tempDir("graft-plasma-q")
         val store = new graft.sources.plasma.PlasmaStore(dir)
         store.putDataFrame("customers",
           Tables.customer(s, d).select("c_custkey", "c_name", "c_acctbal"))
@@ -98,7 +98,7 @@ object QueriesFormats {
     // ------------------------------------------------------- D8 ORC
     QueryDef("q_orc_roundtrip",
       (s, d) => {
-        val dir = Files.createTempDirectory("graft-orc").toString
+        val dir = tempDir("graft-orc")
         Tables.supplier(s, d).write.mode("overwrite").orc(dir)
         s.read.orc(dir).select("s_suppkey", "s_name", "s_acctbal")
           .orderBy("s_suppkey")
@@ -109,7 +109,7 @@ object QueriesFormats {
     // ------------------------------------------------------ D9 JSON
     QueryDef("q_json_roundtrip",
       (s, d) => {
-        val dir = Files.createTempDirectory("graft-json").toString
+        val dir = tempDir("graft-json")
         Tables.nation(s, d).write.mode("overwrite").json(dir)
         s.read.json(dir)
           .select(col("n_nationkey").cast("int").as("n_nationkey"),
@@ -125,7 +125,7 @@ object QueriesFormats {
     // arrow source, which sniffs the FEA1 magic per file.
     QueryDef("q_feather_roundtrip",
       (s, d) => {
-        val dir = Files.createTempDirectory("graft-feather").toString
+        val dir = tempDir("graft-feather")
         graft.sources.feather.FeatherV1.write(
           Tables.customer(s, d)
             .select("c_custkey", "c_name", "c_acctbal", "c_nationkey"), dir)
@@ -140,7 +140,7 @@ object QueriesFormats {
     // brace in the same arrow source.
     QueryDef("q_arrow_json_roundtrip",
       (s, d) => {
-        val dir = Files.createTempDirectory("graft-ajson").toString
+        val dir = tempDir("graft-ajson")
         graft.sources.json.ArrowJsonIntegration.write(
           Tables.part(s, d).select("p_partkey", "p_name", "p_brand", "p_size"), dir)
         s.read.format("arrow").load(dir).orderBy("p_partkey")
@@ -151,7 +151,7 @@ object QueriesFormats {
     // ------------------------------------------------------- D10 CSV
     QueryDef("q_csv_roundtrip",
       (s, d) => {
-        val dir = Files.createTempDirectory("graft-csv").toString
+        val dir = tempDir("graft-csv")
         Tables.region(s, d).write.mode("overwrite")
           .option("header", "true").csv(dir)
         s.read.option("header", "true").option("inferSchema", "false")

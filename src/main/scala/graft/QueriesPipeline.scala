@@ -468,8 +468,7 @@ object QueriesPipeline {
     QueryDef("q_ann_index",
       (s, d) => {
         val idx = SessionMemo.any(s, ("annIndex", d)) {
-          val dir = java.nio.file.Files
-            .createTempDirectory("graft-ann-index").toString
+          val dir = TempDirs.tempDir("graft-ann-index")
           AnnIndex.write(Tables.embeddings(s, d), dir, dim = 64,
             nCells = 16, stride = 7, kmeansIters = 1, m = 8, ncodes = 16)
         }
@@ -1649,8 +1648,7 @@ object QueriesPipeline {
     QueryDef("q_bm25_index",
       (s, d) => {
         val idx = SessionMemo.any(s, ("bm25Index", d)) {
-          val dir = java.nio.file.Files
-            .createTempDirectory("graft-bm25-index").toString
+          val dir = TempDirs.tempDir("graft-bm25-index")
           operators.Bm25Index.write(Tables.documents(s, d),
             "doc_id", "text", dir, nBuckets = 16)
         }

@@ -144,8 +144,8 @@ object QueriesTpch {
         // side (small enough for AQE to broadcast at bench scales).
         // Catalyst does not reorder user joins without CBO stats, so
         // the filter-first order DuckDB's optimizer picks is written
-        // out here. Interleaved same-sitting A/B at sf3 (tools/
-        // Q8Probe, results identical): 2.05 vs 3.43 s median — the
+        // out here. Interleaved same-sitting A/B at sf3
+        // (TPCHGAP_r13.json, results identical): 2.05 vs 3.43 s median — the
         // 2.7× warm-slope ratio the r13 gap fit flagged drops to the
         // core's structural band.
         val nCust = Tables.nation(s, d).select(col("n_nationkey").as("c_nk"),
@@ -235,7 +235,7 @@ object QueriesTpch {
       // to the 20 survivors via a broadcast of the bounded top — the
       // customer table is probed map-side, never shuffled, and the
       // wide strings never enter an exchange. 1.44 → 1.27 s sf3
-      // median, identity-require()d (tools/CensusProbe); at 100 TB the
+      // median, identity-checked (TPCHGAP_r14.json); at 100 TB the
       // agg exchange carries 16 bytes instead of ~200 per surviving
       // fact row.
       // FK PRECONDITION (r15 ADVICE, mirroring q_tpch15's isNotNull
@@ -244,8 +244,8 @@ object QueriesTpch {
       // referential integrity). A top-20 o_custkey missing from
       // customer would yield <20 rows and displace a qualifying
       // customer, where the classic join-first form would have
-      // filtered that fact pre-aggregation. CensusProbe
-      // identity-require()s the two forms equal on this data.
+      // filtered that fact pre-aggregation. The two forms were
+      // identity-checked equal on this data (TPCHGAP_r14.json).
       (s, d) => {
         val rev = Tables.lineitem(s, d)
           .where(col("l_returnflag") === "R")
@@ -343,7 +343,7 @@ object QueriesTpch {
         // isnotnull(l_suppkey), so it is written here on the SHARED
         // relation (r14 census fix: without it lineitem scanned and
         // aggregated twice; 1.51 → 1.04 s sf3 median, identity-
-        // require()d in tools/CensusProbe). No semantic change:
+        // checked, TPCHGAP_r14.json). No semantic change:
         // l_suppkey is a non-null FK and a null-key group could never
         // join supplier.
         val rev = Tables.lineitem(s, d)

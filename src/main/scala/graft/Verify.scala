@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,20 +9,14 @@ object Verify {
     // the driver invokes with two args → full suite
     val keep: String => Boolean =
       if (args.length < 3) _ => true else args(2).split(",").toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = tools.Measure.start(GraftSession.local("graft-verify")
       .config("spark.sql.session.timeZone", "UTC")
       // same broadcast band as Bench/GraftSession so the verified
       // plans are the benched plans
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
       // write µs (not INT96) so dumped timestamps carry the same
       // arrow dtype DuckDB produces for the oracle side
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter { case (n, _) => keep(n) }.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * the token array twice, runs a lambda per element OUTSIDE
   * whole-stage codegen, and allocates a struct per bigram before the
   * explode even starts — measured as ~90% of q_bigram_lm at sf3
-  * (blm_pairs 5.08 s vs blm_tokens 0.63 s, OptProbeR16). This emits
+  * (blm_pairs 5.08 s vs blm_tokens 0.63 s, OPTIMIZATION_r16.md). This emits
   * each pair straight off the child array: no slices, no struct array,
   * no per-element lambda. Row semantics are identical: arrays with
   * < 2 elements yield nothing, element i pairs with element i+1.

@@ -188,7 +188,7 @@ final class TopKState(val k: Int, val desc: Boolean) {
   * form deserializes every input row into a ScoredId case class and
   * appends to an immutable Vector — at brute-force ranker volume
   * (|queries|·|corpus| rows) that encoder+allocation path dominated
-  * the whole query (OptProbe r15: rankTopK was 7.2 of q_mmr_rerank's
+  * the whole query (OPTIMIZATION_r15.md: rankTopK was 7.2 of q_mmr_rerank's
   * 12.0 s at sf3). Here update() reads the two primitives straight
   * from the InternalRow and the warmed-up common case rejects a row
   * on two compares with zero allocation.

@@ -19,10 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * shuffled TWICE: bucket-count pass + broadcast-join scoring pass)
   * with these kernels makes DSIR two narrow scans: one histogram
   * aggregation whose shuffle is O(tasks) 2·buckets-long buffers, and
-  * one map-only projection — no doc-keyed shuffle at all. The V2Probe
-  * sf30 attribution that motivated this measured the exploded gram
-  * stream (~80M rows at 1.5M docs) as pipeline v2's super-scaling
-  * stage.
+  * one map-only projection — no doc-keyed shuffle at all. The sf30
+  * attribution that motivated this (PIPELINE_r10.json) measured the
+  * exploded gram stream (~80M rows at 1.5M docs) as pipeline v2's
+  * super-scaling stage.
   */
 object DsirRuntime {
 

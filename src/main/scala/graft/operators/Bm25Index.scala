@@ -73,7 +73,7 @@ object Bm25Index {
     // Ledger cache (r15 ADVICE): ledgerEntries re-read the whole
     // unversioned dir at the start of EVERY appendDocsBatch — O(files)
     // opens per batch, O(N²) cumulative over a long-lived stream (the
-    // ~0.36 ms/file-open pathology DedupServeProbe measured). The map
+    // ~0.36 ms/file-open pathology DEDUP_SERVE_r14.json measured). The map
     // is bounded (≤ a few rows per batch) so it caches on the handle;
     // every ledger write through this handle invalidates. Same
     // single-writer ownership contract as the DedupIndex listing cache.

@@ -1230,7 +1230,7 @@ object Curation {
     * then rides into the DsirScore codegen kernel as a reference
     * object and scoring is a MAP-ONLY projection — no doc-keyed
     * shuffle, no exploded bigram relation (the previous shape
-    * materialized O(corpus tokens) gram rows twice; V2Probe at 300×
+    * materialized O(corpus tokens) gram rows twice; PIPELINE_r10.json at 300×
     * measured it as pipeline v2's super-scaling stage). The
     * histogram collect is ≤ 2·buckets longs, the centroid sanction.
     * `buckets` dials feature-hash resolution, not memory.
@@ -1260,7 +1260,7 @@ object Curation {
       // 10) % buckets. The previous shape exploded the corpus into an
       // O(corpus tokens) bucket stream whose three consumers (bucket
       // histogram, side totals, scoring join) did NOT share work at
-      // runtime (OptProbe r15 peek: ReusedExchange=0, six corpus scans
+      // runtime (OPTIMIZATION_r15.md peek: ReusedExchange=0, six corpus scans
       // in the executed plan) — the md5-per-gram pass ran three times.
       // Now: one bounded histogram aggregate (O(tasks) buffers on the
       // wire) + one map-only scoring projection; no explode, no joins,

@@ -141,7 +141,7 @@ object DedupIndex {
     * skips ~storeDocs·(1 − coverage) rows, so pruning pays only while
     * rows-saved-per-file-opened ≈ storeDocs / matches exceeds the
     * file-open cost expressed in row-reads — measured on this FS at
-    * ~8k rows/open (tools/DedupServeProbe at the 5M decade: 65536
+    * ~8k rows/open (DEDUP_SERVE_r14.json at the 5M decade: 65536
     * buckets read 7× fewer rows yet took 17× longer — 9258 tiny files
     * at ~0.36 ms/open vs 5M rows streaming through 256 files in
     * 0.19 s). When the observed store size says pruning can't pay

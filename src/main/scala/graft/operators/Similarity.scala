@@ -76,7 +76,7 @@ object Similarity {
     // r15: native TypedImperativeAggregate (primitive arrays, direct
     // InternalRow reads) instead of the udaf(BoundedTopK) Aggregator,
     // whose per-row encoder round-trip + Vector append measured as 60%
-    // of q_mmr_rerank's brute-force ranking at sf3 (OptProbe r15).
+    // of q_mmr_rerank's brute-force ranking at sf3 (OPTIMIZATION_r15.md).
     // Ordering, tiebreaks and output schema are byte-identical
     // (SkewSpec/SimilaritySpec pin them).
     import graft.functions.exprs
@@ -876,7 +876,7 @@ object Similarity {
       // the BNLJ condition as the FIRST conjunct — the 64-dim dot ran
       // for every ordered pair, including the half the cheap id
       // compare rejects. Cheap-conjunct-first halves the pass
-      // (OptProbe r15: 27.9 → 13.3 s at sf3; rows identical — same
+      // (OPTIMIZATION_r15.md: 27.9 → 13.3 s at sf3; rows identical — same
       // conjunction, reordered). Survivors re-evaluate the dot once
       // more in the projection (and the round), a vanishing cost at
       // near-dup selectivity.

@@ -353,7 +353,7 @@ object TextAnalysis {
                        minHeadCount: Long = 20L): DataFrame = {
     require(k > 0 && minHeadCount >= 0, s"bad k=$k / minHeadCount=$minHeadCount")
     // r16: native BigramPairs generator — the zip_with(slice, slice) →
-    // struct → explode chain was ~90% of q_bigram_lm at sf3 (OptProbeR16
+    // struct → explode chain was ~90% of q_bigram_lm at sf3 (OPTIMIZATION_r16.md:
     // blm_pairs 5.08 s vs blm_tokens 0.63 s); same (w1, w2) rows
     val pairs = df.select(graft.functions.exprs.toColumn(
       graft.functions.BigramPairs(
@@ -396,7 +396,7 @@ object TextAnalysis {
                           textCol: String): DataFrame =
     // r16: native BigramPairs generator (see bigramNextTokens) — the
     // HOF chain it replaces dominated BOTH halves of
-    // q_bigram_perplexity (stats build AND scoring pass, OptProbeR16)
+    // q_bigram_perplexity (stats build AND scoring pass, OPTIMIZATION_r16.md)
     docs.select(col(idCol).as("doc_id"),
       graft.functions.exprs.toColumn(graft.functions.BigramPairs(
         graft.functions.exprs.toExpr(tokens(col(textCol)))))

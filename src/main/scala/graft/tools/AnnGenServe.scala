@@ -1,9 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+import graft.TempDirs.tempDir
 import graft.operators.{AnnIndex, Similarity}
+import graft.tools.Measure.{dropPageCache, median, r3, time, timed, times}
 
 /** The 10^8 ANN serving point (VERDICT r10 item 8). The sfN-replica
   * protocol (AnnServeSmoke) tops out on this VM at 10M vectors: a
@@ -31,11 +34,6 @@ import graft.operators.{AnnIndex, Similarity}
   */
 object AnnGenServe {
 
-  private def dropPageCache(): Boolean = {
-    import scala.sys.process._
-    Seq("sh", "-c", "sync && echo 3 > /proc/sys/vm/drop_caches").! == 0
-  }
-
   /** Deterministic pseudo-random embedding: 64 sin-mixed dims keyed by
     * vec_id — cluster structure via the coarse term, per-row jitter
     * via the fine term (same family as the ScaleGen jitter).
@@ -50,13 +48,8 @@ object AnnGenServe {
     val millions = args(0).toInt
     val reps = if (args.length > 1) args(1).toInt else 3
     val n = millions.toLong * 1000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = Measure.start(GraftSession.local("graft-anngen-serve"))
     import spark.implicits._
 
     val nCells = sys.env.get("SPARK_GRAFT_ANN_CELLS").map(_.toInt)
@@ -65,7 +58,7 @@ object AnnGenServe {
       .getOrElse(4)
     val (stride, k) = (7L, 5)
     def corpus: DataFrame = spark.range(n).toDF("vec_id")
-      .repartition(cpus.toInt * 4)
+      .repartition(cpus * 4)
       .select(col("vec_id"), genEmbedding(col("vec_id")).as("embedding"))
     // bounded artifacts from a 1% sample — geometry training needs a
     // distribution, not the corpus (the train-once discipline)
@@ -73,15 +66,12 @@ object AnnGenServe {
     val cents = Similarity.trainIvfCentroids(sample, nCells, stride)
     val books = Similarity.trainPqCodebooks(sample, dim = 64,
       stride = stride, iters = 1)
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-anngen").toString
-    val filesPerCell = math.max(1, cpus.toInt / nprobe)
-    val t0 = System.nanoTime()
-    val idx = AnnIndex.write(corpus, s"$work/index", dim = 64,
-      nCells = nCells, stride = stride, centroids = Some(cents),
+    val work = tempDir("graft-anngen")
+    val filesPerCell = math.max(1, cpus / nprobe)
+    val (idx, buildSec) = timed(AnnIndex.write(corpus, s"$work/index",
+      dim = 64, nCells = nCells, stride = stride, centroids = Some(cents),
       codebooks = Some(books), storeEmbeddings = false,
-      filesPerCell = filesPerCell)
-    val buildSec = (System.nanoTime() - t0) / 1e9
+      filesPerCell = filesPerCell))
     val indexBytes = {
       val p = new org.apache.hadoop.fs.Path(s"$work/index")
       p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -93,23 +83,18 @@ object AnnGenServe {
             .toFloat).toArray))
       .toDF("vec_id", "embedding")
 
-    def time(f: => Long): Double = {
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     def fromDisk() = AnnIndex.searchAdc(idx, qLocal, k, nprobe,
       refine = 0).count()
     def recompute() = Similarity.ivfPqTopK(corpus, qLocal, k, dim = 64,
       nCells = nCells, stride = stride, nprobe = nprobe, refine = 0,
       centroids = Some(cents), codebooks = Some(books)).count()
     fromDisk() // JIT + plan + partition-discovery warmup
-    val warmDisk = median((0 until reps).map(_ => time(fromDisk())))
+    val warmDisk = median(times(reps)(fromDisk()))
     val canDrop = dropPageCache()
     val coldDisk = time(fromDisk())
     val warmRecompute = time(recompute()) // one rep: minutes-scale
     dropPageCache()
     val coldRecompute = time(recompute())
-    def r3(x: Double) = (x * 1000).round / 1000.0
     println(s"""{"metric":"ann_serve_gen","unit":"sec",""" +
       s""""corpus_rows":$n,"generated_corpus":true,"reps":$reps,""" +
       s""""codes_only":true,"refine":0,"page_cache_dropped":$canDrop,""" +

@@ -3,8 +3,10 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
+import graft.TempDirs.tempDir
 import graft.operators.{AnnIndex, Similarity}
+import graft.tools.Measure.{dropPageCache, median, r3, time, timed, times}
 
 /** Serving-path measurement for the persisted ANN index (G11): the
   * same query batch answered `reps` times by (a) ivfTopK, which
@@ -33,26 +35,14 @@ import graft.operators.{AnnIndex, Similarity}
   */
 object AnnServeSmoke {
 
-  /** Best-effort page-cache drop; true when the kernel accepted it. */
-  private def dropPageCache(): Boolean = {
-    import scala.sys.process._
-    Seq("sh", "-c",
-      "sync && echo 3 > /proc/sys/vm/drop_caches").! == 0
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: AnnServeSmoke <sfDir> [reps] [mult] [cold]")
     val sfDir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 5
     val mult = if (args.length > 2) args(2).toInt else 1
     val coldMode = args.length > 3 && args(3) == "cold"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = Measure.start(GraftSession.local("graft-ann-serve"))
 
     val base = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
     val span = base.agg(max(col("vec_id"))).head().getLong(0) + 1L
@@ -68,25 +58,19 @@ object AnnServeSmoke {
     if (coldMode) { runCold(spark, emb, sfDir, mult, reps, cpus); return }
 
     val cents = Similarity.trainIvfCentroids(emb, nCells, stride)
-    val dir = java.nio.file.Files.createTempDirectory("graft-annserve").toString
-    val tBuild0 = System.nanoTime()
-    val idx = AnnIndex.write(emb, dir, dim = 64, nCells = nCells,
-      stride = stride, centroids = Some(cents))
-    val buildSec = (System.nanoTime() - tBuild0) / 1e9
+    val dir = tempDir("graft-annserve")
+    val (idx, buildSec) = timed(AnnIndex.write(emb, dir, dim = 64,
+      nCells = nCells, stride = stride, centroids = Some(cents)))
 
-    def time(f: => Long): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // warm both paths once, then measure medians
     Similarity.ivfTopK(emb, queries, k, nCells, stride, nprobe,
       centroids = Some(cents)).count()
     AnnIndex.searchExact(idx, queries, k, nprobe).count()
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-    val recompute = median((0 until reps).map(_ => time(
+    val recompute = median(times(reps)(
       Similarity.ivfTopK(emb, queries, k, nCells, stride, nprobe,
-        centroids = Some(cents)).count())))
-    val fromDisk = median((0 until reps).map(_ => time(
-      AnnIndex.searchExact(idx, queries, k, nprobe).count())))
+        centroids = Some(cents)).count()))
+    val fromDisk = median(times(reps)(
+      AnnIndex.searchExact(idx, queries, k, nprobe).count()))
 
     println(s"""{"metric":"ann_serve","unit":"sec","sf_dir":"$sfDir",""" +
       s""""mult":$mult,"corpus_rows":${emb.count()},""" +
@@ -103,12 +87,12 @@ object AnnServeSmoke {
     * premium is attributable.
     */
   private def runCold(spark: SparkSession, embSrc: org.apache.spark.sql.DataFrame,
-                      sfDir: String, mult: Int, reps: Int, cpus: String): Unit = {
+                      sfDir: String, mult: Int, reps: Int, cpus: Int): Unit = {
     import spark.implicits._
     val nCells = sys.env.get("SPARK_GRAFT_ANN_CELLS").map(_.toInt).getOrElse(16)
     val nprobe = sys.env.get("SPARK_GRAFT_ANN_NPROBE").map(_.toInt).getOrElse(4)
     val (stride, k) = (7L, 5)
-    val work = java.nio.file.Files.createTempDirectory("graft-anncold").toString
+    val work = tempDir("graft-anncold")
     // both paths start from PARQUET ON DISK — the serving reality the
     // warm in-memory protocol (above) cannot see
     embSrc.write.mode("overwrite").parquet(s"$work/corpus")
@@ -119,32 +103,25 @@ object AnnServeSmoke {
     // filesPerCell sized so a probe of nprobe cells fans out to the
     // full executor width (nprobe * filesPerCell >= cores); at 100 TB
     // cells exceed the 128 MB split size and need no help
-    val filesPerCell = math.max(1, cpus.toInt / nprobe)
-    val t0 = System.nanoTime()
-    val idx = AnnIndex.write(corpus, s"$work/index", dim = 64,
-      nCells = nCells, stride = stride, centroids = Some(cents),
+    val filesPerCell = math.max(1, cpus / nprobe)
+    val (idx, buildSec) = timed(AnnIndex.write(corpus, s"$work/index",
+      dim = 64, nCells = nCells, stride = stride, centroids = Some(cents),
       codebooks = Some(books), storeEmbeddings = false,
-      filesPerCell = filesPerCell)
-    val buildSec = (System.nanoTime() - t0) / 1e9
+      filesPerCell = filesPerCell))
     // queries live in a LOCAL relation: query-side input never reads disk
     val qLocal = corpus.where(col("vec_id") < 10)
       .as[(Long, Array[Float])].collect().toSeq.toDF("vec_id", "embedding")
-    def time(f: => Long): Double = {
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     def fromDisk() = AnnIndex.searchAdc(idx, qLocal, k, nprobe, refine = 0).count()
     def recompute() = Similarity.ivfPqTopK(corpus, qLocal, k, dim = 64,
       nCells = nCells, stride = stride, nprobe = nprobe, refine = 0,
       centroids = Some(cents), codebooks = Some(books)).count()
     fromDisk(); recompute() // JIT + plan warmup
-    val warmDisk = median((0 until reps).map(_ => time(fromDisk())))
-    val warmRecompute = median((0 until reps).map(_ => time(recompute())))
+    val warmDisk = median(times(reps)(fromDisk()))
+    val warmRecompute = median(times(reps)(recompute()))
     val canDrop = dropPageCache()
     val coldDisk = time(fromDisk())
     dropPageCache()
     val coldRecompute = time(recompute())
-    def r3(x: Double) = (x * 1000).round / 1000.0
     println(s"""{"metric":"ann_serve_cold","unit":"sec","sf_dir":"$sfDir",""" +
       s""""mult":$mult,"corpus_rows":$corpusRows,"reps":$reps,""" +
       s""""codes_only":true,"refine":0,"page_cache_dropped":$canDrop,""" +

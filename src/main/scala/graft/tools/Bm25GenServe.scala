@@ -1,9 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+import graft.TempDirs.tempDir
 import graft.operators.{Bm25Index, TextAnalysis}
+import graft.tools.Measure.{dropPageCache, median, times}
 
 /** The 10^8 BM25 serving decade (VERDICT r12 item 7) via the
   * AnnGenServe generated-corpus protocol: the replica protocol tops
@@ -36,11 +39,6 @@ import graft.operators.{Bm25Index, TextAnalysis}
   */
 object Bm25GenServe {
 
-  private def dropPageCache(): Boolean = {
-    import scala.sys.process._
-    Seq("sh", "-c", "sync && echo 3 > /proc/sys/vm/drop_caches").! == 0
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: Bm25GenServe <millions> [reps] [wordsPerDoc] [vocab] [maxDfShare] [nBuckets] [filesPerBucket] [slices]")
@@ -49,14 +47,10 @@ object Bm25GenServe {
     val wpd = if (args.length > 2) args(2).toInt else 12
     val vocab = if (args.length > 3) args(3).toInt else 100000
     val n = millions.toLong * 1000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "512")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.start(GraftSession.local("graft-bm25gen-serve")
+      .config("spark.sql.shuffle.partitions", shuf))
     import spark.implicits._
     spark.range(1000).selectExpr("sum(id)").collect() // warm
 
@@ -70,11 +64,10 @@ object Bm25GenServe {
           .cast("long").cast("string"))
       }))
     def corpus: DataFrame = spark.range(n)
-      .repartition(Integer.parseInt(cpus) * 8)
+      .repartition(cpus * 8)
       .select(col("id").as("doc_id"), genText(col("id")).as("text"))
 
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bm25-gen").toString
+    val dir = tempDir("graft-bm25-gen")
     val t0 = System.nanoTime()
     val nBuckets = if (args.length > 5) args(5).toInt else 64
     val fpb = if (args.length > 6) args(6).toInt else 4
@@ -96,7 +89,7 @@ object Bm25GenServe {
       val per = n / slices
       val hi = if (i == slices - 1) n else (i + 1) * per
       spark.range(i * per, hi)
-        .repartition(Integer.parseInt(cpus) * 8)
+        .repartition(cpus * 8)
         .select(col("id").as("doc_id"), genText(col("id")).as("text"))
     }
     def freeGb: Double =
@@ -158,23 +151,20 @@ object Bm25GenServe {
     val totalFiles = index.postings.select(input_file_name())
       .distinct().count()
 
-    def time(f: => Long): Seq[Double] = (1 to reps).map { _ =>
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
     // cold from-disk: page cache dropped, fresh session cache
     val dropped = dropPageCache()
     val tc0 = System.nanoTime()
     val nCold = Bm25Index.search(index, queries, "doc_id", "text",
       topK = 20).count()
     val coldWall = (System.nanoTime() - tc0) / 1e9
-    val warm = time(Bm25Index.search(index, queries, "doc_id", "text",
+    val warm = times(reps)(Bm25Index.search(index, queries, "doc_id", "text",
       topK = 20).count())
     // r13 maxDfShare leg: elide Zipf-head query terms (idf ~ 0) — the
     // warm search should track the DISCRIMINATIVE posting lists, not
     // the corpus-scale head (exact drop-from-the-bag contract,
     // Bm25IndexSpec)
     val dfShare = if (args.length > 4) Some(args(4).toDouble) else None
-    val warmElided = dfShare.map(sh => time(Bm25Index.search(index,
+    val warmElided = dfShare.map(sh => times(reps)(Bm25Index.search(index,
       queries, "doc_id", "text", topK = 20,
       maxDfShare = Some(sh)).count()))
     // resident leg: ONE search DataFrame re-executed per rep — the
@@ -185,12 +175,12 @@ object Bm25GenServe {
     val residentDf = Bm25Index.search(index, queries, "doc_id", "text",
       topK = 20)
     residentDf.count()
-    val warmResident = time(residentDf.count())
+    val warmResident = times(reps)(residentDf.count())
     val residentElided = dfShare.map { sh =>
       val df = Bm25Index.search(index, queries, "doc_id", "text",
         topK = 20, maxDfShare = Some(sh))
       df.count()
-      time(df.count())
+      times(reps)(df.count())
     }
     // r15 per-bucket compaction leg (VERDICT r14 item 2): fold the
     // slice deltas in bucket GROUPS (compactDeltas bucketsPerJob) —
@@ -221,34 +211,33 @@ object Bm25GenServe {
       Some((c, wall))
     }
     val warmCompacted = compacted.map { case (c, _) =>
-      time(Bm25Index.search(c, queries, "doc_id", "text",
+      times(reps)(Bm25Index.search(c, queries, "doc_id", "text",
         topK = 20).count())
     }
     val warmCompactedElided = (compacted, dfShare) match {
       case (Some((c, _)), Some(sh)) =>
-        Some(time(Bm25Index.search(c, queries, "doc_id", "text",
+        Some(times(reps)(Bm25Index.search(c, queries, "doc_id", "text",
           topK = 20, maxDfShare = Some(sh)).count()))
       case _ => None
     }
 
     // IO-free recompute: one rep is enough to bound the contrast at
     // the big decades; it re-generates + re-tokenizes the corpus
-    val recompute = time(TextAnalysis.bm25Retrieve(
+    val recompute = times(reps)(TextAnalysis.bm25Retrieve(
       corpus, queries, "doc_id", "text", topK = 20).count())
 
-    def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
     val elidedJson = (dfShare, warmElided) match {
       case (Some(sh), Some(we)) =>
-        f""""max_df_share":$sh,"warm_elided_med":${med(we)}%.3f,"resident_elided_med":${residentElided.map(med).getOrElse(-1.0)}%.3f,"""
+        f""""max_df_share":$sh,"warm_elided_med":${median(we)}%.3f,"resident_elided_med":${residentElided.map(median).getOrElse(-1.0)}%.3f,"""
       case _ => ""
     }
     val compactJson = compacted match {
       case Some((_, wall)) =>
-        f""""compact_groups":$compactGroups,"compact_wall":$wall%.3f,"compact_min_free_gb":$minFreeGb%.1f,"warm_compacted_med":${warmCompacted.map(med).getOrElse(-1.0)}%.3f,"warm_compacted_elided_med":${warmCompactedElided.map(med).getOrElse(-1.0)}%.3f,"""
+        f""""compact_groups":$compactGroups,"compact_wall":$wall%.3f,"compact_min_free_gb":$minFreeGb%.1f,"warm_compacted_med":${warmCompacted.map(median).getOrElse(-1.0)}%.3f,"warm_compacted_elided_med":${warmCompactedElided.map(median).getOrElse(-1.0)}%.3f,"""
       case None => ""
     }
     val ts = java.time.Instant.now().toString
-    println(f"""{"metric":"bm25_gen_serve","n_docs":$n,"words_per_doc":$wpd,"vocab":$vocab,"build_wall":$buildWall%.3f,"index_gb":${idxBytes / 1e9}%.2f,"cold":$coldWall%.3f,"warm_med":${med(warm)}%.3f,"recompute_med":${med(recompute)}%.3f,"speedup_vs_recompute":${med(recompute) / med(warm)}%.1f,"warm_resident_med":${med(warmResident)}%.3f,"n_cold_rows":$nCold,"page_cache_dropped":$dropped,"files_read":${readFiles.size},"files_total":$totalFiles,"n_buckets":$nBuckets,"files_per_bucket":$fpb,"reps":$reps,"shuffle_partitions":"$shuf","cpus":"$cpus","driver_mem":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",$elidedJson$compactJson"utc":"$ts"}""")
+    println(f"""{"metric":"bm25_gen_serve","n_docs":$n,"words_per_doc":$wpd,"vocab":$vocab,"build_wall":$buildWall%.3f,"index_gb":${idxBytes / 1e9}%.2f,"cold":$coldWall%.3f,"warm_med":${median(warm)}%.3f,"recompute_med":${median(recompute)}%.3f,"speedup_vs_recompute":${median(recompute) / median(warm)}%.1f,"warm_resident_med":${median(warmResident)}%.3f,"n_cold_rows":$nCold,"page_cache_dropped":$dropped,"files_read":${readFiles.size},"files_total":$totalFiles,"n_buckets":$nBuckets,"files_per_bucket":$fpb,"reps":$reps,"shuffle_partitions":"$shuf","cpus":"$cpus","driver_mem":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",$elidedJson$compactJson"utc":"$ts"}""")
     spark.stop()
   }
 }

@@ -1,10 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
+import graft.TempDirs.tempDir
 import graft.operators.{Bm25Index, TextAnalysis}
+import graft.tools.Measure.{median, timed, times}
 
 /** Serving-path measurement for the persisted BM25 index (H18): the
   * same query batch answered `reps` times by (a) bm25Retrieve, which
@@ -25,43 +26,26 @@ object Bm25ServeSmoke {
     require(args.nonEmpty, "usage: Bm25ServeSmoke <sfDir> [reps]")
     val sfDir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.start(GraftSession.local("graft-bm25-serve"))
 
     val docs = Tables.documents(spark, sfDir)
     val nDocs = docs.count()
     val queries = docs.where(col("doc_id") < 3)
 
-    val t0 = System.nanoTime()
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bm25-serve").toString
-    val index = Bm25Index.write(docs, "doc_id", "text", dir, nBuckets = 64)
-    val buildWall = (System.nanoTime() - t0) / 1e9
+    val (index, buildWall) = timed(Bm25Index.write(docs, "doc_id", "text",
+      tempDir("graft-bm25-serve"), nBuckets = 64))
 
-    def time(f: => Long): Seq[Double] = (1 to reps).map { _ =>
-      val t = System.nanoTime()
-      f
-      (System.nanoTime() - t) / 1e9
-    }
-
-    val recompute = time(TextAnalysis.bm25Retrieve(
+    val recompute = times(reps)(TextAnalysis.bm25Retrieve(
       docs, queries, "doc_id", "text", topK = 20).count())
-    val fromIndex = time(Bm25Index.search(
+    val fromIndex = times(reps)(Bm25Index.search(
       index, queries, "doc_id", "text", topK = 20).count())
 
-    def med(xs: Seq[Double]): Double =
-      xs.sorted.apply(xs.length / 2)
     println(f"""{"metric":"bm25_serve","sf_dir":"$sfDir","n_docs":$nDocs,""" +
       f""""reps":$reps,"build_wall":$buildWall%.3f,""" +
-      f""""recompute_med":${med(recompute)}%.3f,""" +
-      f""""index_med":${med(fromIndex)}%.3f,""" +
-      f""""speedup":${med(recompute) / med(fromIndex)}%.2f,""" +
-      f""""cpus":$cpus}""")
+      f""""recompute_med":${median(recompute)}%.3f,""" +
+      f""""index_med":${median(fromIndex)}%.3f,""" +
+      f""""speedup":${median(recompute) / median(fromIndex)}%.2f,""" +
+      f""""cpus":${GraftSession.cpus}}""")
     spark.stop()
   }
 }

@@ -1,11 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
+import graft.TempDirs.tempDir
 import graft.operators.{Dedup, DedupIndex}
 import graft.streaming.IncrementalDedup
+import graft.tools.Measure.{loadavg, median, timed, times}
 
 /** Serving-path measurement for the persisted dedup signature index
   * (F12): the same new-docs batch screened `reps` times by
@@ -27,17 +28,12 @@ object DedupServeSmoke {
     val sfDir = args(0)
     val mult = if (args.length > 1) args(1).toInt else 1
     val reps = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_SHUFFLE: the BM25_SERVE_r13 sizing rule — at 15M
     // docs the minhash build's per-partition token rows outgrow the
     // default heap at 32 partitions; 256 keeps each partition small
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", GraftSession.cpus.toString)
+    val spark = Measure.start(GraftSession.local("graft-dedup-serve")
+      .config("spark.sql.shuffle.partitions", shuf))
 
     val base = Tables.documents(spark, sfDir).select("doc_id", "text")
     val span = base.agg(max(col("doc_id"))).head().getLong(0) + 1L
@@ -56,12 +52,9 @@ object DedupServeSmoke {
             lit(" zzsalt"), col("doc_id").cast("string"))))
       .withColumn("doc_id", col("doc_id") + lit(mult * span))
 
-    val t0 = System.nanoTime()
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-dedup-serve").toString
-    val index = DedupIndex.write(store, "doc_id", "text", dir,
-      nBuckets = 1024, nSigBuckets = 256)
-    val buildWall = (System.nanoTime() - t0) / 1e9
+    val dir = tempDir("graft-dedup-serve")
+    val (index, buildWall) = timed(DedupIndex.write(store, "doc_id", "text",
+      dir, nBuckets = 1024, nSigBuckets = 256))
 
     // the raw-store baseline pays the store signature pass once here
     // (a real deployment persists sigs), so the timed loop isolates
@@ -70,18 +63,13 @@ object DedupServeSmoke {
     storeSigs.write.mode("overwrite").parquet(s"$dir/rawsigs")
     val rawStore = spark.read.parquet(s"$dir/rawsigs")
 
-    def time(f: => Long): Seq[Double] = (1 to reps).map { _ =>
-      val t = System.nanoTime()
-      f
-      (System.nanoTime() - t) / 1e9
-    }
-    val recompute = time(IncrementalDedup.dedupBatch(
+    val recompute = times(reps)(IncrementalDedup.dedupBatch(
       batch, "doc_id", "text", Some(rawStore)).dropped.count())
     // release() each rep's ScreenResult inside the timed closure — the
     // lifecycle the operator doc mandates; un-released reps accumulate
     // persisted newSigs/cands relations and skew later medians via
     // cache pressure
-    val fromIndex = time {
+    val fromIndex = times(reps) {
       val res = DedupIndex.screenBatch(index, batch, "doc_id", "text")
       try res.dropped.count() finally res.release()
     }
@@ -108,13 +96,10 @@ object DedupServeSmoke {
     val (autoIndexMed, autoBuildWall) =
       if (autoB == 1024 && autoS == 256) (-1.0, -1.0)
       else {
-        val dir2 = java.nio.file.Files
-          .createTempDirectory("graft-dedup-serve-auto").toString
-        val tb = System.nanoTime()
-        val idx2 = DedupIndex.write(store, "doc_id", "text", dir2,
-          nBuckets = autoB, nSigBuckets = autoS)
-        val bw = (System.nanoTime() - tb) / 1e9
-        val med2 = time {
+        val (idx2, bw) = timed(DedupIndex.write(store, "doc_id", "text",
+          tempDir("graft-dedup-serve-auto"), nBuckets = autoB,
+          nSigBuckets = autoS))
+        val med2 = times(reps) {
           val r = DedupIndex.screenBatch(idx2, batch, "doc_id", "text")
           try r.dropped.count() finally r.release()
         }
@@ -123,20 +108,14 @@ object DedupServeSmoke {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         r2.release()
         require(b2 == b, "auto-sized index diverges from fixed config")
-        def m(xs: Seq[Double]) = xs.sorted.apply(xs.length / 2)
-        (m(med2), bw)
+        (median(med2), bw)
       }
 
-    def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
-    val loadavg = scala.util.Try(
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg"))).trim
-        .split(" ").take(3).mkString(",")).getOrElse("")
     println(f"""{"metric":"dedup_serve","sf_dir":"$sfDir","mult":$mult,""" +
       f""""n_store":$nStore,"reps":$reps,"build_wall":$buildWall%.3f,""" +
-      f""""recompute_med":${med(recompute)}%.3f,""" +
-      f""""index_med":${med(fromIndex)}%.3f,""" +
-      f""""speedup":${med(recompute) / med(fromIndex)}%.2f,""" +
+      f""""recompute_med":${median(recompute)}%.3f,""" +
+      f""""index_med":${median(fromIndex)}%.3f,""" +
+      f""""speedup":${median(recompute) / median(fromIndex)}%.2f,""" +
       f""""n_dropped":${b.size},"n_matched":$nMatched,""" +
       f""""auto_n_buckets":$autoB,"auto_n_sig_buckets":$autoS,""" +
       f""""auto_index_med":$autoIndexMed%.3f,""" +

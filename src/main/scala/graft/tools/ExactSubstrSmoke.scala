@@ -3,10 +3,11 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.Dedup
+import graft.tools.Measure.timed
 
 /** Scaling smoke for F13 exactSubstrDedup: run the full scrub over a
   * documents dir and reduce to corpus totals (never collect the
@@ -14,30 +15,20 @@ import graft.operators.Dedup
   * JSON line per rep: wall, docs, tokens in/kept, scrub share, and —
   * r13 — the run's total SHUFFLE BYTES/RECORDS WRITTEN, read from
   * stage task metrics. Bytes are deterministic where wall time is not
-  * (this box swings ~2× with ambient VM load), so the gram-key-width
-  * A/B (hex vs 16-byte binary digest) settles on arithmetic.
+  * (wall time swings ~2× with ambient VM load); EXACTSUBSTR_r13 used
+  * them to settle the gram-key width (16-byte binary digest).
   *
-  * Usage: ExactSubstrSmoke <docsDir> [reps] [minLen] [hex|bin]
+  * Usage: ExactSubstrSmoke <docsDir> [reps] [minLen]
   * (env SPARK_GRAFT_CPUS; the dir needs only documents.parquet)
   */
 object ExactSubstrSmoke {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty,
-      "usage: ExactSubstrSmoke <docsDir> [reps] [minLen] [hex|bin]")
+    require(args.nonEmpty, "usage: ExactSubstrSmoke <docsDir> [reps] [minLen]")
     val dir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val minLen = if (args.length > 2) args(2).toInt else 8
-    val keyForm = if (args.length > 3) args(3) else "hex"
-    require(keyForm == "hex" || keyForm == "bin",
-      s"key form must be hex or bin: $keyForm")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", 32 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.start(GraftSession.local("graft-exact-substr")
+      .config("spark.sql.files.maxPartitionBytes", 32 * 1024 * 1024))
 
     // shuffle accounting: bytes/records written across completed
     // stages. The listener bus is async — each rep sleeps briefly
@@ -61,13 +52,11 @@ object ExactSubstrSmoke {
     (1 to reps).foreach { r =>
       Thread.sleep(1500) // drain listener events from the prior rep
       val (b0, r0) = (sBytes.get, sRecs.get)
-      val t0 = System.nanoTime()
-      val row = Dedup.exactSubstrDedupImpl(docs, "doc_id", "text",
-          minLen, keepFirst = true, binaryGramKey = keyForm == "bin")
+      val (row, wall) = timed(Dedup.exactSubstrDedup(docs, "doc_id", "text",
+          minLen, keepFirst = true)
         .agg(count(lit(1)).as("docs"), sum("n_tokens").as("toks"),
           sum("n_kept").as("kept"))
-        .head()
-      val wall = (System.nanoTime() - t0) / 1e9
+        .head())
       Thread.sleep(1500) // drain before reading the deltas
       val (db, dr) = (sBytes.get - b0, sRecs.get - r0)
       // empty corpus: sum() is NULL and getLong would NPE — report it
@@ -83,7 +72,7 @@ object ExactSubstrSmoke {
         println(f"""{"metric":"exact_substr","rep":$r,"wall":$wall%.3f,""" +
           f""""docs":$nd,"tokens":$nt,"kept":$nk,""" +
           f""""scrubbed_share":$share%.4f,"minLen":$minLen,""" +
-          f""""key_form":"$keyForm","shuffle_bytes":$db,""" +
+          f""""shuffle_bytes":$db,""" +
           f""""shuffle_records":$dr}""")
       }
     }

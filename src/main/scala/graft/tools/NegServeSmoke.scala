@@ -1,10 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
+import graft.TempDirs.tempDir
 import graft.operators.{AnnIndex, Similarity}
+import graft.tools.Measure.{median, r3, timed, times}
 
 /** Epoch-scale hard-negative mining measurement (G16 serving claim,
   * VERDICT r10 item 6): "an epoch's negatives come off the disk index
@@ -45,13 +47,8 @@ object NegServeSmoke {
     val bruteQueries = if (args.length > 3) args(3).toInt
       else math.min(nQueries, 100)
     val reps = if (args.length > 4) args(4).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = Measure.start(GraftSession.local("graft-neg-serve"))
     import spark.implicits._
 
     val base = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
@@ -60,8 +57,7 @@ object NegServeSmoke {
 
     // ---------------- 1. sanity gate (base corpus, embeddings stored,
     // exhaustive probes, full refine — estimates never rank the output)
-    val gateDir = java.nio.file.Files
-      .createTempDirectory("graft-negserve-gate").toString
+    val gateDir = tempDir("graft-negserve-gate")
     val gateN = base.count().toInt
     val gateIdx = AnnIndex.write(base, gateDir, dim = 64, nCells = 8,
       stride = 7)
@@ -92,20 +88,17 @@ object NegServeSmoke {
           (x + sin(col("vec_id") * 31 + i * 7 + lit(m * 13)) * lit(0.01d))
             .cast(org.apache.spark.sql.types.FloatType)).as("embedding"))
     }.reduce(_ unionAll _)
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-negserve").toString
+    val work = tempDir("graft-negserve")
     emb.write.mode("overwrite").parquet(s"$work/corpus")
     val corpus = spark.read.parquet(s"$work/corpus")
     val corpusRows = corpus.count()
     val cents = Similarity.trainIvfCentroids(corpus, nCells, stride)
     val books = Similarity.trainPqCodebooks(corpus, dim = 64, stride = stride)
-    val filesPerCell = math.max(1, cpus.toInt / nprobe)
-    val t0 = System.nanoTime()
-    val idx = AnnIndex.write(corpus, s"$work/index", dim = 64,
-      nCells = nCells, stride = stride, centroids = Some(cents),
+    val filesPerCell = math.max(1, cpus / nprobe)
+    val (idx, buildSec) = timed(AnnIndex.write(corpus, s"$work/index",
+      dim = 64, nCells = nCells, stride = stride, centroids = Some(cents),
       codebooks = Some(books), storeEmbeddings = false,
-      filesPerCell = filesPerCell)
-    val buildSec = (System.nanoTime() - t0) / 1e9
+      filesPerCell = filesPerCell))
 
     // epoch query batch + bounded positives, both LOCAL relations
     // (queries broadcast in every leg — the G1/G16 contract)
@@ -136,16 +129,11 @@ object NegServeSmoke {
     def bruteChain(): Long = Similarity.hardNegatives(corpus, qBrute,
       posBrute, k, margin, dropAbove).count()
 
-    def time(f: => Long): Double = {
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     indexChain() // JIT + plan warmup (also first partition discovery)
-    val idxMed = median((0 until reps).map(_ => time(indexChain())))
+    val idxMed = median(times(reps)(indexChain()))
     bruteChain()
-    val bruteMed = median((0 until reps).map(_ => time(bruteChain())))
+    val bruteMed = median(times(reps)(bruteChain()))
 
-    def r3(x: Double) = (x * 1000).round / 1000.0
     val idxPerK = idxMed / nQueries * 1000
     val brutePerK = bruteMed / bruteQueries * 1000
     println(s"""{"metric":"neg_serve","unit":"sec","sf_dir":"$sfDir",""" +

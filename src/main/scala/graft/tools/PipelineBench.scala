@@ -2,8 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.Curation
+import graft.tools.Measure.{loadavg, time, timed}
 
 /** End-to-end curation-pipeline bench (VERDICT r6 item 4): runs
   * [[Curation.curationPipeline]] (quality → exact dedup → split →
@@ -18,21 +19,11 @@ import graft.operators.Curation
   */
 object PipelineBench {
 
-  private def loadavg: String = scala.util.Try(
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg"))).trim
-      .split(" ").take(3).mkString(",")).getOrElse("")
-
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: PipelineBench <sfDir> <outDir>")
     val (sfDir, outDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = Measure.start(GraftSession.local("graft-pipeline-bench"))
 
     val docs = Tables.documents(spark, sfDir)
     val nShards = 64
@@ -72,9 +63,8 @@ object PipelineBench {
       maxHash = 10, maxScans = 4, maxBnl = 0)
 
     val loadStart = loadavg
-    val t0 = System.nanoTime()
-    Curation.writeSharded(pipeline, "doc_id", nShards, s"$outDir/shards")
-    val wall = (System.nanoTime() - t0) / 1e9
+    val wall = time(
+      Curation.writeSharded(pipeline, "doc_id", nShards, s"$outDir/shards"))
 
     // stage cardinalities (cheap: read back the written shards for the
     // output side; input-side counts are one aggregate each)
@@ -98,14 +88,14 @@ object PipelineBench {
     // the model/merges are versioned inputs), timed separately.
     import org.apache.spark.sql.functions._
     import graft.operators.{QualityClassifier, TextAnalysis}
-    val tTrain0 = System.nanoTime()
-    val sample = Curation.hashSample(docs, "doc_id", 26)
-    val medLen = sample.agg(expr("percentile(length(text), 0.5)"))
-      .collect()(0).getDouble(0)
-    val model = QualityClassifier.train(sample, "text",
-      length(col("text")) > medLen, buckets = 4096, maxIter = 30)
-    val merges = TextAnalysis.bpeTrain(sample, "text", numMerges = 200)
-    val trainWall = (System.nanoTime() - tTrain0) / 1e9
+    val ((model, merges), trainWall) = timed {
+      val sample = Curation.hashSample(docs, "doc_id", 26)
+      val medLen = sample.agg(expr("percentile(length(text), 0.5)"))
+        .collect()(0).getDouble(0)
+      (QualityClassifier.train(sample, "text",
+        length(col("text")) > medLen, buckets = 4096, maxIter = 30),
+        TextAnalysis.bpeTrain(sample, "text", numMerges = 200))
+    }
 
     def v2(s: SparkSession) = Curation.curationPipelineV2(
       Tables.documents(s, sfDir), "doc_id", "text", model, merges,
@@ -119,9 +109,8 @@ object PipelineBench {
       maxHash = 11, maxScans = 5, maxBnl = 0)
 
     val load2 = loadavg
-    val t2 = System.nanoTime()
-    Curation.writeSharded(v2(spark), "doc_id", nShards, s"$outDir/shards_v2")
-    val wall2 = (System.nanoTime() - t2) / 1e9
+    val wall2 = time(
+      Curation.writeSharded(v2(spark), "doc_id", nShards, s"$outDir/shards_v2"))
     val out2 = spark.read.parquet(s"$outDir/shards_v2")
     val nOut2 = out2.count()
     val ts2 = java.time.Instant.now().toString
@@ -146,10 +135,9 @@ object PipelineBench {
         lit("Subscribe to our newsletter\n"), col("text"),
         lit("\nshared line "), (col("doc_id") % 8).cast("string"),
         lit("\nCopyright 2026 Example Corp")))
-    val tMine0 = System.nanoTime()
-    Dedup.frequentLines(synth(spark), "doc_id", "text", minDocs = 50)
-      .write.mode("overwrite").parquet(s"$outDir/boilerplate_v1")
-    val mineWall = (System.nanoTime() - tMine0) / 1e9
+    val mineWall = time(
+      Dedup.frequentLines(synth(spark), "doc_id", "text", minDocs = 50)
+        .write.mode("overwrite").parquet(s"$outDir/boilerplate_v1"))
     val mined = spark.read.parquet(s"$outDir/boilerplate_v1")
     val nMined = mined.count()
 
@@ -168,15 +156,11 @@ object PipelineBench {
       maxHash = 18, maxScans = 8, maxBnl = 0)
 
     val load3 = loadavg
-    val t3 = System.nanoTime()
-    Curation.writeSharded(v2b(spark, stage0 = false), "doc_id", nShards,
-      s"$outDir/shards_v2_plain")
-    val wallPlain = (System.nanoTime() - t3) / 1e9
+    val wallPlain = time(Curation.writeSharded(v2b(spark, stage0 = false),
+      "doc_id", nShards, s"$outDir/shards_v2_plain"))
     val nOutPlain = spark.read.parquet(s"$outDir/shards_v2_plain").count()
-    val t4 = System.nanoTime()
-    Curation.writeSharded(v2b(spark, stage0 = true), "doc_id", nShards,
-      s"$outDir/shards_v2_stage0")
-    val wallStage0 = (System.nanoTime() - t4) / 1e9
+    val wallStage0 = time(Curation.writeSharded(v2b(spark, stage0 = true),
+      "doc_id", nShards, s"$outDir/shards_v2_stage0"))
     val nOutStage0 = spark.read.parquet(s"$outDir/shards_v2_stage0").count()
     // screen attribution: what stage 0 actually removed, measured once
     // off the screen's own output (cheap aggregate, not in the walls)
@@ -207,13 +191,11 @@ object PipelineBench {
         col("text"),
         lit("</p><div>shared footer "), (col("doc_id") % 8).cast("string"),
         lit("</div>")))
-    val tMine1 = System.nanoTime()
-    Dedup.frequentLines(
+    val mineWallH = time(Dedup.frequentLines(
         synthHtml(spark).withColumn("text",
           TextAnalysis.htmlToText(col("text"))),
         "doc_id", "text", minDocs = 50)
-      .write.mode("overwrite").parquet(s"$outDir/boilerplate_html")
-    val mineWallH = (System.nanoTime() - tMine1) / 1e9
+      .write.mode("overwrite").parquet(s"$outDir/boilerplate_html"))
     val nMinedH = spark.read.parquet(s"$outDir/boilerplate_html").count()
 
     def v2h(s: SparkSession) = Curation.curationPipelineV2(
@@ -230,10 +212,8 @@ object PipelineBench {
       maxHash = 18, maxScans = 8, maxBnl = 0)
 
     val load4 = loadavg
-    val t5 = System.nanoTime()
-    Curation.writeSharded(v2h(spark), "doc_id", nShards,
-      s"$outDir/shards_v2_html")
-    val wallHtml = (System.nanoTime() - t5) / 1e9
+    val wallHtml = time(Curation.writeSharded(v2h(spark), "doc_id", nShards,
+      s"$outDir/shards_v2_html"))
     val nOutHtml = spark.read.parquet(s"$outDir/shards_v2_html").count()
     val ts4 = java.time.Instant.now().toString
     println(s"""{"metric":"pipeline_v2_html","unit":"sec",""" +

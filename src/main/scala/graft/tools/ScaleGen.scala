@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Deterministic FK-consistent scale-up of a testdata directory: every
   * sf-scaling table is replicated `mult`× with per-copy key offsets
@@ -52,14 +54,8 @@ object ScaleGen {
     val keep: String => Boolean =
       if (args.length > 3) args(3).split(",").toSet else _ => true
     require(mult >= 1, s"mult must be >= 1: $mult")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.start(GraftSession.local("graft-scalegen")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String, files: Int): Unit =
       df.repartition(files).write.mode("overwrite").parquet(s"$dst/$t.parquet")

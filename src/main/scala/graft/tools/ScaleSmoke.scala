@@ -3,8 +3,9 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.{Curation, Dedup}
+import graft.tools.Measure.timed
 
 /** Scaling smoke for the pipeline operators: replicate the documents
   * corpus N× (each copy's tokens suffixed with the copy index, so
@@ -39,51 +40,39 @@ object ScaleSmoke {
     copies.reduce(_ union _)
   }
 
-  private def time(f: => Long): (Double, Long) = {
-    val t0 = System.nanoTime()
-    val rows = f
-    ((System.nanoTime() - t0) / 1e9, rows)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val mults = (if (args.length > 1) args(1) else "1,4").split(",").map(_.trim.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.start(GraftSession.local("graft-scale-smoke"))
     mults.foreach { m =>
       val docs = replicated(spark, sfDir, m)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nDocs = docs.count() // materialize the input outside the timings
-      val (tExact, nExact) = time(
+      val (nExact, tExact) = timed(
         Dedup.dropExactDuplicates(docs, "doc_id", "text").count())
-      val (tLsh, nLsh) = time(
+      val (nLsh, tLsh) = timed(
         Dedup.ngramJaccardViaLsh(docs, "doc_id", "text", 0.5).count())
-      val (tContam, nContam) = time(
+      val (nContam, tContam) = timed(
         Curation.contamination(docs, "doc_id", "text", col("doc_id") % 31 === 0).count())
-      val (tSample, nSample) = time(
+      val (nSample, tSample) = timed(
         Curation.hashSample(docs, "doc_id", 26).count())
-      val (tOverlap, nOverlap) = time(
+      val (nOverlap, tOverlap) = timed(
         Curation.sourceOverlap(docs, "source", "text").count())
-      val (tDrift, nDrift) = time(
+      val (nDrift, tDrift) = timed(
         Curation.sourceDrift(docs, "source", "text").count())
-      val (tShard, nShard) = time(
+      val (nShard, tShard) = timed(
         Curation.shardPlan(docs, "doc_id", 64, length(col("text"))).count())
       // round-7 additions: the deflate kernel (pure map — must scale
       // exactly with bytes), the corpus-LM scorer (train+score), and
       // the skew-capped gram stats path
-      val (tCompress, nCompress) = time(
+      val (nCompress, tCompress) = timed(
         docs.select(graft.operators.TextAnalysis.compressionRatio(col("text"))
             .as("r"))
           .where(col("r").isNotNull).count())
-      val (tPerplex, nPerplex) = time(
+      val (nPerplex, tPerplex) = timed(
         graft.operators.TextAnalysis.bigramDocScore(docs, "doc_id", "text")
           .count())
-      val (tNovelty, nNovelty) = time(
+      val (nNovelty, tNovelty) = timed(
         Curation.noveltyShare(docs, "doc_id", "text", hotCap = 1000).count())
       docs.unpersist()
       println(

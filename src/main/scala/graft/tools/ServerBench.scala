@@ -2,7 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.{GraftServer, SparkEntry}
+import graft.{Bench, GraftServer, GraftSession, SparkEntry}
+import graft.TempDirs.tempDir
+import graft.tools.Measure.loadavg
 
 /** Server-mode measurement (round 10, closing PLANREUSE_r09's loop):
   * the 22-query TPC-H suite served three ways from one resident
@@ -19,15 +21,10 @@ import graft.{GraftServer, SparkEntry}
   * plus a correctness gate: every query's warm served rows must equal
   * a fresh `.collect()` exactly (sorted row-string multiset).
   *
-  * Usage: ServerBench <sfDir>  (env SPARK_GRAFT_CPUS, default 32)
+  * Usage: ServerBench <sfDir>  (env SPARK_GRAFT_CPUS)
   * Emits one JSON line.
   */
 object ServerBench {
-
-  private def loadavg: String = scala.util.Try(
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg"))).trim
-      .split(" ").take(3).mkString(",")).getOrElse("")
 
   /** `fused` mode (r13, VERDICT r12 item 3): the COMPLETE retrieval
     * serving chain — ANN index + BM25 index → RRF fusion → MMR
@@ -45,15 +42,8 @@ object ServerBench {
     if (args.length > 1 && args(1) == "fused") return fusedMain(sfDir)
     if (args.length > 1 && args(1) == "fused-concurrent")
       return fusedConcurrentMain(sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.files.maxPartitionBytes", 32 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = Measure.start(Bench.session("graft-server-bench"))
     // Bench's warmup discipline: JVM one-time setup is nobody's query
     locally {
       import org.apache.spark.sql.functions._
@@ -107,21 +97,13 @@ object ServerBench {
     import org.apache.spark.sql.functions._
     import graft.operators.{AnnIndex, Bm25Index, Similarity}
     import graft.Tables
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.files.maxPartitionBytes", 32 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = Measure.start(Bench.session("graft-server-bench"))
     spark.range(1000).selectExpr("sum(id)").collect() // warm the JVM
 
     val emb = Tables.embeddings(spark, sfDir)
     val docs = Tables.documents(spark, sfDir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-fused-serve").toString
+    val root = tempDir("graft-fused-serve")
     val (annDir, bm25Dir) = (s"$root/ann", s"$root/bm25")
     // index builds are INGEST cost, timed separately from serving
     val tb0 = System.nanoTime()
@@ -218,22 +200,14 @@ object ServerBench {
     import org.apache.spark.sql.functions._
     import graft.operators.{AnnIndex, Bm25Index, Similarity}
     import graft.Tables
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.files.maxPartitionBytes", 32 * 1024 * 1024)
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = Measure.start(Bench.session("graft-server-bench")
+      .config("spark.scheduler.mode", "FAIR"))
     spark.range(1000).selectExpr("sum(id)").collect() // warm the JVM
 
     val emb = Tables.embeddings(spark, sfDir)
     val docs = Tables.documents(spark, sfDir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-fused-conc").toString
+    val root = tempDir("graft-fused-conc")
     val (annDir, bm25Dir) = (s"$root/ann", s"$root/bm25")
     val tb0 = System.nanoTime()
     AnnIndex.write(emb, annDir, dim = 64, nCells = 16, stride = 7,

@@ -57,7 +57,7 @@ class PlanBudgetSpec extends SparkSpec {
     "q_shard_plan" -> (1, 1, 1), // pure map + one agg
     "q_source_drift" -> (5, 1, 1), // ONE tokenize pass feeds all aggs
     "q_dedup_simhash" -> (6, 1, 6), // static view: 6 signature consumers;
-    // the SessionMemo persist collapses them to ONE runtime scan (PlanProbe)
+    // the SessionMemo persist collapses them to ONE runtime scan (Profile census)
     "q_bigram_lm" -> (2, 1, 1), // zip_with pairs: ONE corpus scan
     "q_embed_neardup" -> (0, 1, 1), // exhaustive oracle mode: no hash shuffle
     "q_edit_distance" -> (0, 1, 2), // len-blocked self-join (gate mode)

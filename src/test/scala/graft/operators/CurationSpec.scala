@@ -660,7 +660,7 @@ class CurationSpec extends SparkSpec {
   test("dsirWeights: kernel fast path is byte-identical to the " +
       "exploded-bigram murmur reference; scoring plan is map-only") {
     // the r10 kernel replaced the explode → bucket-count → broadcast-
-    // join → doc-keyed-agg shape (V2Probe's sf30 super-scaler) with a
+    // join → doc-keyed-agg shape (PIPELINE_r10.json's sf30 super-scaler) with a
     // histogram aggregate + map-only scorer; the reference below IS
     // that old shape, so any hash-chain or rounding divergence fails
     val texts = Seq(

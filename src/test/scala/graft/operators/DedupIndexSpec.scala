@@ -190,7 +190,7 @@ class DedupIndexSpec extends SparkSpec {
     intercept[IllegalArgumentException] { DedupIndex.autoSize(0L, 1L) }
     // r14 store-aware sig sizing: pruning pays only while rows saved
     // per file opened (storeDocs / matches) exceeds the measured
-    // file-open cost (~8k row-reads on this FS, DedupServeProbe)
+    // file-open cost (~8k row-reads on this FS, DEDUP_SERVE_r14.json)
     // — a real-world footprint (50 matches in a 10^9 store) prunes:
     assert(DedupIndex.autoSize(10L, 50L, storeDocs = 1000000000L)._2
       == 1024) // 50*16 -> 1024, store/m = 2e7 >> 8192

@@ -1,27 +1,40 @@
 #!/usr/bin/env python3
 """TPC-H warm-slope census analysis (VERDICT r13 item 1).
 
-Fits t = c + m*sf on warm medians for Spark (tools/TpchGap logs) and
-DuckDB (tools/duck_bench.py JSON) at sf in {0.1, 1, 3}, and prints the
-22-row table with slope ratios against the 1.3-1.9x materialization
-band the r8 study established.
+Fits t = c + m*sf on warm medians for Spark (graft.tools.Profile
+output) and DuckDB (tools/duck_bench.py JSON) at sf in {0.1, 1, 3}, and
+prints the 22-row table with slope ratios against the 1.3-1.9x
+materialization band the r8 study established.
 
-Usage: tpch_census.py <spark_sf0.1.log> <spark_sf1.log> <spark_sf3.log>
+Each Spark input is the output of one Profile run, e.g.
+  sbt "runMain graft.tools.Profile $(echo q_tpch{1..22} | tr ' ' ,) <sfDir>" \
+    > profile_sf1.log
+Profile prints one JSON object per query; any prefix before the
+object on its line (such as a log tag) is ignored.
+
+Usage: tpch_census.py <profile_sf0.1> <profile_sf1> <profile_sf3>
                       <duck_sf0.1.json> <duck_sf1.json> <duck_sf3.json>
 """
 import json
-import re
 import sys
 
 SFS = [0.1, 1.0, 3.0]
 
 
-def spark_log(path):
-    js = '\n'.join(
-        l.replace('[info] ', '', 1) for l in open(path)
-        if l.startswith('[info] ') and
-        ('"sf"' in l or '"q_tpch' in l or l.strip() == '[info] }}'))
-    return json.loads(js)['queries']
+def profile_log(path):
+    """Profile's per-query JSON objects, keyed by query name."""
+    out = {}
+    for line in open(path):
+        i = line.find('{')
+        if i < 0:
+            continue
+        try:
+            row = json.loads(line[i:])
+        except ValueError:
+            continue
+        if isinstance(row, dict) and 'query' in row:
+            out[row['query']] = row
+    return out
 
 
 def fit(ys):
@@ -36,7 +49,7 @@ def fit(ys):
 
 
 def main():
-    s = [spark_log(p) for p in sys.argv[1:4]]
+    s = [profile_log(p) for p in sys.argv[1:4]]
     d = [json.load(open(p))['queries'] for p in sys.argv[4:7]]
     rows = []
     for i in range(1, 23):

@@ -28,9 +28,10 @@ import org.apache.spark.sql.types._
   * queried vocabulary slice, never the corpus — and the only shuffle
   * is the (qid, nid)-keyed score aggregation over matched postings
   * (the posting-list fan-out, exactly bm25Retrieve's join bound).
-  * Scoring mirrors [[TextAnalysis.bm25TermScore]]'s expression tree
-  * term for term, so index search equals the recompute path
-  * bit-for-bit (spec-pinned) and inherits q_bm25's oracle.
+  * Build, appends and search share the [[Bm25]] core with the
+  * recompute paths (tf relation, statistics, scoring tail), so index
+  * search equals the recompute path bit-for-bit (spec-pinned) and
+  * inherits q_bm25's oracle.
   *
   * Maintenance discipline: df is denormalized onto posting rows, so
   * a naive append would silently stale every existing term's idf.
@@ -91,42 +92,15 @@ object Bm25Index {
   private def bucketOf(term: Column, nBuckets: Int): Column =
     pmod(hash(term), lit(nBuckets)).cast(LongType)
 
-  /** The (doc_id, dl, term, tf) relation: dl attaches map-side BEFORE
-    * the explode (the token-array size — no doc-keyed window), tf by a
-    * composite-keyed aggregate whose key CONTAINS doc_id, so no term,
-    * however common, concentrates a partition.
-    */
-  private[operators] def tfRelation(corpus: DataFrame, idCol: String,
-                                    textCol: String): DataFrame =
-    corpus
-      .select(col(idCol).as("doc_id"),
-        TextAnalysis.filteredTokens(col(textCol)).as("toks"))
-      .select(col("doc_id"), size(col("toks")).cast(LongType).as("dl"),
-        explode(col("toks")).as("term"))
-      .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-
-  /** Denormalize df onto the posting rows via a map-side-combined
-    * `groupBy(term)` joined back — NOT a `Window.partitionBy(term)`:
-    * a Zipf-head term ("the") appears in essentially every document,
-    * so its window partition would be corpus-sized on one reducer and
-    * AQE cannot split window partitions, where it CAN skew-split this
-    * join (the r9 H12/H18 fix — the same shape H14 uses, the K15
-    * lesson).
-    */
-  private[operators] def withDf(rel: DataFrame, nBuckets: Int): DataFrame =
-    rel.join(rel.groupBy("term").agg(count(lit(1)).as("df")), "term")
-      .withColumn("term_bucket", bucketOf(col("term"), nBuckets))
-      .select("term", "doc_id", "tf", "dl", "df", "term_bucket")
-
-  /** Build and persist. The tf relation is materialized once
-    * (DISK_ONLY) because both the df aggregate and the join consume
-    * it — without the persist each branch would re-tokenize the
-    * corpus; with it the build pays exactly one tokenize pass plus one
-    * read of the compact post-aggregate relation. Set
-    * `persistRelation = false` when the corpus is a GENERATED or
-    * otherwise IO-free relation (the AnnGenServe discipline): two
-    * cheap recomputes beat materializing a corpus-sized relation to
-    * local disk.
+  /** Build and persist. The [[Bm25.tf]] relation is materialized once
+    * (DISK_ONLY) because the df aggregate, the postings join and the
+    * meta row (from its sentinel rows) all consume it — without the
+    * persist each would re-tokenize the corpus; with it the build
+    * reads its input exactly once, then re-reads only the compact
+    * post-aggregate relation. Set `persistRelation = false` when the
+    * corpus is a GENERATED or otherwise IO-free relation (the
+    * AnnGenServe discipline): cheap recomputes beat materializing a
+    * corpus-sized relation to local disk.
     *
     * The salted repartition before the write is the AnnIndex
     * `filesPerCell` pattern: `filesPerBucket` writer tasks per bucket,
@@ -138,7 +112,7 @@ object Bm25Index {
     * build's heap demand is per-task EXECUTION memory in the tf
     * aggregate and df join — it scales with tokens-per-shuffle-
     * partition, not with any driver-held state (there is none: the
-    * only collects are the 1-row corpus stats and the version
+    * only collects are the 1-row meta at open and the version
     * pointer). At 15M docs / 812M tokens, 32 shuffle partitions
     * GC-thrashed an 8 GB heap into a 630 s build needing 48 GB to run
     * smoothly, while 256 partitions ran the SAME build in 194-209 s
@@ -162,7 +136,7 @@ object Bm25Index {
     // directories, readers stay on .vN, and the atomic flip below
     // publishes; a crashed rebuild leaves the old version live
     val v = IndexVersions.current(spark, dir).getOrElse(0L) + 1L
-    val relRaw = tfRelation(corpus, idCol, textCol)
+    val relRaw = Bm25.tf(corpus, idCol, textCol, bag = None)
     val rel =
       if (persistRelation)
         relRaw.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
@@ -178,21 +152,21 @@ object Bm25Index {
       // against postings cost more than the elision saved
       // (BM25_SERVE_r13). The postings df column then comes from
       // reading the sidecar back — the aggregate is computed once.
-      val dfAgg = rel.groupBy("term").agg(count(lit(1)).as("df"))
+      Bm25.df(rel)
         .withColumn("term_bucket", bucketOf(col("term"), nBuckets))
-      dfAgg.repartition(col("term_bucket"))
+        .repartition(col("term_bucket"))
         .write.mode("overwrite").partitionBy("term_bucket")
         .parquet(s"$dir/term_stats.v$v")
       val stats = spark.read.parquet(s"$dir/term_stats.v$v")
         .select("term", "df")
-      rel.join(stats, "term")
+      Bm25.postings(rel).join(stats, "term")
         .withColumn("term_bucket", bucketOf(col("term"), nBuckets))
         .select("term", "doc_id", "tf", "dl", "df", "term_bucket")
         .repartition(nBuckets * filesPerBucket, col("term_bucket"),
           pmod(hash(col("doc_id")), lit(filesPerBucket)))
         .write.mode("overwrite").partitionBy("term_bucket")
         .parquet(s"$dir/postings.v$v")
-      TextAnalysis.corpusStats(corpus, textCol)
+      Bm25.meta(rel)
         .withColumn("n_buckets", lit(nBuckets))
         .write.mode("overwrite").parquet(s"$dir/meta.v$v")
     } finally if (persistRelation) rel.unpersist()
@@ -469,37 +443,7 @@ object Bm25Index {
                  textCol: String, filesPerBucket: Int = 1): Unit = {
     require(filesPerBucket >= 1,
       s"filesPerBucket must be >= 1: $filesPerBucket")
-    val rel = tfRelation(newDocs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    try {
-      // token-empty batch guard (r14 ADVICE): a batch whose docs all
-      // tokenize to nothing contributes NO postings, NO df deltas and —
-      // because corpusStats counts only docs with >= 1 token — NO meta
-      // delta either; writing the empty partitioned datasets anyway
-      // would leave file-less dirs that poison every later
-      // spark.read.parquet (schema inference has nothing to read).
-      // Skipping all three writes keeps search == built-whole exactly.
-      if (rel.isEmpty) return
-      rel.withColumn("df", lit(0L))
-        .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
-        .select("term", "doc_id", "tf", "dl", "df", "term_bucket")
-        .repartition(index.nBuckets * filesPerBucket, col("term_bucket"),
-          pmod(hash(col("doc_id")), lit(filesPerBucket)))
-        .write.mode("append").partitionBy("term_bucket")
-        .parquet(index.postingsDir)
-      rel.groupBy("term").agg(count(lit(1)).as("df_delta"))
-        .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
-        .repartition(col("term_bucket"))
-        .write.mode("append").partitionBy("term_bucket")
-        .parquet(deltaDir(index))
-      TextAnalysis.corpusStats(newDocs, textCol)
-        .coalesce(1)
-        .write.mode("append").parquet(metaDeltaDir(index))
-      // in-version mutation: advance the watcher counter (r12) so a
-      // GraftServer.watchIndexes plan pinned to the pre-append file
-      // listing rebuilds on its next request
-      IndexVersions.bumpGeneration(index.spark, index.dir)
-    } finally rel.unpersist()
+    append(index, newDocs, idCol, textCol, filesPerBucket, batchId = None)
   }
 
   /** The REPLAY-IDEMPOTENT form of [[appendDocs]] for the composed
@@ -584,69 +528,93 @@ object Bm25Index {
         // overwrite replaces the crashed attempt's partitions, which
         // the done-horizon gate keeps invisible to readers throughout
     }
-    val rel = tfRelation(newDocs, idCol, textCol)
+    append(index, newDocs, idCol, textCol, filesPerBucket, Some(batchId),
+      fpNew)
+  }
+
+  /** One append, from ONE read of `newDocs` into a persisted
+    * [[Bm25.tf]] relation: df = 0 postings land in the bucket
+    * partitions, the batch's per-term document counts in the delta
+    * table, and its sentinel rows become the meta delta row. `batchId`
+    * selects [[appendDocsBatch]]'s batch-keyed dirs — dynamic overwrite
+    * of the batch's own partitions, bracketed by the intent and done
+    * ledger rows — over [[appendDocs]]'s plain `mode("append")` dirs.
+    */
+  private def append(index: Index, newDocs: DataFrame, idCol: String,
+                     textCol: String, filesPerBucket: Int,
+                     batchId: Option[Long], fp: Long = 0L): Unit = {
+    def land(df: DataFrame, dir: String, parts: String*): Unit =
+      batchId match {
+        case None => df.write.mode("append").partitionBy(parts: _*)
+          .parquet(dir)
+        case Some(id) => df.withColumn("batch_id", lit(id))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(parts :+ "batch_id": _*)
+          .parquet(dir)
+      }
+    val batched = batchId.isDefined
+    val rel = Bm25.tf(newDocs, idCol, textCol, bag = None)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
-      // token-empty batch guard (r14 ADVICE): see [[appendDocs]] — a
-      // file-less partitioned dir breaks every later read, and
-      // corpusStats would emit an (n_docs=0, sum_dl=null) delta row
+      // token-empty batch guard (r14 ADVICE): a batch whose docs all
+      // tokenize to nothing contributes NO postings, NO df deltas and —
+      // because only docs with >= 1 token carry a sentinel row — NO
+      // meta delta either; writing the empty partitioned datasets anyway
+      // would leave file-less dirs that poison every later
+      // spark.read.parquet (schema inference has nothing to read).
+      // Skipping all three writes keeps search == built-whole exactly.
       if (rel.isEmpty) return
-      ledgerAppend(index, batchId, "intent", fpNew)
-      rel.withColumn("df", lit(0L))
-        .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
-        .withColumn("batch_id", lit(batchId))
-        .select("term", "doc_id", "tf", "dl", "df", "term_bucket",
-          "batch_id")
-        .repartition(index.nBuckets * filesPerBucket, col("term_bucket"),
-          pmod(hash(col("doc_id")), lit(filesPerBucket)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("term_bucket", "batch_id")
-        .parquet(batchPostingsDir(index))
-      rel.groupBy("term").agg(count(lit(1)).as("df_delta"))
-        .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
-        .withColumn("batch_id", lit(batchId))
-        .repartition(col("term_bucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("term_bucket", "batch_id")
-        .parquet(batchDeltaDir(index))
-      TextAnalysis.corpusStats(newDocs, textCol)
-        .withColumn("batch_id", lit(batchId))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(batchMetaDeltaDir(index))
-      ledgerAppend(index, batchId, "done", fpNew)
+      batchId.foreach(ledgerAppend(index, _, "intent", fp))
+      land(Bm25.postings(rel).withColumn("df", lit(0L))
+          .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
+          .select("term", "doc_id", "tf", "dl", "df", "term_bucket")
+          .repartition(index.nBuckets * filesPerBucket, col("term_bucket"),
+            pmod(hash(col("doc_id")), lit(filesPerBucket))),
+        if (batched) batchPostingsDir(index) else index.postingsDir,
+        "term_bucket")
+      land(Bm25.df(rel).withColumnRenamed("df", "df_delta")
+          .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
+          .repartition(col("term_bucket")),
+        if (batched) batchDeltaDir(index) else deltaDir(index),
+        "term_bucket")
+      land(Bm25.meta(rel).coalesce(1),
+        if (batched) batchMetaDeltaDir(index) else metaDeltaDir(index))
+      batchId.foreach(ledgerAppend(index, _, "done", fp))
+      // in-version mutation: advance the watcher counter (r12) so a
+      // GraftServer.watchIndexes plan pinned to the pre-append file
+      // listing rebuilds on its next request
       IndexVersions.bumpGeneration(index.spark, index.dir)
     } finally rel.unpersist()
   }
 
-  /** Fold accumulated df deltas and doc tombstones into a fresh
-    * postings version WITHOUT re-tokenizing the corpus — the lexical
-    * twin of `AnnIndex.compactCells`. Everything derives from the
-    * index's own rows: each term's effective df is the exact
-    * search-time reconstruction (max build df + delta sum, a
-    * map-side-combined groupBy joined back — the same skew-safe shape
-    * as the build), tombstoned documents drop physically, and the
-    * corpus scalars are base + meta deltas (delete-conservative,
-    * matching search semantics). The result publishes as
-    * postings.v(N+1)/meta.v(N+1) through the CURRENT flip; the new
-    * version carries no delta or tombstone dirs, so searches on it
-    * take the row-local single-relation plan again. Search results are
-    * IDENTICAL before and after compaction (spec-pinned), and open
-    * readers pinned to the old version are undisturbed until
-    * [[vacuum]].
+  /** Effective df per term: the build-time df (max over `base`'s rows —
+    * build rows share one value per term, appended rows carry 0) plus
+    * the summed `deltas` rows of either append path; terms born in an
+    * append resolve to delta-only. A map-side-combined groupBy joined
+    * back, never a term window. Shared by search and compaction.
     */
-  /** Stage one bucket group of compacted version `v` — the
-    * partition-pruned unit of [[compactDeltas]]'s bucketsPerJob mode.
-    * df is a function of `term` and `term` determines `term_bucket`,
-    * so a group folds independently: both postings legs and both delta
-    * legs prune to the group's partitions, and the rewrite's transient
-    * shuffle is group-sized instead of corpus-sized. Writes stage into
-    * the SHARED v directories with dynamic partition overwrite, so a
-    * crashed run's redo replaces its own partitions.
+  private def effectiveDf(base: DataFrame,
+                          deltas: Option[DataFrame]): DataFrame = {
+    val baseDf = base.groupBy("term").agg(max(col("df")).as("df_base"))
+    deltas match {
+      case None => baseDf.select(col("term"), col("df_base").as("df_eff"))
+      case Some(d) =>
+        baseDf.join(d.groupBy("term").agg(sum(col("df_delta")).as("df_add")),
+            Seq("term"), "full_outer")
+          .select(col("term"),
+            (coalesce(col("df_base"), lit(0L)) +
+              coalesce(col("df_add"), lit(0L))).as("df_eff"))
+    }
+  }
+
+  /** Stage one bucket group of compacted version `v`. df is a function
+    * of `term` and `term` determines `term_bucket`, so a group folds
+    * independently: both postings legs and both delta legs prune to the
+    * group's partitions, and the rewrite's transient shuffle is
+    * group-sized. Writes stage into the SHARED v directories with
+    * dynamic partition overwrite, so a crashed run's redo replaces its
+    * own partitions.
     */
   private def compactBucketGroup(index: Index, v: Long,
                                  filesPerBucket: Int,
@@ -654,24 +622,11 @@ object Bm25Index {
     val inG = col("term_bucket")
       .isin(group.map(b => Long.box(b.toLong)): _*)
     val slice = index.postings.where(inG)
-    val baseDf = slice.groupBy("term").agg(max(col("df")).as("df_base"))
-    val dfEff = dfDeltas(index) match {
-      case None =>
-        baseDf.select(col("term"), col("df_base").as("df_eff"))
-      case Some(deltas) =>
-        baseDf.join(
-          deltas.where(inG).groupBy("term")
-            .agg(sum(col("df_delta")).as("df_add")),
-          Seq("term"), "full_outer")
-          .select(col("term"),
-            (coalesce(col("df_base"), lit(0L)) +
-              coalesce(col("df_add"), lit(0L))).as("df_eff"))
-    }
-    // one aggregate, two consumers — the group's vocabulary slice
-    // persists (bounded: vocab/nBuckets × group size) instead of the
-    // whole path's read-back, which would need schema inference on a
-    // dir the first group may not have populated yet
-    val statsG = dfEff.select(col("term"), col("df_eff").as("df"))
+    // effective df from the RAW rows: deletes must not perturb df (the
+    // search rule). One aggregate, two consumers — the group's
+    // vocabulary slice persists (bounded: vocab/nBuckets × group size)
+    val statsG = effectiveDf(slice, dfDeltas(index).map(_.where(inG)))
+      .select(col("term"), col("df_eff").as("df"))
       .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
@@ -682,6 +637,8 @@ object Bm25Index {
         .parquet(s"${index.dir}/term_stats.v$v")
       aliveDocs(index, slice)
         .drop("df").join(statsG.select("term", "df"), "term")
+        // recompute the bucket so its type stays canonical regardless
+        // of what partition-column inference produced on the read
         .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
         .select("term", "doc_id", "tf", "dl", "df", "term_bucket")
         .repartition(group.size * filesPerBucket, col("term_bucket"),
@@ -693,21 +650,33 @@ object Bm25Index {
     } finally statsG.unpersist()
   }
 
-  /** `bucketsPerJob` (r15, VERDICT r14 item 2): 0 (default) folds all
-    * postings in ONE job — the original shape, whose transient shuffle
-    * footprint is the whole corpus re-keyed at once (~50 GB at 100M
-    * docs on this box: the measured reason the sliced 100M index could
-    * not compact, BM25_SERVE_r14). Because df is a function of `term`
-    * and `term` determines `term_bucket`, every bucket folds
-    * INDEPENDENTLY: with bucketsPerJob ≥ 1 the rewrite runs as
-    * ceil(nBuckets / bucketsPerJob) partition-pruned jobs, each
-    * staging its bucket group into the SAME v+1 directories via
-    * dynamic partition overwrite — transient footprint ≈
-    * bucketsPerJob/nBuckets of the whole job, with version-publish
-    * atomicity preserved (all groups stage under v+1; CURRENT flips
-    * once at the end; a crash mid-stage leaves the old version live
-    * and the redo's dynamic overwrite replaces its own partitions).
-    * Search results are identical in either mode (spec-pinned).
+  /** Fold accumulated df deltas and doc tombstones into a fresh
+    * postings version WITHOUT re-tokenizing the corpus — the lexical
+    * twin of `AnnIndex.compactCells`. Everything derives from the
+    * index's own rows: each term's effective df is the exact
+    * search-time reconstruction ([[effectiveDf]]), tombstoned documents
+    * drop physically, and the corpus scalars are base + meta deltas
+    * (delete-conservative, matching search semantics). The result
+    * publishes as postings.v(N+1)/meta.v(N+1) through the CURRENT flip;
+    * the new version carries no delta or tombstone dirs, so searches on
+    * it take the row-local single-relation plan again. Search results
+    * are IDENTICAL before and after compaction (spec-pinned), and open
+    * readers pinned to the old version are undisturbed until
+    * [[vacuum]].
+    *
+    * `bucketsPerJob` (r15, VERDICT r14 item 2): 0 (default) folds all
+    * postings in ONE job — whose transient shuffle footprint is the
+    * whole corpus re-keyed at once (~50 GB at 100M docs, measured in
+    * BM25_SERVE_r14: the reason the sliced 100M index could not
+    * compact). Because every bucket folds INDEPENDENTLY (see
+    * [[compactBucketGroup]]), bucketsPerJob ≥ 1 runs the rewrite as
+    * ceil(nBuckets / bucketsPerJob) partition-pruned jobs, each staging
+    * its bucket group into the SAME v+1 directories — transient
+    * footprint ≈ bucketsPerJob/nBuckets of the whole job, with
+    * version-publish atomicity preserved (all groups stage under v+1;
+    * CURRENT flips once at the end; a crash mid-stage leaves the old
+    * version live). Search results are identical in either mode
+    * (spec-pinned).
     */
   def compactDeltas(index: Index, filesPerBucket: Int = 4,
                     bucketsPerJob: Int = 0): Index = {
@@ -732,49 +701,9 @@ object Bm25Index {
     foldLedger(index)
     val v = IndexVersions.current(spark, index.dir).getOrElse(0L) + 1L
     val (nDocs, sumDl) = effectiveScalars(index)
-    if (bucketsPerJob >= 1) {
-      (0 until index.nBuckets).grouped(bucketsPerJob)
-        .foreach(g => compactBucketGroup(index, v, filesPerBucket, g))
-    } else {
-      val postings = index.postings
-      // effective df per term from the RAW rows (deletes must not
-      // perturb df — same rule as search): build rows share one value,
-      // append rows carry 0, delta rows (either append path) add batch
-      // counts
-      val baseDf = postings.groupBy("term")
-        .agg(max(col("df")).as("df_base"))
-      val dfEff = dfDeltas(index) match {
-        case None =>
-          baseDf.select(col("term"), col("df_base").as("df_eff"))
-        case Some(deltas) =>
-          baseDf.join(
-            deltas.groupBy("term").agg(sum(col("df_delta")).as("df_add")),
-            Seq("term"), "full_outer")
-            .select(col("term"),
-              (coalesce(col("df_base"), lit(0L)) +
-                coalesce(col("df_add"), lit(0L))).as("df_eff"))
-      }
-      // the compacted version's term-stats sidecar: the folded dfEff,
-      // materialized FIRST and read back for the postings join (the
-      // write() discipline — one aggregate, two consumers)
-      dfEff.select(col("term"), col("df_eff").as("df"))
-        .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
-        .repartition(col("term_bucket"))
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(s"${index.dir}/term_stats.v$v")
-      val stats = spark.read.parquet(s"${index.dir}/term_stats.v$v")
-        .select("term", "df")
-      aliveDocs(index, postings)
-        .drop("df").join(stats, "term")
-        // recompute the bucket so its type stays canonical regardless
-        // of what partition-column inference produced on the read
-        .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
-        .select("term", "doc_id", "tf", "dl", "df", "term_bucket")
-        .repartition(index.nBuckets * filesPerBucket, col("term_bucket"),
-          pmod(hash(col("doc_id")), lit(filesPerBucket)))
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(s"${index.dir}/postings.v$v")
-    }
+    val buckets = 0 until index.nBuckets
+    (if (bucketsPerJob >= 1) buckets.grouped(bucketsPerJob) else Iterator(buckets))
+      .foreach(g => compactBucketGroup(index, v, filesPerBucket, g))
     spark.range(1)
       .select(lit(nDocs).cast(LongType).as("n_docs"),
         lit(sumDl).cast(LongType).as("sum_dl"),
@@ -824,16 +753,6 @@ object Bm25Index {
       Seq("doc_id"), "left_anti")
   }
 
-  /** Query-by-example retrieval from the persisted postings: each
-    * query row's distinct tokens form its term bag (bounded,
-    * broadcast); their distinct buckets (≤ distinct query terms,
-    * collected — the AnnIndex probe sanction) become a LITERAL
-    * `term_bucket IN (...)` predicate that Catalyst satisfies by
-    * partition pruning, so unqueried vocabulary directories are never
-    * listed into the scan. Scoring and ranking replicate
-    * bm25Retrieve exactly: same rounded-decimal term scores, same
-    * (bm25 desc, nid) tie-break.
-    */
   private def statsDir(index: Index): String =
     if (index.version == 0L) s"${index.dir}/term_stats"
     else s"${index.dir}/term_stats.v${index.version}"
@@ -849,30 +768,25 @@ object Bm25Index {
   private def dfForTerms(index: Index, qTerms: DataFrame,
                          inBuckets: Column): DataFrame = {
     val sd = statsDir(index)
-    val baseDf =
-      if (exists(index.spark, sd))
-        index.spark.read.parquet(sd).where(inBuckets)
-          .join(broadcast(qTerms), "term")
-          .groupBy("term").agg(max(col("df")).as("df_base"))
-      else index.postings.where(inBuckets)
-        .join(broadcast(qTerms), "term")
-        .groupBy("term").agg(max(col("df")).as("df_base"))
-    dfDeltas(index) match {
-      case None =>
-        baseDf.select(col("term"), col("df_base").as("df_eff"))
-      case Some(allDeltas) =>
-        val deltas = allDeltas
-          .where(inBuckets)
-          .join(broadcast(qTerms), "term")
-          .groupBy("term").agg(sum(col("df_delta")).as("df_add"))
-        baseDf.join(deltas, Seq("term"), "full_outer")
-          .select(col("term"),
-            (coalesce(col("df_base"), lit(0L)) +
-              coalesce(col("df_add"), lit(0L))).as("df_eff"))
-    }
+    val base =
+      if (exists(index.spark, sd)) index.spark.read.parquet(sd)
+      else index.postings
+    def queried(d: DataFrame) =
+      d.where(inBuckets).join(broadcast(qTerms), "term")
+    effectiveDf(queried(base), dfDeltas(index).map(queried))
   }
 
-  /** `allowed` (r9): restrict results to a (doc_id) relation — the
+  /** Query-by-example retrieval from the persisted postings: each
+    * query row's distinct tokens form its term bag (bounded,
+    * broadcast); their distinct buckets (≤ distinct query terms,
+    * collected — the AnnIndex probe sanction) become a LITERAL
+    * `term_bucket IN (...)` predicate that Catalyst satisfies by
+    * partition pruning, so unqueried vocabulary directories are never
+    * listed into the scan. Scoring and ranking are bm25Retrieve's own
+    * [[Bm25.rank]] tail: same rounded-decimal term scores, same
+    * (bm25 desc, nid) tie-break.
+    *
+    * `allowed` (r9): restrict results to a (doc_id) relation — the
     * multi-tenant / per-collection serving filter, the positive twin
     * of the [[deleteDocs]] tombstone anti-join, applied identically:
     * a doc_id-keyed semi join against ONLY the pruned postings slice
@@ -902,8 +816,7 @@ object Bm25Index {
              k1: Double = 1.2, b: Double = 0.75,
              allowed: Option[DataFrame] = None,
              maxDfShare: Option[Double] = None): DataFrame = {
-    val qtAll = TextAnalysis.tokenStream(queries, idCol, textCol)
-      .select(col("doc_id").as("qid"), col("term")).distinct()
+    val qtAll = Bm25.queryTerms(queries, idCol, textCol)
       .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
     // corpus scalars: base meta + (if appended) the meta delta rows —
     // a bounded driver read per search, the probe-set sanction
@@ -942,14 +855,11 @@ object Bm25Index {
     val sliced = aliveDocs(index, slicedRaw)
     val pruned = allowed.fold(sliced)(a =>
       sliced.join(a.select(col("doc_id")), Seq("doc_id"), "left_semi"))
-    val matched = pruned
-      .join(broadcast(qt.select("qid", "term")), "term")
-      .where(col("doc_id") =!= col("qid"))
     // effective df: on a never-appended index it is the row's own
     // denormalized value; after appends it is reconstructed by
     // [[dfForTerms]] — bounded by the queried vocabulary either way
-    val scoredBase = dfDeltas(index) match {
-      case None => matched
+    val postings = dfDeltas(index) match {
+      case None => pruned
       case Some(_) =>
         // reuse the already-collected probe rows when maxDfShare ran
         // (kept terms' df_eff values are exactly what a re-probe over
@@ -962,19 +872,10 @@ object Bm25Index {
           case None =>
             dfForTerms(index, qt.select("term").distinct(), inBuckets)
         }
-        matched.drop("df").join(broadcast(dfRel), "term")
+        pruned.drop("df").join(broadcast(dfRel), "term")
           .withColumnRenamed("df_eff", "df")
     }
-    val scored = scoredBase
-      .withColumn("n_docs", lit(nDocs))
-      .withColumn("sum_dl", lit(sumDl))
-      .withColumn("s", TextAnalysis.bm25TermScore(k1, b))
-      .groupBy(col("qid"), col("doc_id").as("nid"))
-      .agg(sum(col("s")).cast(DoubleType).as("bm25"))
-    // bounded per-query rank (r12): the qid window form co-located a
-    // query's whole matched-posting set in one task — corpus-scale
-    // under a Zipf-head query term. rankTopK reduces map-side and is
-    // byte-identical (SkewSpec pins identity vs the window form).
-    Similarity.rankTopK(scored, topK, desc = true, "bm25")
+    Bm25.rank(postings.withColumn("n_docs", lit(nDocs))
+      .withColumn("sum_dl", lit(sumDl)), qt, k1, b, topK)
   }
 }

@@ -574,132 +574,35 @@ object TextAnalysis {
       .where(col("term") =!= "")
       .groupBy("term").agg(count(lit(1)).as("cnt"))
 
-  /** Non-empty (doc_id, term) token stream — the shared upstream of
-    * the BM25 family.
-    */
-  private[operators] def tokenStream(df: DataFrame, idCol: String,
-                          textCol: String): DataFrame =
-    df.select(col(idCol).as("doc_id"),
-      explode(tokens(col(textCol))).as("term"))
-      .where(col("term") =!= "")
-
-  /** The corpus-wide token array with empties dropped. */
-  private[operators] def filteredTokens(text: Column): Column =
-    filter(tokens(text), t => t =!= "")
-
-  /** Corpus scalars AND per-term document frequencies for a bounded
-    * term bag, in ONE narrow pass: each document contributes its token
-    * count under a `""` sentinel key plus one row per DISTINCT matched
-    * bag term, and a single map-side-combined aggregate over those
-    * ≤ |bag|+1 keys yields (n_docs, sum_dl) and every df. The bounded
-    * result is collected (the AnnIndex probe-set sanction).
-    *
-    * This replaces the r7 `count().over(Window.partitionBy("term"))`
-    * df: a Zipf-head term ("the") appears in essentially every
-    * document, so its window partition was corpus-sized and
-    * unsplittable — one multi-hundred-GB reducer at 10^10 docs that
-    * AQE cannot split. A grouped aggregate map-side-combines the hot
-    * key down to one partial row per task before any shuffle.
-    */
-  private def statsAndDf(corpus: DataFrame, textCol: String,
-                         bag: Seq[String]): (Long, Long, Map[String, Long]) = {
-    val toks = filteredTokens(col(textCol))
-    val rows = corpus
-      .select(size(toks).cast(LongType).as("dl"),
-        array_intersect(toks, typedlit(bag)).as("hits"))
-      .where(col("dl") > 0)
-      .select(col("dl"),
-        explode(concat(array(lit("")), col("hits"))).as("term"))
-      .groupBy("term")
-      .agg(count(lit(1)).as("cnt"), sum(col("dl")).as("sdl"))
-      .collect()
-    val sentinel = rows.find(_.getString(0).isEmpty)
-    (sentinel.map(_.getLong(1)).getOrElse(0L),
-      sentinel.map(_.getLong(2)).getOrElse(0L),
-      rows.filter(_.getString(0).nonEmpty)
-        .map(r => r.getString(0) -> r.getLong(1)).toMap)
-  }
-
-  /** Map-only (doc_id, term, tf, dl) relation over a bounded term bag:
-    * dl attaches per row BEFORE any explode (it is just the token-array
-    * size — the doc-keyed window this replaces cost a shuffle), the
-    * explode is over the ≤ |bag| matched DISTINCT terms, and tf is a
-    * per-term count within the row's own token array. NO shuffle, NO
-    * window — per-doc work is O(len·|bag ∩ doc|), the right trade for
-    * the handful of terms a user types.
-    */
-  private def queryTermTf(corpus: DataFrame, idCol: String,
-                          textCol: String, bag: Seq[String]): DataFrame =
-    corpus
-      .select(col(idCol).as("doc_id"),
-        filteredTokens(col(textCol)).as("toks"))
-      .select(col("doc_id"), size(col("toks")).cast(LongType).as("dl"),
-        transform(array_intersect(col("toks"), typedlit(bag)),
-          h => struct(h.as("term"),
-            size(filter(col("toks"), x => x === h)).cast(LongType).as("tf")))
-          .as("hits"))
-      .select(col("doc_id"), col("dl"), explode(col("hits")).as("h"))
-      .select(col("doc_id"), col("h.term").as("term"),
-        col("h.tf").as("tf"), col("dl"))
-
-  /** Per-term Okapi BM25 contribution. All inputs are exact integers
-    * (tf, df, dl, n_docs, sum_dl), the arithmetic is a fixed expression
-    * tree mirrored verbatim by the SQL oracle, and the result is
-    * rounded to 6 dp and cast to decimal so the per-document sum is
-    * order-independent and exact.
-    */
-  private[operators] def bm25TermScore(k1: Double, b: Double): Column = {
-    val nd = col("n_docs").cast(DoubleType)
-    val idf = log(lit(1.0) +
-      (nd - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    // dl / avgdl as (dl * n_docs) / sum_dl — one division, exact ints in
-    val dlNorm = col("dl").cast(DoubleType) * nd / col("sum_dl").cast(DoubleType)
-    val tfD = col("tf").cast(DoubleType)
-    round(idf * tfD * lit(k1 + 1.0)
-      / (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * dlNorm)), 6)
-      .cast(DecimalType(18, 6))
-  }
-
-  /** Corpus length scalars (n_docs with ≥1 token, total token count)
-    * from a narrow map over the table: the token array is sized and
-    * discarded per row — no explode, no shuffle, one cheap pass.
-    */
-  private[operators] def corpusStats(df: DataFrame, textCol: String): DataFrame =
-    df.select(size(filter(tokens(col(textCol)), t => t =!= ""))
-        .cast(LongType).as("dl"))
-      .where(col("dl") > 0)
-      .agg(count(col("dl")).as("n_docs"), sum(col("dl")).as("sum_dl"))
-
   /** Okapi BM25 ranking of every document against a fixed bag of query
     * terms — the lexical half of a retrieval stack (the classic
     * tf-idf-family relevance the reference's users run via
     * `pyarrow`-backed search engines).
     *
-    * Scale shape (r9): the bounded [[statsAndDf]] pass computes df and
-    * the corpus scalars in one narrow map-side-combined aggregate — no
-    * term-keyed window, so a query containing a Zipf-head term no
-    * longer concentrates a corpus-sized window partition on one
-    * reducer — and the scoring relation is the MAP-ONLY
-    * [[queryTermTf]] (dl/tf computed inside each row's token array,
-    * df/scalars folded in as literals). The whole plan is one corpus
-    * scan, one aggregate shuffle, and a TakeOrderedAndProject
-    * (per-partition top-k + driver merge), never a full sort.
+    * Query terms are normalized like corpus [[tokens]] (lowercased,
+    * whitespace-trimmed); a term that is empty or still holds
+    * whitespace after that can never match a token, so it is rejected.
+    *
+    * Plan: [[Bm25.bagPostings]]'s two lazy corpus passes, both in-plan
+    * — the bag-filtered tf relation and the broadcast statistics row
+    * (df for the bag plus the corpus scalars) — then one doc-keyed
+    * aggregate and a TakeOrderedAndProject (per-partition top-k +
+    * driver merge), never a full sort. Nothing windows over term.
     */
   def bm25Scores(df: DataFrame, idCol: String, textCol: String,
                  queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
                  topK: Int = 20): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    val bag = queryTerms.distinct
-    val (nDocs, sumDl, dfs) = statsAndDf(df, textCol, bag)
-    // df as a literal CASE over the bounded bag: no join at all
-    val dfCol = bag.foldRight(lit(0L): Column) { (t, e) =>
-      when(col("term") === t, lit(dfs.getOrElse(t, 0L))).otherwise(e)
-    }
-    queryTermTf(df, idCol, textCol, bag)
-      .withColumn("df", dfCol)
-      .withColumn("n_docs", lit(nDocs))
-      .withColumn("sum_dl", lit(sumDl))
-      .withColumn("s", bm25TermScore(k1, b))
+    val terms = queryTerms.map { t =>
+      val n = t.toLowerCase(java.util.Locale.ROOT)
+        .replaceAll("^\\s+|\\s+$", "")
+      require(n.matches("\\S+"),
+        s"query term must be one non-empty token: '$t'")
+      n
+    }.distinct
+    import df.sparkSession.implicits._
+    Bm25.bagPostings(df, idCol, textCol, terms.toDF("term"))
+      .withColumn("s", Bm25.termScore(k1, b))
       .groupBy("doc_id")
       .agg(sum(col("s")).cast(DoubleType).as("bm25"),
         count(lit(1)).as("n_terms"))
@@ -712,60 +615,17 @@ object TextAnalysis {
     * sharing at least one term, scored per (query, candidate) and
     * ranked within the query. The query set is bounded (it is the thing
     * a user types or the handful of eval documents), so it broadcasts;
-    * the corpus-side work is one tokenize pass into a (doc_id, dl,
-    * term)-keyed aggregation (doc_id in the key — skew-proof) plus the
-    * bounded [[statsAndDf]] pass for df, and the per-term join fan-out
-    * is the inverted-index posting-list size — never all-pairs over
-    * documents. Self-matches are excluded.
+    * the corpus-side work is [[Bm25.bagPostings]]'s two lazy passes,
+    * and the per-term join fan-out is the inverted-index posting-list
+    * size — never all-pairs over documents. Self-matches are excluded.
     */
   def bm25Retrieve(corpus: DataFrame, queries: DataFrame,
                    idCol: String, textCol: String,
                    k1: Double = 1.2, b: Double = 0.75,
                    topK: Int = 20): DataFrame = {
-    val qt = tokenStream(queries, idCol, textCol)
-      .select(col("doc_id").as("qid"), col("term")).distinct()
-    // r16 (guide §1.2/§2.3): fully lazy, and the second corpus
-    // tokenize pass is gone. The old shape ran statsAndDf — a whole
-    // extra tokenize + array_intersect + explode + driver collect —
-    // just to learn (n_docs, sum_dl, df). Now: the corpus scalars come
-    // from an explode-free length pass (one row, broadcast via
-    // crossJoin); the bag filter is a broadcast SEMI join against qt's
-    // distinct terms (map-side, bounded by contract — never a
-    // term-partitioned window, the r9 hot-head fix stands); and df is
-    // re-derived from the matched (doc, term) relation itself, where
-    // its rows are already distinct per doc. Aggregation keys still
-    // CONTAIN doc_id, so no term can concentrate a partition.
-    val scalars = corpus
-      .select(size(filteredTokens(col(textCol))).cast(LongType).as("dl"))
-      .where(col("dl") > 0)
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-    val matched = corpus
-      .select(col(idCol).as("doc_id"),
-        filteredTokens(col(textCol)).as("toks"))
-      .select(col("doc_id"), size(col("toks")).cast(LongType).as("dl"),
-        explode(col("toks")).as("term"))
-      .join(broadcast(qt.select("term").distinct()), Seq("term"), "left_semi")
-      .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    // df = docs containing the term = matched rows per term (the
-    // (doc, term) key is distinct post-agg) — a bag-bounded aggregate
-    val dfTab = matched.groupBy("term").agg(count(lit(1)).as("df"))
-    val scored = matched.join(broadcast(dfTab), "term")
-      .join(broadcast(qt), "term")
-      .where(col("doc_id") =!= col("qid"))
-      .crossJoin(broadcast(scalars))
-      .withColumn("s", bm25TermScore(k1, b))
-      .groupBy(col("qid"), col("doc_id").as("nid"))
-      .agg(sum(col("s")).cast(DoubleType).as("bm25"))
-    // per-query rank via the bounded rankTopK aggregate, NOT a qid
-    // window: a Zipf-head query term matches corpus-scale postings, so
-    // `row_number() OVER (PARTITION BY qid)` would co-locate that
-    // query's entire candidate set in one unsplittable task — the same
-    // shape r11 swept out of every ANN ranker. Requires integral ids
-    // (the repo-wide vec_id/doc_id contract). Byte-identical to the
-    // window form (SkewSpec).
-    Similarity.rankTopK(scored, topK, desc = true, "bm25")
+    val qt = Bm25.queryTerms(queries, idCol, textCol)
+    Bm25.rank(Bm25.bagPostings(corpus, idCol, textCol, qt.select("term")),
+      qt, k1, b, topK)
   }
 
   /** HTML → text extraction (H19, round 11) — the step a crawl

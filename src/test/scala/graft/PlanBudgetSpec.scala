@@ -45,9 +45,13 @@ class PlanBudgetSpec extends SparkSpec {
     "q_asof_join" -> (2, 1, 2), // union+window single-shuffle shape
     "q_tfidf_top" -> (3, 1, 2), // tokenize once + window df; 2nd scan is the zero-column doc count
     "q_surprisal" -> (3, 1, 1), // ONE tokenize pass, stats re-aggregated from it
-    "q_bm25" -> (1, 0, 1), // r9 de-skew: map-only queryTermTf relation
-    // (dl/tf inside each row's token array, df/scalars as literals from
-    // the eager bounded statsAndDf pass) + ONE agg shuffle + TakeOrdered
+    "q_bm25" -> (3, 0, 2), // the Bm25 core: the bag-filtered tf
+    // aggregate + the bagStats term aggregate (≤ |bag|+1 keys after
+    // map-side combine, broadcast as one row) + the doc-keyed score
+    // agg, then TakeOrdered. The trade: the eager off-plan stats
+    // collect became an in-plan pass, so the static plan shows 2 corpus
+    // scans where it showed 1, while total corpus passes stay at 2
+    // and building the DataFrame runs no job
     "q_dup_ngrams" -> (2, 1, 1), // window-over-gram: ONE corpus scan
     "q_source_overlap" -> (4, 1, 1), // r16: ONE shingle pass collapsing
     // into the source-set histogram; the extra hash exchanges beyond

@@ -466,8 +466,8 @@ class Bm25IndexSpec extends SparkSpec {
     assert(!new java.io.File(root, s"meta_delta_batches.v$v").exists())
     assert(!new java.io.File(root, s"df_deltas.v$v").exists())
     assert(!new java.io.File(root, s"meta_deltas.v$v").exists())
-    // the index still opens and serves, results unchanged: corpusStats
-    // counts only docs with >= 1 token, so built-whole parity holds
+    // the index still opens and serves, results unchanged: the corpus
+    // scalars count only docs with >= 1 token, so built-whole parity holds
     val after = asTuples(Bm25Index.search(Bm25Index.open(spark, dir),
       queries, "doc_id", "text", topK = 20))
     assert(after == before)

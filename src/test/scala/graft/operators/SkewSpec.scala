@@ -134,23 +134,29 @@ class SkewSpec extends SparkSpec {
     // 'the' planted in EVERY document — the r8 shape computed df with
     // count().over(Window.partitionBy("term")), putting the whole
     // corpus into one unsplittable window partition for a Zipf-head
-    // term. The r9 shapes (bounded-key statsAndDf aggregate for the
-    // query paths; map-side-combined groupBy+join for the index build)
-    // must produce byte-identical values with NO term-keyed window.
+    // term. The Bm25 core (bag-bounded statistics row for the query
+    // paths; map-side-combined term aggregate + join for the index
+    // build) must produce byte-identical values with NO term window.
     val docs = (0L until 120L).map { i =>
       (i, s"the doc $i body token${i % 7} the extra${i % 3}")
     }.toDF("doc_id", "text")
     val bag = Seq("the", "token3")
 
-    // window-shaped reference: the r8 implementation, inlined
-    val dt = TextAnalysis.tokenStream(docs, "doc_id", "text")
+    // window-shaped reference: the r8 implementation, inlined, corpus
+    // scalars included, so it calls nothing under test but the score
+    val dt = docs
+      .select(col("doc_id"),
+        explode(split(trim(lower(col("text"))), "\\s+")).as("term"))
+      .where(col("term") =!= "")
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    val refScalars = dt.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val refScores = dt
       .withColumn("dl", sum(col("tf")).over(Window.partitionBy("doc_id")))
       .where(col("term").isin(bag: _*))
       .withColumn("df", count(col("tf")).over(Window.partitionBy("term")))
-      .join(broadcast(TextAnalysis.corpusStats(docs, "text")))
-      .withColumn("s", TextAnalysis.bm25TermScore(1.2, 0.75))
+      .join(broadcast(refScalars))
+      .withColumn("s", Bm25.termScore(1.2, 0.75))
       .groupBy("doc_id")
       .agg(sum(col("s")).cast(DoubleType).as("bm25"),
         count(lit(1)).as("n_terms"))
@@ -164,19 +170,26 @@ class SkewSpec extends SparkSpec {
     assert(!scoresPlan.contains("Window"),
       s"bm25Scores must not window at all:\n$scoresPlan")
 
-    // index build: (term, doc_id, tf, dl, df) identical to the window
-    // reference, no Window operator in the plan
+    // index build: the (term, doc_id, tf, dl, df) postings that
+    // Bm25Index.write publishes are identical to the window reference,
+    // and no core relation the build runs holds a Window operator
     val refPost = dt
       .withColumn("dl", sum(col("tf")).over(Window.partitionBy("doc_id")))
       .withColumn("df", count(col("tf")).over(Window.partitionBy("term")))
       .select("term", "doc_id", "tf", "dl", "df")
       .collect().map(_.toSeq).toSet
-    val post = Bm25Index.withDf(
-      Bm25Index.tfRelation(docs, "doc_id", "text"), nBuckets = 8)
-    assert(post.drop("term_bucket").collect().map(_.toSeq).toSet == refPost)
-    val postPlan = post.queryExecution.executedPlan.toString()
-    assert(!postPlan.contains("Window"),
-      s"index build must not window over term:\n$postPlan")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-bm25-skew").toString
+    Bm25Index.write(docs, "doc_id", "text", dir, nBuckets = 8)
+    val idx = Bm25Index.open(spark, dir)
+    val post = spark.read.parquet(idx.postingsDir).drop("term_bucket")
+    assert(post.collect().map(_.toSeq).toSet == refPost)
+    val rel = Bm25.tf(docs, "doc_id", "text", bag = None)
+    Seq(Bm25.postings(rel), Bm25.df(rel), Bm25.meta(rel)).foreach { r =>
+      val plan = r.queryExecution.executedPlan.toString()
+      assert(!plan.contains("Window"),
+        s"index build must not window over term:\n$plan")
+    }
 
     // retrieve (r12): NO window at all — the per-query rank goes
     // through the bounded rankTopK aggregate. A qid window would put a
@@ -210,10 +223,6 @@ class SkewSpec extends SparkSpec {
     // search plan, results byte-identical to bm25Retrieve on the same
     // corpus (the Bm25IndexSpec identity, re-checked here under the
     // planted-stopword skew shape)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bm25-skew").toString
-    Bm25Index.write(docs, "doc_id", "text", dir, nBuckets = 8)
-    val idx = Bm25Index.open(spark, dir)
     val srch = Bm25Index.search(idx, queries, "doc_id", "text", topK = 5)
     val srchPlan = srch.queryExecution.executedPlan.toString()
     assert(!srchPlan.contains("Window"),

@@ -319,7 +319,7 @@ object QueriesPipeline {
     // float-sum order differs across engines.
     QueryDef("q_embed_neardup",
       (s, d) => Similarity.cosineNearDups(Tables.embeddings(s, d),
-        threshold = 0.4, dim = 64, planes = 0)
+        threshold = 0.4, planes = 0)
         .select("id_a", "id_b").orderBy("id_a", "id_b"),
       Some("""SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
@@ -416,7 +416,7 @@ object QueriesPipeline {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         Similarity.lshRadiusTopK(emb, emb.where(col("vec_id") < 10), k = 5,
-          dim = 64, threshold = 0.3, planes = 0)
+          threshold = 0.3, planes = 0)
           .orderBy("qid", "rank")
       },
       Some("""SELECT qid, nid, rank FROM (
@@ -537,7 +537,7 @@ object QueriesPipeline {
               / count(lit(1))).as("recall"))
             .select(lit(method).as("method"), lit(k.toLong).as("k"),
               (col("recall") >= bound).as("recall_ok"))
-        val lsh = Similarity.lshRadiusTopK(corpus, queries, k, dim = 64,
+        val lsh = Similarity.lshRadiusTopK(corpus, queries, k,
           threshold = 0.8, planes = 2, probes = 4)
         val ivf = Similarity.ivfTopK(corpus, queries, k,
           nCells = 16, stride = 7, nprobe = 4, centroids = Some(cents))

@@ -10,6 +10,17 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Encoder
 
+/** Spark SQL's double ordering (SQLOrderingUtil): -0.0 ties 0.0, NaN
+  * is the greatest value and equal to itself. Every JVM-side ranking
+  * that must agree with a SQL sort compares through this.
+  */
+object SqlDoubleOrder {
+  @inline def compare(x: Double, y: Double): Int =
+    if (x < y) -1 else if (x > y) 1
+    else if (x == y) 0
+    else java.lang.Double.compare(x, y)
+}
+
 /** One (score, id) candidate flowing into [[BoundedTopK]]. */
 case class ScoredId(score: Double, id: Long)
 
@@ -43,12 +54,7 @@ class BoundedTopK(k: Int, desc: Boolean = true)
     with Serializable {
   require(k > 0, s"k must be positive: $k")
 
-  /** Spark SQL double comparison (SQLOrderingUtil): -0.0 ties 0.0,
-    * NaN is the greatest value and equal to itself. */
-  private def cmpSql(x: Double, y: Double): Int =
-    if (x < y) -1 else if (x > y) 1
-    else if (x == y) 0
-    else java.lang.Double.compare(x, y)
+  import SqlDoubleOrder.{compare => cmpSql}
 
   private val ord: Ordering[ScoredId] = new Ordering[ScoredId] {
     override def compare(a: ScoredId, b: ScoredId): Int = {
@@ -100,11 +106,7 @@ final class TopKState(val k: Int, val desc: Boolean) {
   private var thrId: Long = 0L
   private var thrValid: Boolean = false
 
-  /** Spark SQL double comparison: -0.0 == 0.0, NaN greatest. */
-  @inline private def cmpSql(x: Double, y: Double): Int =
-    if (x < y) -1 else if (x > y) 1
-    else if (x == y) 0
-    else java.lang.Double.compare(x, y)
+  import SqlDoubleOrder.{compare => cmpSql}
 
   /** Full (score, id) ordering: best first. */
   @inline private def cmp(s1: Double, i1: Long, s2: Double, i2: Long): Int = {

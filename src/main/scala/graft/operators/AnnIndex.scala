@@ -47,6 +47,7 @@ import org.apache.spark.sql.types._
   * no corpus job at all.
   */
 object AnnIndex {
+  import VectorSearch.{cos, exactQueries, normed, probedPairs, probes, Pq}
 
   /** An opened index: bounded driver-side artifacts plus the lazy
     * cell-partitioned corpus relation. `centroids` is a LOCAL relation
@@ -73,27 +74,16 @@ object AnnIndex {
   private def tombDirFor(dir: String, v: Long): String =
     if (v == 0L) s"$dir/tombstones" else s"$dir/tombstones.v$v"
 
-  private def normLut(books: Seq[Seq[Seq[Double]]]): Seq[Double] =
-    books.flatMap(_.map(_.map(x => x * x).sum))
-
   /** Assign + PQ-encode a corpus slice against fixed index artifacts.
     * Map-only: NearestCentroid + PqEncode + the squared-norm LUT, no
     * shuffle — the shape both the initial build and every append use.
     */
   private def encode(rows: DataFrame, cents: DataFrame,
                      books: Seq[Seq[Seq[Double]]], gen: Long,
-                     keep: Seq[String] = Nil): DataFrame = {
-    import graft.functions.{exprs, PqAdc, PqEncode}
-    Similarity.assignToCentroids(rows, cents, keep)
-      .select(Seq(col("vec_id"), col("cent_id"),
-        exprs.toColumn(PqEncode(exprs.toExpr(col("embedding")), books))
-          .as("codes"),
-        col("embedding")) ++ keep.map(col): _*)
-      .withColumn("anrm", sqrt(exprs.toColumn(PqAdc(
-        exprs.toExpr(col("codes")),
-        exprs.toExpr(typedlit(normLut(books)))))))
+                     keep: Seq[String] = Nil): DataFrame =
+    Pq(books).encoded(Similarity.assignToCentroids(rows, cents, keep),
+        Seq("vec_id", "cent_id"), "embedding" +: keep)
       .withColumn("gen", lit(gen))
-  }
 
   /** The non-core cell columns: index-resident metadata carried by
     * `write(metaCols = ...)`, preserved by append/upsert/compaction.
@@ -424,21 +414,6 @@ object AnnIndex {
     IvfPqIndex(spark, dir, cents, books, cellsDir, tombDirFor(dir, v), v)
   }
 
-  /** Per-query probe cells: broadcast join against the LOCAL centroid
-    * relation (never the corpus), top-`nprobe` cells by centroid
-    * cosine via [[Similarity.probeCells]] — the bounded rankTopK
-    * aggregate, so no search plan anywhere windows by qid (r11: the
-    * relation is |q|·nCells rows, small, but the window audit stays
-    * trivially true). Bounded output: |queries|·nprobe rows, query
-    * embeddings re-attached by one bounded join.
-    */
-  private def probeCells(index: IvfPqIndex, queries: DataFrame,
-                         nprobe: Int): DataFrame =
-    Similarity.probeCells(queries, index.centroids, nprobe)
-      .join(queries.select(col("vec_id").as("qid"),
-        col("embedding").as("qe")), "qid")
-      .select(col("qid"), col("qe"), col("cent_id"))
-
   /** The probed slice of the on-disk corpus: the distinct probe cell
     * ids (bounded: ≤ |queries|·nprobe, collected) become a LITERAL
     * `cent_id IN (...)` predicate, which Catalyst satisfies entirely
@@ -469,13 +444,12 @@ object AnnIndex {
     require(hasEmbeddings(index),
       "searchExact needs stored embeddings; this is a codes-only index " +
         "(write(storeEmbeddings = true), or use searchAdc(refine = 0))")
-    val probes = probeCells(index, queries, nprobe)
-    val joined = restrict(withPred(prunedCells(index, probes), where),
-        allowed).as("c")
-      .join(broadcast(probes.as("p")),
-        col("p.cent_id") === col("c.cent_id") && col("p.qid") =!= col("c.vec_id"))
-      .select(col("p.qid").as("qid"), col("c.vec_id").as("nid"),
-        Similarity.cosine(col("p.qe"), col("c.embedding")).as("cos"))
+    // probe cells come from the LOCAL centroid relation (never the
+    // corpus) through the bounded rankTopK aggregate — no qid window
+    val qCells = probes(queries, index.centroids, nprobe, exactQueries(queries))
+    val joined = probedPairs(
+      normed(restrict(withPred(prunedCells(index, qCells), where), allowed)),
+      qCells)(cos.as("cos"))
     // bounded rank (r10): a qid's candidate set is its probed cells'
     // whole content — corpus·nprobe/nCells rows in one window
     // partition at 10^10 vectors; the BoundedTopK aggregate keeps the
@@ -485,8 +459,7 @@ object AnnIndex {
     // keepScore feeds score-consuming downstream stages — the
     // hardNegativesFrom / mmr serving chains — without a re-scoring
     // join; the default stays the rank-only serving contract
-    if (keepScore) ranked.select(col("qid"), col("nid"), col("cos"), col("rank"))
-    else ranked.select(col("qid"), col("nid"), col("rank"))
+    if (keepScore) ranked else ranked.select(col("qid"), col("nid"), col("rank"))
   }
 
   /** ADC search over the probed cells: each scanned row costs m table
@@ -501,59 +474,23 @@ object AnnIndex {
                 allowed: Option[DataFrame] = None,
                 where: Option[Column] = None,
                 keepScore: Boolean = false): DataFrame = {
-    import graft.functions.{exprs, PqAdc, PqLut}
     require(refine <= 0 || hasEmbeddings(index),
       "exact re-rank needs stored embeddings; on a codes-only index " +
         "pass refine <= 0 (approximate ADC ranks)")
-    val probes = probeCells(index, queries, nprobe)
-    val qLut = queries.select(col("vec_id").as("qid"),
-      exprs.toColumn(PqLut(exprs.toExpr(col("embedding")), index.codebooks))
-        .as("lut"),
-      Similarity.norm(col("embedding")).as("qnrm"))
-    val probesLut = probes.drop("qe").join(qLut, "qid")
-    val pruned = restrict(withPred(prunedCells(index, probes), where), allowed)
-    // the scored projection carries ONLY (qid, nid, acos): the query
-    // embedding must not ride every scanned corpus row through the
-    // rank-window shuffle — it re-joins onto the bounded refine·k
-    // candidate set below, keeping the ADC scan at m ints per row
-    val scored = pruned.as("c")
-      .join(broadcast(probesLut.as("p")),
-        col("p.cent_id") === col("c.cent_id") && col("p.qid") =!= col("c.vec_id"))
-      .select(col("p.qid").as("qid"), col("c.vec_id").as("nid"),
-        (exprs.toColumn(PqAdc(exprs.toExpr(col("c.codes")),
-          exprs.toExpr(col("p.lut"))))
-          / (col("p.qnrm") * col("c.anrm"))).as("acos"))
-    // bounded ranks throughout (r10) — same rationale as searchExact:
-    // a qid's ADC-scored candidate set is its probed cells' content
-    if (refine <= 0) {
-      val rk = Similarity.rankTopK(scored, k, desc = true, "acos")
-      // keepScore in approximate mode exposes the ADC ESTIMATE under
-      // its own name `acos`, never `cos` — `cos` is reserved for exact
-      // cosine (refine > 0 here, or searchExact), so a consumer that
-      // joins/unions ANN outputs by schema can never feed a quantized
-      // estimate to an exact-cosine screen unaware (r10 ADVICE);
-      // rename explicitly if an estimate is genuinely acceptable
-      return if (keepScore)
-        rk.select(col("qid"), col("nid"), col("acos"), col("rank"))
-      else rk.select(col("qid"), col("nid"), col("rank"))
-    }
-    val qe = queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-      Similarity.norm(col("embedding")).as("qnrm"))
-    val cand = Similarity.rankTopK(scored, refine * k, desc = true, "acos")
-      .select("qid", "nid")
-      .join(qe, "qid")
-    val rer = pruned.select(col("vec_id").as("nid"), col("embedding"))
-      .join(broadcast(cand), "nid")
-      .select(col("qid"), col("nid"),
-        (Similarity.dot(col("qe"), col("embedding"))
-          / (col("qnrm") * Similarity.norm(col("embedding")))).as("cos"))
-    val ranked = Similarity.rankTopK(rer, k, desc = true, "cos")
-    // keepScore here carries the exact re-rank cosine — the same
-    // expression searchExact scores with, so the G16 chain can mine
-    // epoch negatives off the codes-only quantized index
-    if (keepScore)
-      ranked.select(col("qid"), col("nid"), col("cos"), col("rank"))
-    else ranked.select(col("qid"), col("nid"), col("rank"))
+    val pq = Pq(index.codebooks)
+    val qCells = probes(queries, index.centroids, nprobe, pq.queries(queries))
+    val pruned = restrict(withPred(prunedCells(index, qCells), where), allowed)
+    // bounded ranks throughout (r10) — same rationale as searchExact: a
+    // qid's ADC-scored candidate set is its probed cells' content. The
+    // scored projection carries only (qid, nid, acos), and the re-rank
+    // reads the SAME pruned relation as its corpus. keepScore exposes
+    // the ADC estimate as `acos` (refine <= 0) and the exact re-rank
+    // cosine as `cos` — the same expression searchExact scores with, so
+    // the G16 chain can mine epoch negatives off the quantized index;
+    // `cos` is reserved for exact cosine (r10 ADVICE)
+    val ranked = VectorSearch.refined(pruned, queries,
+      probedPairs(pruned, qCells)(pq.acos), k, refine)
+    if (keepScore) ranked else ranked.select(col("qid"), col("nid"), col("rank"))
   }
 
   /** Incremental maintenance (G12): assign + encode `rows` with the

@@ -1402,14 +1402,11 @@ object Curation {
       val cents = centroids.getOrElse(
         Similarity.trainIvfCentroids(corpus, nCells, stride, iters))
       val assigned = Similarity.assignToCentroids(corpus, cents)
-      val qCells = evalSet.as("q").join(broadcast(cents.as("k")))
-        .select(col("q.vec_id").as("qid"), col("q.embedding").as("e_q"),
-          col("k.cent_id").as("cent_id"),
-          cosine(col("q.embedding"), col("k.cent")).as("ccos"))
-      val wq = Window.partitionBy("qid")
-        .orderBy(col("ccos").desc, col("cent_id"))
-      val probes = qCells.withColumn("r", row_number().over(wq))
-        .where(col("r") <= nprobe).select(col("e_q"), col("cent_id"))
+      // (ccos desc, cent_id) probe cells through the bounded rankTopK
+      // aggregate — no qid window — with e_q re-attached by qid
+      val probes = VectorSearch.probes(evalSet, cents, nprobe,
+          evalSet.select(col("vec_id").as("qid"), col("embedding").as("e_q")))
+        .select(col("e_q"), col("cent_id"))
       val hits = assigned.as("c").join(broadcast(probes.as("p")),
           col("p.cent_id") === col("c.cent_id") &&
             cosine(col("c.embedding"), col("p.e_q")) >= threshold,

@@ -19,13 +19,14 @@ import org.apache.spark.sql.types._
 object Dedup {
 
   /** Fan a small-file scan out to all cores before compute-heavy
-    * per-row work (shingling, sketching). A single parquet file scans
+    * per-row work (shingling, sketching, vector bucketing and pair
+    * scoring in Similarity). A single parquet file scans
     * as one partition; without this every sketch below runs on one
     * core. At real scale inputs arrive in many partitions and the
     * round-robin exchange is a no-op cost-wise (it moves ids+text
     * once, far cheaper than serializing the compute).
     */
-  private def fanOut(df: DataFrame): DataFrame = {
+  private[operators] def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     // inputFiles inspects the plan without executing it (df.rdd under
     // AQE would materialize upstream stages). Raw scans of fewer

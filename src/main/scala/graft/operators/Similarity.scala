@@ -28,16 +28,8 @@ import org.apache.spark.sql.types._
   * lambda per element outside codegen and was the bench hotspot.
   */
 object Similarity {
-
-  /** See Dedup.fanOut: spread a small-file scan across cores before
-    * per-row vector math (bucketing, pairwise cosine).
-    */
-  private def fanOut(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    // see Dedup.fanOut: plan-only probe, no AQE materialization
-    val files = df.inputFiles.length
-    if (files > 0 && files < target) df.repartition(target) else df
-  }
+  import Dedup.fanOut
+  import VectorSearch.{cos, exactQueries, normed, pairs, probedPairs, Pq}
 
   /** Sequential-order double dot product of two float-array columns
     * (native kernel; same accumulation order as the previous
@@ -105,17 +97,8 @@ object Similarity {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      roundCosTo: Int = -1): DataFrame = {
-    // norms projected once per row BEFORE the pair join: each pair then
-    // costs one dot, not three (value unchanged — same expressions,
-    // just evaluated N+Q times instead of N·Q)
-    val c = fanOut(corpus).withColumn("nrm", norm(col("embedding")))
-    val q = queries.withColumn("nrm", norm(col("embedding")))
-    val rawCos = dot(col("q.embedding"), col("c.embedding")) /
-      (col("q.nrm") * col("c.nrm"))
-    val joined = c.as("c")
-      .join(broadcast(q.as("q")), col("q.vec_id") =!= col("c.vec_id"))
-      .select(col("q.vec_id").as("qid"), col("c.vec_id").as("nid"),
-        (if (roundCosTo >= 0) round(rawCos, roundCosTo) else rawCos).as("cos"))
+    val joined = pairs(normed(fanOut(corpus)), exactQueries(queries))(
+      (if (roundCosTo >= 0) round(cos, roundCosTo) else cos).as("cos"))
     rankTopK(joined, k, desc = true, "cos")
   }
 
@@ -134,22 +117,25 @@ object Similarity {
     * [[rankTopK]] aggregate (ascending distance).
     */
   def bruteForceTopKL2(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val joined = fanOut(corpus).as("c")
-      .join(broadcast(queries.as("q")), col("q.vec_id") =!= col("c.vec_id"))
-      .select(col("q.vec_id").as("qid"), col("c.vec_id").as("nid"),
-        l2(col("q.embedding"), col("c.embedding")).as("dist"))
+    val joined = pairs(fanOut(corpus),
+      queries.select(col("vec_id").as("qid"), col("embedding")))(
+      l2(col("q.embedding"), col("c.embedding")).as("dist"))
     rankTopK(joined, k, desc = false, "dist")
   }
 
   /** Random-hyperplane signature: `planes` deterministic pseudo-random
     * hyperplanes; sign pattern packed into a long bucket key. Native
-    * expression — one pass over the vector (`dim` is taken from the
-    * array itself; the parameter is kept for API stability).
+    * expression — one pass over the vector (its dimension is taken from
+    * the array itself).
     */
-  def hyperplaneBucket(vec: Column, dim: Int, planes: Int, seed: Int = 0): Column = {
+  def hyperplaneBucket(vec: Column, planes: Int, seed: Int = 0): Column = {
     import graft.functions.{exprs, HyperplaneBucket}
     exprs.toColumn(HyperplaneBucket(exprs.toExpr(vec), planes, seed))
   }
+
+  /** `df` with the `bucket` of its embedding in probe table `seed`. */
+  private def bucketed(df: DataFrame, planes: Int, seed: Int = 0): DataFrame =
+    df.withColumn("bucket", hyperplaneBucket(col("embedding"), planes, seed))
 
   /** LSH ANN: same-bucket candidates only, then exact cosine + top-k.
     * Recall is tunable by `planes` (fewer planes → bigger buckets).
@@ -159,26 +145,18 @@ object Similarity {
     * unsplittable-reducer shape the brute family shed in r10.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              dim: Int, planes: Int = 8): DataFrame =
-    rankTopK(lshScored(corpus, queries, dim, planes), k, desc = true, "cos")
+              planes: Int = 8): DataFrame =
+    rankTopK(lshScored(corpus, queries, planes), k, desc = true, "cos")
 
   /** The scored (qid, nid, cos) same-bucket candidate relation behind
     * [[lshTopK]] — exposed for the SkewSpec window-vs-aggregate
     * byte-identity proofs.
     */
   private[operators] def lshScored(corpus: DataFrame, queries: DataFrame,
-                                   dim: Int, planes: Int): DataFrame = {
-    val cb = fanOut(corpus).withColumn("bucket", hyperplaneBucket(col("embedding"), dim, planes))
-      .withColumn("nrm", norm(col("embedding")))
-    val qb = queries.withColumn("bucket", hyperplaneBucket(col("embedding"), dim, planes))
-      .withColumn("nrm", norm(col("embedding")))
-    cb.as("c")
-      .join(broadcast(qb.as("q")),
-        col("q.bucket") === col("c.bucket") && col("q.vec_id") =!= col("c.vec_id"))
-      .select(col("q.vec_id").as("qid"), col("c.vec_id").as("nid"),
-        (dot(col("q.embedding"), col("c.embedding"))
-          / (col("q.nrm") * col("c.nrm"))).as("cos"))
-  }
+                                   planes: Int): DataFrame =
+    pairs(bucketed(normed(fanOut(corpus)), planes),
+      bucketed(exactQueries(queries), planes),
+      col("q.bucket") === col("c.bucket"))(cos.as("cos"))
 
   /** Radius-bounded ANN via multi-probe hyperplane LSH: candidates
     * collide with the query in ANY of `probes` independent hyperplane
@@ -194,11 +172,11 @@ object Similarity {
     * preserves, but "all neighbors within cos t" is exactly what the
     * collision probability bounds.
     */
-  def lshRadiusTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
+  def lshRadiusTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                     threshold: Double, planes: Int = 1, probes: Int = 8): DataFrame =
     // radius-filtered, but a loose threshold leaves the relation
     // corpus-sized — rank via the bounded aggregate, never a window
-    rankTopK(lshRadiusScored(corpus, queries, dim, threshold, planes, probes),
+    rankTopK(lshRadiusScored(corpus, queries, threshold, planes, probes),
       k, desc = true, "cos")
       .select(col("qid"), col("nid"), col("rank"))
 
@@ -207,31 +185,23 @@ object Similarity {
     * mode) — exposed for the SkewSpec byte-identity proofs.
     */
   private[operators] def lshRadiusScored(corpus: DataFrame, queries: DataFrame,
-                                         dim: Int, threshold: Double,
+                                         threshold: Double,
                                          planes: Int, probes: Int): DataFrame = {
-    val c = fanOut(corpus).withColumn("nrm", norm(col("embedding")))
-    val q = queries.withColumn("nrm", norm(col("embedding")))
+    val c = normed(fanOut(corpus))
+    val q = exactQueries(queries)
     if (planes <= 0) {
       // exhaustive mode (planes=0): score every corpus row against the
       // broadcast query set — the configuration ground-truth runs and
       // the exact-oracle gate use (same role as ivfTopK probing every
       // cell). One corpus pass, no probe tables to deduplicate;
       // identical output to a full-recall LSH config.
-      return c.as("c")
-        .join(broadcast(q.as("q")), col("q.vec_id") =!= col("c.vec_id"))
-        .select(col("q.vec_id").as("qid"), col("c.vec_id").as("nid"),
-          (dot(col("q.embedding"), col("c.embedding"))
-            / (col("q.nrm") * col("c.nrm"))).as("cos"))
-        .where(col("cos") >= threshold)
+      return pairs(c, q)(cos.as("cos")).where(col("cos") >= threshold)
     }
     val cand = (0 until probes).map { s =>
-      val cb = c.withColumn("bucket", hyperplaneBucket(col("embedding"), dim, planes, s))
-      val qb = q.withColumn("bucket", hyperplaneBucket(col("embedding"), dim, planes, s))
-      cb.as("c").join(broadcast(qb.as("q")),
-          col("q.bucket") === col("c.bucket") && col("q.vec_id") =!= col("c.vec_id"))
-        .select(col("q.vec_id").as("qid"), col("c.vec_id").as("nid"),
-          col("q.embedding").as("qe"), col("c.embedding").as("ce"),
-          col("q.nrm").as("qn"), col("c.nrm").as("cn"))
+      pairs(bucketed(c, planes, s), bucketed(q, planes, s),
+          col("q.bucket") === col("c.bucket"))(
+        col("q.embedding").as("qe"), col("c.embedding").as("ce"),
+        col("q.nrm").as("qn"), col("c.nrm").as("cn"))
     }.reduce(_ unionAll _).dropDuplicates("qid", "nid")
     cand
       .withColumn("cos", dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
@@ -372,16 +342,10 @@ object Similarity {
     * [[ivfTopK]] — exposed for the SkewSpec byte-identity proofs.
     */
   private[operators] def ivfScored(corpus: DataFrame, queries: DataFrame,
-                                   cents: DataFrame, nprobe: Int): DataFrame = {
-    val assigned = assignToCentroids(corpus, cents)
-    val probes = probeCells(queries, cents, nprobe)
-      .join(queries.select(col("vec_id").as("qid"),
-        col("embedding").as("qe")), "qid")
-    assigned.as("c").join(broadcast(probes.as("p")),
-        col("p.cent_id") === col("c.cent_id") && col("p.qid") =!= col("c.vec_id"))
-      .select(col("p.qid").as("qid"), col("c.vec_id").as("nid"),
-        cosine(col("p.qe"), col("c.embedding")).as("cos"))
-  }
+                                   cents: DataFrame, nprobe: Int): DataFrame =
+    probedPairs(normed(assignToCentroids(corpus, cents)),
+      VectorSearch.probes(queries, cents, nprobe, exactQueries(queries)))(
+      cos.as("cos"))
 
   /** Product-quantization codebooks: the embedding space split into
     * `m` subspaces of dim/m dimensions, each clustered into `ncodes`
@@ -410,11 +374,8 @@ object Similarity {
       seeds.map(v => v.slice(s * sub, (s + 1) * sub)))
     val fanned = fanOut(corpus)
     for (_ <- 0 until iters) {
-      val enc = fanned.withColumn("codes", {
-        import graft.functions.{exprs, PqEncode}
-        exprs.toColumn(PqEncode(exprs.toExpr(col("embedding")),
-          books.map(_.map(_.toSeq).toSeq).toSeq))
-      })
+      val enc = fanned.withColumn("codes",
+        Pq(books.map(_.map(_.toSeq).toSeq).toSeq).encode(col("embedding")))
       val upd = enc
         .select(col("codes"),
           posexplode(col("embedding").cast(ArrayType(DoubleType)))
@@ -453,16 +414,11 @@ object Similarity {
              codebooks: Option[Seq[Seq[Seq[Double]]]] = None): DataFrame = {
     val books = codebooks.getOrElse(
       trainPqCodebooks(corpus, dim, m, ncodes, stride, iters))
-    val scored = pqScored(corpus, queries, books)
     // the flat ADC scan scores EVERY corpus row per query — the rank
     // must be the bounded aggregate, or each query's window partition
     // is the entire corpus (the r10 brute-family fix, applied here)
-    if (refine <= 0)
-      return rankTopK(scored, k, desc = true, "acos")
-        .select(col("qid"), col("nid"), col("rank"))
-    val cand = rankTopK(scored, refine * k, desc = true, "acos")
-      .select("qid", "nid")
-    exactReRank(corpus, queries, cand, k)
+    VectorSearch.refined(corpus, queries, pqScored(corpus, queries, books),
+      k, refine).select(col("qid"), col("nid"), col("rank"))
   }
 
   /** The flat-ADC scored (qid, nid, acos) relation behind [[pqTopK]] —
@@ -470,22 +426,8 @@ object Similarity {
     */
   private[operators] def pqScored(corpus: DataFrame, queries: DataFrame,
                                   books: Seq[Seq[Seq[Double]]]): DataFrame = {
-    import graft.functions.{exprs, PqAdc, PqEncode, PqLut}
-    def encodeCol(c: Column) = exprs.toColumn(PqEncode(exprs.toExpr(c), books))
-    def lutCol(c: Column) = exprs.toColumn(PqLut(exprs.toExpr(c), books))
-    def adcCol(a: Column, b: Column) =
-      exprs.toColumn(PqAdc(exprs.toExpr(a), exprs.toExpr(b)))
-    // squared-norm LUT: ‖book[m][c]‖², flattened like the query LUT
-    val normLut: Seq[Double] = books.flatMap(_.map(_.map(x => x * x).sum))
-    val enc = fanOut(corpus)
-      .select(col("vec_id"), encodeCol(col("embedding")).as("codes"))
-      .withColumn("anrm", sqrt(adcCol(col("codes"), typedlit(normLut))))
-    val q = queries.select(col("vec_id").as("qid"),
-      lutCol(col("embedding")).as("lut"), norm(col("embedding")).as("qnrm"))
-    enc.join(broadcast(q), col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        (adcCol(col("codes"), col("lut")) / (col("qnrm") * col("anrm")))
-          .as("acos"))
+    val pq = Pq(books)
+    pairs(pq.encoded(fanOut(corpus), Seq("vec_id")), pq.queries(queries))(pq.acos)
   }
 
   /** Scalar-quantization bounds (G13): per-dimension corpus min/max —
@@ -523,15 +465,10 @@ object Similarity {
     val (lo, hi) = bounds.getOrElse(trainSqBounds(corpus, dim))
     require(lo.length == dim && hi.length == dim,
       s"bounds length ${lo.length}/${hi.length} != dim $dim")
-    val scored = sqScored(corpus, queries, lo, hi)
     // flat SQ scan = corpus-sized scored relation per query; bounded
     // aggregate rank (see pqTopK)
-    if (refine <= 0)
-      return rankTopK(scored, k, desc = true, "acos")
-        .select(col("qid"), col("nid"), col("rank"))
-    val cand = rankTopK(scored, refine * k, desc = true, "acos")
-      .select("qid", "nid")
-    exactReRank(corpus, queries, cand, k)
+    VectorSearch.refined(corpus, queries, sqScored(corpus, queries, lo, hi),
+      k, refine).select(col("qid"), col("nid"), col("rank"))
   }
 
   /** The flat-SQ scored (qid, nid, acos) relation behind [[sqTopK]] —
@@ -564,11 +501,10 @@ object Similarity {
       arraySum(zip_with(col("embedding"), loL,
         (qe, l) => qe.cast(DoubleType) * l)).as("bias"),
       norm(col("embedding")).as("qnrm"))
-    enc.join(broadcast(q), col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        ((col("bias") + arraySum(zip_with(col("w"), col("codes"),
-          (wi, ci) => wi * ci.cast(DoubleType))))
-          / (col("qnrm") * col("anrm"))).as("acos"))
+    pairs(enc, q)(
+      ((col("q.bias") + arraySum(zip_with(col("q.w"), col("c.codes"),
+        (wi, ci) => wi * ci.cast(DoubleType))))
+        / (col("q.qnrm") * col("c.anrm"))).as("acos"))
   }
 
   /** MMR diversified re-rank (G15): maximal marginal relevance
@@ -637,8 +573,10 @@ object Similarity {
     // new BigDecimal (exact binary expansion): Spark's Round uses the
     // former, and on doubles whose shortest decimal ends in ...5 at
     // the 7th digit the two round differently — this helper must match
-    // the expression layer bit-for-bit (r8 ADVICE)
-    java.math.BigDecimal.valueOf(v)
+    // the expression layer bit-for-bit (r8 ADVICE). NaN and ±Inf pass
+    // through unchanged, as they do through Spark's round.
+    if (v.isNaN || v.isInfinite) v
+    else java.math.BigDecimal.valueOf(v)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** JVM cosine replicating the DotProduct kernel's sequential
@@ -659,9 +597,13 @@ object Similarity {
   /** Greedy MMR over one query's candidates: returns nids in selection
     * order. maxSim(∅) = 0, every score rounds 6 dp before comparison,
     * ties break on nid — the exact contract the SQL oracle unrolls.
+    * Scores and sims compare in Spark SQL's double order (NaN greatest,
+    * -0.0 == 0.0), the order the candidate rank already used, so a
+    * zero-vector candidate (NaN cosine) still yields k distinct picks.
     */
   private def mmrGreedy(cs: Array[(Long, Double, Array[Float])], k: Int,
                         lambda: Double): Seq[Long] = {
+    import graft.functions.SqlDoubleOrder.{compare => cmpSql}
     val m = cs.length
     val sims = Array.ofDim[Double](m, m)
     var i = 0
@@ -689,8 +631,8 @@ object Similarity {
         if (!taken(c)) {
           val red = if (out.isEmpty) 0.0 else maxSim(c)
           val score = round6(lambda * cs(c)._2 - (1 - lambda) * red)
-          if (score > bestScore ||
-              (score == bestScore && cs(c)._1 < bestNid)) {
+          val cmp = if (best < 0) 1 else cmpSql(score, bestScore)
+          if (cmp > 0 || (cmp == 0 && cs(c)._1 < bestNid)) {
             best = c; bestScore = score; bestNid = cs(c)._1
           }
         }
@@ -700,35 +642,12 @@ object Similarity {
       out += cs(best)._1
       var u = 0
       while (u < m) {
-        if (!taken(u) && sims(u)(best) > maxSim(u)) maxSim(u) = sims(u)(best)
+        if (!taken(u) && cmpSql(sims(u)(best), maxSim(u)) > 0)
+          maxSim(u) = sims(u)(best)
         u += 1
       }
     }
     out.toSeq
-  }
-
-  /** Exact-cosine re-rank of an approximate candidate set: (qid, nid)
-    * pairs joined back to the full-precision corpus (id-keyed, the
-    * small candidate set broadcast), scored exactly, top-k per query.
-    */
-  private def exactReRank(corpus: DataFrame, queries: DataFrame,
-                          cand: DataFrame, k: Int): DataFrame = {
-    val qe = queries.select(col("vec_id").as("qid"),
-      col("embedding").as("qe"), norm(col("embedding")).as("qn"))
-    val rer = corpus
-      .select(col("vec_id").as("nid"), col("embedding").as("ne"),
-        norm(col("embedding")).as("nn"))
-      .join(broadcast(cand), "nid")
-      .join(broadcast(qe), "qid")
-      .select(col("qid"), col("nid"),
-        (dot(col("qe"), col("ne")) / (col("qn") * col("nn"))).as("cos"))
-    // bounded at refine·k rows per query — the aggregate anyway, so
-    // every similarity-RANKER plan in this file is Window-free
-    // (rrfFuse keeps its one window: per-query fusion input is
-    // |lists|·k rows by its contract, and its output carries n_lists
-    // which the aggregate would drop)
-    rankTopK(rer, k, desc = true, "cos")
-      .select(col("qid"), col("nid"), col("rank"))
   }
 
   /** IVF-PQ: the composed billion-scale index shape — the corpus is
@@ -752,15 +671,11 @@ object Similarity {
     val cents = centroids.getOrElse(trainIvfCentroids(corpus, nCells, stride))
     val books = codebooks.getOrElse(
       trainPqCodebooks(corpus, dim, m, ncodes, stride, iters))
-    val scored = ivfPqScored(corpus, queries, cents, books, nprobe)
     // probed-cell candidates ≈ corpus·nprobe/nCells per query — the
     // bounded aggregate, never a qid window (see ivfTopK)
-    if (refine <= 0)
-      return rankTopK(scored, k, desc = true, "acos")
-        .select(col("qid"), col("nid"), col("rank"))
-    val cand = rankTopK(scored, refine * k, desc = true, "acos")
-      .select("qid", "nid")
-    exactReRank(corpus, queries, cand, k)
+    VectorSearch.refined(corpus, queries,
+      ivfPqScored(corpus, queries, cents, books, nprobe), k, refine)
+      .select(col("qid"), col("nid"), col("rank"))
   }
 
   /** The probed-cell ADC scored (qid, nid, acos) relation behind
@@ -770,25 +685,11 @@ object Similarity {
                                      cents: DataFrame,
                                      books: Seq[Seq[Seq[Double]]],
                                      nprobe: Int): DataFrame = {
-    import graft.functions.{exprs, PqAdc, PqEncode, PqLut}
-    def encodeCol(c: Column) = exprs.toColumn(PqEncode(exprs.toExpr(c), books))
-    def lutCol(c: Column) = exprs.toColumn(PqLut(exprs.toExpr(c), books))
-    def adcCol(a: Column, b: Column) =
-      exprs.toColumn(PqAdc(exprs.toExpr(a), exprs.toExpr(b)))
-    val normLut: Seq[Double] = books.flatMap(_.map(_.map(x => x * x).sum))
-    val enc = assignToCentroids(corpus, cents)
-      .select(col("vec_id"), col("cent_id"),
-        encodeCol(col("embedding")).as("codes"))
-      .withColumn("anrm", sqrt(adcCol(col("codes"), typedlit(normLut))))
+    val pq = Pq(books)
     // LUT computed once per query row, joined onto its nprobe cells
-    val qLut = queries.select(col("vec_id").as("qid"),
-      lutCol(col("embedding")).as("lut"), norm(col("embedding")).as("qnrm"))
-    val probes = probeCells(queries, cents, nprobe).join(qLut, "qid")
-    enc.as("c").join(broadcast(probes.as("p")),
-        col("p.cent_id") === col("c.cent_id") && col("p.qid") =!= col("c.vec_id"))
-      .select(col("p.qid").as("qid"), col("c.vec_id").as("nid"),
-        (adcCol(col("c.codes"), col("p.lut")) / (col("p.qnrm") * col("c.anrm")))
-          .as("acos"))
+    probedPairs(
+      pq.encoded(assignToCentroids(corpus, cents), Seq("vec_id", "cent_id")),
+      VectorSearch.probes(queries, cents, nprobe, pq.queries(queries)))(pq.acos)
   }
 
   /** SemDeDup-style semantic near-duplicate pairs: k-means cells as
@@ -853,7 +754,7 @@ object Similarity {
     * hyperplane sets, then exact cosine verifies.
     */
   def cosineNearDups(corpus: DataFrame, threshold: Double,
-                     dim: Int, planes: Int = 6, probes: Int = 2): DataFrame = {
+                     planes: Int = 6, probes: Int = 2): DataFrame = {
     // multi-probe: `probes` independent hyperplane sets; a pair is a
     // candidate if it collides in ANY set. Miss probability for a pair
     // at angle θ is ((1-(1-θ/π)^planes))^probes — two probe tables cut
@@ -888,8 +789,7 @@ object Similarity {
           round(cosAX, 6).as("cos"))
     } else {
       val candidate = (0 until probes).map { s =>
-        val b = fanned.withColumn("bucket",
-          hyperplaneBucket(col("embedding"), dim, planes, s))
+        val b = bucketed(fanned, planes, s)
         b.as("a").join(b.as("x"),
             col("a.bucket") === col("x.bucket") && col("a.vec_id") < col("x.vec_id"))
           .select(col("a.vec_id").as("id_a"), col("x.vec_id").as("id_b"),
@@ -969,13 +869,9 @@ object Similarity {
                     positives: DataFrame, k: Int,
                     minMargin: Option[Double] = None,
                     dropAbovePos: Boolean = false): DataFrame = {
-    val c = fanOut(corpus).withColumn("nrm", norm(col("embedding")))
-    val q = queries.withColumn("nrm", norm(col("embedding")))
-    val joined = c.as("c")
-      .join(broadcast(q.as("q")), col("q.vec_id") =!= col("c.vec_id"))
-      .select(col("q.vec_id").as("qid"), col("c.vec_id").as("nid"),
-        round(dot(col("q.embedding"), col("c.embedding")) /
-          (col("q.nrm") * col("c.nrm")), 6).as("cos"))
+    val c = normed(fanOut(corpus))
+    val q = exactQueries(queries)
+    val joined = pairs(c, q)(round(cos, 6).as("cos"))
     // r16: the baseline only needs the BOUNDED positive pairs, so score
     // them directly — one corpus scan hash-pruned by the broadcast
     // positive set (|pos| cosines) — instead of deriving it by filtering
@@ -992,12 +888,8 @@ object Similarity {
     val pos = distinctPositives(positives)
     val base = c.as("c")
       .join(broadcast(pos.as("p")), col("p.nid") === col("c.vec_id"))
-      .join(broadcast(q.select(col("vec_id").as("q_qid"),
-        col("embedding").as("q_emb"), col("nrm").as("q_nrm"))),
-        col("p.qid") === col("q_qid"))
-      .select(col("p.qid").as("qid"),
-        round(dot(col("q_emb"), col("c.embedding")) /
-          (col("q_nrm") * col("c.nrm")), 6).as("cos"))
+      .join(broadcast(q.as("q")), col("p.qid") === col("q.qid"))
+      .select(col("p.qid").as("qid"), round(cos, 6).as("cos"))
       .groupBy("qid")
       .agg(min(col("cos")).as("pos_min"), max(col("cos")).as("pos_max"))
     screenNegatives(joined, positives, k, minMargin, dropAbovePos,

@@ -107,7 +107,7 @@ class PipelineScaleSpec extends SparkSpec {
       "q_embed_neardup (planes=0) should be an explicit all-pairs join")
     // the production config stays bucket-local
     val prod = operators.Similarity.cosineNearDups(
-      Tables.embeddings(noAutoBc, sfDir), threshold = 0.9, dim = 64,
+      Tables.embeddings(noAutoBc, sfDir), threshold = 0.9,
       planes = 6, probes = 2).queryExecution.executedPlan
     val cartesian = prod.collect {
       case n if n.nodeName.contains("CartesianProduct") ||

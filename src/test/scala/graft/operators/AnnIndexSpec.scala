@@ -97,6 +97,23 @@ class AnnIndexSpec extends SparkSpec {
     assert(adc == exact)
   }
 
+  test("searchAdc equals its recompute twin ivfPqTopK over the same " +
+      "artifacts at sub-exhaustive nprobe, with and without refine") {
+    // the same centroids and codebooks assign, encode and probe alike on
+    // both paths, so the persisted search and the recompute must agree
+    // rank for rank — approximate (refine = 0) and re-ranked (refine = 2)
+    for (refine <- Seq(0, 2)) {
+      val fromDisk = asTuples(AnnIndex.searchAdc(index, queries, k = 5,
+        nprobe = 4, refine = refine))
+      val recompute = asTuples(Similarity.ivfPqTopK(emb, queries, k = 5,
+        dim = 64, nprobe = 4, refine = refine,
+        centroids = Some(index.centroids), codebooks = Some(index.codebooks)))
+      assert(fromDisk.size == 50, s"refine=$refine: got ${fromDisk.size}")
+      assert(fromDisk == recompute,
+        s"refine=$refine: disk=${fromDisk.take(5)} recompute=${recompute.take(5)}")
+    }
+  }
+
   test("filtered serving: allowed-set search equals brute force within " +
       "the filter on both paths, pruning untouched") {
     // "top-k within label" from the persisted index: the positive

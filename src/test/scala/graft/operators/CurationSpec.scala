@@ -807,10 +807,15 @@ class CurationSpec extends SparkSpec {
     assert(Set(11L, 12L, 13L).subsetOf(out),
       s"clean rows must survive, got $out")
     // cell mode with full probing finds the same leak
-    val cellOut = Curation.semanticDecontam(corpus, evalSet,
-        threshold = 0.95, nCells = 2, nprobe = 2)
-      .select("vec_id").as[Long].collect().toSet
+    val cellDf = Curation.semanticDecontam(corpus, evalSet,
+      threshold = 0.95, nCells = 2, nprobe = 2)
+    val cellOut = cellDf.select("vec_id").as[Long].collect().toSet
     assert(cellOut == out, s"cell mode $cellOut != exact $out")
+    // probe cells come from the bounded rankTopK aggregate
+    // (Similarity.probeCells), never a row_number window over qid
+    val cellPlan = cellDf.queryExecution.executedPlan.toString()
+    assert(!cellPlan.contains("Window"),
+      s"cell-mode decontam must not window:\n$cellPlan")
     // r9: pre-trained centroids (the G3 discipline) — identical result,
     // and the plan loses the centroid-training corpus pass: the only
     // corpus lineage left is the assign + anti-join

@@ -76,7 +76,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("cosineNearDups finds the planted near-duplicate at 0.95") {
-    val pairs = Similarity.cosineNearDups(vecs, threshold = 0.95, dim = 4, planes = 2)
+    val pairs = Similarity.cosineNearDups(vecs, threshold = 0.95, planes = 2)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((0L, 1L)), s"got $pairs")
   }
@@ -84,7 +84,7 @@ class SimilaritySpec extends SparkSpec {
   test("lshTopK returns subsets of brute-force with correct ranks") {
     val brute = Similarity.bruteForceTopK(vecs, vecs.where($"vec_id" === 0), k = 4)
       .select("nid").as[Long].collect().toSet
-    val lsh = Similarity.lshTopK(vecs, vecs.where($"vec_id" === 0), k = 4, dim = 4, planes = 2)
+    val lsh = Similarity.lshTopK(vecs, vecs.where($"vec_id" === 0), k = 4, planes = 2)
       .select("nid").as[Long].collect().toSet
     assert(lsh.subsetOf(brute + 0L))
     assert(lsh.nonEmpty, "bucket must at least contain the near-identical vector")
@@ -540,6 +540,31 @@ class SimilaritySpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Similarity.mmrRerank(vecs, q0, k = 1, n = 2, lambda = 1.5)
     }
+  }
+
+  test("mmrRerankCandidates: a zero-vector candidate or a NaN rel ranks " +
+      "in SQL double order, k distinct picks, deterministic") {
+    // a zero vector's cosine to any candidate is 0/0 = NaN, and a
+    // retriever may hand over a NaN rel. NaN is the greatest double in
+    // Spark SQL's order (the order rankTopK uses), so a NaN score is
+    // picked first, and once a NaN redundancy term enters every
+    // remaining score, they tie and break by nid ascending
+    val corpus = vecs.unionByName(
+      Seq((9L, Array(0f, 0f, 0f, 0f))).toDF("vec_id", "embedding"))
+    val cand = Seq(
+      (0L, 1L, 0.9), (0L, 2L, 0.8), (0L, 9L, 0.7), (0L, 3L, 0.6),
+      (0L, 4L, 0.5),
+      (100L, 1L, 0.9), (100L, 2L, Double.NaN), (100L, 3L, 0.5)
+    ).toDF("qid", "nid", "rel")
+    def picks(): Map[Long, Seq[Long]] =
+      Similarity.mmrRerankCandidates(corpus, cand, k = 3, lambda = 0.5)
+        .select("qid", "nid", "rank").as[(Long, Long, Long)].collect()
+        .groupBy(_._1)
+        .map { case (q, rs) => q -> rs.sortBy(_._3).map(_._2).toSeq }
+    val first = picks()
+    assert(first == Map(0L -> Seq(1L, 9L, 2L), 100L -> Seq(2L, 1L, 3L)),
+      s"got $first")
+    assert(picks() == first)
   }
 
   // x–y-plane geometry with hand-computable cosines against the query

@@ -476,24 +476,24 @@ class SkewSpec extends SparkSpec {
 
     // LSH at planes=1: each bucket holds ≈ half the corpus (the
     // mega-bucket shape)
-    val lshOut = Similarity.lshTopK(corpus, queries, k = 7, dim = 4, planes = 1)
+    val lshOut = Similarity.lshTopK(corpus, queries, k = 7, planes = 1)
     assert(rows(lshOut) ==
-      rows(windowRank(Similarity.lshScored(corpus, queries, 4, 1), "cos", 7)))
+      rows(windowRank(Similarity.lshScored(corpus, queries, 1), "cos", 7)))
     assertNoWindow(lshOut, "lshTopK")
 
     // radius LSH, exhaustive mode (planes=0): the scored relation IS
     // the corpus per query after a loose threshold
-    val radOut = Similarity.lshRadiusTopK(corpus, queries, k = 7, dim = 4,
+    val radOut = Similarity.lshRadiusTopK(corpus, queries, k = 7,
       threshold = 0.2, planes = 0)
     assert(rows(radOut) == rows(
-      windowRank(Similarity.lshRadiusScored(corpus, queries, 4, 0.2, 0, 8),
+      windowRank(Similarity.lshRadiusScored(corpus, queries, 0.2, 0, 8),
         "cos", 7).select($"qid", $"nid", $"rank")))
     assertNoWindow(radOut, "lshRadiusTopK exhaustive")
     // banded mode
-    val radBand = Similarity.lshRadiusTopK(corpus, queries, k = 7, dim = 4,
+    val radBand = Similarity.lshRadiusTopK(corpus, queries, k = 7,
       threshold = 0.2, planes = 1, probes = 2)
     assert(rows(radBand) == rows(
-      windowRank(Similarity.lshRadiusScored(corpus, queries, 4, 0.2, 1, 2),
+      windowRank(Similarity.lshRadiusScored(corpus, queries, 0.2, 1, 2),
         "cos", 7).select($"qid", $"nid", $"rank")))
     assertNoWindow(radBand, "lshRadiusTopK banded")
 

@@ -47,7 +47,7 @@ class ArrowDataSource extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val conf = sessionConf()
-    val files = ArrowIo.dataFiles(pathOf(options), conf)
+    val files = HadoopFiles.dataFiles(pathOf(options), conf)
     require(files.nonEmpty, s"no arrow files at ${pathOf(options)}")
     ArrowIo.readSchema(files.head, conf)
   }
@@ -74,13 +74,22 @@ class ArrowTable(schema: StructType, path: String)
     new ArrowScanBuilder(schema, Option(options.get("path")).getOrElse(path),
       sessionConf())
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new ArrowWriteBuilder(info.schema(),
-      Option(info.options.get("path")).getOrElse(path),
-      stream = "stream".equalsIgnoreCase(info.options.getOrDefault("ipc.format", "file")),
-      sessionConf(),
-      compression = Option(info.options.get("ipc.compression"))
-        .map(_.toLowerCase(java.util.Locale.ROOT)))
+  /** Options are checked here, on the driver, before any file is
+    * touched.
+    */
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val stream = info.options.getOrDefault("ipc.format", "file")
+      .toLowerCase(java.util.Locale.ROOT) match {
+      case "file" => false
+      case "stream" => true
+      case other => throw new IllegalArgumentException(
+        s"ipc.format must be file or stream, got $other")
+    }
+    val compression = Option(info.options.get("ipc.compression"))
+    compression.foreach(IncrementalArrowWriter.codec)
+    new ArrowWriteBuilder(info.schema(), Option(info.options.get("path")).getOrElse(path),
+      stream, sessionConf().value, compression)
+  }
 }
 
 // ------------------------------------------------------------------ read
@@ -113,7 +122,7 @@ class ArrowScan(requiredSchema: StructType, path: String,
   override def planInputPartitions(): Array[InputPartition] = {
     val maxBytes =
       org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
-    ArrowIo.dataFiles(path, hconf.value).flatMap { f =>
+    HadoopFiles.dataFiles(path, hconf.value).flatMap { f =>
       val ranges =
         if (ArrowIo.isFileFormat(f, hconf.value))
           ArrowIo.batchRanges(f, maxBytes, hconf.value)
@@ -208,85 +217,72 @@ class ArrowColumnarReader(file: String, requiredSchema: StructType,
 
 // ----------------------------------------------------------------- write
 
+/** The sink commits through the staged protocol ([[StagedWrite]]):
+  * tasks write invisible staged parts and the driver publishes them
+  * once the job has succeeded. An overwrite replaces the files listed
+  * before the job; an append replaces nothing. Part names carry the
+  * job token, so appends never collide with earlier parts.
+  */
 class ArrowWriteBuilder(schema: StructType, path: String, stream: Boolean,
-                        hconf: SerializableHadoopConf,
-                        compression: Option[String] = None)
+                        conf: Configuration, compression: Option[String])
     extends WriteBuilder with SupportsTruncate {
-  private var truncateFirst = false
+  private var replace = false
 
-  override def truncate(): WriteBuilder = { truncateFirst = true; this }
+  override def truncate(): WriteBuilder = { replace = true; this }
 
   override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      if (truncateFirst && HadoopFiles.exists(path, hconf.value)) {
-        ArrowIo.dataFiles(path, hconf.value)
-          .foreach(f => HadoopFiles.delete(f, hconf.value))
-      }
-      HadoopFiles.mkdirs(path, hconf.value)
-      new ArrowBatchWrite(schema, path, stream, hconf, compression)
-    }
+    override def toBatch: BatchWrite = new ArrowBatchWrite(schema,
+      StagedWrite.begin(path, conf, replace), stream, compression)
   }
 }
 
-class ArrowBatchWrite(schema: StructType, path: String, stream: Boolean,
-                      hconf: SerializableHadoopConf,
-                      compression: Option[String] = None)
+class ArrowBatchWrite(schema: StructType, job: StagedWrite, stream: Boolean,
+                      compression: Option[String])
     extends BatchWrite {
+  private val ext = if (stream) "arrows" else "arrow"
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new ArrowWriterFactory(schema, path, stream, hconf, compression)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  // tasks write hidden temp files and rename on task-commit; a job
-  // abort removes anything tasks already renamed so a failed job
-  // never leaves a readable partial dataset
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case ArrowCommit(file, _) => HadoopFiles.delete(file, hconf.value)
-      case _ => ()
-    }
+    new ArrowWriterFactory(schema, job, stream, ext, compression)
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    job.commit(pid => f"part-$pid%05d-${job.token}.$ext")
+  // nothing is visible before commit: a failed job leaves the
+  // previous dataset as it was, and its staged litter is swept by the
+  // next commit on the directory
+  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-class ArrowWriterFactory(schema: StructType, path: String, stream: Boolean,
-                         hconf: SerializableHadoopConf,
-                         compression: Option[String] = None)
+class ArrowWriterFactory(schema: StructType, job: StagedWrite, stream: Boolean,
+                         ext: String, compression: Option[String])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ArrowDataWriter(schema, path, partitionId, taskId, stream, hconf, compression)
+    new ArrowDataWriter(schema, job.stagedPath(partitionId, taskId, ext), job.conf,
+      stream, compression)
 }
 
-case class ArrowCommit(file: String, rows: Long) extends WriterCommitMessage
+case class ArrowCommit(rows: Long) extends WriterCommitMessage
 
 /** Streams rows straight into arrow batches — constant memory in the
   * partition size (one in-flight batch), which is what survives 100 TB
   * partitions. No whole-partition buffering.
   *
-  * Commit protocol: rows stream into a hidden `.part-...tmp` file
-  * (ignored by dataFiles), which is atomically renamed into place on
-  * task commit — so readers never observe files from uncommitted or
-  * speculatively-duplicated tasks, and a crashed task leaves only
-  * ignorable temp litter.
+  * Rows go to the part's in-progress file; task commit renames it to
+  * the staged name, the push-form twin of [[HadoopFiles.stageTask]].
   */
-class ArrowDataWriter(schema: StructType, dir: String, partitionId: Int,
-                      taskId: Long, stream: Boolean,
-                      hconf: SerializableHadoopConf,
-                      compression: Option[String] = None)
+class ArrowDataWriter(schema: StructType, staged: String, conf: Configuration,
+                      stream: Boolean, compression: Option[String])
     extends DataWriter[InternalRow] {
-  private val ext = if (stream) "arrows" else "arrow"
-  private val file = f"$dir/part-$partitionId%05d-$taskId.$ext"
-  private val tmp = f"$dir/.part-$partitionId%05d-$taskId.$ext.tmp"
-  private val inc = new IncrementalArrowWriter(tmp, schema, stream,
-    conf = hconf.value, compression = compression)
+  private val inc = new IncrementalArrowWriter(
+    HadoopFiles.createChannel(HadoopFiles.inProgress(staged), conf), schema, stream,
+    compression = compression)
 
   override def write(record: InternalRow): Unit = inc.append(record)
 
   override def commit(): WriterCommitMessage = {
     val rows = inc.finish()
-    HadoopFiles.rename(tmp, file, hconf.value)
-    ArrowCommit(file, rows)
+    HadoopFiles.rename(HadoopFiles.inProgress(staged), staged, conf)
+    ArrowCommit(rows)
   }
 
-  override def abort(): Unit = {
-    inc.closeQuietly()
-    HadoopFiles.delete(tmp, hconf.value)
-  }
+  override def abort(): Unit = inc.closeQuietly()
   override def close(): Unit = inc.closeQuietly()
 }

@@ -39,7 +39,7 @@ object ArrowDictWriter {
       require(schema(c).dataType == StringType,
         s"dictionary encoding supports string columns, got ${schema(c).dataType} for $c")
     }
-    val vocabs: Map[String, Array[String]] = dictCols.map { c =>
+    val layout: Map[String, IpcColumn] = dictCols.map { c =>
       // limit(maxVocab+1) bounds the collect itself: the driver never
       // holds more than cap+1 values even when the column cardinality
       // is in the billions.
@@ -48,27 +48,13 @@ object ArrowDictWriter {
       require(vocab.length <= maxVocab,
         s"column '$c' has more than $maxVocab distinct values — it is not " +
           "dictionary-worthy; write it as a plain column or raise maxVocab")
-      c -> vocab.sorted
+      c -> IpcColumn.Dictionary(vocab.sorted)
     }.toMap
-    val sc = df.sparkSession.sparkContext
-    val hconf = new SerializableHadoopConf(sc.hadoopConfiguration)
-    // staged overwrite: tasks write only invisible attempt-unique tmp
-    // files, the driver commits after job success
-    // (HadoopFiles.commitStagedWrite) — a failed or partial job never
-    // disturbs the previous dataset
-    HadoopFiles.mkdirs(dir, hconf.value)
-    val stale = HadoopFiles.dataFiles(dir, hconf.value).toSet
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val bc = sc.broadcast(vocabs)
-    val counts = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      val tid = org.apache.spark.TaskContext.get().taskAttemptId()
-      val tmp = s"$dir/${HadoopFiles.stagedName(token, pid, tid, "arrow")}"
-      val n = HadoopFiles.stageTask(tmp, hconf.value)(p => ArrowIo.writeRowsDict(
-        p, schema, it, bc.value, stream, batchRows, conf = hconf.value))
-      Iterator.single(n)
-    }.collect()
-    HadoopFiles.commitStagedWrite(dir, token, stale,
-      pid => f"part-$pid%05d.arrow", hconf.value)
-    counts.sum
+    val bc = df.sparkSession.sparkContext.broadcast(layout)
+    HadoopFiles.writeStaged(df, dir, "arrow") { (path, rows, conf) =>
+      IncrementalArrowWriter.writeAll(new IncrementalArrowWriter(
+        HadoopFiles.createChannel(path, conf), schema, stream, batchRows, layout = bc.value),
+        rows)
+    }
   }
 }

@@ -1,22 +1,19 @@
 package graft.sources.arrow
 
-import java.io.ByteArrayOutputStream
-import java.nio.channels.Channels
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.{BufferAllocator, RootAllocator}
 import org.apache.hadoop.conf.Configuration
 import org.apache.arrow.vector.VectorSchemaRoot
 import org.apache.arrow.vector.dictionary.DictionaryEncoder
-import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowFileWriter, ArrowReader, ArrowStreamReader, ArrowStreamWriter}
+import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowReader, ArrowStreamReader}
 import org.apache.arrow.vector.FieldVector
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.ArrowTypes
 
-/** Low-level Arrow IPC read/write (SURVEY §2.D1–D5).
+/** Low-level Arrow IPC reading (SURVEY §2.D1–D5); every IPC write goes
+  * through [[IncrementalArrowWriter]].
   *
   * Re-expresses the reference's ipc layer (reference:
   * cpp/src/arrow/ipc/writer.h, reader.h) with arrow-java on Spark's
@@ -492,173 +489,4 @@ object ArrowIo {
     list.setValueCount(src.getValueCount)
     list
   }
-
-  /** Write a partition's rows as one IPC file/stream. Batches of
-    * `batchRows` keep peak memory bounded regardless of partition
-    * size — the same batching contract the reference's
-    * RecordBatchWriter has.
-    */
-  def writeRows(path: String, schema: StructType, rows: Iterator[InternalRow],
-                stream: Boolean = false, batchRows: Int = 4096 * 4,
-                conf: Configuration = HadoopFiles.local): Long = {
-    val alloc = rootAllocator()
-    val arrowSchema = ArrowTypes.toArrowSchema(schema)
-    val root = VectorSchemaRoot.create(arrowSchema, alloc)
-    val writers = schema.fields.indices.map { i =>
-      AFWriter(root.getVector(i), schema.fields(i).dataType)
-    }
-    val ch = HadoopFiles.createChannel(path, conf)
-    val writer = if (stream) new ArrowStreamWriter(root, null, ch)
-      else new ArrowFileWriter(root, null, ch)
-    var total = 0L
-    try {
-      writer.start()
-      while (rows.hasNext) {
-        writers.foreach(_.reset())
-        var n = 0
-        while (n < batchRows && rows.hasNext) {
-          val row = rows.next()
-          var c = 0
-          while (c < writers.length) { writers(c).write(row, c); c += 1 }
-          n += 1
-        }
-        writers.foreach(_.finish())
-        root.setRowCount(n)
-        writer.writeBatch()
-        total += n
-      }
-      writer.end()
-      total
-    } finally {
-      writer.close(); root.close(); alloc.close()
-    }
-  }
-
-  /** Write a partition as IPC with selected string columns
-    * dictionary-encoded against a provided (global) vocabulary
-    * (reference: cpp/src/arrow/ipc/dictionary.h — dictionaries are
-    * declared in the schema message and emitted as dictionary batches
-    * ahead of the record batches). Values absent from the vocabulary
-    * are rejected — the vocab is computed by an exact distinct pass,
-    * so a miss means writer misuse.
-    */
-  def writeRowsDict(path: String, schema: StructType, rows: Iterator[InternalRow],
-                    vocabs: Map[String, Array[String]],
-                    stream: Boolean = false, batchRows: Int = 4096 * 4,
-                    conf: Configuration = HadoopFiles.local): Long = {
-    import org.apache.arrow.vector.{IntVector, VarCharVector}
-    import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryProvider}
-    import org.apache.arrow.vector.types.pojo.{ArrowType, DictionaryEncoding, Field, FieldType, Schema}
-    import org.apache.spark.sql.types.StringType
-
-    val alloc = rootAllocator()
-    val provider = new DictionaryProvider.MapDictionaryProvider()
-    // one dictionary per encoded column, id = field ordinal
-    val encodings: Map[String, DictionaryEncoding] = vocabs.map { case (name, vocab) =>
-      val id = schema.fieldIndex(name).toLong
-      val enc = new DictionaryEncoding(id, false, new ArrowType.Int(32, true))
-      val dv = new VarCharVector(s"$name.dict", alloc)
-      dv.allocateNew(vocab.length)
-      vocab.zipWithIndex.foreach { case (v, i) => dv.setSafe(i, v.getBytes("UTF-8")) }
-      dv.setValueCount(vocab.length)
-      provider.put(new Dictionary(dv, enc))
-      name -> enc
-    }
-    val lookups: Map[String, java.util.HashMap[String, Integer]] =
-      vocabs.map { case (name, vocab) =>
-        val m = new java.util.HashMap[String, Integer](vocab.length * 2)
-        vocab.zipWithIndex.foreach { case (v, i) => m.put(v, i) }
-        name -> m
-      }
-    val fields = schema.fields.map { f =>
-      if (encodings.contains(f.name)) {
-        require(f.dataType == StringType,
-          s"dictionary encoding supports string columns, got ${f.dataType} for ${f.name}")
-        new Field(f.name,
-          new FieldType(f.nullable, new ArrowType.Int(32, true), encodings(f.name)),
-          java.util.Collections.emptyList())
-      } else ArrowTypes.toArrowField(f.name, f.dataType, f.nullable)
-    }
-    val root = VectorSchemaRoot.create(new Schema(fields.toList.asJava), alloc)
-    val writers: Seq[AFWriter] = schema.fields.indices.map { i =>
-      val f = schema.fields(i)
-      if (encodings.contains(f.name)) {
-        val iv = root.getVector(i).asInstanceOf[IntVector]
-        val lookup = lookups(f.name)
-        new AFWriter {
-          val vector = iv
-          def setNull(): Unit = iv.setNull(count)
-          def setValue(g: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-                       o: Int): Unit = {
-            val s = g.getUTF8String(o).toString
-            val idx = lookup.get(s)
-            require(idx != null, s"value not in dictionary vocab for ${f.name}: $s")
-            iv.setSafe(count, idx.intValue())
-          }
-        }
-      } else AFWriter(root.getVector(i), f.dataType)
-    }
-    val ch = HadoopFiles.createChannel(path, conf)
-    val writer = if (stream) new ArrowStreamWriter(root, provider, ch)
-      else new ArrowFileWriter(root, provider, ch)
-    var total = 0L
-    try {
-      writer.start()
-      while (rows.hasNext) {
-        writers.foreach(_.reset())
-        var n = 0
-        while (n < batchRows && rows.hasNext) {
-          val row = rows.next()
-          var c = 0
-          while (c < writers.length) { writers(c).write(row, c); c += 1 }
-          n += 1
-        }
-        writers.foreach(_.finish())
-        root.setRowCount(n)
-        writer.writeBatch()
-        total += n
-      }
-      writer.end()
-      total
-    } finally {
-      writer.close(); root.close()
-      provider.getDictionaryIds.asScala.foreach(id => provider.lookup(id).getVector.close())
-      alloc.close()
-    }
-  }
-
-  /** Legacy one-shot variant of IncrementalArrowWriter for iterators. */
-  def writeRowsIncremental(path: String, schema: StructType,
-                           rows: Iterator[InternalRow], stream: Boolean): Long = {
-    val w = new IncrementalArrowWriter(path, schema, stream)
-    try { rows.foreach(w.append); w.finish() }
-    catch { case t: Throwable => w.closeQuietly(); throw t }
-  }
-
-  /** In-memory stream-format bytes of a single batch (tensor/IPC
-    * utility + tests).
-    */
-  def toStreamBytes(schema: StructType, rows: Seq[InternalRow]): Array[Byte] = {
-    val alloc = rootAllocator()
-    val root = VectorSchemaRoot.create(ArrowTypes.toArrowSchema(schema), alloc)
-    val writers = schema.fields.indices.map { i =>
-      AFWriter(root.getVector(i), schema.fields(i).dataType)
-    }
-    try {
-      rows.foreach { r =>
-        var c = 0
-        while (c < writers.length) { writers(c).write(r, c); c += 1 }
-      }
-      writers.foreach(_.finish())
-      root.setRowCount(rows.length)
-      val bos = new ByteArrayOutputStream()
-      val w = new ArrowStreamWriter(root, null, Channels.newChannel(bos))
-      w.start(); w.writeBatch(); w.end(); w.close()
-      bos.toByteArray
-    } finally { root.close(); alloc.close() }
-  }
-
-  /** List the data files of an arrow dataset path (dir or single file). */
-  def dataFiles(path: String, conf: Configuration = HadoopFiles.local): Seq[String] =
-    HadoopFiles.dataFiles(path, conf)
 }

@@ -1,14 +1,7 @@
 package graft.sources.arrow
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.arrow.vector.{FieldVector, VectorSchemaRoot}
-import org.apache.arrow.vector.complex.UnionVector
-import org.apache.arrow.vector.ipc.ArrowFileWriter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
-
-import graft.sources.ArrowTypes
 
 /** Sparse-union Arrow IPC dataset writer (SURVEY §2.A1 union write
   * side; reference: format/Schema.fbs Union, cpp/src/arrow/type.h
@@ -35,66 +28,11 @@ object ArrowUnionWriter {
       require(schema(c).dataType.isInstanceOf[StructType],
         s"union column '$c' must be a struct of members, got ${schema(c).dataType}")
     }
-    val sc = df.sparkSession.sparkContext
-    val hconf = new SerializableHadoopConf(sc.hadoopConfiguration)
-    HadoopFiles.mkdirs(dir, hconf.value)
-    // staged overwrite: tasks write only invisible tmp files, the
-    // driver commits after job success (HadoopFiles.commitStagedWrite)
-    val stale = HadoopFiles.dataFiles(dir, hconf.value).toSet
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val unionSet = unionCols.toSet
-    val counts = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val alloc = ArrowIo.rootAllocator()
-      val vectors: Seq[FieldVector] = schema.fields.toSeq.map { f =>
-        if (unionSet.contains(f.name)) {
-          // let the vector build its own Field: sparse-union type tags
-          // are MinorType ordinals (setType), and the generated field
-          // carries exactly those typeIds
-          val uv = UnionVector.empty(f.name, alloc)
-          f.dataType.asInstanceOf[StructType].fields.foreach { m =>
-            uv.addVector(ArrowTypes.toArrowField(m.name, m.dataType, nullable = true)
-              .createVector(alloc).asInstanceOf[FieldVector])
-          }
-          uv
-        } else ArrowTypes.toArrowField(f.name, f.dataType, f.nullable).createVector(alloc)
-      }
-      val root = new VectorSchemaRoot(vectors.asJava)
-      val writers = schema.fields.indices.map { i =>
-        AFWriter(vectors(i), schema.fields(i).dataType)
-      }
-      val tid = org.apache.spark.TaskContext.get().taskAttemptId()
-      // attempt-unique staged tmp: committed driver-side after the job
-      val tmp = s"$dir/${HadoopFiles.stagedName(token, pid, tid, "arrow")}"
-      val total = HadoopFiles.stageTask(tmp, hconf.value) { p =>
-        val ch = HadoopFiles.createChannel(p, hconf.value)
-        val writer = new ArrowFileWriter(root, null, ch)
-        var n64 = 0L
-        try {
-          writer.start()
-          while (rows.hasNext) {
-            writers.foreach(_.reset())
-            var n = 0
-            while (n < batchRows && rows.hasNext) {
-              val row = rows.next()
-              var c = 0
-              while (c < writers.length) { writers(c).write(row, c); c += 1 }
-              n += 1
-            }
-            writers.foreach(_.finish())
-            root.setRowCount(n)
-            writer.writeBatch()
-            n64 += n
-          }
-          writer.end()
-        } finally {
-          writer.close(); root.close(); alloc.close()
-        }
-        n64
-      }
-      Iterator.single(total)
-    }.collect()
-    HadoopFiles.commitStagedWrite(dir, token, stale,
-      pid => f"part-$pid%05d.arrow", hconf.value)
-    counts.sum
+    val layout: Map[String, IpcColumn] = unionCols.map(_ -> IpcColumn.SparseUnion).toMap
+    HadoopFiles.writeStaged(df, dir, "arrow") { (path, rows, conf) =>
+      IncrementalArrowWriter.writeAll(new IncrementalArrowWriter(
+        HadoopFiles.createChannel(path, conf), schema, stream = false, batchRows,
+        layout = layout), rows)
+    }
   }
 }

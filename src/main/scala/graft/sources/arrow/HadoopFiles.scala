@@ -6,6 +6,9 @@ import java.nio.channels.{Channels, SeekableByteChannel, WritableByteChannel}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FSDataInputStream, Path}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** Hadoop-FileSystem-backed IO for the arrow source (SURVEY §2.D).
   *
@@ -32,14 +35,8 @@ object HadoopFiles {
       case other => other
     }
 
-  def exists(path: String, conf: Configuration): Boolean =
-    fs(path, conf).exists(new Path(path))
-
   def mkdirs(path: String, conf: Configuration): Unit =
     fs(path, conf).mkdirs(new Path(path))
-
-  def delete(path: String, conf: Configuration): Unit =
-    fs(path, conf).delete(new Path(path), false)
 
   /** Task-commit rename. HDFS rename is atomic; an existing dest (a
     * re-committed speculative task) is replaced.
@@ -89,18 +86,43 @@ object HadoopFiles {
     * ordering (a killed speculative attempt can hold ANY attempt id).
     */
   def stageTask[A](stagedPath: String, conf: Configuration)(write: String => A): A = {
-    val w = stagedPath + ".w"
-    val out = write(w)
-    rename(w, stagedPath, conf)
+    val out = write(inProgress(stagedPath))
+    rename(inProgress(stagedPath), stagedPath, conf)
     out
   }
 
-  /** Driver-side commit of a tmp-staged dataset write. Tasks write
-    * ONLY `stagedName` files via [[stageTask]]; after the job succeeds
-    * this picks one completed attempt per partition, renames it to its
-    * final part name (replacing any old part), drops losing
-    * speculative attempts and in-progress litter, and deletes `stale`
-    * files not re-produced by this job. A job that fails before commit
+  /** Where a task attempt writes a staged part before [[stageTask]]'s
+    * rename publishes it.
+    */
+  def inProgress(stagedPath: String): String = stagedPath + ".w"
+
+  /** Write `df` under `dir` as one `part-NNNNN.ext` file per partition,
+    * replacing every data file the directory held before, through the
+    * staged protocol ([[StagedWrite]]): `writePart(path, rows, conf)`
+    * writes one partition on the executors and returns its row count.
+    * Returns the total row count.
+    */
+  def writeStaged(df: DataFrame, dir: String, ext: String)(
+      writePart: (String, Iterator[InternalRow], Configuration) => Long): Long = {
+    val job = StagedWrite.begin(dir, df.sparkSession.sparkContext.hadoopConfiguration,
+      replace = true)
+    val counts = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+      val tid = TaskContext.get().taskAttemptId()
+      Iterator.single(stageTask(job.stagedPath(pid, tid, ext), job.conf)(
+        writePart(_, rows, job.conf)))
+    }.collect()
+    job.commit(pid => f"part-$pid%05d.$ext")
+    counts.sum
+  }
+
+  /** Driver-side commit of a tmp-staged dataset write, run by
+    * [[StagedWrite.commit]]. Tasks write ONLY `stagedName` files via
+    * [[stageTask]] (the arrow sink's writer does the same rename at
+    * task commit); after the job succeeds this picks one completed
+    * attempt per partition, renames it to its final part name
+    * (replacing any old part), drops losing speculative attempts and
+    * in-progress litter, and deletes `stale` files not re-produced by
+    * this job. A job that fails before commit
     * leaves the previous dataset fully intact (plus invisible tmp
     * litter); a write whose input reads from this same directory
     * consumes the old parts for the whole job, since nothing is
@@ -179,6 +201,39 @@ object HadoopFiles {
 
   def createChannel(path: String, conf: Configuration): WritableByteChannel =
     Channels.newChannel(fs(path, conf).create(new Path(path), true))
+}
+
+/** One dataset write under the staged protocol. [[StagedWrite.begin]]
+  * runs on the driver before the job: it lists the data files the write
+  * replaces and mints the job token. Every task attempt writes one
+  * invisible staged part ([[stagedPath]] via [[HadoopFiles.stageTask]])
+  * and [[commit]] runs on the driver once the job has succeeded
+  * ([[HadoopFiles.commitStagedWrite]]). Until then the previous dataset
+  * stays readable and complete, whether the job fails or reads from
+  * the directory it replaces.
+  */
+final class StagedWrite private (dir: String, val token: String,
+                                 stale: Set[String], hconf: SerializableHadoopConf)
+    extends Serializable {
+  def conf: Configuration = hconf.value
+
+  def stagedPath(pid: Int, tid: Long, ext: String): String =
+    s"$dir/${HadoopFiles.stagedName(token, pid, tid, ext)}"
+
+  def commit(dstName: Int => String): Unit =
+    HadoopFiles.commitStagedWrite(dir, token, stale, dstName, conf)
+}
+
+object StagedWrite {
+  /** Start a write under `dir`: with `replace` every data file there
+    * now is deleted at commit, otherwise the write adds to them.
+    */
+  def begin(dir: String, conf: Configuration, replace: Boolean): StagedWrite = {
+    HadoopFiles.mkdirs(dir, conf)
+    val stale = if (replace) HadoopFiles.dataFiles(dir, conf).toSet else Set.empty[String]
+    new StagedWrite(dir, java.util.UUID.randomUUID().toString.take(12), stale,
+      new SerializableHadoopConf(conf))
+  }
 }
 
 /** Seekable channel over FSDataInputStream for ArrowFileReader.

@@ -1,57 +1,125 @@
 package graft.sources.arrow
 
+import java.nio.channels.WritableByteChannel
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.arrow.compression.CommonsCompressionFactory
 import org.apache.arrow.memory.BufferAllocator
-import org.apache.hadoop.conf.Configuration
-import org.apache.arrow.vector.VectorSchemaRoot
+import org.apache.arrow.vector.{FieldVector, IntVector, VarCharVector, VectorSchemaRoot}
+import org.apache.arrow.vector.complex.UnionVector
+import org.apache.arrow.vector.compression.CompressionUtil.CodecType
+import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryProvider}
 import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamWriter}
+import org.apache.arrow.vector.ipc.message.IpcOption
+import org.apache.arrow.vector.types.pojo.{ArrowType, DictionaryEncoding, Field, FieldType}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.sources.ArrowTypes
 
-/** Row-at-a-time arrow IPC writer with bounded memory: rows accumulate
-  * into one VectorSchemaRoot and flush as a record batch every
-  * `batchRows`. The executor never holds more than one batch — the
-  * same batching contract as the reference's RecordBatchFileWriter
-  * (reference: cpp/src/arrow/ipc/writer.h:90).
+/** How a column is laid out in the IPC batches: its plain arrow type,
+  * int32 indices into a given string vocabulary (reference:
+  * cpp/src/arrow/ipc/dictionary.h — the dictionary is declared in the
+  * schema message and emitted ahead of the record batches), or a
+  * sparse union of a struct's members (reference: format/Schema.fbs
+  * Union).
   */
-class IncrementalArrowWriter(path: String, schema: StructType,
-                             stream: Boolean, batchRows: Int = 4096 * 4,
-                             conf: Configuration = HadoopFiles.local,
-                             compression: Option[String] = None) {
+private[sources] sealed trait IpcColumn
+
+private[sources] object IpcColumn {
+  case object Plain extends IpcColumn
+  final case class Dictionary(vocab: Array[String]) extends IpcColumn
+  case object SparseUnion extends IpcColumn
+}
+
+/** The Arrow IPC record-batch writer: rows accumulate into one
+  * VectorSchemaRoot and flush as a record batch every `batchRows`, so
+  * the writer never holds more than one batch — the batching contract
+  * of the reference's RecordBatchWriter (reference:
+  * cpp/src/arrow/ipc/writer.h:90). File and stream format share the
+  * loop; only the framing differs. Every IPC producer in graft (the
+  * `format("arrow")` sink, the dictionary and union dataset writers,
+  * Plasma objects) writes through this class.
+  *
+  * `layout` names the columns that are not written as their plain
+  * type. The writer owns `ch` and closes it with `finish` or
+  * `closeQuietly`.
+  */
+private[sources] class IncrementalArrowWriter(
+    ch: WritableByteChannel, schema: StructType, stream: Boolean,
+    batchRows: Int = IncrementalArrowWriter.DefaultBatchRows,
+    compression: Option[String] = None,
+    layout: Map[String, IpcColumn] = Map.empty) {
+  // buffer-level compression (Message.fbs BodyCompression): readers
+  // pass CommonsCompressionFactory and decompress transparently
+  private val codec = compression.map(IncrementalArrowWriter.codec)
   private val alloc: BufferAllocator = ArrowIo.rootAllocator()
-  private val root = VectorSchemaRoot.create(ArrowTypes.toArrowSchema(schema), alloc)
-  private val writers = schema.fields.indices.map { i =>
-    AFWriter(root.getVector(i), schema.fields(i).dataType)
-  }
-  private val ch = HadoopFiles.createChannel(path, conf)
-  // buffer-level compression (Message.fbs BodyCompression): zstd or
-  // lz4 per-buffer; readers pass CommonsCompressionFactory and
-  // decompress transparently
-  private val codec: Option[org.apache.arrow.vector.compression.CompressionUtil.CodecType] =
-    compression.map {
-      case "zstd" => org.apache.arrow.vector.compression.CompressionUtil.CodecType.ZSTD
-      case "lz4" => org.apache.arrow.vector.compression.CompressionUtil.CodecType.LZ4_FRAME
-      case other => throw new IllegalArgumentException(
-        s"ipc.compression must be zstd or lz4, got $other")
+  private val provider = new DictionaryProvider.MapDictionaryProvider()
+  private val columns: Seq[(FieldVector, AFWriter)] = schema.fields.toSeq.zipWithIndex.map {
+    case (f, i) => layout.getOrElse(f.name, IpcColumn.Plain) match {
+      case IpcColumn.Plain =>
+        val v = ArrowTypes.toArrowField(f.name, f.dataType, f.nullable).createVector(alloc)
+        (v, AFWriter(v, f.dataType))
+      case IpcColumn.Dictionary(vocab) => dictionaryColumn(f, i, vocab)
+      case IpcColumn.SparseUnion =>
+        // the vector builds its own Field: sparse-union type tags are
+        // MinorType ordinals (setType), and the generated field
+        // carries exactly those typeIds
+        val uv = UnionVector.empty(f.name, alloc)
+        f.dataType.asInstanceOf[StructType].fields.foreach { m =>
+          uv.addVector(ArrowTypes.toArrowField(m.name, m.dataType, nullable = true)
+            .createVector(alloc).asInstanceOf[FieldVector])
+        }
+        (uv, AFWriter(uv, f.dataType))
     }
+  }
+  private val root = new VectorSchemaRoot(columns.map(_._1).asJava)
+  private val writers = columns.map(_._2).toArray
   private val writer = codec match {
     case None =>
-      if (stream) new ArrowStreamWriter(root, null, ch)
-      else new ArrowFileWriter(root, null, ch)
+      if (stream) new ArrowStreamWriter(root, provider, ch)
+      else new ArrowFileWriter(root, provider, ch)
     case Some(ct) =>
-      val opt = org.apache.arrow.vector.ipc.message.IpcOption.DEFAULT
-      val f = org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE
-      if (stream)
-        new ArrowStreamWriter(root, null, ch, opt, f, ct)
-      else
-        new ArrowFileWriter(root, null, ch, null, opt, f, ct)
+      val f = CommonsCompressionFactory.INSTANCE
+      if (stream) new ArrowStreamWriter(root, provider, ch, IpcOption.DEFAULT, f, ct)
+      else new ArrowFileWriter(root, provider, ch, null, IpcOption.DEFAULT, f, ct)
   }
   writer.start()
 
   private var inBatch = 0
   private var total = 0L
   private var closed = false
+
+  /** String column `i` as indices into `vocab` (dictionary id =
+    * ordinal). Values absent from the vocabulary are rejected: the
+    * vocabulary comes from an exact distinct pass, so a miss is writer
+    * misuse.
+    */
+  private def dictionaryColumn(f: StructField, i: Int,
+                               vocab: Array[String]): (FieldVector, AFWriter) = {
+    val enc = new DictionaryEncoding(i.toLong, false, new ArrowType.Int(32, true))
+    val dv = new VarCharVector(s"${f.name}.dict", alloc)
+    dv.allocateNew(vocab.length)
+    vocab.zipWithIndex.foreach { case (v, j) => dv.setSafe(j, v.getBytes("UTF-8")) }
+    dv.setValueCount(vocab.length)
+    provider.put(new Dictionary(dv, enc))
+    val lookup = new java.util.HashMap[String, Integer](vocab.length * 2)
+    vocab.zipWithIndex.foreach { case (v, j) => lookup.put(v, j) }
+    val iv = new Field(f.name, new FieldType(f.nullable, enc.getIndexType, enc),
+      java.util.Collections.emptyList()).createVector(alloc).asInstanceOf[IntVector]
+    (iv, new AFWriter {
+      val vector = iv
+      def setNull(): Unit = iv.setNull(count)
+      def setValue(g: SpecializedGetters, o: Int): Unit = {
+        val s = g.getUTF8String(o).toString
+        val idx = lookup.get(s)
+        require(idx != null, s"value not in dictionary vocab for ${f.name}: $s")
+        iv.setSafe(count, idx.intValue())
+      }
+    })
+  }
 
   def append(row: InternalRow): Unit = {
     var c = 0
@@ -69,6 +137,9 @@ class IncrementalArrowWriter(path: String, schema: StructType,
     inBatch = 0
   }
 
+  /** Flush the last batch, write the footer or end-of-stream marker,
+    * release everything; returns the rows written.
+    */
   def finish(): Long = {
     flush()
     writer.end()
@@ -79,7 +150,29 @@ class IncrementalArrowWriter(path: String, schema: StructType,
   def closeQuietly(): Unit = if (!closed) {
     closed = true
     try writer.close() finally {
-      try root.close() finally alloc.close()
+      try root.close() finally {
+        try provider.getDictionaryIds.asScala.foreach(id => provider.lookup(id).getVector.close())
+        finally alloc.close()
+      }
     }
   }
+}
+
+private[sources] object IncrementalArrowWriter {
+  val DefaultBatchRows: Int = 4096 * 4
+
+  /** The buffer codec an `ipc.compression` value names. */
+  def codec(name: String): CodecType = name.toLowerCase(java.util.Locale.ROOT) match {
+    case "zstd" => CodecType.ZSTD
+    case "lz4" => CodecType.LZ4_FRAME
+    case other => throw new IllegalArgumentException(
+      s"ipc.compression must be zstd or lz4, got $other")
+  }
+
+  /** Write every row through `w` and finish it; on failure `w` is
+    * closed before the error propagates. Returns the rows written.
+    */
+  def writeAll(w: IncrementalArrowWriter, rows: Iterator[InternalRow]): Long =
+    try { rows.foreach(w.append); w.finish() }
+    catch { case t: Throwable => w.closeQuietly(); throw t }
 }

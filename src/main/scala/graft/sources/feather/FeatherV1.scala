@@ -388,26 +388,8 @@ object FeatherV1 {
     val schema = df.schema
     schema.fields.foreach(f => featherTypeOf(f.dataType))
     validateCategories(schema, categories)
-    val hconf = new graft.sources.arrow.SerializableHadoopConf(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    HadoopFiles.mkdirs(dir, hconf.value)
-    // staged overwrite: tasks write ONLY invisible attempt-unique tmp
-    // files; the driver commits after the whole job succeeds (one
-    // attempt per partition renamed into place, stale parts deleted).
-    // A mid-job failure keeps the previous dataset intact, and a write
-    // reading from its own directory consumes the old parts for the
-    // whole job — see HadoopFiles.commitStagedWrite.
-    val stale = HadoopFiles.dataFiles(dir, hconf.value).toSet
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    df.queryExecution.toRdd.foreachPartition { rows: Iterator[InternalRow] =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val tid = org.apache.spark.TaskContext.get().taskAttemptId()
-      val tmp = s"$dir/${HadoopFiles.stagedName(token, pid, tid, "feather")}"
-      HadoopFiles.stageTask(tmp, hconf.value)(p =>
-        writeFile(p, schema, rows, hconf.value, categories))
-    }
-    HadoopFiles.commitStagedWrite(dir, token, stale,
-      pid => f"part-$pid%05d.feather", hconf.value)
+    HadoopFiles.writeStaged(df, dir, "feather")(
+      (path, rows, conf) => writeFile(path, schema, rows, conf, categories))
   }
 
   // --------------------------------------------------------------------- read

@@ -371,23 +371,8 @@ object ArrowJsonIntegration {
             categories: Set[String] = Set.empty): Unit = {
     val schema = df.schema
     validateCategories(schema, categories)
-    val hconf = new graft.sources.arrow.SerializableHadoopConf(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    HadoopFiles.mkdirs(dir, hconf.value)
-    // staged overwrite: tasks write only invisible tmp files, the
-    // driver commits after job success (HadoopFiles.commitStagedWrite
-    // — same failure-safety and self-read rationale as FeatherV1.write)
-    val stale = HadoopFiles.dataFiles(dir, hconf.value).toSet
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    df.queryExecution.toRdd.foreachPartition { rows: Iterator[InternalRow] =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val tid = org.apache.spark.TaskContext.get().taskAttemptId()
-      val tmp = s"$dir/${HadoopFiles.stagedName(token, pid, tid, "arrow.json")}"
-      HadoopFiles.stageTask(tmp, hconf.value)(p =>
-        writeFile(p, schema, rows, conf = hconf.value, categories = categories))
-    }
-    HadoopFiles.commitStagedWrite(dir, token, stale,
-      pid => f"part-$pid%05d.arrow.json", hconf.value)
+    HadoopFiles.writeStaged(df, dir, "arrow.json")(
+      (path, rows, conf) => writeFile(path, schema, rows, conf = conf, categories = categories))
   }
 
   // -------------------------------------------------------------------- read

@@ -1,14 +1,16 @@
 package graft.sources.plasma
 
-import java.io.RandomAccessFile
+import java.io.{ByteArrayOutputStream, RandomAccessFile}
 import java.nio.{ByteBuffer, ByteOrder, MappedByteBuffer}
-import java.nio.channels.FileChannel
+import java.nio.channels.{Channels, FileChannel}
 import java.nio.file.{Files, Paths}
 
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+
+import graft.sources.arrow.IncrementalArrowWriter
 
 /** Cross-process shared-memory object store (reference:
   * cpp/src/plasma/client.h — Connect/Create/Seal/Get/Contains/Abort/
@@ -258,8 +260,11 @@ class PlasmaStore(dir: String) {
     */
   def putDataFrame(id: String, df: DataFrame,
                    metadata: Array[Byte] = Array.empty): Unit = {
-    val rows = df.queryExecution.executedPlan.executeCollect().toIndexedSeq
-    val bytes = graft.sources.arrow.ArrowIo.toStreamBytes(df.schema, rows)
+    val rows = df.queryExecution.executedPlan.executeCollect()
+    val out = new ByteArrayOutputStream()
+    IncrementalArrowWriter.writeAll(new IncrementalArrowWriter(
+      Channels.newChannel(out), df.schema, stream = true), rows.iterator)
+    val bytes = out.toByteArray
     val buf = create(id, bytes.length.toLong, metadata)
     buf.put(bytes)
     seal(id)

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
+import graft.sources.arrow.{HadoopFiles, IncrementalArrowWriter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
@@ -12,10 +13,10 @@ import org.apache.spark.sql.types._
 class ArrowIpcSpec extends SparkSpec {
   import sqlImplicits._
 
-  private def tmpDir(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft-arrow-$tag").toString
-    d
-  }
+  private def tmpDir(tag: String): String = TempDirs.tempDir(s"graft-arrow-$tag")
+
+  private def dataFiles(dir: String): Seq[String] =
+    HadoopFiles.dataFiles(dir, HadoopFiles.local)
 
   test("roundtrip: primitives with nulls") {
     val schema = StructType(Seq(
@@ -120,7 +121,7 @@ class ArrowIpcSpec extends SparkSpec {
     val df = Seq((1, "a"), (2, "b")).toDF("k", "v")
     val dir = tmpDir("stream")
     df.write.format("arrow").option("ipc.format", "stream").mode("overwrite").save(dir)
-    val files = graft.sources.arrow.ArrowIo.dataFiles(dir)
+    val files = dataFiles(dir)
     assert(files.forall(_.endsWith(".arrows")))
     assert(files.forall(f => !graft.sources.arrow.ArrowIo.isFileFormat(f)))
     val back = spark.read.format("arrow").load(dir)
@@ -134,7 +135,7 @@ class ArrowIpcSpec extends SparkSpec {
     // rename the part file to .feather; the reader sniffs magic, not extension
     // dataFiles returns fully-qualified URIs (file:/...)
     val f = Paths.get(java.net.URI.create(
-      graft.sources.arrow.ArrowIo.dataFiles(dir).head))
+      dataFiles(dir).head))
     val feather = Paths.get(f.toString.stripSuffix(".arrow") + ".feather")
     Files.move(f, feather)
     val back = spark.read.format("arrow").load(dir)
@@ -247,7 +248,7 @@ class ArrowIpcSpec extends SparkSpec {
     val df = spark.range(0, 5000)
       .selectExpr("id", "repeat('abcdef', 50) AS pad", "cast(id % 7 as double) AS v")
     def sizeOf(dir: String): Long =
-      graft.sources.arrow.ArrowIo.dataFiles(dir)
+      dataFiles(dir)
         .map(f => Files.size(Paths.get(java.net.URI.create(f)))).sum
     val plain = tmpDir("comp-none")
     df.coalesce(1).write.format("arrow").mode("overwrite").save(plain)
@@ -275,7 +276,7 @@ class ArrowIpcSpec extends SparkSpec {
 
     // on-disk schema must declare a dictionary encoding for seg
     val alloc = ArrowIo.rootAllocator()
-    val reader = ArrowIo.openReader(ArrowIo.dataFiles(dir).head, alloc)
+    val reader = ArrowIo.openReader(dataFiles(dir).head, alloc)
     try {
       val segField = reader.getVectorSchemaRoot.getSchema.findField("seg")
       assert(segField.getDictionary != null, "seg must be dictionary-encoded on disk")
@@ -323,12 +324,12 @@ class ArrowIpcSpec extends SparkSpec {
     df.write.format("arrow")
       .mode("overwrite").save(dir)
     // rewrite as many small batches through the low-level writer
-    val file = graft.sources.arrow.ArrowIo.dataFiles(dir).head
-    val rows = spark.read.format("arrow").load(dir)
-      .queryExecution.executedPlan.executeCollect().toIndexedSeq
-    graft.sources.arrow.ArrowIo.writeRows(file,
-      spark.read.format("arrow").load(dir).schema, rows.iterator,
-      batchRows = 250)
+    val file = dataFiles(dir).head
+    val old = spark.read.format("arrow").load(dir)
+    val rows = old.queryExecution.executedPlan.executeCollect().toIndexedSeq
+    IncrementalArrowWriter.writeAll(new IncrementalArrowWriter(
+      HadoopFiles.createChannel(file, HadoopFiles.local), old.schema,
+      stream = false, batchRows = 250), rows.iterator)
     // a small maxPartitionBytes forces multiple range partitions
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.files.maxPartitionBytes", "16384")
@@ -338,5 +339,68 @@ class ArrowIpcSpec extends SparkSpec {
     assert(back.count() == 10000)
     assert(back.agg(org.apache.spark.sql.functions.sum("v")).head().getLong(0)
       == 3L * (9999L * 10000L) / 2)
+  }
+
+  private def listing(dir: String): Set[String] =
+    Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString).toSet
+
+  private def keyed(dir: String): Set[(Long, String)] =
+    spark.read.format("arrow").load(dir).as[(Long, String)].collect().toSet
+
+  private def seed(tag: String): (String, Set[(Long, String)]) = {
+    val dir = tmpDir(tag)
+    spark.range(20).selectExpr("id", "concat('v', id) AS s").repartition(4)
+      .write.format("arrow").mode("overwrite").save(dir)
+    (dir, keyed(dir))
+  }
+
+  test("sink: an overwrite that reads its own directory returns the filtered rows") {
+    val (dir, before) = seed("selfow")
+    spark.read.format("arrow").load(dir).where($"id" % 2 === 0)
+      .write.format("arrow").mode("overwrite").save(dir)
+    assert(keyed(dir) == before.filter(_._1 % 2 == 0))
+    assert(listing(dir).forall(n => n.startsWith("part-") && n.endsWith(".arrow")))
+  }
+
+  test("sink: an overwrite whose job fails leaves the previous dataset readable and complete") {
+    val (dir, before) = seed("failow")
+    val files = listing(dir)
+    val boom = udf((id: Long) => { if (id == 7) throw new IllegalStateException("boom"); id })
+    intercept[Exception] {
+      spark.range(20).select(boom($"id").as("id"), lit("new").as("s"))
+        .write.format("arrow").mode("overwrite").save(dir)
+    }
+    assert(keyed(dir) == before)
+    assert(listing(dir).filterNot(_.startsWith(".")) == files)
+  }
+
+  test("sink: appends with the same partition count keep every row") {
+    val dir = tmpDir("append")
+    Seq(0, 10).foreach { from =>
+      spark.range(from, from + 10).selectExpr("id", "concat('v', id) AS s").repartition(2)
+        .write.format("arrow").mode("append").save(dir)
+    }
+    val ids = spark.read.format("arrow").load(dir).as[(Long, String)].collect().map(_._1)
+    assert(ids.sorted.toSeq == (0L until 20L))
+  }
+
+  private def assertRejectedUntouched(key: String, value: String): Unit = {
+    val (dir, before) = seed(s"bad-$key")
+    val files = listing(dir)
+    val e = intercept[IllegalArgumentException] {
+      spark.range(5).selectExpr("id", "'x' AS s")
+        .write.format("arrow").option(key, value).mode("overwrite").save(dir)
+    }
+    assert(e.getMessage.contains(key) && e.getMessage.contains(value), e.getMessage)
+    assert(keyed(dir) == before)
+    assert(listing(dir) == files, s"$key=$value touched the directory")
+  }
+
+  test("sink: an unknown ipc.format fails before any file is touched") {
+    assertRejectedUntouched("ipc.format", "streem")
+  }
+
+  test("sink: an unknown ipc.compression fails before any file is touched") {
+    assertRejectedUntouched("ipc.compression", "gzip")
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Corrupt-container behavior (reference: cpp/src/arrow/ipc/
   * ipc-fuzzing-test.cc): a truncated, foreign, or internally
@@ -15,7 +15,7 @@ import graft.SparkSpec
 class ArrowRobustnessSpec extends SparkSpec {
 
   private def dirWith(name: String, bytes: Array[Byte]): String = {
-    val dir = Files.createTempDirectory("graft-robust").toString
+    val dir = TempDirs.tempDir("graft-robust")
     Files.write(Paths.get(dir, name), bytes)
     dir
   }
@@ -27,7 +27,7 @@ class ArrowRobustnessSpec extends SparkSpec {
   test("a truncated IPC file fails cleanly") {
     // valid file prefix (magic) but the footer is gone
     val df = spark.range(100).select(col("id"), (col("id") * 2).as("v")).coalesce(1)
-    val dir = Files.createTempDirectory("graft-robust-trunc").toString
+    val dir = TempDirs.tempDir("graft-robust-trunc")
     df.write.format("arrow").mode("overwrite").save(dir)
     val part = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".arrow")).head

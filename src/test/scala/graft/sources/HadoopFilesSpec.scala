@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.sources.arrow.HadoopFiles
 
 /** Staged-write commit protocol: only completed (task-renamed) staged
@@ -13,7 +14,7 @@ import graft.sources.arrow.HadoopFiles
 class HadoopFilesSpec extends AnyFunSuite {
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-staged").toString
+    TempDirs.tempDir("graft-staged")
 
   private def write(dir: String, name: String, content: String): Unit =
     Files.write(Paths.get(dir, name), content.getBytes("UTF-8"))

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 class ParquetInfoSpec extends SparkSpec {
 
@@ -26,7 +26,7 @@ class ParquetInfoSpec extends SparkSpec {
   }
 
   test("metadata read over a multi-file dataset directory stays per-file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqinfo").toString
+    val dir = TempDirs.tempDir("graft-pqinfo")
     spark.read.parquet(s"$sfDir/nation.parquet").repartition(3)
       .write.mode("overwrite").parquet(dir)
     val meta = ParquetInfo.rowGroups(spark, dir)

@@ -13,8 +13,8 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
-import graft.sources.arrow.ArrowIo
+import graft.{SparkSpec, TempDirs}
+import graft.sources.arrow.{ArrowIo, HadoopFiles}
 
 /** Union and interval coverage (SURVEY §2.A1 divergence-closing):
   * files produced by other Arrow implementations with union /
@@ -45,7 +45,7 @@ class UnionIntervalSpec extends SparkSpec {
     uv.setValueCount(3)
     val root = new VectorSchemaRoot(Seq(uv.getField).asJava,
       Seq(uv.asInstanceOf[org.apache.arrow.vector.FieldVector]).asJava, 3)
-    val dir = Files.createTempDirectory("graft-union-sparse").toString
+    val dir = TempDirs.tempDir("graft-union-sparse")
     writeOne(dir, root)
     root.close(); alloc.close()
 
@@ -80,7 +80,7 @@ class UnionIntervalSpec extends SparkSpec {
     duv.setValueCount(4)
     val root = new VectorSchemaRoot(Seq(duv.getField).asJava,
       Seq(duv.asInstanceOf[org.apache.arrow.vector.FieldVector]).asJava, 4)
-    val dir = Files.createTempDirectory("graft-union-dense").toString
+    val dir = TempDirs.tempDir("graft-union-dense")
     writeOne(dir, root)
     root.close(); alloc.close()
 
@@ -95,7 +95,7 @@ class UnionIntervalSpec extends SparkSpec {
       col("id"),
       expr("make_ym_interval(1, CAST(id AS INT))").as("ym"),
       expr("make_dt_interval(CAST(id AS INT), 2, 3, 4.5)").as("dt"))
-    val dir = Files.createTempDirectory("graft-interval-rt").toString
+    val dir = TempDirs.tempDir("graft-interval-rt")
     df.write.format("arrow").mode("overwrite").save(dir)
     val back = spark.read.format("arrow").load(dir)
     assert(back.schema("ym").dataType.isInstanceOf[YearMonthIntervalType])
@@ -122,7 +122,7 @@ class UnionIntervalSpec extends SparkSpec {
     dur.setValueCount(4)
     val root = new VectorSchemaRoot(Seq(ivd.getField, dur.getField).asJava,
       Seq(ivd: org.apache.arrow.vector.FieldVector, dur).asJava, 4)
-    val dir = Files.createTempDirectory("graft-interval-widen").toString
+    val dir = TempDirs.tempDir("graft-interval-widen")
     writeOne(dir, root)
     root.close(); alloc.close()
 
@@ -149,7 +149,7 @@ class UnionIntervalSpec extends SparkSpec {
     hf.setValueCount(4)
     val root = new VectorSchemaRoot(Seq(hf.getField).asJava,
       Seq(hf: org.apache.arrow.vector.FieldVector).asJava, 4)
-    val dir = Files.createTempDirectory("graft-halffloat").toString
+    val dir = TempDirs.tempDir("graft-halffloat")
     writeOne(dir, root)
     root.close(); alloc.close()
 
@@ -176,7 +176,7 @@ class UnionIntervalSpec extends SparkSpec {
     ll.setValueCount(4)
     val root = new VectorSchemaRoot(Seq(ll.getField).asJava,
       Seq(ll: org.apache.arrow.vector.FieldVector).asJava, 4)
-    val dir = Files.createTempDirectory("graft-largelist").toString
+    val dir = TempDirs.tempDir("graft-largelist")
     writeOne(dir, root)
     root.close(); alloc.close()
 
@@ -199,7 +199,7 @@ class UnionIntervalSpec extends SparkSpec {
     mdn.setValueCount(2)
     val root = new VectorSchemaRoot(Seq(mdn.getField).asJava,
       Seq(mdn: org.apache.arrow.vector.FieldVector).asJava, 2)
-    val dir = Files.createTempDirectory("graft-interval-mdn").toString
+    val dir = TempDirs.tempDir("graft-interval-mdn")
     writeOne(dir, root)
     root.close(); alloc.close()
 
@@ -223,10 +223,10 @@ class UnionIntervalSpec extends SparkSpec {
       StructField("u", StructType(Seq(
         StructField("i", IntegerType), StructField("s", StringType))))))
     val df = spark.createDataFrame(rows.asJava, schema).coalesce(1)
-    val dir = Files.createTempDirectory("graft-union-write").toString
+    val dir = TempDirs.tempDir("graft-union-write")
     assert(ArrowUnionWriter.write(df, dir, unionCols = Seq("u")) == 3)
     // the file really declares a union type, not a struct
-    val file = ArrowIo.dataFiles(dir).head
+    val file = HadoopFiles.dataFiles(dir, HadoopFiles.local).head
     val alloc = ArrowIo.rootAllocator()
     val r = ArrowIo.openReader(file, alloc)
     val fieldType = r.getVectorSchemaRoot.getSchema.findField("u").getType

@@ -9,7 +9,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Feather v1 container coverage (reference: cpp/src/arrow/ipc/
   * feather.h/.fbs): roundtrip through the graft writer + arrow
@@ -54,7 +54,7 @@ class FeatherSpec extends SparkSpec {
         java.sql.Timestamp.valueOf("1999-12-31 23:59:59.0"),
         java.time.LocalDateTime.parse("1999-01-01T00:00:00")))
     val df = spark.createDataFrame(rows.asJava, schema).coalesce(1)
-    val dir = Files.createTempDirectory("graft-feather-rt").toString
+    val dir = TempDirs.tempDir("graft-feather-rt")
     FeatherV1.write(df, dir)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".feather"))
     assert(files.length == 1)
@@ -70,7 +70,7 @@ class FeatherSpec extends SparkSpec {
 
   test("feather files mix with IPC files under one dataset dir") {
     val df = spark.range(5).select(col("id"), (col("id") * 2).as("v")).coalesce(1)
-    val dir = Files.createTempDirectory("graft-feather-mixed").toString
+    val dir = TempDirs.tempDir("graft-feather-mixed")
     FeatherV1.write(df, dir)
     // same schema written as IPC into the same directory
     df.write.format("arrow").mode("append").save(dir)
@@ -125,10 +125,10 @@ class FeatherSpec extends SparkSpec {
     tail.putInt(meta.length)
     tail.put(FeatherV1.MAGIC)
     out.write(tail.array())
-    val dir = Files.createTempDirectory("graft-feather-cat")
-    Files.write(Paths.get(dir.toString, "part-0.feather"), out.toByteArray)
+    val dir = TempDirs.tempDir("graft-feather-cat")
+    Files.write(Paths.get(dir, "part-0.feather"), out.toByteArray)
 
-    val df = spark.read.format("arrow").load(dir.toString)
+    val df = spark.read.format("arrow").load(dir)
     assert(df.schema("cat").dataType == StringType)
     assert(df.schema("ts").dataType == TimestampType)
     val got = df.collect().toSeq.map(r =>
@@ -142,8 +142,8 @@ class FeatherSpec extends SparkSpec {
     val rows = (0 until 2000).map(i =>
       Row(i.toLong, if (i % 7 == 0) null else s"category-value-${i % 5}"))
     val df = spark.createDataFrame(rows.asJava, schema).coalesce(1)
-    val plainDir = Files.createTempDirectory("graft-feather-plain").toString
-    val catDir = Files.createTempDirectory("graft-feather-cat").toString
+    val plainDir = TempDirs.tempDir("graft-feather-plain")
+    val catDir = TempDirs.tempDir("graft-feather-cat")
     FeatherV1.write(df, plainDir)
     FeatherV1.write(df, catDir, categories = Set("cat"))
     def only(dir: String) =
@@ -182,8 +182,8 @@ class FeatherSpec extends SparkSpec {
     tail.putInt(meta.length)
     tail.put(FeatherV1.MAGIC)
     out.write(tail.array())
-    val dir = Files.createTempDirectory("graft-feather-huge")
-    val path = Paths.get(dir.toString, "part-0.feather")
+    val dir = TempDirs.tempDir("graft-feather-huge")
+    val path = Paths.get(dir, "part-0.feather")
     Files.write(path, out.toByteArray)
     val alloc = graft.sources.arrow.ArrowIo.rootAllocator()
     val reader = new FeatherV1Reader(path.toString, alloc)
@@ -194,7 +194,7 @@ class FeatherSpec extends SparkSpec {
   }
 
   test("rewriting a dir with fewer partitions leaves no stale parts") {
-    val dir = Files.createTempDirectory("graft-feather-ow").toString
+    val dir = TempDirs.tempDir("graft-feather-ow")
     FeatherV1.write(spark.range(100).repartition(4).toDF(), dir)
     assert(new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".feather")) == 4)
@@ -211,7 +211,7 @@ class FeatherSpec extends SparkSpec {
       .select(col("id"), concat(lit("doc-"), col("id")).as("s"))
       .where(col("id") < 3)
       .repartition(4) // several partitions end up empty
-    val dir = Files.createTempDirectory("graft-feather-empty").toString
+    val dir = TempDirs.tempDir("graft-feather-empty")
     FeatherV1.write(df, dir)
     val back = spark.read.format("arrow").load(dir)
     assert(back.count() == 3)

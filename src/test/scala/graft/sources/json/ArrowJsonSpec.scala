@@ -8,7 +8,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Arrow JSON integration format coverage (reference:
   * cpp/src/arrow/ipc/json.h): writer + reader roundtrip through the
@@ -38,7 +38,7 @@ class ArrowJsonSpec extends SparkSpec {
         java.sql.Timestamp.valueOf("1970-01-01 00:00:00.0"),
         Seq.empty[Int], Row(null, null)))
     val df = spark.createDataFrame(rows.asJava, schema).coalesce(1)
-    val dir = Files.createTempDirectory("graft-ajson-rt").toString
+    val dir = TempDirs.tempDir("graft-ajson-rt")
     ArrowJsonIntegration.write(df, dir)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".arrow.json"))
     assert(files.length == 1)
@@ -54,7 +54,7 @@ class ArrowJsonSpec extends SparkSpec {
 
   test("multiple batches in one document survive the roundtrip") {
     val df = spark.range(10000).select(col("id"), (col("id") % 7).as("m")).coalesce(1)
-    val dir = Files.createTempDirectory("graft-ajson-batches").toString
+    val dir = TempDirs.tempDir("graft-ajson-batches")
     ArrowJsonIntegration.write(df, dir) // 4096-row batches → 3 batches
     val back = spark.read.format("arrow").load(dir)
     assert(back.count() == 10000)
@@ -76,9 +76,9 @@ class ArrowJsonSpec extends SparkSpec {
         |    {"name": "ts", "count": 3, "VALIDITY": [1, 1, 0],
         |     "DATA": [60, 3600, 0]}]}]}
         |""".stripMargin
-    val dir = Files.createTempDirectory("graft-ajson-ref")
-    Files.write(Paths.get(dir.toString, "part-0.arrow.json"), doc.getBytes("UTF-8"))
-    val df = spark.read.format("arrow").load(dir.toString)
+    val dir = TempDirs.tempDir("graft-ajson-ref")
+    Files.write(Paths.get(dir, "part-0.arrow.json"), doc.getBytes("UTF-8"))
+    val df = spark.read.format("arrow").load(dir)
     // uint32 widens to long; second-unit timestamp widens to µs
     assert(df.schema("u").dataType == LongType)
     assert(df.schema("ts").dataType == TimestampType)
@@ -122,9 +122,9 @@ class ArrowJsonSpec extends SparkSpec {
         |    {"name": "v", "count": 5, "VALIDITY": [1, 0, 1, 1, 1],
         |     "DATA": [1, 0, 0, 1, 0]}]}]}
         |""".stripMargin
-    val dir = Files.createTempDirectory("graft-ajson-dict")
-    Files.write(Paths.get(dir.toString, "part-0.arrow.json"), doc.getBytes("UTF-8"))
-    val df = spark.read.format("arrow").load(dir.toString)
+    val dir = TempDirs.tempDir("graft-ajson-dict")
+    Files.write(Paths.get(dir, "part-0.arrow.json"), doc.getBytes("UTF-8"))
+    val df = spark.read.format("arrow").load(dir)
     assert(df.schema("c").dataType == StringType)
     assert(df.schema("v").dataType == IntegerType)
     val got = df.collect().toSeq.map(r =>
@@ -140,8 +140,8 @@ class ArrowJsonSpec extends SparkSpec {
     val rows = (0 until 500).map(i =>
       Row(i.toLong, if (i % 11 == 0) null else s"dict-value-${i % 4}"))
     val df = spark.createDataFrame(rows.asJava, schema).coalesce(1)
-    val plainDir = Files.createTempDirectory("graft-ajson-wplain").toString
-    val dictDir = Files.createTempDirectory("graft-ajson-wdict").toString
+    val plainDir = TempDirs.tempDir("graft-ajson-wplain")
+    val dictDir = TempDirs.tempDir("graft-ajson-wdict")
     ArrowJsonIntegration.write(df, plainDir)
     ArrowJsonIntegration.write(df, dictDir, categories = Set("cat"))
     def only(dir: String) = new java.io.File(dir).listFiles()
@@ -157,7 +157,7 @@ class ArrowJsonSpec extends SparkSpec {
     val b = back.collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet
     assert(a == b)
     // multi-batch vocab accumulation: tiny batches, same answer
-    val multiDir = Files.createTempDirectory("graft-ajson-wdict2").toString
+    val multiDir = TempDirs.tempDir("graft-ajson-wdict2")
     val n = graft.sources.json.ArrowJsonIntegration.writeFile(
       s"$multiDir/part-0.arrow.json", schema,
       df.queryExecution.toRdd.collect().iterator.map(_.copy()),
@@ -207,9 +207,9 @@ class ArrowJsonSpec extends SparkSpec {
         |       {"name": "item", "count": 3, "VALIDITY": [1, 1, 1],
         |        "DATA": [0, 1, 1]}]}]}]}
         |""".stripMargin
-    val dir = Files.createTempDirectory("graft-ajson-nesteddict")
-    Files.write(Paths.get(dir.toString, "part-0.arrow.json"), doc.getBytes("UTF-8"))
-    val df = spark.read.format("arrow").load(dir.toString)
+    val dir = TempDirs.tempDir("graft-ajson-nesteddict")
+    Files.write(Paths.get(dir, "part-0.arrow.json"), doc.getBytes("UTF-8"))
+    val df = spark.read.format("arrow").load(dir)
     val got = df.collect().toSeq.map(r =>
       (r.getStruct(0).getString(0), r.getSeq[String](1)))
     assert(got == Seq(("bb", Seq("aa", "bb")), ("aa", Seq("bb"))))
@@ -227,10 +227,10 @@ class ArrowJsonSpec extends SparkSpec {
         |  {"count": 1, "columns": [
         |    {"name": "c", "count": 1, "VALIDITY": [1], "DATA": [0]}]}]}
         |""".stripMargin
-    val dir = Files.createTempDirectory("graft-ajson-nodict")
-    Files.write(Paths.get(dir.toString, "part-0.arrow.json"), doc.getBytes("UTF-8"))
+    val dir = TempDirs.tempDir("graft-ajson-nodict")
+    Files.write(Paths.get(dir, "part-0.arrow.json"), doc.getBytes("UTF-8"))
     val e = intercept[Exception] {
-      spark.read.format("arrow").load(dir.toString).collect()
+      spark.read.format("arrow").load(dir).collect()
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
@@ -256,10 +256,10 @@ class ArrowJsonSpec extends SparkSpec {
         |       {"name": "a", "count": 2, "VALIDITY": [1, 0], "DATA": ["x", ""]},
         |       {"name": "b", "count": 2, "VALIDITY": [0, 1], "DATA": ["", "y"]}]}]}]}
         |""".stripMargin
-    val dir = Files.createTempDirectory("graft-ajson-dupunion")
-    Files.write(Paths.get(dir.toString, "part-0.arrow.json"), doc.getBytes("UTF-8"))
+    val dir = TempDirs.tempDir("graft-ajson-dupunion")
+    Files.write(Paths.get(dir, "part-0.arrow.json"), doc.getBytes("UTF-8"))
     val e = intercept[Exception] {
-      spark.read.format("arrow").load(dir.toString).collect()
+      spark.read.format("arrow").load(dir).collect()
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
@@ -267,7 +267,7 @@ class ArrowJsonSpec extends SparkSpec {
   }
 
   test("rewriting a dir with fewer partitions leaves no stale parts") {
-    val dir = Files.createTempDirectory("graft-ajson-ow").toString
+    val dir = TempDirs.tempDir("graft-ajson-ow")
     ArrowJsonIntegration.write(spark.range(100).repartition(4).toDF(), dir)
     assert(new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".arrow.json")) == 4)
@@ -300,9 +300,9 @@ class ArrowJsonSpec extends SparkSpec {
         |       {"name": "s", "count": 3, "VALIDITY": [0, 1, 0],
         |        "DATA": ["", "mid", ""]}]}]}]}
         |""".stripMargin
-    val dir = Files.createTempDirectory("graft-ajson-union")
-    Files.write(Paths.get(dir.toString, "part-0.arrow.json"), doc.getBytes("UTF-8"))
-    val df = spark.read.format("arrow").load(dir.toString)
+    val dir = TempDirs.tempDir("graft-ajson-union")
+    Files.write(Paths.get(dir, "part-0.arrow.json"), doc.getBytes("UTF-8"))
+    val df = spark.read.format("arrow").load(dir)
     val st = df.schema("u").dataType.asInstanceOf[StructType]
     assert(st.fields.map(_.name).toSeq == Seq("i", "s"))
     val got = df.collect().toSeq.map(_.getStruct(0))

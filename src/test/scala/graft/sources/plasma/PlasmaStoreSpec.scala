@@ -6,7 +6,7 @@ import scala.sys.process._
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Plasma-analog object store: lifecycle contract, arrow payload
   * interop, and true cross-process visibility via a second JVM
@@ -15,7 +15,7 @@ import graft.SparkSpec
 class PlasmaStoreSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-plasma").toString
+    TempDirs.tempDir("graft-plasma")
 
   test("create/seal/get/contains/delete lifecycle") {
     val store = new PlasmaStore(tmp())

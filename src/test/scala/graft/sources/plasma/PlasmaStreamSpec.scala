@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Streaming + batch reads over the plasma store: the Structured
   * Streaming twin of the reference's Subscribe → Get consume loop
@@ -15,7 +15,7 @@ class PlasmaStreamSpec extends SparkSpec {
   import sqlImplicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-plasma-stream").toString
+    TempDirs.tempDir("graft-plasma-stream")
 
   test("batch read sees every sealed object") {
     val dir = tmp()
@@ -31,9 +31,9 @@ class PlasmaStreamSpec extends SparkSpec {
     val store = new PlasmaStore(dir)
     store.putDataFrame("first", spark.range(2).toDF())
     val stream = spark.readStream.format("plasma").option("dir", dir).load()
-    val ckpt = Files.createTempDirectory("graft-plasma-ckpt").toString
+    val ckpt = TempDirs.tempDir("graft-plasma-ckpt")
 
-    val out = Files.createTempDirectory("graft-plasma-out").toString
+    val out = TempDirs.tempDir("graft-plasma-out")
 
     // batch 0: the pre-existing object
     val q1 = stream.writeStream.format("parquet")

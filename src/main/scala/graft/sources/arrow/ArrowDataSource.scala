@@ -246,9 +246,8 @@ class ArrowBatchWrite(schema: StructType, job: StagedWrite, stream: Boolean,
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     job.commit(pid => f"part-$pid%05d-${job.token}.$ext")
   // nothing is visible before commit: a failed job leaves the
-  // previous dataset as it was, and its staged litter is swept by the
-  // next commit on the directory
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+  // previous dataset as it was
+  override def abort(messages: Array[WriterCommitMessage]): Unit = job.abort()
 }
 
 class ArrowWriterFactory(schema: StructType, job: StagedWrite, stream: Boolean,

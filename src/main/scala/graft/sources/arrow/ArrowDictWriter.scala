@@ -1,19 +1,18 @@
 package graft.sources.arrow
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StringType
+
+import graft.sources.CategoryColumns
 
 /** Dictionary-encoded Arrow IPC dataset writer (SURVEY §2.D5 write
   * side; reference: cpp/src/arrow/ipc/dictionary.h).
   *
   * Spark-first shape: the vocabulary of each encoded column is built
-  * by an exact `distinct` job (one shuffle, scales to any corpus; the
-  * *vocabulary* must be bounded — that is what makes a column worth
-  * dictionary-encoding), broadcast to the executors, and every
-  * partition writes its own IPC file encoding indices against the
-  * shared dictionary. Readers (ours included — ArrowIo.decodedVectors)
-  * see a schema-declared dictionary and decode on load.
+  * by an exact `distinct` job ([[CategoryColumns.dictionaries]]),
+  * broadcast to the executors, and every partition writes its own IPC
+  * file encoding indices against the shared dictionary. Readers (ours
+  * included — ArrowIo.decodedVectors) see a schema-declared
+  * dictionary and decode on load.
   */
 object ArrowDictWriter {
 
@@ -35,21 +34,7 @@ object ArrowDictWriter {
             stream: Boolean = false, batchRows: Int = 4096 * 4,
             maxVocab: Int = DefaultMaxVocab): Long = {
     val schema = df.schema
-    dictCols.foreach { c =>
-      require(schema(c).dataType == StringType,
-        s"dictionary encoding supports string columns, got ${schema(c).dataType} for $c")
-    }
-    val layout: Map[String, IpcColumn] = dictCols.map { c =>
-      // limit(maxVocab+1) bounds the collect itself: the driver never
-      // holds more than cap+1 values even when the column cardinality
-      // is in the billions.
-      val vocab = df.select(col(c)).where(col(c).isNotNull).distinct()
-        .limit(maxVocab + 1).collect().map(_.getString(0))
-      require(vocab.length <= maxVocab,
-        s"column '$c' has more than $maxVocab distinct values — it is not " +
-          "dictionary-worthy; write it as a plain column or raise maxVocab")
-      c -> IpcColumn.Dictionary(vocab.sorted)
-    }.toMap
+    val layout = CategoryColumns.dictionaries(df, dictCols, "arrow dictionary", maxVocab)
     val bc = df.sparkSession.sparkContext.broadcast(layout)
     HadoopFiles.writeStaged(df, dir, "arrow") { (path, rows, conf) =>
       IncrementalArrowWriter.writeAll(new IncrementalArrowWriter(

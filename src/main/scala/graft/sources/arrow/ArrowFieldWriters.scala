@@ -30,6 +30,11 @@ private[sources] abstract class AFWriter {
 
 private[sources] object AFWriter {
   def apply(v: ValueVector, dt: DataType): AFWriter = (v, dt) match {
+    case (x: NullVector, NullType) => new AFWriter {
+      val vector = x
+      def setNull(): Unit = ()
+      def setValue(g: SpecializedGetters, o: Int): Unit = ()
+    }
     case (x: BitVector, BooleanType) => new AFWriter {
       val vector = x
       def setNull(): Unit = x.setNull(count)

@@ -5,8 +5,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.arrow.memory.{BufferAllocator, RootAllocator}
 import org.apache.hadoop.conf.Configuration
 import org.apache.arrow.vector.VectorSchemaRoot
-import org.apache.arrow.vector.dictionary.DictionaryEncoder
+import org.apache.arrow.vector.dictionary.{DictionaryEncoder, DictionaryProvider}
 import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowReader, ArrowStreamReader}
+import org.apache.arrow.vector.ipc.message.ArrowFieldNode
+import org.apache.arrow.vector.types.pojo.Field
+import org.apache.arrow.vector.util.DictionaryUtility
 import org.apache.arrow.vector.FieldVector
 import org.apache.spark.sql.types.StructType
 
@@ -86,30 +89,31 @@ object ArrowIo {
     } finally { reader.close(); alloc.close() }
   }
 
-  /** Read just the schema of an IPC file. Dictionary-encoded fields
-    * surface their *value* type (they are decoded on load), not the
-    * index type stored in the schema message.
+  /** Read just the schema of an IPC file. Dictionary-encoded fields,
+    * at any depth, surface their *value* type (they are decoded on
+    * load), not the index type stored in the schema message.
     */
   def readSchema(path: String, conf: Configuration = HadoopFiles.local): StructType = {
     val alloc = rootAllocator()
     val reader = openReader(path, alloc, conf)
     try {
-      val fields = reader.getVectorSchemaRoot.getSchema.getFields.asScala.map { f =>
-        val enc = f.getDictionary
-        if (enc == null) ArrowTypes.fromArrowField(f)
-        else {
-          val dict = reader.lookup(enc.getId)
-          require(dict != null, s"dictionary ${enc.getId} missing in $path")
-          org.apache.spark.sql.types.StructField(
-            f.getName, ArrowTypes.fromArrowType(dict.getVectorType), f.isNullable)
-        }
-      }
+      val fields = reader.getVectorSchemaRoot.getSchema.getFields.asScala.map(f =>
+        ArrowTypes.fromArrowField(valueField(f, reader)))
       StructType(fields.toArray)
     } finally { reader.close(); alloc.close() }
   }
 
-  /** Decode any dictionary-encoded vectors in the loaded batch
-    * (reference: cpp/src/arrow/ipc/dictionary.h), and widen
+  /** `f` with every dictionary-encoded field in it typed as its
+    * dictionary's values.
+    */
+  private def valueField(f: Field, dicts: DictionaryProvider): Field =
+    DictionaryUtility.toMessageFormat(f, dicts, new java.util.HashSet[java.lang.Long]())
+
+  private def hasDictionary(f: Field): Boolean =
+    f.getDictionary != null || f.getChildren.asScala.exists(hasDictionary)
+
+  /** Decode any dictionary-encoded vectors in the loaded batch, at any
+    * depth (reference: cpp/src/arrow/ipc/dictionary.h), and widen
     * fixed-size-list vectors to regular lists (Spark's
     * ArrowColumnVector has no FSL accessor). Returned converted
     * vectors are fresh (caller closes); plain vectors pass through.
@@ -118,20 +122,19 @@ object ArrowIo {
                      indices: Seq[Int],
                      alloc: BufferAllocator): Seq[(FieldVector, Boolean)] = {
     indices.map { i =>
+      val declared = root.getSchema.getFields.get(i)
       val v = root.getVector(i)
-      val encoding = v.getField.getDictionary
-      val out: (FieldVector, Boolean) = if (encoding != null) {
-        val dict = reader.lookup(encoding.getId)
-        (DictionaryEncoder.decode(v, dict).asInstanceOf[FieldVector], true)
-      } else v match {
-        case fsl: org.apache.arrow.vector.complex.FixedSizeListVector =>
-          (fslToList(fsl, alloc), true)
-        case ll: org.apache.arrow.vector.complex.LargeListVector =>
-          (largeListToList(ll, alloc), true)
-        case needsWiden if widenTarget(needsWiden).isDefined =>
-          (widen(needsWiden, alloc), true)
-        case other => (other, false)
-      }
+      val out: (FieldVector, Boolean) =
+        if (hasDictionary(declared)) (decodeDictionaries(v, reader, alloc), true)
+        else v match {
+          case fsl: org.apache.arrow.vector.complex.FixedSizeListVector =>
+            (fslToList(fsl, alloc), true)
+          case ll: org.apache.arrow.vector.complex.LargeListVector =>
+            (largeListToList(ll, alloc), true)
+          case needsWiden if widenTarget(needsWiden).isDefined =>
+            (widen(needsWiden, declared, alloc), true)
+          case other => (other, false)
+        }
       // widening is top-level only: a float16/large_list/uint/… vector
       // nested inside a struct or list would reach Spark's accessor
       // factory un-widened and die with an obscure error — reject it
@@ -141,16 +144,30 @@ object ArrowIo {
     }
   }
 
+  /** A copy of `v` with every dictionary-encoded vector in it decoded
+    * to its values. Plain vectors in the copy share `v`'s buffers;
+    * the caller closes the copy.
+    */
+  private def decodeDictionaries(v: FieldVector, dicts: DictionaryProvider,
+                                 alloc: BufferAllocator): FieldVector = {
+    val encoding = v.getField.getDictionary
+    if (encoding != null)
+      DictionaryEncoder.decode(v, dicts.lookup(encoding.getId)).asInstanceOf[FieldVector]
+    else {
+      val out = valueField(v.getField, dicts).createVector(alloc)
+      out.loadFieldBuffers(new ArrowFieldNode(v.getValueCount, v.getNullCount),
+        v.getFieldBuffers)
+      v.getChildrenFromFields.asScala.zip(out.getChildrenFromFields.asScala).foreach {
+        case (from, to) =>
+          val decoded = decodeDictionaries(from, dicts, alloc)
+          try decoded.makeTransferPair(to).transfer() finally decoded.close()
+      }
+      out
+    }
+  }
+
   private def checkNestedSupported(v: FieldVector): Unit = {
     def walk(c: FieldVector): Unit = {
-      // a nested dictionary-encoded child would surface its raw
-      // indices as values (decode is top-level only) — silent wrong
-      // data, so it must be rejected ahead of the scan
-      if (c.getField.getDictionary != null)
-        throw new UnsupportedOperationException(
-          s"dictionary-encoded column child '${c.getField.getName}' is " +
-            "nested inside a struct/list; the scan decodes dictionaries " +
-            "at top level only — flatten or decode the column upstream")
       val unsupported = widenTarget(c).isDefined ||
         c.isInstanceOf[org.apache.arrow.vector.complex.LargeListVector] ||
         c.isInstanceOf[org.apache.arrow.vector.complex.FixedSizeListVector]
@@ -203,7 +220,12 @@ object ArrowIo {
     case _ => None
   }
 
-  def widen(v: FieldVector, alloc: BufferAllocator): FieldVector = {
+  /** `v` copied into the vector type Spark reads. `declared` is the
+    * field the reader's schema declares for `v`: a sparse union
+    * vector reports MinorType ordinals as its type ids, the schema
+    * the ids its type buffer holds.
+    */
+  private def widen(v: FieldVector, declared: Field, alloc: BufferAllocator): FieldVector = {
     import org.apache.arrow.vector._
     val n = v.getValueCount
     v match {
@@ -362,11 +384,9 @@ object ArrowIo {
         }
         out.setValueCount(n); out
       case src: org.apache.arrow.vector.complex.UnionVector =>
-        unionToStruct(src, alloc, i => src.getTypeValue(i), i => i,
-          tid => src.getVectorByType(tid))
+        unionToStruct(src, declared, alloc, i => src.getTypeValue(i), i => i)
       case src: org.apache.arrow.vector.complex.DenseUnionVector =>
-        unionToStruct(src, alloc, i => src.getTypeId(i).toInt, i => src.getOffset(i),
-          tid => src.getVectorByType(tid.toByte))
+        unionToStruct(src, declared, alloc, i => src.getTypeId(i).toInt, i => src.getOffset(i))
       case other =>
         throw new UnsupportedOperationException(s"widen: ${other.getClass}")
     }
@@ -379,27 +399,25 @@ object ArrowIo {
     * documented divergence: Spark has no union type, so this is the
     * closest faithful reading).
     */
-  private def unionToStruct(src: FieldVector, alloc: BufferAllocator,
+  private def unionToStruct(src: FieldVector, declared: Field, alloc: BufferAllocator,
                             typeIdAt: Int => Int,
-                            srcIndexAt: Int => Int,
-                            vectorOfTypeId: Int => org.apache.arrow.vector.ValueVector)
-      : FieldVector = {
+                            srcIndexAt: Int => Int): FieldVector = {
     import org.apache.arrow.vector.complex.StructVector
-    import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType}
-    val unionType = src.getField.getType.asInstanceOf[ArrowType.Union]
-    val memberFields = src.getField.getChildren.asScala.toSeq
+    import org.apache.arrow.vector.types.pojo.{ArrowType, FieldType}
+    val unionType = declared.getType.asInstanceOf[ArrowType.Union]
+    val memberFields = declared.getChildren.asScala.toSeq
     // typeIds[ordinal] = the type id tag stored in the type buffer
     val ordinalOfTypeId: Map[Int, Int] =
       unionType.getTypeIds.zipWithIndex.map { case (tid, ord) => tid -> ord }.toMap
-    val structField = new Field(src.getField.getName,
+    val structField = new Field(declared.getName,
       FieldType.nullable(ArrowType.Struct.INSTANCE),
       memberFields.map(f =>
         new Field(f.getName, new FieldType(true, f.getType, f.getDictionary),
           f.getChildren)).asJava)
     val out = structField.createVector(alloc).asInstanceOf[StructVector]
     out.allocateNew()
-    val srcOfOrdinal: Map[Int, org.apache.arrow.vector.ValueVector] =
-      ordinalOfTypeId.map { case (tid, ord) => ord -> vectorOfTypeId(tid) }
+    // member vectors are in declared order
+    val srcOfOrdinal = src.getChildrenFromFields.asScala.toIndexedSeq
     val outChildren = memberFields.indices.map(out.getChildByOrdinal)
     val n = src.getValueCount
     var i = 0

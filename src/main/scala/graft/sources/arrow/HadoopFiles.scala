@@ -100,17 +100,23 @@ object HadoopFiles {
     * replacing every data file the directory held before, through the
     * staged protocol ([[StagedWrite]]): `writePart(path, rows, conf)`
     * writes one partition on the executors and returns its row count.
-    * Returns the total row count.
+    * Returns the total row count. A failed job deletes its own staged
+    * parts ([[StagedWrite.abort]]) before the error propagates.
     */
   def writeStaged(df: DataFrame, dir: String, ext: String)(
       writePart: (String, Iterator[InternalRow], Configuration) => Long): Long = {
     val job = StagedWrite.begin(dir, df.sparkSession.sparkContext.hadoopConfiguration,
       replace = true)
-    val counts = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val tid = TaskContext.get().taskAttemptId()
-      Iterator.single(stageTask(job.stagedPath(pid, tid, ext), job.conf)(
-        writePart(_, rows, job.conf)))
-    }.collect()
+    val counts = try {
+      df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+        val tid = TaskContext.get().taskAttemptId()
+        Iterator.single(stageTask(job.stagedPath(pid, tid, ext), job.conf)(
+          writePart(_, rows, job.conf)))
+      }.collect()
+    } catch { case t: Throwable =>
+      try job.abort() catch { case e: Throwable => t.addSuppressed(e) }
+      throw t
+    }
     job.commit(pid => f"part-$pid%05d.$ext")
     counts.sum
   }
@@ -122,17 +128,18 @@ object HadoopFiles {
     * attempt per partition, renames it to its final part name
     * (replacing any old part), drops losing speculative attempts and
     * in-progress litter, and deletes `stale` files not re-produced by
-    * this job. A job that fails before commit
-    * leaves the previous dataset fully intact (plus invisible tmp
-    * litter); a write whose input reads from this same directory
+    * this job. A job that fails before commit leaves the previous
+    * dataset fully intact, and [[StagedWrite.abort]] deletes its
+    * parts; a write whose input reads from this same directory
     * consumes the old parts for the whole job, since nothing is
     * renamed until every task has finished.
     *
     * Litter hygiene: a zombie attempt of THIS job can still recreate
-    * its ".w" file and rename it to ".tmp" after this commit returns
-    * (single-writer dirs assumed — Spark jobs don't race commits on
-    * one dataset). That abandoned litter stays invisible to readers
-    * (dot-prefixed) and the NEXT commit on this directory sweeps it:
+    * its ".w" file and rename it to ".tmp" after this commit (or
+    * abort) returns (single-writer dirs assumed — Spark jobs don't
+    * race commits on one dataset). That abandoned litter stays
+    * invisible to readers (dot-prefixed) and the NEXT commit on this
+    * directory sweeps it:
     * every ".job-*" file from a token other than the committing job's
     * is deleted below, so litter never outlives one more write.
     */
@@ -201,6 +208,12 @@ object HadoopFiles {
 
   def createChannel(path: String, conf: Configuration): WritableByteChannel =
     Channels.newChannel(fs(path, conf).create(new Path(path), true))
+
+  /** Copy the local file `local` to `path` on any filesystem. */
+  def copyFromLocal(local: java.io.File, path: String, conf: Configuration): Unit = {
+    val out = fs(path, conf).create(new Path(path), true)
+    try java.nio.file.Files.copy(local.toPath, out) finally out.close()
+  }
 }
 
 /** One dataset write under the staged protocol. [[StagedWrite.begin]]
@@ -222,6 +235,17 @@ final class StagedWrite private (dir: String, val token: String,
 
   def commit(dstName: Int => String): Unit =
     HadoopFiles.commitStagedWrite(dir, token, stale, dstName, conf)
+
+  /** Driver-side cleanup of a failed job: delete this job's staged and
+    * in-progress parts, and nothing else. The previous dataset stays
+    * as it was.
+    */
+  def abort(): Unit = {
+    val f = HadoopFiles.fs(dir, conf)
+    Option(f.listStatus(new Path(dir))).getOrElse(Array.empty)
+      .map(_.getPath).filter(_.getName.startsWith(s".job-$token-"))
+      .foreach(f.delete(_, false))
+  }
 }
 
 object StagedWrite {

@@ -10,7 +10,7 @@ import org.apache.arrow.vector.{FieldVector, IntVector, VarCharVector, VectorSch
 import org.apache.arrow.vector.complex.UnionVector
 import org.apache.arrow.vector.compression.CompressionUtil.CodecType
 import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryProvider}
-import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamWriter}
+import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamWriter, JsonFileWriter}
 import org.apache.arrow.vector.ipc.message.IpcOption
 import org.apache.arrow.vector.types.pojo.{ArrowType, DictionaryEncoding, Field, FieldType}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -34,27 +34,32 @@ private[sources] object IpcColumn {
   case object SparseUnion extends IpcColumn
 }
 
-/** The Arrow IPC record-batch writer: rows accumulate into one
+/** The Arrow record-batch writer: rows accumulate into one
   * VectorSchemaRoot and flush as a record batch every `batchRows`, so
   * the writer never holds more than one batch — the batching contract
   * of the reference's RecordBatchWriter (reference:
-  * cpp/src/arrow/ipc/writer.h:90). File and stream format share the
-  * loop; only the framing differs. Every IPC producer in graft (the
-  * `format("arrow")` sink, the dictionary and union dataset writers,
-  * Plasma objects) writes through this class.
+  * cpp/src/arrow/ipc/writer.h:90). The IPC file and stream formats and
+  * the JSON integration format (reference: cpp/src/arrow/ipc/json.h)
+  * share the loop; only the output differs. Every Arrow producer in
+  * graft (the `format("arrow")` sink, the dictionary and union dataset
+  * writers, Plasma objects, JSON integration documents) writes through
+  * this class.
   *
   * `layout` names the columns that are not written as their plain
-  * type. The writer owns `ch` and closes it with `finish` or
+  * type. The writer owns its output and closes it with `finish` or
   * `closeQuietly`.
   */
-private[sources] class IncrementalArrowWriter(
-    ch: WritableByteChannel, schema: StructType, stream: Boolean,
-    batchRows: Int = IncrementalArrowWriter.DefaultBatchRows,
-    compression: Option[String] = None,
-    layout: Map[String, IpcColumn] = Map.empty) {
-  // buffer-level compression (Message.fbs BodyCompression): readers
-  // pass CommonsCompressionFactory and decompress transparently
-  private val codec = compression.map(IncrementalArrowWriter.codec)
+private[sources] class IncrementalArrowWriter private (
+    target: IncrementalArrowWriter.Output, schema: StructType, batchRows: Int,
+    layout: Map[String, IpcColumn]) {
+
+  /** An IPC file (or, with `stream`, stream) writer on `ch`. */
+  def this(ch: WritableByteChannel, schema: StructType, stream: Boolean,
+           batchRows: Int = IncrementalArrowWriter.DefaultBatchRows,
+           compression: Option[String] = None,
+           layout: Map[String, IpcColumn] = Map.empty) =
+    this(IncrementalArrowWriter.Ipc(ch, stream, compression), schema, batchRows, layout)
+
   private val alloc: BufferAllocator = ArrowIo.rootAllocator()
   private val provider = new DictionaryProvider.MapDictionaryProvider()
   private val columns: Seq[(FieldVector, AFWriter)] = schema.fields.toSeq.zipWithIndex.map {
@@ -77,16 +82,31 @@ private[sources] class IncrementalArrowWriter(
   }
   private val root = new VectorSchemaRoot(columns.map(_._1).asJava)
   private val writers = columns.map(_._2).toArray
-  private val writer = codec match {
-    case None =>
-      if (stream) new ArrowStreamWriter(root, provider, ch)
-      else new ArrowFileWriter(root, provider, ch)
-    case Some(ct) =>
-      val f = CommonsCompressionFactory.INSTANCE
-      if (stream) new ArrowStreamWriter(root, provider, ch, IpcOption.DEFAULT, f, ct)
-      else new ArrowFileWriter(root, provider, ch, null, IpcOption.DEFAULT, f, ct)
+  // `writeBatch` emits the root as one record batch; closing `output`
+  // ends the document (IPC footer or end-of-stream marker, JSON
+  // closing brackets)
+  private val (writeBatch, output): (() => Unit, AutoCloseable) = target match {
+    case IncrementalArrowWriter.Ipc(ch, stream, compression) =>
+      // buffer-level compression (Message.fbs BodyCompression): readers
+      // pass CommonsCompressionFactory and decompress transparently
+      val w = compression.map(IncrementalArrowWriter.codec) match {
+        case None =>
+          if (stream) new ArrowStreamWriter(root, provider, ch)
+          else new ArrowFileWriter(root, provider, ch)
+        case Some(ct) =>
+          val f = CommonsCompressionFactory.INSTANCE
+          if (stream) new ArrowStreamWriter(root, provider, ch, IpcOption.DEFAULT, f, ct)
+          else new ArrowFileWriter(root, provider, ch, null, IpcOption.DEFAULT, f, ct)
+      }
+      w.start()
+      (() => w.writeBatch(), w)
+    case IncrementalArrowWriter.Json(file) =>
+      // the dictionaries section precedes the batches, so every
+      // vocabulary is complete before the first row
+      val w = new JsonFileWriter(file, JsonFileWriter.config().pretty(false))
+      w.start(root.getSchema, provider)
+      (() => w.write(root), w)
   }
-  writer.start()
 
   private var inBatch = 0
   private var total = 0L
@@ -131,25 +151,24 @@ private[sources] class IncrementalArrowWriter(
   private def flush(): Unit = if (inBatch > 0) {
     writers.foreach(_.finish())
     root.setRowCount(inBatch)
-    writer.writeBatch()
+    writeBatch()
     total += inBatch
     writers.foreach(_.reset())
     inBatch = 0
   }
 
-  /** Flush the last batch, write the footer or end-of-stream marker,
-    * release everything; returns the rows written.
+  /** Flush the last batch, end the document, release everything;
+    * returns the rows written.
     */
   def finish(): Long = {
     flush()
-    writer.end()
     closeQuietly()
     total
   }
 
   def closeQuietly(): Unit = if (!closed) {
     closed = true
-    try writer.close() finally {
+    try output.close() finally {
       try root.close() finally {
         try provider.getDictionaryIds.asScala.foreach(id => provider.lookup(id).getVector.close())
         finally alloc.close()
@@ -160,6 +179,18 @@ private[sources] class IncrementalArrowWriter(
 
 private[sources] object IncrementalArrowWriter {
   val DefaultBatchRows: Int = 4096 * 4
+
+  private sealed trait Output
+  private final case class Ipc(ch: WritableByteChannel, stream: Boolean,
+                               compression: Option[String]) extends Output
+  private final case class Json(file: java.io.File) extends Output
+
+  /** A JSON integration document writer on the local `file`
+    * (Arrow Java's JsonFileWriter writes only local files).
+    */
+  def json(file: java.io.File, schema: StructType, batchRows: Int,
+           layout: Map[String, IpcColumn]): IncrementalArrowWriter =
+    new IncrementalArrowWriter(Json(file), schema, batchRows, layout)
 
   /** The buffer codec an `ipc.compression` value names. */
   def codec(name: String): CodecType = name.toLowerCase(java.util.Locale.ROOT) match {

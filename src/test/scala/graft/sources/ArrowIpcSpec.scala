@@ -304,6 +304,20 @@ class ArrowIpcSpec extends SparkSpec {
     assert(e.getMessage.contains("seg"), e.getMessage)
   }
 
+  test("ArrowDictWriter: a non-string dictionary column fails before any job runs") {
+    import graft.sources.arrow.ArrowDictWriter
+    // evaluating any row would throw, so only a driver-side check can
+    // produce the message
+    val boom = udf((id: Long) => { if (id >= 0) throw new IllegalStateException("boom"); id })
+    val df = spark.range(5).select(boom($"id").as("id"), lit("x").as("seg"))
+    val dir = tmpDir("dictnonstring")
+    val e = intercept[IllegalArgumentException] {
+      ArrowDictWriter.write(df, s"$dir/out", Seq("seg", "id"))
+    }
+    assert(e.getMessage.contains("must be string"), e.getMessage)
+    assert(!Files.exists(Paths.get(dir, "out")))
+  }
+
   test("ArrowDictWriter: multi-batch files reuse the single dictionary") {
     import graft.sources.arrow.ArrowDictWriter
     val df = spark.range(0, 1000)
@@ -372,6 +386,7 @@ class ArrowIpcSpec extends SparkSpec {
     }
     assert(keyed(dir) == before)
     assert(listing(dir).filterNot(_.startsWith(".")) == files)
+    assert(!listing(dir).exists(_.startsWith(".job-")), listing(dir))
   }
 
   test("sink: appends with the same partition count keep every row") {
@@ -402,5 +417,43 @@ class ArrowIpcSpec extends SparkSpec {
 
   test("sink: an unknown ipc.compression fails before any file is touched") {
     assertRejectedUntouched("ipc.compression", "gzip")
+  }
+
+  test("external sparse unions with non-ordinal type ids widen to structs") {
+    import org.apache.arrow.vector.{IntVector, VarCharVector, VectorSchemaRoot}
+    import org.apache.arrow.vector.complex.UnionVector
+    import org.apache.arrow.vector.ipc.ArrowFileWriter
+    import org.apache.arrow.vector.types.UnionMode
+    import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ASchema}
+    val union = new Field("u", FieldType.nullable(new ArrowType.Union(UnionMode.Sparse,
+      Array(5, 9))), Seq(
+        Field.nullable("i", new ArrowType.Int(32, true)),
+        Field.nullable("s", ArrowType.Utf8.INSTANCE)).asJava)
+    val dir = tmpDir("union59")
+    val alloc = graft.sources.arrow.ArrowIo.rootAllocator()
+    val root = VectorSchemaRoot.create(new ASchema(Seq(union).asJava), alloc)
+    try {
+      val uv = root.getVector(0).asInstanceOf[UnionVector]
+      val i = uv.getChildrenFromFields.get(0).asInstanceOf[IntVector]
+      val s = uv.getChildrenFromFields.get(1).asInstanceOf[VarCharVector]
+      uv.allocateNew()
+      i.setSafe(0, 70); s.setSafe(1, "mid".getBytes("UTF-8")); i.setSafe(2, 90)
+      i.setNull(1); s.setNull(0); s.setNull(2)
+      i.setValueCount(3); s.setValueCount(3)
+      // the type buffer holds the declared ids, not MinorType ordinals
+      Seq(5, 9, 5).zipWithIndex.foreach { case (t, row) =>
+        uv.getTypeBuffer.setByte(row.toLong, t) }
+      uv.setValueCount(3)
+      root.setRowCount(3)
+      val w = new ArrowFileWriter(root, null,
+        HadoopFiles.createChannel(s"$dir/part-0.arrow", HadoopFiles.local))
+      try { w.start(); w.writeBatch(); w.end() } finally w.close()
+    } finally { root.close(); alloc.close() }
+    val df = spark.read.format("arrow").load(dir)
+    val st = df.schema("u").dataType.asInstanceOf[StructType]
+    assert(st.fields.map(_.name).toSeq == Seq("i", "s"))
+    val got = df.collect().toSeq.map(_.getStruct(0))
+      .map(r => (Option(r.get(0)), Option(r.get(1))))
+    assert(got == Seq((Some(70), None), (None, Some("mid")), (Some(90), None)))
   }
 }

@@ -6,9 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every Arrow IPC byte is written by IncrementalArrowWriter and every
-  * dataset write commits through StagedWrite, so copied batch loops
-  * and second commit protocols cannot come back.
+/** Every Arrow IPC and JSON integration byte is written by
+  * IncrementalArrowWriter, JSON integration documents are read by
+  * Arrow Java's JsonFileReader, and every dataset write commits
+  * through StagedWrite, so copied batch loops, hand-written codecs and
+  * second commit protocols cannot come back.
   */
 class IoWriteGuardSpec extends AnyFunSuite {
 
@@ -33,5 +35,15 @@ class IoWriteGuardSpec extends AnyFunSuite {
       """(?<!def )\bcommitStagedWrite\s*\(""".r.findAllIn(s).map(_ => p.getFileName.toString)
     }
     assert(calls == Seq("HadoopFiles.scala"), s"call sites: $calls")
+  }
+
+  test("Arrow Java's JSON codec is the only JSON integration codec") {
+    assert(filesMatching("""new\s+JsonFileWriter\s*\(""") == Set("IncrementalArrowWriter.scala"))
+    assert(filesMatching("""new\s+JsonFileReader\s*\(""").size == 1)
+    val generators = sources.collect {
+      case (p, s) if p.toString.contains("graft/sources/") && s.contains("createGenerator(") =>
+        p.getFileName.toString
+    }
+    assert(generators.isEmpty, s"hand-written JSON generators: $generators")
   }
 }

@@ -156,12 +156,14 @@ class ArrowJsonSpec extends SparkSpec {
     val a = df.collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet
     val b = back.collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet
     assert(a == b)
-    // multi-batch vocab accumulation: tiny batches, same answer
+    // multi-batch: tiny batches share one vocabulary, same answer
     val multiDir = TempDirs.tempDir("graft-ajson-wdict2")
     val n = graft.sources.json.ArrowJsonIntegration.writeFile(
       s"$multiDir/part-0.arrow.json", schema,
       df.queryExecution.toRdd.collect().iterator.map(_.copy()),
-      batchRows = 64, categories = Set("cat"))
+      graft.sources.CategoryColumns.dictionaries(df, Seq("cat"), "json integration",
+        graft.sources.arrow.ArrowDictWriter.DefaultMaxVocab),
+      batchRows = 64)
     assert(n == 500L)
     val back2 = spark.read.format("arrow").load(multiDir)
     assert(back2.collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet == a)
@@ -308,5 +310,106 @@ class ArrowJsonSpec extends SparkSpec {
     val got = df.collect().toSeq.map(_.getStruct(0))
       .map(r => (Option(r.get(0)), Option(r.get(1))))
     assert(got == Seq((Some(70), None), (None, Some("mid")), (Some(90), None)))
+  }
+
+  private def doubles(r: Row): (Long, Option[Long]) =
+    (r.getLong(0), if (r.isNullAt(1)) None
+      else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
+
+  test("NaN, infinities, -0.0 and NULL doubles round-trip bit for bit") {
+    val values = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0, 0.0)
+    val schema = StructType(Seq(StructField("id", LongType), StructField("d", DoubleType)))
+    val rows = values.zipWithIndex.map { case (v, i) => Row(i.toLong, v) } :+ Row(5L, null)
+    val df = spark.createDataFrame(rows.asJava, schema).coalesce(1)
+    val dir = TempDirs.tempDir("graft-ajson-nonfinite")
+    ArrowJsonIntegration.write(df, dir)
+    val back = spark.read.format("arrow").load(dir)
+    assert(back.collect().map(doubles).toSet == df.collect().map(doubles).toSet)
+    assert(back.where(col("id") === 3).head().getDouble(1).compare(-0.0) == 0)
+    // Arrow Java's own spelling: bare non-finite tokens
+    val doc =
+      """{"schema": {"fields": [
+        |  {"name": "id", "nullable": true,
+        |   "type": {"name": "int", "bitWidth": 64, "isSigned": true}, "children": []},
+        |  {"name": "d", "nullable": true,
+        |   "type": {"name": "floatingpoint", "precision": "DOUBLE"}, "children": []}]},
+        | "batches": [
+        |  {"count": 6, "columns": [
+        |    {"name": "id", "count": 6, "VALIDITY": [1, 1, 1, 1, 1, 1],
+        |     "DATA": [0, 1, 2, 3, 4, 5]},
+        |    {"name": "d", "count": 6, "VALIDITY": [1, 1, 1, 1, 1, 0],
+        |     "DATA": [NaN, Infinity, -Infinity, -0.0, 0.0, 0.0]}]}]}
+        |""".stripMargin
+    val bare = TempDirs.tempDir("graft-ajson-bare")
+    Files.write(Paths.get(bare, "part-0.arrow.json"), doc.getBytes("UTF-8"))
+    assert(spark.read.format("arrow").load(bare).collect().map(doubles).toSet ==
+      df.collect().map(doubles).toSet)
+  }
+
+  test("an all-NULL column keeps its null type through the roundtrip") {
+    val df = spark.range(3).select(col("id"), lit(null).as("nothing")).coalesce(1)
+    val dir = TempDirs.tempDir("graft-ajson-null")
+    ArrowJsonIntegration.write(df, dir)
+    val back = spark.read.format("arrow").load(dir)
+    assert(back.schema("nothing").dataType == NullType)
+    assert(back.collect().toSeq.map(r => (r.getLong(0), r.isNullAt(1))) ==
+      Seq((0L, true), (1L, true), (2L, true)))
+  }
+
+  test("documents in the shape of graft's earlier writer still read") {
+    // quoted non-finite floats, upper-case hex, a decimal without a
+    // bitWidth, and the dictionaries section after the batches
+    val doc =
+      """{"schema": {"fields": [
+        |  {"name": "id", "nullable": true,
+        |   "type": {"name": "int", "bitWidth": 64, "isSigned": true}, "children": []},
+        |  {"name": "d", "nullable": true,
+        |   "type": {"name": "floatingpoint", "precision": "DOUBLE"}, "children": []},
+        |  {"name": "bin", "nullable": true, "type": {"name": "binary"}, "children": []},
+        |  {"name": "dec", "nullable": true,
+        |   "type": {"name": "decimal", "precision": 12, "scale": 2}, "children": []},
+        |  {"name": "cat", "nullable": true, "type": {"name": "utf8"}, "children": [],
+        |   "dictionary": {"id": 0,
+        |     "indexType": {"name": "int", "bitWidth": 32, "isSigned": true},
+        |     "isOrdered": false}}]},
+        | "batches": [
+        |  {"count": 3, "columns": [
+        |    {"name": "id", "count": 3, "VALIDITY": [1, 1, 1], "DATA": [0, 1, 2]},
+        |    {"name": "d", "count": 3, "VALIDITY": [1, 1, 0],
+        |     "DATA": ["NaN", "-Infinity", 0.0]},
+        |    {"name": "bin", "count": 3, "VALIDITY": [1, 1, 0],
+        |     "OFFSET": [0, 2, 2, 2], "DATA": ["AB0F", "", ""]},
+        |    {"name": "dec", "count": 3, "VALIDITY": [1, 0, 1],
+        |     "DATA": ["1234567", "0", "-1"]},
+        |    {"name": "cat", "count": 3, "VALIDITY": [1, 1, 0], "DATA": [1, 0, 0]}]}],
+        | "dictionaries": [
+        |  {"id": 0, "data": {"count": 2, "columns": [
+        |    {"name": "cat", "count": 2, "VALIDITY": [1, 1],
+        |     "OFFSET": [0, 1, 2], "DATA": ["a", "b"]}]}}]}
+        |""".stripMargin
+    val dir = TempDirs.tempDir("graft-ajson-legacy")
+    Files.write(Paths.get(dir, "part-0.arrow.json"), doc.getBytes("UTF-8"))
+    val got = spark.read.format("arrow").load(dir).collect().toSeq.map(r =>
+      (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Double].toString),
+        Option(r.getAs[Array[Byte]](2)).map(_.toSeq),
+        Option(r.getDecimal(3)).map(_.toPlainString), Option(r.getString(4))))
+    assert(got == Seq(
+      (0L, Some("NaN"), Some(Seq(0xAB.toByte, 0x0F.toByte)), Some("12345.67"), Some("b")),
+      (1L, Some("-Infinity"), Some(Seq.empty[Byte]), None, Some("a")),
+      (2L, None, None, Some("-0.01"), None)))
+  }
+
+  test("a write whose job fails deletes its staged parts and keeps the old dataset") {
+    val dir = TempDirs.tempDir("graft-ajson-failed")
+    ArrowJsonIntegration.write(spark.range(20).repartition(4).toDF(), dir)
+    val boom = udf((id: Long) => { if (id == 7) throw new IllegalStateException("boom"); id })
+    intercept[Exception] {
+      ArrowJsonIntegration.write(spark.range(20).repartition(4).select(boom(col("id")).as("id")),
+        dir)
+    }
+    val names = new java.io.File(dir).list().toSeq
+    assert(!names.exists(_.startsWith(".job-")), names)
+    val back = spark.read.format("arrow").load(dir)
+    assert(back.count() == 20 && back.agg(sum("id")).head.getLong(0) == 190L)
   }
 }

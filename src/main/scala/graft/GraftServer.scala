@@ -77,8 +77,8 @@ class GraftServer(spark: SparkSession,
 
   private def fingerprint(dirs: Seq[String]): Seq[(Option[Long], Option[Long])] =
     dirs.map { d =>
-      (graft.operators.IndexVersions.current(spark, d),
-        graft.operators.IndexVersions.generation(spark, d))
+      (graft.operators.IndexStore.current(spark, d),
+        graft.operators.IndexStore.generation(spark, d))
     }
 
   private val buildFn: JFunction[(String, String), Served] = {

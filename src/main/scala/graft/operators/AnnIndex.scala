@@ -17,10 +17,11 @@ import org.apache.spark.sql.types._
   * partition-pruned ParquetDataset read,
   * python/pyarrow/parquet.py `ParquetDataset(filters=...)`).
   *
-  * On-disk layout under `dir` (r9: versioned publication, see
-  * [[IndexVersions]] — `CURRENT` names the live version V, rebuilds
-  * and compactions write V+1 and flip the pointer atomically):
+  * On-disk layout under `dir` (r9: versioned publication through
+  * [[IndexStore]] — `CURRENT` names the live version V, rebuilds and
+  * compactions write V+1 and flip the pointer atomically):
   *   CURRENT            — text file holding the published version
+  *   GEN                — the in-version generation counter (deletes)
   *   cells.vV/cent_id=N/ — parquet of (vec_id, codes: array<int>,
   *                      anrm: double, embedding: array<float>,
   *                      gen: long — the write generation, see deletes,
@@ -28,8 +29,9 @@ import org.apache.spark.sql.types._
   *   centroids.vV/    — parquet of (cent_id: long, cent: array<float>)
   *   codebooks.vV/    — parquet of (m: int, code: int, cent: array<double>)
   *   cellstats.vV/    — parquet of (cent_id: long, n: long) at build time
-  *   meta/            — parquet of (next_gen: long; monotone across
-  *                      versions, deliberately unversioned)
+  *   meta/            — parquet of (next_gen: long), written only by
+  *                      indexes built before GEN was the one counter;
+  *                      read as a generation floor
   *   tombstones.vV/   — parquet of (vec_id, gen: long); present only
   *                      between a delete/upsert and the next compaction
   * The bounded artifacts are versioned WITH the cells (r9): open()
@@ -37,7 +39,7 @@ import org.apache.spark.sql.types._
   * crashes between its artifact writes and the CURRENT flip can never
   * leave old cells served with new centroids/codebooks. (pre-r9
   * indexes with unversioned `cells/` resolve as version 0 and keep
-  * opening, artifacts falling back to the unversioned dirs.)
+  * opening from the unversioned dirs.)
   *
   * `codes`/`anrm` serve the ADC scan (each scanned row is m ints, not
   * dim floats); `embedding` serves exact re-rank and exact-within-cell
@@ -54,7 +56,7 @@ object AnnIndex {
     * (k·dim floats), so probe selection never scans the corpus.
     *
     * `cellsDir`/`tombDir` are PINNED at open/build through the CURRENT
-    * pointer (r9, [[IndexVersions]]): this index object serves its
+    * pointer (r9, [[IndexStore]]): this index object serves its
     * version snapshot consistently even while a compaction publishes a
     * newer one — re-open (or use compactCells' return) to move
     * forward.
@@ -71,8 +73,8 @@ object AnnIndex {
     def cells: DataFrame = spark.read.parquet(cellsDir)
   }
 
-  private def tombDirFor(dir: String, v: Long): String =
-    if (v == 0L) s"$dir/tombstones" else s"$dir/tombstones.v$v"
+  private val store =
+    IndexStore(Seq("cells", "tombstones", "centroids", "codebooks", "cellstats"))
 
   /** Assign + PQ-encode a corpus slice against fixed index artifacts.
     * Map-only: NearestCentroid + PqEncode + the squared-norm LUT, no
@@ -93,32 +95,17 @@ object AnnIndex {
   private def metaColsOf(index: IvfPqIndex): Seq[String] =
     index.cells.columns.toSeq.filterNot(coreCols)
 
-  /** Resolve a bounded artifact ("centroids", "codebooks",
-    * "cellstats") for version `v`: the versioned directory when it
-    * exists (r9 builds/compactions write them per version, so a
-    * crashed rebuild can never mix new centroids with old cells), the
-    * legacy unversioned one otherwise.
-    */
-  private def artifactDir(spark: SparkSession, dir: String, base: String,
-                          v: Long): String = {
-    import org.apache.hadoop.fs.Path
-    val versioned = s"$dir/$base.v$v"
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    if (v > 0L && fs.exists(new Path(versioned))) versioned
-    else s"$dir/$base"
-  }
-
   private def writeArtifacts(spark: SparkSession, dir: String, v: Long,
                              cents: DataFrame,
                              books: Seq[Seq[Seq[Double]]]): Unit = {
     import spark.implicits._
     cents.select(col("cent_id").cast(LongType), col("cent"))
-      .write.mode("overwrite").parquet(s"$dir/centroids.v$v")
+      .write.mode("overwrite").parquet(store.path(dir, "centroids", v))
     books.zipWithIndex
       .flatMap { case (sub, mi) =>
         sub.zipWithIndex.map { case (c, ci) => (mi, ci, c) } }
       .toDF("m", "code", "cent")
-      .write.mode("overwrite").parquet(s"$dir/codebooks.v$v")
+      .write.mode("overwrite").parquet(store.path(dir, "codebooks", v))
   }
 
   /** Build and persist the index: train both halves (or reuse
@@ -173,8 +160,8 @@ object AnnIndex {
     // artifacts are versioned too: a crash between the artifact writes
     // and the flip must not leave old cells served with NEW centroids
     // or codebooks (wrong probes, wrong ADC decode).
-    val v = IndexVersions.current(spark, dir).getOrElse(0L) + 1L
-    val cellsDir = s"$dir/cells.v$v"
+    val v = store.allocate(spark, dir)
+    val cellsDir = store.path(dir, "cells", v)
     cellPartitioned(if (storeEmbeddings) enc else enc.drop("embedding"),
       nCells, filesPerCell)
       .write.mode("overwrite").partitionBy("cent_id").parquet(cellsDir)
@@ -184,10 +171,11 @@ object AnnIndex {
     // a distributed metadata-only pass over O(files) (the D14
     // surface), not the r7 second scan of the encoded corpus
     cellStatsFromFooters(spark, cellsDir)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/cellstats.v$v")
-    writeNextGen(spark, dir, 1L)
-    IndexVersions.publish(spark, dir, v)
-    IvfPqIndex(spark, dir, cents, books, cellsDir, tombDirFor(dir, v), v)
+      .coalesce(1).write.mode("overwrite")
+      .parquet(store.path(dir, "cellstats", v))
+    IndexStore.publish(spark, dir, v)
+    IvfPqIndex(spark, dir, cents, books, cellsDir,
+      store.path(dir, "tombstones", v), v)
   }
 
   // ------------------------------------------------------ G13: deletes
@@ -201,33 +189,27 @@ object AnnIndex {
   // names its id, so an upsert's re-encoded row (written at the
   // tombstone's own generation) survives while every older version
   // dies. compactCells() makes deletes physical and clears the set.
-  // Generations come from a tiny meta/ file bumped once per
-  // maintenance batch; like compaction, maintenance is single-writer
-  // by contract (searches are unaffected readers). The tombstone set
-  // grows only until the next compaction — the broadcast stays
-  // bounded by the same maintenance cadence that bounds small files.
+  // Generations are the store's GEN counter, bumped once per
+  // maintenance batch and never reset (so watching servers rebuild on
+  // every in-version mutation, r12); like compaction, maintenance is
+  // single-writer by contract (searches are unaffected readers). The
+  // tombstone set grows only until the next compaction — the broadcast
+  // stays bounded by the same maintenance cadence that bounds small
+  // files.
 
-  private def nextGen(spark: SparkSession, dir: String): Long =
-    scala.util.Try(spark.read.parquet(s"$dir/meta")
-      .head().getLong(0)).getOrElse(1L)
-
-  private def writeNextGen(spark: SparkSession, dir: String, g: Long): Unit = {
-    import spark.implicits._
-    Seq(g).toDF("next_gen").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    // every caller just mutated the live version WITHOUT flipping
-    // CURRENT (delete/upsert/append; the initial build's bump is
-    // harmless — its publish follows) — advance the watcher-visible
-    // mutation counter so GraftServer.watchIndexes rebuilds (r12)
-    IndexVersions.bumpGeneration(spark, dir)
+  /** Run an in-version mutation at the next generation. Indexes built
+    * before GEN was the one counter kept theirs in meta/next_gen (the
+    * next unused generation), so a new generation must also exceed
+    * next_gen − 1.
+    */
+  private def mutate(index: IvfPqIndex)(write: Long => Unit): Unit = {
+    val floor = IndexStore.readIfExists(index.spark, s"${index.dir}/meta")
+      .fold(0L)(_.head().getLong(0) - 1L)
+    IndexStore.bump(index.spark, index.dir, floor)(write)
   }
 
-  private def tombstones(index: IvfPqIndex): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(index.tombDir)
-    val fs = p.getFileSystem(index.spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(index.spark.read.parquet(p.toString)) else None
-  }
+  private def tombstones(index: IvfPqIndex): Option[DataFrame] =
+    IndexStore.readIfExists(index.spark, index.tombDir)
 
   /** Filtered serving (G9 over the persisted index, r9): restrict a
     * search to an `allowed` (vec_id) relation — "top-k within
@@ -268,14 +250,12 @@ object AnnIndex {
     * version of those vectors disappears from all searches at once.
     * O(|ids|) writes, zero corpus IO.
     */
-  def delete(index: IvfPqIndex, ids: DataFrame): Unit = {
-    val spark = index.spark
-    val g = nextGen(spark, index.dir)
-    ids.select(col("vec_id"), lit(g).as("gen"))
-      .coalesce(1)
-      .write.mode("append").parquet(index.tombDir)
-    writeNextGen(spark, index.dir, g + 1)
-  }
+  def delete(index: IvfPqIndex, ids: DataFrame): Unit =
+    mutate(index) { g =>
+      ids.select(col("vec_id"), lit(g).as("gen"))
+        .coalesce(1)
+        .write.mode("append").parquet(index.tombDir)
+    }
 
   /** Replace-or-insert: tombstones the ids at generation g and appends
     * their re-encoded rows AT g — strictly-later tombstones kill every
@@ -283,18 +263,21 @@ object AnnIndex {
     * exactly the new vectors. One encode pass + one bounded tombstone
     * write.
     */
-  def upsert(index: IvfPqIndex, rows: DataFrame): Unit = {
-    val spark = index.spark
-    val g = nextGen(spark, index.dir)
-    rows.select(col("vec_id"), lit(g).as("gen"))
-      .coalesce(1)
-      .write.mode("append").parquet(index.tombDir)
+  def upsert(index: IvfPqIndex, rows: DataFrame): Unit =
+    mutate(index) { g =>
+      rows.select(col("vec_id"), lit(g).as("gen"))
+        .coalesce(1)
+        .write.mode("append").parquet(index.tombDir)
+      appendCells(index, rows, g)
+    }
+
+  /** Encode `rows` at generation `g` and append them to the live cells. */
+  private def appendCells(index: IvfPqIndex, rows: DataFrame, g: Long): Unit = {
     val enc = encode(rows, index.centroids, index.codebooks, gen = g,
       keep = metaColsOf(index))
     (if (hasEmbeddings(index)) enc else enc.drop("embedding"))
       .repartition(col("cent_id"))
       .write.mode("append").partitionBy("cent_id").parquet(index.cellsDir)
-    writeNextGen(spark, index.dir, g + 1)
   }
 
   /** One writer task per (cell, salt): filesPerCell files per cell
@@ -358,17 +341,19 @@ object AnnIndex {
     * its tombstones stay on disk for pinned readers until [[vacuum]].
     * Returns the index pinned at the NEW version (the passed index
     * keeps serving the old one). Writer-side, maintenance remains
-    * single-writer by contract.
+    * single-writer by contract; `index` must be pinned to the live
+    * version (a superseded handle throws instead of republishing over
+    * the live version's mutations).
     */
   def compactCells(index: IvfPqIndex, filesPerCell: Int = 1): IvfPqIndex = {
-    import org.apache.hadoop.fs.Path
     require(filesPerCell >= 1, s"filesPerCell must be >= 1: $filesPerCell")
     val spark = index.spark
     val dir = index.dir
-    val newV = index.version + 1L
-    val dst = s"$dir/cells.v$newV"
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new Path(dst), true) // crashed-attempt residue
+    // compacting a superseded snapshot would drop the live version's
+    // mutations; the allocator clears a crashed attempt's residue
+    store.requireLive(spark, dir, index.version, "compactCells")
+    val newV = store.allocate(spark, dir)
+    val dst = store.path(dir, "cells", newV)
     val nCells = index.centroids.count().toInt
     cellPartitioned(alive(index, index.cells), nCells, filesPerCell)
       .write.mode("overwrite").partitionBy("cent_id").parquet(dst)
@@ -377,20 +362,20 @@ object AnnIndex {
     // self-contained and vacuum can reclaim old ones wholesale
     writeArtifacts(spark, dir, newV, index.centroids, index.codebooks)
     cellStatsFromFooters(spark, dst)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/cellstats.v$newV")
-    IndexVersions.publish(spark, dir, newV)
-    index.copy(cellsDir = dst, tombDir = tombDirFor(dir, newV),
+      .coalesce(1).write.mode("overwrite")
+      .parquet(store.path(dir, "cellstats", newV))
+    IndexStore.publish(spark, dir, newV)
+    index.copy(cellsDir = dst, tombDir = store.path(dir, "tombstones", newV),
       version = newV)
   }
 
   /** Reclaim superseded versions (old versioned cells/tombstone/
     * artifact dirs and the legacy unversioned ones) in a maintenance
     * window — readers pinned to older versions lose their files,
-    * exactly like vacuuming any MVCC store.
+    * exactly like vacuuming any MVCC store. The live version is the one
+    * CURRENT names, whichever version `index` is pinned to.
     */
-  def vacuum(index: IvfPqIndex): Unit =
-    IndexVersions.vacuum(index.spark, index.dir, index.version,
-      Seq("cells", "tombstones", "centroids", "codebooks", "cellstats"))
+  def vacuum(index: IvfPqIndex): Unit = store.vacuum(index.spark, index.dir)
 
   /** Open a persisted index. Loads only the bounded artifacts
     * (centroids pinned as a local relation, codebooks to the driver);
@@ -400,18 +385,19 @@ object AnnIndex {
     import spark.implicits._
     // resolve the published version ONCE and pin it: this object keeps
     // serving its snapshot even if a compaction publishes a newer one.
-    // Artifacts load from the SAME version (unversioned legacy
-    // fallback), so a concurrent rebuild's fresh centroids/codebooks
-    // can never pair with this snapshot's cells.
-    val (cellsDir, v) = IndexVersions.resolve(spark, dir, "cells")
-    val cents = spark.read.parquet(artifactDir(spark, dir, "centroids", v))
+    // Artifacts load from the SAME version, so a concurrent rebuild's
+    // fresh centroids/codebooks can never pair with this snapshot's
+    // cells.
+    val v = store.live(spark, dir)
+    val cents = spark.read.parquet(store.path(dir, "centroids", v))
       .as[(Long, Array[Float])].collect().toSeq
       .sortBy(_._1).toDF("cent_id", "cent")
-    val books = spark.read.parquet(artifactDir(spark, dir, "codebooks", v))
+    val books = spark.read.parquet(store.path(dir, "codebooks", v))
       .as[(Int, Int, Array[Double])].collect()
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3.toSeq).toSeq)
-    IvfPqIndex(spark, dir, cents, books, cellsDir, tombDirFor(dir, v), v)
+    IvfPqIndex(spark, dir, cents, books, store.path(dir, "cells", v),
+      store.path(dir, "tombstones", v), v)
   }
 
   /** The probed slice of the on-disk corpus: the distinct probe cell
@@ -501,18 +487,10 @@ object AnnIndex {
     * every previously-encoded row); [[assignmentDrift]] is the signal
     * for when a full re-train/re-write is due.
     */
-  def append(index: IvfPqIndex, rows: DataFrame): Unit = {
-    val spark = index.spark
+  def append(index: IvfPqIndex, rows: DataFrame): Unit =
     // appended rows take a fresh generation so an id deleted earlier
     // and re-added here is alive (its row gen outranks the tombstone)
-    val g = nextGen(spark, index.dir)
-    val enc = encode(rows, index.centroids, index.codebooks, gen = g,
-      keep = metaColsOf(index))
-    (if (hasEmbeddings(index)) enc else enc.drop("embedding"))
-      .repartition(col("cent_id"))
-      .write.mode("append").partitionBy("cent_id").parquet(index.cellsDir)
-    writeNextGen(spark, index.dir, g + 1)
-  }
+    mutate(index)(appendCells(index, rows, _))
 
   /** Continuous ingestion: every micro-batch runs the same bounded
     * append (assign + encode + partitioned write). foreachBatch is the
@@ -551,7 +529,7 @@ object AnnIndex {
     require(hasEmbeddings(index),
       "retrain needs stored embeddings; a codes-only index must " +
         "rebuild from the source corpus via write()")
-    val spark = index.spark
+    store.requireLive(index.spark, index.dir, index.version, "retrain")
     val meta = metaColsOf(index)
     val corpus = alive(index, index.cells)
       .select((Seq("vec_id", "embedding") ++ meta).map(col): _*)
@@ -579,7 +557,7 @@ object AnnIndex {
       .map(r => r.getAs[Number](0).longValue() -> r.getAs[Number](1).longValue())
       .toMap
     val base = hist(index.spark.read.parquet(
-      artifactDir(index.spark, index.dir, "cellstats", index.version)))
+      store.path(index.dir, "cellstats", index.version)))
     val batch = hist(Similarity.assignToCentroids(rows, index.centroids)
       .groupBy("cent_id").agg(count(lit(1)).as("n")))
     val keys = (base.keySet ++ batch.keySet).toSeq

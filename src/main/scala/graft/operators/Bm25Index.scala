@@ -50,7 +50,7 @@ object Bm25Index {
 
   /** An opened index: bounded scalars + the lazy bucketed postings.
     * `postingsDir` is pinned through the CURRENT pointer at open (r9,
-    * [[IndexVersions]]): a rebuild publishing a newer version never
+    * [[IndexStore]]): a rebuild publishing a newer version never
     * changes what this object serves.
     */
   final case class Index(spark: SparkSession, dir: String,
@@ -64,30 +64,25 @@ object Bm25Index {
       */
     def postings: DataFrame = {
       val base = spark.read.parquet(postingsDir)
-      val bdir = batchPostingsDir(this)
-      if (!exists(spark, bdir)) base
-      else base.unionByName(
-        visibleBatches(this, spark.read.parquet(bdir))
-          .select("term", "doc_id", "tf", "dl", "df", "term_bucket"))
+      IndexStore.readIfExists(spark, batchPostingsDir(this)).fold(base)(b =>
+        base.unionByName(ledger.visible(b)
+          .select("term", "doc_id", "tf", "dl", "df", "term_bucket")))
     }
 
-    // Ledger cache (r15 ADVICE): ledgerEntries re-read the whole
-    // unversioned dir at the start of EVERY appendDocsBatch — O(files)
-    // opens per batch, O(N²) cumulative over a long-lived stream (the
-    // ~0.36 ms/file-open pathology DEDUP_SERVE_r14.json measured). The map
-    // is bounded (≤ a few rows per batch) so it caches on the handle;
-    // every ledger write through this handle invalidates. Same
-    // single-writer ownership contract as the DedupIndex listing cache.
-    // Reader side: a handle that never writes pins the done-horizon it
-    // first read (visibleBatches), so it serves the then-published
-    // snapshot — consistent, never torn — until re-opened; freshness
-    // across handles is the GEN-watcher re-open contract
-    // (GraftServer.watchIndexes), exactly as for file listings.
-    // `lazy` so a deserialized handle degrades to a re-read, not an NPE.
-    @transient private[Bm25Index] lazy val ledgerCache =
-      new java.util.concurrent.atomic.AtomicReference[
-        Map[Long, (Long, Boolean, Option[Long])]]()
+    // The batch ledger, its entries cached on this handle (same
+    // single-writer ownership contract as the DedupIndex listing
+    // cache). `lazy` so a deserialized handle degrades to a re-read,
+    // not an NPE.
+    @transient private[operators] lazy val ledger =
+      new IndexStore.Ledger(spark, dir)
   }
+
+  private val store = IndexStore(
+    Seq("postings", "meta", "doc_tombstones", "term_stats", "df_deltas",
+      "meta_deltas", "postings_batches", "df_delta_batches",
+      "meta_delta_batches"),
+    bornVersioned = Set("df_deltas", "meta_deltas", "postings_batches",
+      "df_delta_batches", "meta_delta_batches"))
 
   private def bucketOf(term: Column, nBuckets: Int): Column =
     pmod(hash(term), lit(nBuckets)).cast(LongType)
@@ -135,7 +130,7 @@ object Bm25Index {
     // flip removes: the new postings+meta land in fresh .v(N+1)
     // directories, readers stay on .vN, and the atomic flip below
     // publishes; a crashed rebuild leaves the old version live
-    val v = IndexVersions.current(spark, dir).getOrElse(0L) + 1L
+    val v = store.allocate(spark, dir)
     val relRaw = Bm25.tf(corpus, idCol, textCol, bag = None)
     val rel =
       if (persistRelation)
@@ -156,8 +151,8 @@ object Bm25Index {
         .withColumn("term_bucket", bucketOf(col("term"), nBuckets))
         .repartition(col("term_bucket"))
         .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(s"$dir/term_stats.v$v")
-      val stats = spark.read.parquet(s"$dir/term_stats.v$v")
+        .parquet(store.path(dir, "term_stats", v))
+      val stats = spark.read.parquet(store.path(dir, "term_stats", v))
         .select("term", "df")
       Bm25.postings(rel).join(stats, "term")
         .withColumn("term_bucket", bucketOf(col("term"), nBuckets))
@@ -165,31 +160,28 @@ object Bm25Index {
         .repartition(nBuckets * filesPerBucket, col("term_bucket"),
           pmod(hash(col("doc_id")), lit(filesPerBucket)))
         .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(s"$dir/postings.v$v")
+        .parquet(store.path(dir, "postings", v))
       Bm25.meta(rel)
         .withColumn("n_buckets", lit(nBuckets))
-        .write.mode("overwrite").parquet(s"$dir/meta.v$v")
+        .write.mode("overwrite").parquet(store.path(dir, "meta", v))
     } finally if (persistRelation) rel.unpersist()
-    IndexVersions.publish(spark, dir, v)
+    IndexStore.publish(spark, dir, v)
     open(spark, dir)
   }
 
   def open(spark: SparkSession, dir: String): Index = {
     // resolve the published version once and pin it (legacy
     // unversioned layouts resolve as version 0)
-    val (postingsDir, v) = IndexVersions.resolve(spark, dir, "postings")
-    val metaDir = if (v == 0L) s"$dir/meta" else s"$dir/meta.v$v"
-    val m = spark.read.parquet(metaDir).collect()(0)
+    val v = store.live(spark, dir)
+    val m = spark.read.parquet(store.path(dir, "meta", v)).collect()(0)
     Index(spark, dir, m.getAs[Int]("n_buckets"),
-      m.getAs[Long]("n_docs"), m.getAs[Long]("sum_dl"), postingsDir, v)
+      m.getAs[Long]("n_docs"), m.getAs[Long]("sum_dl"),
+      store.path(dir, "postings", v), v)
   }
 
-  /** Reclaim superseded versions in a maintenance window. */
-  def vacuum(index: Index): Unit =
-    IndexVersions.vacuum(index.spark, index.dir, index.version,
-      Seq("postings", "meta", "doc_tombstones", "df_deltas",
-        "meta_deltas", "postings_batches", "df_delta_batches",
-        "meta_delta_batches", "term_stats"))
+  /** Reclaim every version but the one CURRENT names (whichever version
+    * `index` is pinned to), in a maintenance window. */
+  def vacuum(index: Index): Unit = store.vacuum(index.spark, index.dir)
 
   // ---------------------------------------------- r9: exact appends
   //
@@ -206,216 +198,43 @@ object Bm25Index {
   // pays one fs.exists and keeps the row-local scoring plan.
 
   private def deltaDir(index: Index): String =
-    s"${index.dir}/df_deltas.v${index.version}"
+    store.path(index.dir, "df_deltas", index.version)
   private def metaDeltaDir(index: Index): String =
-    s"${index.dir}/meta_deltas.v${index.version}"
+    store.path(index.dir, "meta_deltas", index.version)
   // r13: the batch-keyed twins — [[appendDocsBatch]]'s landing zones,
   // partitioned by batch_id so a streaming replay REPLACES its crashed
   // attempt (dynamic overwrite) instead of appending beside it
   private def batchPostingsDir(index: Index): String =
-    s"${index.dir}/postings_batches.v${index.version}"
+    store.path(index.dir, "postings_batches", index.version)
   private def batchDeltaDir(index: Index): String =
-    s"${index.dir}/df_delta_batches.v${index.version}"
+    store.path(index.dir, "df_delta_batches", index.version)
   private def batchMetaDeltaDir(index: Index): String =
-    s"${index.dir}/meta_delta_batches.v${index.version}"
-
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  // r14: the batch ledger — the UNVERSIONED (batch_id, version, state)
-  // record of every appendDocsBatch, state ∈ {intent, done}, intent
-  // written BEFORE the data writes and done after all three commit.
-  // It closes the replay-across-republish hole (r13 ADVICE):
-  // appendDocsBatch resolves CURRENT at call time, so without a ledger
-  // a batch that crashed under version v and replays after a
-  // compactDeltas publish lands a SECOND copy in v+1's batch dirs
-  // while its crashed rows sit folded in the compacted base.
-  // With the ledger:
-  //  - a replay whose batch is DONE under an OLDER version SKIPS (its
-  //    rows are complete in the old version's lineage, which the
-  //    compacted base folded in);
-  //  - [[compactDeltas]] REFUSES to run while any of the current
-  //    version's batches is intent-without-done (folding a possibly
-  //    partial batch is the unrecoverable half of the race);
-  //  - a replay at the SAME version proceeds — dynamic partition
-  //    overwrite replaces the crashed attempt exactly as before;
-  //  - intent-without-done under an OLDER version throws: someone
-  //    republished (write()) underneath an uncommitted stream batch,
-  //    which no replay can reconcile — loud beats silently wrong.
-  // The ledger is bounded (≤ 2 tiny rows per batch) and read as a
-  // driver-side map; it survives compaction/vacuum by design.
-  //
-  // r15 (ADVICE): entries also carry `fp`, a content fingerprint of
-  // the batch (sum of per-doc xxhash64(id, text) — order-independent,
-  // deterministic over the checkpointed offsets a replay recomputes).
-  // The done-under-older-version skip VERIFIES the fingerprint: a true
-  // replay matches and skips (loudly, see [[appendDocsBatch]]); a
-  // FRESH batch reusing an old id after a checkpoint reset mismatches
-  // and throws, instead of being silently dropped from the index while
-  // the other ingest legs absorb it. Legacy ledgers without the column
-  // read fp = None (skip stays loud but unverified).
-  private def ledgerDir(dir: String): String = s"$dir/batch_ledger"
-
-  /** Order-independent content fingerprint of a batch (bounded: one
-    * scalar aggregate over the micro-batch). bit_xor, not sum — a
-    * hash sum overflows Long and ANSI mode turns that into a
-    * task-killing exception.
-    */
-  private def batchFingerprint(docs: DataFrame, idCol: String,
-                               textCol: String): Long =
-    docs.select(xxhash64(col(idCol), col(textCol)).as("h"))
-      .agg(coalesce(expr("bit_xor(h)"), lit(0L)))
-      .collect()(0).getLong(0)
-
-  private def ledgerAppend(index: Index, batchId: Long,
-                           state: String, fp: Long): Unit = {
-    val spark = index.spark
-    spark.range(1)
-      .select(lit(batchId).cast(LongType).as("batch_id"),
-        lit(index.version).cast(LongType).as("version"),
-        lit(state).as("state"),
-        lit(fp).cast(LongType).as("fp"))
-      .coalesce(1)
-      .write.mode("append").parquet(ledgerDir(index.dir))
-    index.ledgerCache.set(null)
-  }
-
-  /** (version, done?, done-row fingerprint) per recorded batch —
-    * bounded driver read, cached on the handle (r15 ADVICE: a
-    * long-lived stream must not pay O(ledger files) opens per batch).
-    */
-  private def ledgerEntries(
-      index: Index): Map[Long, (Long, Boolean, Option[Long])] = {
-    val pre = index.ledgerCache.get()
-    if (pre != null) return pre
-    val ld = ledgerDir(index.dir)
-    val m: Map[Long, (Long, Boolean, Option[Long])] =
-      if (!exists(index.spark, ld)) Map.empty
-      else {
-        val raw = index.spark.read.option("mergeSchema", "true").parquet(ld)
-        val withFp = // pre-r15 ledgers have no fp column
-          if (raw.columns.contains("fp")) raw
-          else raw.withColumn("fp", lit(null).cast(LongType))
-        withFp.groupBy("batch_id")
-          .agg(max("version").as("version"),
-            max(when(col("state") === "done", lit(1)).otherwise(lit(0)))
-              .as("done"),
-            max(when(col("state") === "done", col("fp"))).as("fp_done"))
-          .collect()
-          .map(r => r.getLong(0) -> ((r.getLong(1), r.getInt(2) == 1,
-            if (r.isNullAt(3)) None else Some(r.getLong(3)))))
-          .toMap
-      }
-    index.ledgerCache.compareAndSet(null, m)
-    m
-  }
-
-  /** Fold the append-only ledger into one row per batch (r15 ADVICE:
-    * two tiny files per batch, re-listed per append, is the measured
-    * ~0.36 ms/file-open pathology — O(N²) cumulative over a stream's
-    * life). The folded rows reproduce [[ledgerEntries]]'s aggregate
-    * EXACTLY (max version, done-any, done-row fingerprint), so every
-    * consumer is unchanged; crash-safe because the fold APPENDS the
-    * folded file first and deletes only the files it listed — a crash
-    * between the two leaves duplicates that the max/any aggregate
-    * absorbs. Runs inside [[compactDeltas]] (single-writer maintenance
-    * window, after the in-flight refusal) once the dir passes
-    * `minFiles`.
-    */
-  private[operators] def foldLedger(index: Index,
-                                    minFiles: Int = 16): Unit = {
-    val ld = ledgerDir(index.dir)
-    val spark = index.spark
-    if (!exists(spark, ld)) return
-    val p = new org.apache.hadoop.fs.Path(ld)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val old = fs.listStatus(p).filter(_.isFile).map(_.getPath)
-    if (old.length < minFiles) return
-    val entries = ledgerEntries(index)
-    val rows = entries.toSeq.map { case (b, (v, done, fp)) =>
-      (b, v, if (done) "done" else "intent", fp.map(Long.box).orNull)
-    }
-    import spark.implicits._
-    rows.toDF("batch_id", "version", "state", "fp")
-      .select(col("batch_id").cast(LongType), col("version").cast(LongType),
-        col("state"), col("fp").cast(LongType))
-      .coalesce(1)
-      .write.mode("append").parquet(ld)
-    old.foreach(f => fs.delete(f, false))
-    index.ledgerCache.set(null)
-  }
-
-  /** Publication horizon for the batch-keyed append legs (r15, the
-    * serve×mutation seam — VERDICT r14 item 7): batch partitions are
-    * readable ONLY once their ledger state is `done`. appendDocsBatch
-    * orders intent → data writes → done → GEN bump, so without the
-    * gate a plan built mid-append could list SOME of a batch's
-    * partitions (dynamic overwrite commits per-partition renames)
-    * before the batch's df/meta deltas exist — a torn state that is
-    * neither the pre- nor the post-append result. With the gate, the
-    * done-row commit IS the atomic publish: a concurrent reader's
-    * ledger snapshot either contains it (whole batch + its deltas
-    * visible — all landed before done) or not (batch fully invisible).
-    * Mechanics: keep `batch_id ≤ max(done)` (hides later batches whose
-    * intent the snapshot hasn't seen — ids are monotone under the
-    * foreachBatch contract) and drop known in-flight ids; both
-    * predicates hit the batch_id PARTITION column, so the gate prunes
-    * directories, never scans rows. Indexes with no ledger (legacy /
-    * never-batch-appended) read unfiltered, as before. Residual
-    * window, documented: the very first batch on a ledger-less index
-    * can race a reader that listed data files before the intent row
-    * (no horizon exists yet to hide it); [[appendDocs]] (the
-    * non-batch form) keeps its mode("append") torn-visibility
-    * contract — use appendDocsBatch under concurrent serving.
-    */
-  private def visibleBatches(index: Index, df: DataFrame): DataFrame = {
-    val e = ledgerEntries(index)
-    if (e.isEmpty) df
-    else {
-      val done = e.collect { case (b, (_, true, _)) => b }
-      val inflight = e.collect { case (b, (_, false, _)) => b }.toSeq
-      val cut =
-        if (done.isEmpty) lit(false) // ledger exists, nothing published
-        else col("batch_id") <= lit(done.max)
-      val pred =
-        if (inflight.isEmpty) cut
-        else cut && !col("batch_id").isin(inflight.map(Long.box): _*)
-      df.where(pred)
-    }
-  }
+    store.path(index.dir, "meta_delta_batches", index.version)
 
   /** The (term, df_delta, term_bucket) delta relation across both
     * append paths, or None when this version was never appended to.
-    * The batch leg is gated on the done horizon ([[visibleBatches]]).
+    * The batch leg is gated on the ledger's done horizon.
     */
-  private def dfDeltas(index: Index): Option[DataFrame] = {
-    val spark = index.spark
-    val legs = Seq(
-      Some(deltaDir(index)).filter(exists(spark, _))
-        .map(d => spark.read.parquet(d)),
-      Some(batchDeltaDir(index)).filter(exists(spark, _))
-        .map(d => visibleBatches(index, spark.read.parquet(d))))
-      .flatten.map(_.select("term", "df_delta", "term_bucket"))
-    legs.reduceOption(_ unionByName _)
-  }
+  private def dfDeltas(index: Index): Option[DataFrame] =
+    appended(index, deltaDir(index), batchDeltaDir(index),
+      "term", "df_delta", "term_bucket")
+
+  /** The union of an append relation's plain leg and its ledger-gated
+    * batch leg, or None when neither was ever written. */
+  private def appended(index: Index, plain: String, batched: String,
+                       cols: String*): Option[DataFrame] =
+    Seq(IndexStore.readIfExists(index.spark, plain),
+        IndexStore.readIfExists(index.spark, batched).map(index.ledger.visible(_)))
+      .flatten.map(_.select(cols.map(col): _*))
+      .reduceOption(_ unionByName _)
 
   /** The (n_docs, sum_dl) meta-delta relation across both append
     * paths, or None when this version was never appended to.
-    * The batch leg is gated on the done horizon ([[visibleBatches]]).
+    * The batch leg is gated on the ledger's done horizon.
     */
-  private def metaDeltas(index: Index): Option[DataFrame] = {
-    val spark = index.spark
-    val legs = Seq(
-      Some(metaDeltaDir(index)).filter(exists(spark, _))
-        .map(d => spark.read.parquet(d)),
-      Some(batchMetaDeltaDir(index)).filter(exists(spark, _))
-        .map(d => visibleBatches(index, spark.read.parquet(d))))
-      .flatten.map(_.select("n_docs", "sum_dl"))
-    legs.reduceOption(_ unionByName _)
-  }
+  private def metaDeltas(index: Index): Option[DataFrame] =
+    appended(index, metaDeltaDir(index), batchMetaDeltaDir(index),
+      "n_docs", "sum_dl")
 
   /** Corpus scalars for this version: base meta plus any accumulated
     * deltas — a bounded driver read (one row per append batch).
@@ -464,14 +283,10 @@ object Bm25Index {
     * compaction read both append paths through one unioned relation,
     * with bucket pruning pushed into each leg.
     *
-    * Versions (r14): replay idempotency is per index VERSION — the
-    * batch dirs are version-keyed, so a republish between a crashed
-    * batch and its replay would otherwise double-count. The batch
-    * ledger (see [[ledgerDir]]) makes the composition safe: a batch
-    * already DONE under an older version is skipped (its rows live in
-    * that version's lineage, folded forward by compaction), an
-    * in-flight batch blocks [[compactDeltas]], and an in-flight batch
-    * stranded under an older version throws.
+    * Versions (r14): the batch dirs are version-keyed, so the store's
+    * batch ledger (IndexStore.Ledger) brackets every batch: one done
+    * under an older version is skipped, an in-flight one blocks
+    * [[compactDeltas]], and one stranded under an older version throws.
     */
   def appendDocsBatch(index: Index, newDocs: DataFrame, idCol: String,
                       textCol: String, batchId: Long,
@@ -483,53 +298,11 @@ object Bm25Index {
     // batch reusing an old batchId (checkpoint reset, index reuse
     // across streams) throws instead of silently vanishing from this
     // index while the other ingest legs absorb it
-    val fpNew = batchFingerprint(newDocs, idCol, textCol)
-    ledgerEntries(index).get(batchId) match {
-      case Some((v, true, fpOld)) if v < index.version =>
-        // complete under an older version: the compacted/republished
-        // lineage already contains this batch exactly once — replaying
-        // it into the current version's batch dirs would double-count
-        if (fpOld.exists(_ != fpNew))
-          throw new IllegalStateException(
-            s"appendDocsBatch(batch_id=$batchId): ledger has this batch " +
-              s"done under older version $v with a DIFFERENT content " +
-              s"fingerprint (${fpOld.get} vs $fpNew). The batchId is " +
-              "being reused for new data (checkpoint reset / new stream " +
-              "on a republished index); skipping would silently drop " +
-              "it. Use fresh batchIds (or a fresh ledger) for a new " +
-              "stream.")
-        org.apache.logging.log4j.LogManager.getLogger(getClass)
-          .warn(s"Bm25Index.appendDocsBatch(batch_id=$batchId): skipped" +
-            s" — already done under older version $v (CURRENT " +
-            s"${index.version}); rows live in the compacted lineage." +
-            fpOld.fold(" (legacy ledger row: fingerprint unverified)")(
-              _ => " Content fingerprint verified equal."))
-        return
-      case Some((v, false, _)) if v < index.version =>
-        throw new IllegalStateException(
-          s"appendDocsBatch(batch_id=$batchId): batch is in-flight " +
-            s"(intent without done) under older index version $v, but " +
-            s"CURRENT is ${index.version}. A republish ran underneath " +
-            "an uncommitted stream batch; its partial rows cannot be " +
-            "reconciled by replay. Do not write()/compactDeltas() " +
-            "while the ingest stream has an uncommitted batch.")
-      case Some((_, true, fpOld)) if fpOld.contains(fpNew) =>
-        // SAME-version replay of a COMPLETED batch (the crash fell
-        // between the done record and the stream's checkpoint commit):
-        // the data is whole and identical — skip, so concurrent
-        // readers never catch its partitions mid-rewrite (r15, the
-        // serve×mutation seam). A same-version done batch with a
-        // DIFFERENT fingerprint falls through to the overwrite below —
-        // the deliberate-overwrite escape hatch, outside the
-        // deterministic-replay contract.
-        return
-      case _ => // new batch, or a same-version replay of a crashed
-        // (intent-without-done) attempt: proceed — dynamic partition
-        // overwrite replaces the crashed attempt's partitions, which
-        // the done-horizon gate keeps invisible to readers throughout
-    }
-    append(index, newDocs, idCol, textCol, filesPerBucket, Some(batchId),
-      fpNew)
+    val fp = IndexStore.fingerprint(newDocs, col(idCol), col(textCol))
+    if (index.ledger.admit("Bm25Index.appendDocsBatch", batchId,
+        index.version, fp))
+      append(index, newDocs, idCol, textCol, filesPerBucket, Some(batchId),
+        fp)
   }
 
   /** One append, from ONE read of `newDocs` into a persisted
@@ -565,26 +338,29 @@ object Bm25Index {
       // spark.read.parquet (schema inference has nothing to read).
       // Skipping all three writes keeps search == built-whole exactly.
       if (rel.isEmpty) return
-      batchId.foreach(ledgerAppend(index, _, "intent", fp))
-      land(Bm25.postings(rel).withColumn("df", lit(0L))
-          .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
-          .select("term", "doc_id", "tf", "dl", "df", "term_bucket")
-          .repartition(index.nBuckets * filesPerBucket, col("term_bucket"),
-            pmod(hash(col("doc_id")), lit(filesPerBucket))),
-        if (batched) batchPostingsDir(index) else index.postingsDir,
-        "term_bucket")
-      land(Bm25.df(rel).withColumnRenamed("df", "df_delta")
-          .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
-          .repartition(col("term_bucket")),
-        if (batched) batchDeltaDir(index) else deltaDir(index),
-        "term_bucket")
-      land(Bm25.meta(rel).coalesce(1),
-        if (batched) batchMetaDeltaDir(index) else metaDeltaDir(index))
-      batchId.foreach(ledgerAppend(index, _, "done", fp))
+      def writes(): Unit = {
+        land(Bm25.postings(rel).withColumn("df", lit(0L))
+            .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
+            .select("term", "doc_id", "tf", "dl", "df", "term_bucket")
+            .repartition(index.nBuckets * filesPerBucket, col("term_bucket"),
+              pmod(hash(col("doc_id")), lit(filesPerBucket))),
+          if (batched) batchPostingsDir(index) else index.postingsDir,
+          "term_bucket")
+        land(Bm25.df(rel).withColumnRenamed("df", "df_delta")
+            .withColumn("term_bucket", bucketOf(col("term"), index.nBuckets))
+            .repartition(col("term_bucket")),
+          if (batched) batchDeltaDir(index) else deltaDir(index),
+          "term_bucket")
+        land(Bm25.meta(rel).coalesce(1),
+          if (batched) batchMetaDeltaDir(index) else metaDeltaDir(index))
+      }
       // in-version mutation: advance the watcher counter (r12) so a
       // GraftServer.watchIndexes plan pinned to the pre-append file
       // listing rebuilds on its next request
-      IndexVersions.bumpGeneration(index.spark, index.dir)
+      IndexStore.bump(index.spark, index.dir) { _ =>
+        batchId.fold(writes())(
+          index.ledger.commit(_, index.version, fp)(writes()))
+      }
     } finally rel.unpersist()
   }
 
@@ -634,7 +410,7 @@ object Bm25Index {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("term_bucket")
-        .parquet(s"${index.dir}/term_stats.v$v")
+        .parquet(store.path(index.dir, "term_stats", v))
       aliveDocs(index, slice)
         .drop("df").join(statsG.select("term", "df"), "term")
         // recompute the bucket so its type stays canonical regardless
@@ -646,7 +422,7 @@ object Bm25Index {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("term_bucket")
-        .parquet(s"${index.dir}/postings.v$v")
+        .parquet(store.path(index.dir, "postings", v))
     } finally statsG.unpersist()
   }
 
@@ -662,7 +438,7 @@ object Bm25Index {
     * it take the row-local single-relation plan again. Search results
     * are IDENTICAL before and after compaction (spec-pinned), and open
     * readers pinned to the old version are undisturbed until
-    * [[vacuum]].
+    * [[vacuum]]. `index` must be pinned to the live version.
     *
     * `bucketsPerJob` (r15, VERDICT r14 item 2): 0 (default) folds all
     * postings in ONE job — whose transient shuffle footprint is the
@@ -687,19 +463,13 @@ object Bm25Index {
     // done in the ledger) — its partitions may be partial, and once
     // compacted into the base the replay can no longer replace them,
     // only double them. The one-sided race from the r13 ADVICE.
-    val inflight = ledgerEntries(index).collect {
-      case (b, (ver, false, _)) if ver == index.version => b
-    }
-    require(inflight.isEmpty,
-      s"compactDeltas: append batch(es) ${inflight.toSeq.sorted.mkString(",")} " +
-        s"are in-flight on version ${index.version}; compacting now would " +
-        "make their checkpoint replay double-count. Let the stream commit " +
-        "(or clean up the crashed batch) first.")
+    index.ledger.requireSettled("compactDeltas", index.version)
     // ledger hygiene (r15 ADVICE): fold the two-tiny-files-per-batch
     // history into one row per batch while we hold the single-writer
     // maintenance window — entries-map identical, O(N²) listing gone
-    foldLedger(index)
-    val v = IndexVersions.current(spark, index.dir).getOrElse(0L) + 1L
+    index.ledger.fold()
+    store.requireLive(spark, index.dir, index.version, "compactDeltas")
+    val v = store.allocate(spark, index.dir)
     val (nDocs, sumDl) = effectiveScalars(index)
     val buckets = 0 until index.nBuckets
     (if (bucketsPerJob >= 1) buckets.grouped(bucketsPerJob) else Iterator(buckets))
@@ -708,8 +478,8 @@ object Bm25Index {
       .select(lit(nDocs).cast(LongType).as("n_docs"),
         lit(sumDl).cast(LongType).as("sum_dl"),
         lit(index.nBuckets).cast(IntegerType).as("n_buckets"))
-      .write.mode("overwrite").parquet(s"${index.dir}/meta.v$v")
-    IndexVersions.publish(spark, index.dir, v)
+      .write.mode("overwrite").parquet(store.path(index.dir, "meta", v))
+    IndexStore.publish(spark, index.dir, v)
     open(spark, index.dir)
   }
 
@@ -727,35 +497,24 @@ object Bm25Index {
   // version with no tombstones.
 
   private def tombDir(index: Index): String =
-    if (index.version == 0L) s"${index.dir}/doc_tombstones"
-    else s"${index.dir}/doc_tombstones.v${index.version}"
+    store.path(index.dir, "doc_tombstones", index.version)
 
   /** Logically delete documents (a `doc_id` column): O(|ids|) writes,
     * zero postings IO; they disappear from every subsequent search on
     * this version.
     */
   def deleteDocs(index: Index, ids: DataFrame,
-                 idCol: String = "doc_id"): Unit = {
-    ids.select(col(idCol).as("doc_id")).distinct()
-      .coalesce(1)
-      .write.mode("append").parquet(tombDir(index))
-    IndexVersions.bumpGeneration(index.spark, index.dir) // r12: watchers
-  }
+                 idCol: String = "doc_id"): Unit =
+    IndexStore.bump(index.spark, index.dir) { _ => // r12: watchers
+      ids.select(col(idCol).as("doc_id")).distinct()
+        .coalesce(1)
+        .write.mode("append").parquet(tombDir(index))
+    }
 
   /** The pruned postings slice with tombstoned documents removed. */
-  private def aliveDocs(index: Index, postings: DataFrame): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(tombDir(index))
-    val fs = p.getFileSystem(index.spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) postings
-    else postings.join(
-      broadcast(index.spark.read.parquet(p.toString).select("doc_id")),
-      Seq("doc_id"), "left_anti")
-  }
-
-  private def statsDir(index: Index): String =
-    if (index.version == 0L) s"${index.dir}/term_stats"
-    else s"${index.dir}/term_stats.v${index.version}"
+  private def aliveDocs(index: Index, postings: DataFrame): DataFrame =
+    IndexStore.readIfExists(index.spark, tombDir(index)).fold(postings)(t =>
+      postings.join(broadcast(t.select("doc_id")), Seq("doc_id"), "left_anti"))
 
   /** Effective df for a bounded term relation: the build-time df
     * (from the vocabulary-sized term-stats sidecar when the version
@@ -767,10 +526,9 @@ object Bm25Index {
     */
   private def dfForTerms(index: Index, qTerms: DataFrame,
                          inBuckets: Column): DataFrame = {
-    val sd = statsDir(index)
-    val base =
-      if (exists(index.spark, sd)) index.spark.read.parquet(sd)
-      else index.postings
+    val base = IndexStore.readIfExists(index.spark,
+        store.path(index.dir, "term_stats", index.version))
+      .getOrElse(index.postings)
     def queried(d: DataFrame) =
       d.where(inBuckets).join(broadcast(qTerms), "term")
     effectiveDf(queried(base), dfDeltas(index).map(queried))

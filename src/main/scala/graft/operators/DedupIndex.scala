@@ -17,9 +17,9 @@ import org.apache.spark.sql.types._
   * (Reference analog: the partition-pruned ParquetDataset read,
   * python/pyarrow/parquet.py `ParquetDataset(filters=...)`.)
   *
-  * On-disk layout under `dir` (CURRENT-pointer versioned, the
-  * [[IndexVersions]] discipline — atomic publication, pinned readers,
-  * crash-safe rebuilds):
+  * On-disk layout under `dir` (CURRENT-pointer versioned through
+  * [[IndexStore]] — atomic publication, pinned readers, crash-safe
+  * rebuilds, and the batch ledger that publishes each append):
   *   bands.vN/bucket=B/batch_id=b/ — (doc_id, band, bh): LSH band
   *       keys, bucket = pmod(xxhash64(band, bh), nBuckets). batch_id
   *       is 0 for build rows; appends land in their OWN (bucket,
@@ -84,8 +84,17 @@ object DedupIndex {
       else { ref.compareAndSet(null, spark.read.parquet(d)); ref.get() }
     }
 
-    def bandRows: DataFrame = cached(bandCache, bandsDir)
-    def sigRows: DataFrame = cached(sigCache, sigsDir)
+    // Appended batches are readable only once the ledger has them done
+    // (IndexStore.Ledger.visible); the build rows (batch_id = 0) share
+    // the datasets and are never hidden.
+    def bandRows: DataFrame = visible(cached(bandCache, bandsDir))
+    def sigRows: DataFrame = visible(cached(sigCache, sigsDir))
+
+    private def visible(rows: DataFrame): DataFrame =
+      ledger.visible(rows, always = col("batch_id") === 0L)
+
+    @transient private[operators] lazy val ledger =
+      new IndexStore.Ledger(spark, dir)
 
     /** Force a re-list on next read — called by every op that adds or
       * deletes files under the live version. */
@@ -103,6 +112,8 @@ object DedupIndex {
   final case class ScreenResult(clean: DataFrame, dropped: DataFrame,
                                 cleanSigs: DataFrame,
                                 release: () => Unit = () => ())
+
+  private val store = IndexStore(Seq("bands", "sigs", "meta"))
 
   private def bandBucket(band: Column, bh: Column, n: Int): Column =
     pmod(xxhash64(band, bh), lit(n.toLong)).cast(LongType)
@@ -197,7 +208,7 @@ object DedupIndex {
     require(nBuckets >= 1 && nSigBuckets >= 1 && filesPerBucket >= 1,
       s"bucket params out of range: $nBuckets/$nSigBuckets/$filesPerBucket")
     val spark = docs.sparkSession
-    val v = IndexVersions.current(spark, dir).getOrElse(0L) + 1L
+    val v = store.allocate(spark, dir)
     val sigs = Dedup.minhashSignature(docs, idCol, textCol, numPerm)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
@@ -207,29 +218,28 @@ object DedupIndex {
         .repartition(nBuckets * filesPerBucket, col("bucket"),
           pmod(xxhash64(col("doc_id")), lit(filesPerBucket.toLong)))
         .write.mode("overwrite").partitionBy("bucket", "batch_id")
-        .parquet(s"$dir/bands.v$v")
+        .parquet(store.path(dir, "bands", v))
       sigs
         .withColumn("sbucket", sigBucket(col("doc_id"), nSigBuckets))
         .withColumn("batch_id", lit(0L))
         .repartition(nSigBuckets, col("sbucket"))
         .write.mode("overwrite").partitionBy("sbucket", "batch_id")
-        .parquet(s"$dir/sigs.v$v")
+        .parquet(store.path(dir, "sigs", v))
       spark.range(1).select(lit(numPerm).as("num_perm"),
           lit(bands).as("bands"), lit(nBuckets).as("n_buckets"),
           lit(nSigBuckets).as("n_sig_buckets"))
-        .write.mode("overwrite").parquet(s"$dir/meta.v$v")
+        .write.mode("overwrite").parquet(store.path(dir, "meta", v))
     } finally sigs.unpersist()
-    IndexVersions.publish(spark, dir, v)
+    IndexStore.publish(spark, dir, v)
     open(spark, dir)
   }
 
   def open(spark: SparkSession, dir: String): Index = {
-    val (bandsDir, v) = IndexVersions.resolve(spark, dir, "bands")
-    val m = spark.read.parquet(
-      IndexVersions.resolve(spark, dir, "meta")._1).collect()(0)
+    val v = store.live(spark, dir)
+    val m = spark.read.parquet(store.path(dir, "meta", v)).collect()(0)
     Index(spark, dir, m.getAs[Int]("num_perm"), m.getAs[Int]("bands"),
       m.getAs[Int]("n_buckets"), m.getAs[Int]("n_sig_buckets"),
-      bandsDir, IndexVersions.resolve(spark, dir, "sigs")._1, v)
+      store.path(dir, "bands", v), store.path(dir, "sigs", v), v)
   }
 
   /** Screen a batch against the store (and itself, keep-first) —
@@ -325,36 +335,38 @@ object DedupIndex {
     * contract). Single-writer per batchId, like every maintenance op
     * here.
     *
-    * KNOWN SEAM (r15, documented residual): a CONCURRENT reader
-    * (e.g. a GraftServer-fronted screen racing the ingest) that plans
-    * mid-append can list SOME of this batch's band partitions before
-    * its sig partitions land — the screen's own pipeline is immune
-    * (serial foreachBatch + the beforeBatch horizon), but a
-    * cross-process reader is not. Bm25Index closed the identical seam
-    * in r15 with ledger-gated batch visibility (the done-row commit as
-    * the atomic publish, see Bm25Index.visibleBatches); porting that
-    * pattern here is the named fix if concurrent dedup serving
-    * becomes a deployment shape. Until then: readers between batches
-    * (the watchIndexes GEN contract) see only complete appends.
+    * The writes are bracketed by the store's batch ledger, exactly as
+    * for Bm25Index.appendDocsBatch: a concurrent reader sees the
+    * batch's band AND sig partitions only once its done row lands
+    * (never bands without their sigs); a replay of a batch already done
+    * under an older version (folded by [[compactBatches]]) is skipped,
+    * or throws when its signatures differ (a reused batchId); a batch
+    * stranded in-flight under an older version throws.
     */
   def appendBatch(index: Index, sigs: DataFrame, batchId: Long): Unit = {
     require(batchId >= 1, s"batchId must be >= 1 (0 is the build): $batchId")
-    val dyn = Map("partitionOverwriteMode" -> "dynamic")
-    banded(sigs, index.bands)
-      .withColumn("bucket",
-        bandBucket(col("band"), col("bh"), index.nBuckets))
-      .withColumn("batch_id", lit(batchId))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").options(dyn)
-      .partitionBy("bucket", "batch_id").parquet(index.bandsDir)
-    sigs.select(col("doc_id"), col("sig"))
-      .withColumn("sbucket", sigBucket(col("doc_id"), index.nSigBuckets))
-      .withColumn("batch_id", lit(batchId))
-      .repartition(col("sbucket"))
-      .write.mode("overwrite").options(dyn)
-      .partitionBy("sbucket", "batch_id").parquet(index.sigsDir)
-    index.invalidateListing()
-    IndexVersions.bumpGeneration(index.spark, index.dir) // r12: watchers
+    val fp = IndexStore.fingerprint(sigs, col("doc_id"), col("sig"))
+    if (index.ledger.admit("DedupIndex.appendBatch", batchId,
+        index.version, fp))
+      IndexStore.bump(index.spark, index.dir) { _ => // r12: watchers
+        index.ledger.commit(batchId, index.version, fp) {
+          val dyn = Map("partitionOverwriteMode" -> "dynamic")
+          banded(sigs, index.bands)
+            .withColumn("bucket",
+              bandBucket(col("band"), col("bh"), index.nBuckets))
+            .withColumn("batch_id", lit(batchId))
+            .repartition(col("bucket"))
+            .write.mode("overwrite").options(dyn)
+            .partitionBy("bucket", "batch_id").parquet(index.bandsDir)
+          sigs.select(col("doc_id"), col("sig"))
+            .withColumn("sbucket", sigBucket(col("doc_id"), index.nSigBuckets))
+            .withColumn("batch_id", lit(batchId))
+            .repartition(col("sbucket"))
+            .write.mode("overwrite").options(dyn)
+            .partitionBy("sbucket", "batch_id").parquet(index.sigsDir)
+        }
+        index.invalidateListing()
+      }
   }
 
   /** Retention horizon: drop every APPENDED batch partition with
@@ -366,65 +378,70 @@ object DedupIndex {
     * retention trade is the same: documents older than it can
     * re-enter the corpus unchallenged.
     */
-  def dropBatchesBelow(index: Index, minLiveBatch: Long): Unit = {
-    val conf = index.spark.sessionState.newHadoopConf()
-    Seq(index.bandsDir, index.sigsDir).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) fs.listStatus(p)
-        .filter(st => st.isDirectory &&
-          (st.getPath.getName.startsWith("bucket=") ||
-            st.getPath.getName.startsWith("sbucket=")))
-        .foreach { bdir =>
-          fs.listStatus(bdir.getPath)
-            .filter { st =>
-              val n = st.getPath.getName
-              n.startsWith("batch_id=") && scala.util.Try(
-                n.stripPrefix("batch_id=").toLong).toOption
-                .exists(b => b >= 1 && b < minLiveBatch)
-            }
-            .foreach(st => fs.delete(st.getPath, true))
-        }
+  def dropBatchesBelow(index: Index, minLiveBatch: Long): Unit =
+    IndexStore.bump(index.spark, index.dir) { _ => // r12: watchers
+      val conf = index.spark.sessionState.newHadoopConf()
+      Seq(index.bandsDir, index.sigsDir).foreach { d =>
+        val p = new org.apache.hadoop.fs.Path(d)
+        val fs = p.getFileSystem(conf)
+        if (fs.exists(p)) fs.listStatus(p)
+          .filter(st => st.isDirectory &&
+            (st.getPath.getName.startsWith("bucket=") ||
+              st.getPath.getName.startsWith("sbucket=")))
+          .foreach { bdir =>
+            fs.listStatus(bdir.getPath)
+              .filter { st =>
+                val n = st.getPath.getName
+                n.startsWith("batch_id=") && scala.util.Try(
+                  n.stripPrefix("batch_id=").toLong).toOption
+                  .exists(b => b >= 1 && b < minLiveBatch)
+              }
+              .foreach(st => fs.delete(st.getPath, true))
+          }
+      }
+      index.invalidateListing()
     }
-    index.invalidateListing()
-    IndexVersions.bumpGeneration(index.spark, index.dir) // r12: watchers
-  }
 
   /** Fold every surviving batch partition into a fresh version's
     * build rows (batch_id = 0) — file-count hygiene after a long
     * append run, with no re-signing (both relations rewrite from the
     * index's own rows) and byte-identical screening (spec-pinned).
     * Publishes through the CURRENT flip like every rebuild; pinned
-    * readers keep the old version until vacuum.
+    * readers keep the old version until vacuum. Refuses while an
+    * appended batch is in-flight (its partitions may be partial, and
+    * once folded into the build rows a replay could only double them)
+    * and folds the batch ledger in the same maintenance window.
     */
   def compactBatches(index: Index, filesPerBucket: Int = 2): Index = {
     require(filesPerBucket >= 1,
       s"filesPerBucket must be >= 1: $filesPerBucket")
     val spark = index.spark
-    val v = IndexVersions.current(spark, index.dir).getOrElse(0L) + 1L
+    index.ledger.requireSettled("compactBatches", index.version)
+    index.ledger.fold()
+    store.requireLive(spark, index.dir, index.version, "compactBatches")
+    val v = store.allocate(spark, index.dir)
     index.bandRows
       .select(col("doc_id"), col("band"), col("bh"), col("bucket"))
       .withColumn("batch_id", lit(0L))
       .repartition(index.nBuckets * filesPerBucket, col("bucket"),
         pmod(xxhash64(col("doc_id")), lit(filesPerBucket.toLong)))
       .write.mode("overwrite").partitionBy("bucket", "batch_id")
-      .parquet(s"${index.dir}/bands.v$v")
+      .parquet(store.path(index.dir, "bands", v))
     index.sigRows
       .select(col("doc_id"), col("sig"), col("sbucket"))
       .withColumn("batch_id", lit(0L))
       .repartition(index.nSigBuckets, col("sbucket"))
       .write.mode("overwrite").partitionBy("sbucket", "batch_id")
-      .parquet(s"${index.dir}/sigs.v$v")
+      .parquet(store.path(index.dir, "sigs", v))
     spark.range(1).select(lit(index.numPerm).as("num_perm"),
         lit(index.bands).as("bands"), lit(index.nBuckets).as("n_buckets"),
         lit(index.nSigBuckets).as("n_sig_buckets"))
-      .write.mode("overwrite").parquet(s"${index.dir}/meta.v$v")
-    IndexVersions.publish(spark, index.dir, v)
+      .write.mode("overwrite").parquet(store.path(index.dir, "meta", v))
+    IndexStore.publish(spark, index.dir, v)
     open(spark, index.dir)
   }
 
-  /** Drop all versions but the live one (maintenance window only). */
-  def vacuum(index: Index): Unit =
-    IndexVersions.vacuum(index.spark, index.dir, index.version,
-      Seq("bands", "sigs", "meta"))
+  /** Drop all versions but the one CURRENT names, whichever version
+    * `index` is pinned to (maintenance window only). */
+  def vacuum(index: Index): Unit = store.vacuum(index.spark, index.dir)
 }

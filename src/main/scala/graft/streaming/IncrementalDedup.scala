@@ -163,7 +163,10 @@ object IncrementalDedup {
     * the identical exactly-once rule: screenBatch(beforeBatch = b)
     * never sees batch b's own partial append, and appendBatch lands
     * in per-(bucket, batch_id) partitions with dynamic overwrite so a
-    * replay overwrites itself. The index must exist (build it with
+    * replay overwrites itself. The appends go through the same batch
+    * ledger (IndexStore.Ledger) as Bm25Index.appendDocsBatch: a batch
+    * becomes readable only at its done row, and a replay across a
+    * compactBatches republish is skipped. The index must exist (build it with
     * `DedupIndex.write` on a non-empty seed corpus — parquet needs at
     * least one row to carry the schema); its
     * numPerm/bands ride in from the index metadata so the stream

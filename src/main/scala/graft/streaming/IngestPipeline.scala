@@ -21,6 +21,12 @@ import graft.operators.{AnnIndex, Bm25Index, Dedup, DedupIndex}
   *    never sees its own partial append, and `appendBatch` lands in
   *    per-(bucket, batch_id) partitions with dynamic overwrite — the
   *    replay REPLACES its crashed attempt (the IncrementalDedup rule);
+  *  - both batch-keyed legs (dedup `appendBatch`, BM25
+  *    `appendDocsBatch`) are bracketed by ONE ledger protocol
+  *    (IndexStore.Ledger, one ledger per index directory): a batch is
+  *    readable only once its done row lands, a batch done under an
+  *    older version replays as a skip, and a compaction refuses while
+  *    a batch is in-flight;
   *  - the clean sink writes batch_id-partitioned parquet with dynamic
   *    overwrite — same rule, so accounting never double-counts;
   *  - the ANN leg uses `upsert`, not `append`: a replayed batch's
@@ -51,7 +57,8 @@ object IngestPipeline {
     *
     * Republish discipline (r14): appendDocsBatch resolves CURRENT at
     * call time, so its replay idempotency is per index VERSION. The
-    * batch ledger inside Bm25Index enforces the composition:
+    * batch ledger (IndexStore.Ledger, shared with the dedup leg)
+    * enforces the composition:
     * `compactDeltas` refuses to run while a stream batch is in-flight
     * (intent without done), a replay of a batch already complete under
     * an older version is skipped (its rows are folded into the

@@ -104,10 +104,10 @@ class GraftServerSpec extends SparkSpec {
     val a = server.serveRows("ann", dir).map(_.toString).sorted.toSeq
     assert(a == freshRows())
     // upsert the 40–79 block: same CURRENT, bumped GEN
-    val curBefore = graft.operators.IndexVersions.current(spark, dir)
+    val curBefore = graft.operators.IndexStore.current(spark, dir)
     AnnIndex.upsert(AnnIndex.open(spark, dir),
       emb.where(col("vec_id") >= 40 && col("vec_id") < 80))
-    assert(graft.operators.IndexVersions.current(spark, dir) == curBefore,
+    assert(graft.operators.IndexStore.current(spark, dir) == curBefore,
       "fixture requires an in-version mutation (CURRENT must not move)")
     val b = server.serveRows("ann", dir).map(_.toString).sorted.toSeq
     assert(b == freshRows(), "post-upsert serve must see the new rows")

@@ -654,7 +654,7 @@ class Bm25IndexSpec extends SparkSpec {
       .count(f => f.isFile && f.getName.endsWith(".parquet"))
     val before = ledgerFiles
     assert(before >= 4, s"two batches should write >= 4 ledger files: $before")
-    Bm25Index.foldLedger(idx, minFiles = 1)
+    idx.ledger.fold(minFiles = 1)
     assert(ledgerFiles == 1,
       s"fold must leave one parquet file, found $ledgerFiles")
     // entries survive the fold: a done batch still skips after a

@@ -11,7 +11,10 @@ import graft.functions.{DotProduct, HyperplaneBucket, LshBandKeys, MinHashSignat
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
   * `withExtensions(new GraftExtensions)` — after which
   * `SELECT minhash_sig(shingles, 64)`, `simhash64(tokens)`,
-  * `tensor_pack(t)`, `tensor_unpack(b)` work from plain SQL.
+  * `tensor_pack(t)`, `tensor_unpack(b)` work from plain SQL. It also
+  * installs the planner rules in `graft.plans`: `CodecElimination`
+  * and `SortedCollect`, which plans the sort at the root of an answer
+  * as per-partition sorts merged on the driver.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -20,6 +23,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.CodecElimination)
+    ext.injectPlannerStrategy(_ => graft.plans.SortedCollect)
     ext.injectFunction((
       FunctionIdentifier("minhash_sig"),
       info("minhash_sig", "minhash_sig(arr[, numPerm]) - minhash signature of a string array"),

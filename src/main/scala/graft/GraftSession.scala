@@ -4,6 +4,16 @@ import org.apache.spark.sql.SparkSession
 
 /** Recommended session wiring for the library: graft's SQL extension
   * surface plus the scale defaults every operator here assumes.
+  *
+  * The extensions include the `SortedCollect` planner strategy: a
+  * `collect()` of a frame whose root is a global sort sorts each
+  * partition and merges the sorted runs on the driver, with no
+  * range-sampling job and no range shuffle. Every other consumer of
+  * such a frame (`toLocalIterator`, `.rdd`, `queryExecution.toRdd`,
+  * caching, staged writes) still runs a parallel range-shuffle sort,
+  * built inside the operator, at the cost of one extra per-partition
+  * sort. [[local]] sessions carry no extensions and keep Spark's plan.
+  *
   * Returns a Builder so callers can still override anything:
   *
   * {{{
@@ -20,7 +30,8 @@ object GraftSession {
       .appName(appName)
       // SQL surface: minhash_sig / simhash64 / shingle_set /
       // lsh_band_keys / dot_product / unit_norm / hyperplane_bucket /
-      // tensor_pack / tensor_unpack + the codec-elimination rule
+      // tensor_pack / tensor_unpack + the codec-elimination rule and
+      // the SortedCollect strategy
       .withExtensions(new GraftExtensions)
       // runtime re-planning: partition coalescing + skew-join split
       // are load-bearing for the shuffle-heavy operators (SURVEY §4)

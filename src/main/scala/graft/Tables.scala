@@ -74,19 +74,23 @@ object Tables {
     SessionMemo(s, ("partsuppBucketed", d, buckets)) {
       val table = s"graft_partsupp_b${buckets}_$d"
         .replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
-      s.sql(s"DROP TABLE IF EXISTS $table")
-      // the in-memory catalog forgets tables between JVMs but their
-      // warehouse files survive, and saveAsTable refuses a managed
-      // location that already exists — clear leftovers explicitly,
-      // through Hadoop FS so a non-local warehouse (HDFS/object store)
-      // is swept too, not just the driver's local disk
-      val leftover = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), table)
-      val fs = leftover.getFileSystem(s.sessionState.newHadoopConf())
-      if (fs.exists(leftover)) fs.delete(leftover, true)
-      partsupp(s, d).write
-        .bucketBy(buckets, "ps_partkey").sortBy("ps_partkey")
-        .mode("overwrite").saveAsTable(table)
+      // the catalog is shared by every session of the JVM: a table
+      // another session built is reused, since rebuilding it would
+      // delete the files that session's memo still reads
+      if (!s.catalog.tableExists(table)) {
+        // the in-memory catalog forgets tables between JVMs but their
+        // warehouse files survive, and saveAsTable refuses a managed
+        // location that already exists — clear leftovers explicitly,
+        // through Hadoop FS so a non-local warehouse (HDFS/object
+        // store) is swept too, not just the driver's local disk
+        val leftover = new org.apache.hadoop.fs.Path(
+          s.conf.get("spark.sql.warehouse.dir"), table)
+        val fs = leftover.getFileSystem(s.sessionState.newHadoopConf())
+        if (fs.exists(leftover)) fs.delete(leftover, true)
+        partsupp(s, d).write
+          .bucketBy(buckets, "ps_partkey").sortBy("ps_partkey")
+          .mode("overwrite").saveAsTable(table)
+      }
       s.table(table)
     }
 

@@ -1138,7 +1138,7 @@ object Curation {
       .agg(sum(col("x") * col("c")).as("dv"),
         sqrt(sum(col("x") * col("x"))).as("vn"))
     perVec.join(cnorm, "label")
-      .select(col("label"), (col("dv") / (col("vn") * col("cn"))).as("cos"))
+      .select(col("label"), Similarity.cosine(col("dv"), col("vn"), col("cn")).as("cos"))
       .groupBy("label")
       .agg(count(lit(1)).as("n_vecs"), round(avg("cos"), 6).as("avg_cos"))
   }

@@ -42,7 +42,19 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** Cosine of two float-array columns; see the three-argument form
+    * for the zero-vector case.
+    */
+  def cosine(a: Column, b: Column): Column = cosine(dot(a, b), norm(a), norm(b))
+
+  /** Cosine from a pair's dot product and the two norms. A zero
+    * vector has no direction, so a zero-norm side scores NULL: it never
+    * passes a threshold and never ranks ([[rankTopK]] drops null
+    * scores). `try_divide` makes that hold under ANSI mode too, where
+    * a plain division by the zero norm product throws DIVIDE_BY_ZERO.
+    */
+  def cosine(dotAB: Column, normA: Column, normB: Column): Column =
+    try_divide(dotAB, normA * normB)
 
   /** Skew-proof per-query top-k over a scored (qid, nid, score) pair
     * relation: the [[graft.functions.BoundedTopK]] bounded aggregate
@@ -204,7 +216,7 @@ object Similarity {
         col("q.nrm").as("qn"), col("c.nrm").as("cn"))
     }.reduce(_ unionAll _).dropDuplicates("qid", "nid")
     cand
-      .withColumn("cos", dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
+      .withColumn("cos", cosine(dot(col("qe"), col("ce")), col("qn"), col("cn")))
       .where(col("cos") >= threshold)
       .select(col("qid"), col("nid"), col("cos"))
   }
@@ -502,9 +514,9 @@ object Similarity {
         (qe, l) => qe.cast(DoubleType) * l)).as("bias"),
       norm(col("embedding")).as("qnrm"))
     pairs(enc, q)(
-      ((col("q.bias") + arraySum(zip_with(col("q.w"), col("c.codes"),
-        (wi, ci) => wi * ci.cast(DoubleType))))
-        / (col("q.qnrm") * col("c.anrm"))).as("acos"))
+      cosine(col("q.bias") + arraySum(zip_with(col("q.w"), col("c.codes"),
+        (wi, ci) => wi * ci.cast(DoubleType))), col("q.qnrm"), col("c.anrm"))
+        .as("acos"))
   }
 
   /** MMR diversified re-rank (G15): maximal marginal relevance
@@ -729,8 +741,8 @@ object Similarity {
     }
     paired
       .select(col("a.vec_id").as("id_a"), col("x.vec_id").as("id_b"),
-        (dot(col("a.embedding"), col("x.embedding"))
-          / (col("a.nrm") * col("x.nrm"))).as("cos"))
+        cosine(dot(col("a.embedding"), col("x.embedding")),
+          col("a.nrm"), col("x.nrm")).as("cos"))
       .where(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
   }
@@ -781,8 +793,8 @@ object Similarity {
       // conjunction, reordered). Survivors re-evaluate the dot once
       // more in the projection (and the round), a vanishing cost at
       // near-dup selectivity.
-      val cosAX = dot(col("a.embedding"), col("x.embedding")) /
-        (col("a.nrm") * col("x.nrm"))
+      val cosAX = cosine(dot(col("a.embedding"), col("x.embedding")),
+        col("a.nrm"), col("x.nrm"))
       fanned.as("a").join(fanned.as("x"),
           col("a.vec_id") < col("x.vec_id") && cosAX >= threshold)
         .select(col("a.vec_id").as("id_a"), col("x.vec_id").as("id_b"),
@@ -798,7 +810,7 @@ object Similarity {
       }.reduce(_ unionAll _).dropDuplicates("id_a", "id_b")
       candidate
         .withColumn("cos",
-          dot(col("e_a"), col("e_b")) / (col("n_a") * col("n_b")))
+          cosine(dot(col("e_a"), col("e_b")), col("n_a"), col("n_b")))
         .where(col("cos") >= threshold)
         .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
     }

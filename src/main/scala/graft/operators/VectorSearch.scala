@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * [[Similarity.semanticNearDups]]) are not query joins and stay out.
   */
 private[operators] object VectorSearch {
-  import Similarity.{dot, norm, rankTopK}
+  import Similarity.{cosine, dot, norm, rankTopK}
 
   /** `rows` with the norm of its embedding projected as `nrm`. */
   def normed(rows: DataFrame): DataFrame =
@@ -31,10 +31,11 @@ private[operators] object VectorSearch {
       norm(col("embedding")).as("nrm"))
 
   /** Exact cosine of a pair over [[normed]] corpus rows and
-    * [[exactQueries]] rows.
+    * [[exactQueries]] rows; NULL when either side is a zero vector
+    * ([[Similarity.cosine]]).
     */
   def cos: Column =
-    dot(col("q.embedding"), col("c.embedding")) / (col("q.nrm") * col("c.nrm"))
+    cosine(dot(col("q.embedding"), col("c.embedding")), col("q.nrm"), col("c.nrm"))
 
   /** The one query-pair join: corpus rows against the broadcast query
     * side on `on` and `qid ≠ nid`, projected to (qid, nid, score...).
@@ -93,7 +94,7 @@ private[operators] object VectorSearch {
       * [[encoded]] corpus rows and [[queries]] rows: m table adds.
       */
     def acos: Column =
-      (adc(col("c.codes"), col("q.lut")) / (col("q.qnrm") * col("c.anrm")))
+      cosine(adc(col("c.codes"), col("q.lut")), col("q.qnrm"), col("c.anrm"))
         .as("acos")
   }
 

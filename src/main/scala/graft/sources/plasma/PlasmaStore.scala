@@ -1,8 +1,8 @@
 package graft.sources.plasma
 
-import java.io.{ByteArrayOutputStream, RandomAccessFile}
+import java.io.RandomAccessFile
 import java.nio.{ByteBuffer, ByteOrder, MappedByteBuffer}
-import java.nio.channels.{Channels, FileChannel}
+import java.nio.channels.FileChannel
 import java.nio.file.{Files, Paths}
 
 import scala.collection.concurrent.TrieMap
@@ -50,16 +50,11 @@ class PlasmaStore(dir: String) {
   private[plasma] def sealedPath(id: String): String = s"$dir/${hexId(id)}.obj"
   private def unsealedPath(id: String): String = s"$dir/.${hexId(id)}.unsealed"
 
-  /** Allocate an object and return the writable data buffer. The claim
-    * on the unsealed file is atomic (CREATE_NEW): two processes racing
-    * to create the same id cannot both win and scribble over each
-    * other's pages — the loser gets ObjectExists, matching the
-    * reference's PlasmaError::ObjectExists (cpp/src/plasma/client.h:80).
+  /** Allocate an object and return the writable data buffer, on an
+    * atomic [[claim]] of its unsealed file.
     */
   def create(id: String, dataSize: Long, metadata: Array[Byte] = Array.empty)
       : ByteBuffer = {
-    if (contains(id))
-      throw new IllegalStateException(s"plasma object '$id' already sealed")
     // bound dataSize BEFORE summing: dataSize + meta + FOOTER on an
     // unchecked Long.MaxValue would wrap negative and pass a naive
     // total check
@@ -68,23 +63,11 @@ class PlasmaStore(dir: String) {
       s"plasma object '$id' of $dataSize data bytes exceeds the " +
         "2 GiB mapped-buffer limit")
     val total = dataSize + metadata.length + FOOTER
-    val ch = try {
-      FileChannel.open(Paths.get(unsealedPath(id)),
-        java.nio.file.StandardOpenOption.CREATE_NEW,
-        java.nio.file.StandardOpenOption.READ,
-        java.nio.file.StandardOpenOption.WRITE)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(s"plasma object '$id' already being created")
-    }
+    val ch = claim(id)
     try {
       val map = ch.map(FileChannel.MapMode.READ_WRITE, 0, total)
-      map.order(ByteOrder.LITTLE_ENDIAN)
       map.position(dataSize.toInt)
-      map.put(metadata)
-      map.putLong(dataSize)
-      map.putLong(metadata.length.toLong)
-      map.put(MAGIC)
+      map.put(footer(dataSize, metadata))
       retained.put(unsealedPath(id), map)
       map.position(0)
       map.limit(dataSize.toInt)
@@ -97,6 +80,37 @@ class PlasmaStore(dir: String) {
         Files.deleteIfExists(Paths.get(unsealedPath(id)))
         throw t
     } finally ch.close()
+  }
+
+  /** Claim the unsealed file of `id`. The claim is atomic
+    * (CREATE_NEW): two processes racing to create the same id cannot
+    * both win and scribble over each other's pages — the loser gets
+    * ObjectExists, matching the reference's PlasmaError::ObjectExists
+    * (cpp/src/plasma/client.h:80).
+    */
+  private def claim(id: String): FileChannel = {
+    if (contains(id))
+      throw new IllegalStateException(s"plasma object '$id' already sealed")
+    try {
+      FileChannel.open(Paths.get(unsealedPath(id)),
+        java.nio.file.StandardOpenOption.CREATE_NEW,
+        java.nio.file.StandardOpenOption.READ,
+        java.nio.file.StandardOpenOption.WRITE)
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        throw new IllegalStateException(s"plasma object '$id' already being created")
+    }
+  }
+
+  /** The bytes after an object's data: [metadata][dataSize i64]
+    * [metaSize i64][magic].
+    */
+  private def footer(dataSize: Long, metadata: Array[Byte]): ByteBuffer = {
+    val b = ByteBuffer.allocate(metadata.length + FOOTER.toInt)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    b.put(metadata).putLong(dataSize).putLong(metadata.length.toLong).put(MAGIC)
+    b.flip()
+    b
   }
 
   /** Make the object immutable and visible to every client. */
@@ -256,17 +270,36 @@ class PlasmaStore(dir: String) {
     * pyarrow `plasma.put(record_batch)` analog. This is a node-local
     * interop surface (handing query results to another process on the
     * same host), not a distributed write path: the frame is collected
-    * to the caller.
+    * to the caller. The collected rows are the only copy on the heap:
+    * the stream is written straight into the object's unsealed file,
+    * which a failed put deletes.
     */
   def putDataFrame(id: String, df: DataFrame,
                    metadata: Array[Byte] = Array.empty): Unit = {
-    val rows = df.queryExecution.executedPlan.executeCollect()
-    val out = new ByteArrayOutputStream()
-    IncrementalArrowWriter.writeAll(new IncrementalArrowWriter(
-      Channels.newChannel(out), df.schema, stream = true), rows.iterator)
-    val bytes = out.toByteArray
-    val buf = create(id, bytes.length.toLong, metadata)
-    buf.put(bytes)
+    val path = Paths.get(unsealedPath(id))
+    val ch = claim(id)
+    try {
+      // the stream goes straight into the unsealed file (the writer
+      // closes `ch` when it ends the stream), then the footer follows
+      IncrementalArrowWriter.writeAll(
+        new IncrementalArrowWriter(ch, df.schema, stream = true),
+        df.queryExecution.executedPlan.executeCollect().iterator)
+      val dataSize = Files.size(path)
+      require(dataSize + metadata.length + FOOTER <= Int.MaxValue,
+        s"plasma object '$id' of $dataSize data bytes exceeds the " +
+          "2 GiB mapped-buffer limit")
+      val tail = FileChannel.open(path, java.nio.file.StandardOpenOption.APPEND)
+      try {
+        val b = footer(dataSize, metadata)
+        while (b.hasRemaining) tail.write(b)
+        tail.force(true)
+      } finally tail.close()
+    } catch {
+      case t: Throwable =>
+        ch.close()
+        Files.deleteIfExists(path)
+        throw t
+    }
     seal(id)
   }
 

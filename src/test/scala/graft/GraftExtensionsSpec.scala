@@ -4,23 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 class GraftExtensionsSpec extends SparkSpec {
 
-  // a second session in the same JVM, with extensions installed.
-  // getOrCreate returns any live default session (ignoring
-  // withExtensions), so clear the defaults first and restore after —
-  // the SparkContext is shared either way.
-  private lazy val extSpark: SparkSession = {
-    val prior = spark // force the shared session to exist first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = GraftSession.builder("graft-ext-test")
-      .master(prior.sparkContext.master)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    SparkSession.setDefaultSession(prior)
-    SparkSession.setActiveSession(prior)
-    s
-  }
+  private lazy val extSpark: SparkSession = TestSession.graft("graft-ext-test")
 
   test("GraftSession builder applies scale defaults") {
     assert(extSpark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")

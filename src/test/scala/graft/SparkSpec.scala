@@ -14,6 +14,26 @@ object TestSession {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** A second session on the shared SparkContext, built by
+    * GraftSession.builder: graft's extensions and scale defaults.
+    * getOrCreate returns any live default session (ignoring
+    * withExtensions), so the defaults are cleared first and restored
+    * after.
+    */
+  def graft(appName: String, shufflePartitions: Int = 2): SparkSession = {
+    val prior = spark // force the shared session to exist first
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = GraftSession.builder(appName)
+      .master(prior.sparkContext.master)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toLong)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    SparkSession.setDefaultSession(prior)
+    SparkSession.setActiveSession(prior)
+    s
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -7,15 +7,7 @@ import graft.SparkSpec
 class SketchProbesSpec extends SparkSpec {
   import sqlImplicits._
 
-  private lazy val extSpark = {
-    val prior = spark // force the shared session to exist first
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    graft.GraftSession.builder("graft-sketch-test")
-      .master(prior.sparkContext.master)
-      .config("spark.sql.shuffle.partitions", "2")
-      .getOrCreate()
-  }
+  private lazy val extSpark = graft.TestSession.graft("graft-sketch-test")
 
   test("cms_estimate never undercounts and respects the eps*N bound") {
     val df = extSpark.range(0, 10000)

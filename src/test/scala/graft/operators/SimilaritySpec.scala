@@ -632,4 +632,38 @@ class SimilaritySpec extends SparkSpec {
     assert(hn.map(p => (p._1, p._2)) == brute.toSet, s"$hn vs ${brute.toSeq}")
     assert(hn.map(_._3) == Set(1L, 2L, 3L, 4L))
   }
+
+  // the sf0.001 embeddings, and the same plus one zero vector: id
+  // 1000001 is no seed-centroid id (≢ 0 mod 7)
+  private lazy val emb = graft.Tables.embeddings(spark, sfDir)
+    .select("vec_id", "embedding")
+  private lazy val withZero = emb.unionByName(emb.limit(1).select(
+    lit(1000001L).cast(emb.schema("vec_id").dataType).as("vec_id"),
+    transform(col("embedding"), _ => lit(0f)).as("embedding")))
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  test("a zero embedding scores NULL: cosineNearDups(planes = 0) skips it") {
+    val want = rowSet(Similarity.cosineNearDups(emb, 0.4, planes = 0))
+    assert(want.nonEmpty)
+    assert(rowSet(Similarity.cosineNearDups(withZero, 0.4, planes = 0)) == want)
+  }
+
+  test("a zero embedding scores NULL: semanticNearDups skips it") {
+    val want = rowSet(Similarity.semanticNearDups(emb, 0.4, nCells = 1))
+    assert(want.nonEmpty)
+    assert(rowSet(Similarity.semanticNearDups(withZero, 0.4, nCells = 1)) == want)
+    val cents = Similarity.trainIvfCentroids(emb, 4).cache()
+    assert(rowSet(Similarity.semanticNearDups(withZero, 0.4, centroids = Some(cents))) ==
+      rowSet(Similarity.semanticNearDups(emb, 0.4, centroids = Some(cents))))
+  }
+
+  test("a zero embedding scores NULL: bruteForceTopK neither ranks it nor answers it") {
+    val ids = emb.select("vec_id").orderBy("vec_id").limit(5).collect().map(_.get(0))
+    val want = rowSet(Similarity.bruteForceTopK(emb, emb.where(col("vec_id").isin(ids: _*)), 5))
+    assert(want.size == 25)
+    val qs = withZero.where(col("vec_id").isin(ids :+ 1000001L: _*))
+    assert(rowSet(Similarity.bruteForceTopK(withZero, qs, 5)) == want)
+  }
 }

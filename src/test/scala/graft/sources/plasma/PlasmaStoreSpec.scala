@@ -60,6 +60,58 @@ class PlasmaStoreSpec extends SparkSpec {
     assert(new String(obj.metadataBytes, "UTF-8") == "v1")
   }
 
+  test("putDataFrame stores the exact IPC stream and reads back the same rows") {
+    val store = new PlasmaStore(tmp())
+    val df = graft.Tables.lineitem(spark, sfDir).orderBy("l_orderkey", "l_linenumber")
+    store.putDataFrame("li", df, metadata = "m".getBytes("UTF-8"))
+    val want = new java.io.ByteArrayOutputStream()
+    graft.sources.arrow.IncrementalArrowWriter.writeAll(
+      new graft.sources.arrow.IncrementalArrowWriter(
+        java.nio.channels.Channels.newChannel(want), df.schema, stream = true),
+      df.queryExecution.executedPlan.executeCollect().iterator)
+    val obj = store.get("li").get
+    assert(java.util.Arrays.equals(obj.dataBytes, want.toByteArray))
+    assert(new String(obj.metadataBytes, "UTF-8") == "m")
+    assert(store.getDataFrame(spark, "li").get.collect().toSeq == df.collect().toSeq)
+  }
+
+  test("a put whose query fails leaves no object and no claim behind") {
+    val dir = tmp()
+    val store = new PlasmaStore(dir)
+    val bad = graft.Tables.nation(spark, sfDir).select(
+      when(col("n_nationkey") === 3, raise_error(lit("boom")))
+        .otherwise(col("n_name")).as("n_name"))
+    intercept[Exception] { store.putDataFrame("n", bad) }
+    assert(!store.contains("n"))
+    assert(new java.io.File(dir).list().isEmpty)
+    // the id is free again
+    store.putDataFrame("n", graft.Tables.nation(spark, sfDir).select("n_name"))
+    assert(store.getDataFrame(spark, "n").get.count() == 25)
+  }
+
+  test("putDataFrame allocates less than one payload on the driver beyond the collect") {
+    // lineitem ×10: the stream used to be buffered whole, then copied
+    // into the object, both on the driver heap
+    val li = graft.Tables.lineitem(spark, sfDir)
+    val df = (1 until 10).foldLeft(li)((a, _) => a.unionAll(li))
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    def allocated(f: => Unit): Long = {
+      val t = Thread.currentThread().getId
+      val before = mx.getThreadAllocatedBytes(t)
+      f
+      mx.getThreadAllocatedBytes(t) - before
+    }
+    val store = new PlasmaStore(tmp())
+    store.putDataFrame("warm", df)
+    val payload = store.get("warm").get.data.remaining().toLong
+    val collect = (1 to 3).map(_ =>
+      allocated(df.queryExecution.executedPlan.executeCollect())).min
+    val put = (1 to 3).map(i => allocated(store.putDataFrame(s"li$i", df))).min
+    assert(put - collect < payload,
+      s"put allocated $put B, its collect $collect B, payload $payload B")
+  }
+
   private def javaBin: String =
     s"${System.getProperty("java.home")}/bin/java"
 

@@ -685,20 +685,15 @@ object QueriesPipeline {
     // proves round-6 equality per doc).
     QueryDef("q_curation_pipeline",
       (s, d) => {
-        import graft.operators.{Curation, TextAnalysis}
+        import graft.operators.Curation
         val docs = Tables.documents(s, d)
-        val filtered = docs
-          .where(round(TextAnalysis.qualityScore(col("text")), 6) >= 0.5)
-        // r16 (guide §2.4): keep the min-doc_id row's payload IN the
-        // dedup aggregate — min(struct) is lexicographic and doc_id
-        // (unique) leads, so it selects exactly the row the old
-        // keep-then-self-join picked, without the second corpus scan
-        // that re-ran the quality kernel and the doc_id-keyed join
-        val kept = filtered
-          .groupBy(md5(col("text")).as("h"))
-          .agg(min(struct(col("doc_id"), col("lang"), col("n_chars"))).as("r"))
-          .select(col("r.doc_id").as("doc_id"), col("r.lang").as("lang"),
-            col("r.n_chars").as("n_chars"))
+        val filtered = Curation.Chain("text", minQuality = Some(0.5))(docs)
+        // the chain's one-pass exact dedup keeps the min-doc_id row; no
+        // later stage reads the text, so its md5 stands in for it and the
+        // dedup aggregate carries a 32-char hash, not the document
+        val kept = Curation.Chain("text", "doc_id", exactDedup = true)(
+          filtered.select(col("doc_id"), md5(col("text")).as("text"),
+            col("lang"), col("n_chars")))
         kept
           .where(Curation.sampleKey(col("doc_id")) < "80")
           .groupBy("lang")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Schema-checked loaders for the driver-generated TPC-H-ish tables.
   *
@@ -74,25 +75,42 @@ object Tables {
     SessionMemo(s, ("partsuppBucketed", d, buckets)) {
       val table = s"graft_partsupp_b${buckets}_$d"
         .replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
-      // the catalog is shared by every session of the JVM: a table
-      // another session built is reused, since rebuilding it would
-      // delete the files that session's memo still reads
-      if (!s.catalog.tableExists(table)) {
-        // the in-memory catalog forgets tables between JVMs but their
-        // warehouse files survive, and saveAsTable refuses a managed
-        // location that already exists — clear leftovers explicitly,
-        // through Hadoop FS so a non-local warehouse (HDFS/object
-        // store) is swept too, not just the driver's local disk
-        val leftover = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), table)
-        val fs = leftover.getFileSystem(s.sessionState.newHadoopConf())
-        if (fs.exists(leftover)) fs.delete(leftover, true)
-        partsupp(s, d).write
-          .bucketBy(buckets, "ps_partkey").sortBy("ps_partkey")
-          .mode("overwrite").saveAsTable(table)
+      partsuppBuilt.synchronized {
+        // a catalog that has the table reuses it (every newSession()
+        // shares its parent's catalog)
+        if (!s.catalog.tableExists(table)) partsuppBuilt.get(table) match {
+          // built in this JVM under another catalog (a session with its
+          // own SharedState): register those files, never rebuild them,
+          // since another session's memo still reads them
+          case Some((schema, location)) =>
+            s.sql(s"CREATE TABLE $table ($schema) USING parquet " +
+              s"CLUSTERED BY (ps_partkey) SORTED BY (ps_partkey) " +
+              s"INTO $buckets BUCKETS LOCATION '$location'")
+          case None =>
+            // the first build in this JVM. The in-memory catalog forgets
+            // tables between JVMs but their warehouse files survive, and
+            // saveAsTable refuses a managed location that already exists
+            // — clear leftovers explicitly, through Hadoop FS so a
+            // non-local warehouse (HDFS/object store) is swept too, not
+            // just the driver's local disk
+            val leftover = new org.apache.hadoop.fs.Path(
+              s.conf.get("spark.sql.warehouse.dir"), table)
+            val fs = leftover.getFileSystem(s.sessionState.newHadoopConf())
+            if (fs.exists(leftover)) fs.delete(leftover, true)
+            partsupp(s, d).write
+              .bucketBy(buckets, "ps_partkey").sortBy("ps_partkey")
+              .mode("overwrite").saveAsTable(table)
+            val built = s.sessionState.catalog
+              .getTableMetadata(TableIdentifier(table))
+            partsuppBuilt(table) = (built.schema.toDDL, built.location.toString)
+        }
       }
       s.table(table)
     }
+
+  /** Bucketed partsupp tables built in this JVM → (schema DDL, location). */
+  private val partsuppBuilt =
+    scala.collection.mutable.Map.empty[String, (String, String)]
 
   /** The oracle-side twin of [[partsupp]], spliced into each oracle
     * query as a WITH clause.

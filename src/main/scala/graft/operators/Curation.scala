@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.ml.classification.LogisticRegressionModel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -836,77 +837,142 @@ object Curation {
       .repartition(nShards, col("shard_id"))
       .write.partitionBy("shard_id").mode("overwrite").parquet(path)
 
+  /** The one curation chain, composed by every curation site:
+    * [[curationPipeline]], [[curationPipelineV2]], q_curation_pipeline,
+    * [[graft.streaming.Streams.qualityGate]] and
+    * [[graft.streaming.IngestPipeline.start]]. A site turns on the
+    * stages it runs, and they run in the order `stages` lists them (the
+    * screen order is argued at [[curationPipelineV2]]). The two
+    * text-rewriting screens re-attach their rebuilt text by one
+    * id-keyed join that holds the one NULL contract: NULL text becomes
+    * '' first, so a NULL-text doc flows through a screen as empty text
+    * instead of vanishing in the inner join. A pure-leak doc (it had
+    * tokens and the scrub kept none) drops. `idCol` is read only by the
+    * keyed stages.
+    */
+  private[graft] final case class Chain(textCol: String, idCol: String = "",
+      htmlInput: Boolean = false, boilerplate: Option[DataFrame] = None,
+      gate: Option[DataFrame => DataFrame] = None,
+      evalScrub: Option[DataFrame] = None, evalScrubMinLen: Int = 8,
+      minQuality: Option[Double] = None, exactDedup: Boolean = false,
+      split: Boolean = false, decontaminate: Option[Int] = None,
+      classifier: Option[LogisticRegressionModel] = None,
+      bpeMerges: Option[Seq[(String, String)]] = None) {
+    private type Stage = DataFrame => DataFrame
+    private def text = col(textCol)
+
+    private def stages: Seq[Stage] = Seq[Option[Stage]](
+      Option.when(htmlInput)(_.withColumn(textCol, TextAnalysis.htmlToText(text))),
+      boilerplate.map(f => rewriteText(Dedup.dropListedLines(_, idCol, textCol, f))),
+      gate,
+      evalScrub.map(ev => rewriteText(Dedup.exactSubstrDecontaminate(_, idCol,
+          textCol, ev, textCol, evalScrubMinLen)
+        .where(col("n_kept") > 0 || col("n_tokens") === 0))),
+      minQuality.map(m => (df: DataFrame) =>
+        df.where(round(TextAnalysis.qualityScore(text), 6) >= m)),
+      Option.when(exactDedup)(Dedup.dropExactDuplicates(_, idCol, textCol)),
+      Option.when(split)(_.withColumn("split", splitAssign(col(idCol)))),
+      decontaminate.map(decontaminated),
+      classifier.map(m => QualityClassifier.scoreAll(_, m, textCol)),
+      bpeMerges.map(m => (df: DataFrame) => df.withColumn("n_bpe_tokens",
+        size(TextAnalysis.bpeEncode(text, m)).cast(LongType)))
+    ).flatten
+
+    def apply(docs: DataFrame): DataFrame =
+      stages.foldLeft(docs)((df, stage) => stage(df))
+
+    /** The one text join-back: `rebuild` turns the docs into
+      * (doc_id, clean_text) rows, the rebuilt text replaces `textCol`,
+      * every other column re-attaches by the id-keyed join, and a doc
+      * without a rebuilt row drops.
+      */
+    private def rewriteText(rebuild: Stage): Stage = df => {
+      val norm = df.withColumn(textCol, coalesce(text, lit("")))
+      norm.drop(textCol).join(rebuild(norm).select(col("doc_id").as(idCol),
+        col("clean_text").as(textCol)), idCol)
+    }
+
+    /** Eval grams are deduplicated before the gram-keyed join (never
+      * all-pairs) and the final anti join is id-keyed.
+      */
+    private def decontaminated(n: Int): Stage = df => {
+      val grams = df.select(col(idCol), (col("split") === "test").as("is_eval"),
+        explode(Dedup.shingles(text, n)).as("gram"))
+      val contaminated = grams.where(!col("is_eval"))
+        .join(grams.where(col("is_eval")).select("gram").distinct(), "gram")
+        .select(idCol).distinct()
+      df.join(contaminated, Seq(idCol), "left_anti")
+    }
+  }
+
+  /** The Gopher rule battery as a chain gate. */
+  private[graft] def gopherGate(textCol: String, minWords: Long,
+      minStop: Long): DataFrame => DataFrame =
+    _.where(TextAnalysis.gopherPass(col(textCol), minWords, minStop = minStop))
+
   /** The end-to-end corpus-curation job — the workload this engine
-    * exists for, composed as ONE declarative plan: quality gate →
-    * exact dedup (keep-first by content hash) → split assignment →
-    * eval-overlap decontamination (any train/val doc sharing an
-    * `ngram`-gram with a test doc is dropped) → ready for
+    * exists for, composed as ONE declarative plan from the [[Chain]]:
+    * quality gate → exact dedup (keep-first by content hash) → split
+    * assignment → eval-overlap decontamination (any `train`/`val` doc
+    * sharing an `ngram`-gram with a test doc is dropped) → ready for
     * [[writeSharded]]. Every stage is the already-gated operator
     * (q_quality_score / q_dedup_exact / q_split_assign /
     * q_contamination / q_shard_plan semantics); this is their
     * production composition, benched at sf1 by tools/PipelineBench.
     *
-    * Scale shape: narrow quality filter on the scan; dedup shuffles
-    * (hash, id) not text; the contamination join is gram-keyed with
-    * eval grams deduplicated first (never all-pairs); the final
-    * anti-join is id-keyed. No driver actions anywhere in the plan.
+    * Scale shape: narrow quality filter on the scan; ONE corpus scan,
+    * since the dedup aggregate carries the kept row itself; the
+    * contamination join is gram-keyed with eval grams deduplicated
+    * first (never all-pairs); the final anti-join is id-keyed. No
+    * driver actions anywhere in the plan.
     */
   def curationPipeline(docs: DataFrame, idCol: String, textCol: String,
-                       minQuality: Double = 0.5, ngram: Int = 5): DataFrame = {
-    val q = docs.where(
-      round(TextAnalysis.qualityScore(col(textCol)), 6) >= minQuality)
-    val keep = q.groupBy(md5(col(textCol)).as("h"))
-      .agg(min(col(idCol)).as(idCol)).select(idCol)
-    val withSplit = q.join(keep, idCol)
-      .withColumn("split", splitAssign(col(idCol)))
-    val grams = withSplit.select(col(idCol),
-      (col("split") === "test").as("is_eval"),
-      explode(Dedup.shingles(col(textCol), ngram)).as("gram"))
-    val evalGrams = grams.where(col("is_eval")).select("gram").distinct()
-    val contaminated = grams.where(!col("is_eval"))
-      .join(evalGrams, "gram").select(idCol).distinct()
-    withSplit.join(contaminated, Seq(idCol), "left_anti")
-  }
+                       minQuality: Double = 0.5, ngram: Int = 5): DataFrame =
+    Chain(textCol, idCol, minQuality = Some(minQuality), exactDedup = true,
+      split = true, decontaminate = Some(ngram))(docs)
 
   /** The round-8 production composition (pipeline v2): the full
-    * modern curation stack as ONE declarative plan —
-    * Gopher rule battery (H16, map-only predicate) → heuristic
-    * quality gate (H2) → exact dedup → split assignment →
-    * eval-overlap decontamination (all from [[curationPipeline]]) →
-    * DSIR domain weight (K30, joined back id-keyed) → trained quality
-    * classifier score (K32, map-only with the model broadcast) →
-    * real BPE token count (H17, map-only kernel). The classifier
+    * modern curation stack as ONE declarative plan, every stage from
+    * the [[Chain]] in its order —
+    * HTML extraction (r13, `htmlInput`) → mined-boilerplate screen
+    * (r9, `boilerplate`) → Gopher rule battery (H16) → eval-span scrub
+    * (r15, `evalScrub`) → heuristic quality gate (H2) → exact dedup →
+    * split assignment → eval-overlap decontamination (all of
+    * [[curationPipeline]]) → trained quality classifier score (K32,
+    * map-only with the model broadcast) → real BPE token count (H17,
+    * map-only kernel) → DSIR domain weight (K30, over the screened
+    * corpus before the gate, joined back id-keyed). The classifier
     * model and BPE merges are TRAINED ONCE upfront (on a bounded
     * sample — the production discipline: training artifacts are
     * versioned inputs, not per-run work) and ride in as parameters.
     *
-    * Scale shape: everything map-only except the four key-local
-    * shuffles the semantics require (content-hash dedup, gram-keyed
-    * decontamination, DSIR's bucket stats, and the id-keyed
-    * weight/score joins). Output columns: the doc row + split,
-    * log_weight (null→0 for sub-bigram docs), quality_prob,
-    * n_bpe_tokens — exactly what a training-data writer shards.
-    */
-  /** `evalScrub` (r15, VERDICT r14 item 5): when set, the K37
-    * cross-corpus ExactSubstr decontamination
-    * ([[Dedup.exactSubstrDecontaminate]] against this immutable eval
-    * table — a DataFrame carrying `textCol`, the benchmark suite) runs
-    * right after the Gopher gate and BEFORE dedup/split/5-gram
-    * decontamination — the same position the streaming ingest gives it
-    * (after the F10 screen, before the dedup screen), so the content
-    * hash, quality score, split grams, classifier score, and BPE token
-    * count all read the text a training run would actually see:
+    * Screen order: boilerplate runs BEFORE the Gopher gate, the same
+    * order [[graft.streaming.IngestPipeline.start]] runs, because
+    * boilerplate distorts the very statistics the gate reads (a
+    * nav-bar-padded doc can clear the word-count gate on padding
+    * alone). HTML extraction runs first of all, because tag soup
+    * inflates word counts and block tags, not newlines, delimit the
+    * boilerplate lines; the frequent-line table is mined over
+    * extracted text. The eval-span scrub runs right after the gate, so
+    * the content hash, quality score, split grams, classifier score
+    * and BPE count all read the text a training run would see:
     * verbatim eval sentences (≥ `evalScrubMinLen` tokens) are excised
-    * from every gated doc. A doc whose every token is eval-covered
-    * drops here (pure leaked benchmark); empty-text docs pass (nothing
-    * was leaked — the NULL contract). Scale shape: the eval gram set
-    * is bounded (benchmark-suite-sized, broadcast probe — no
-    * corpus-wide gram aggregate, the K37 contract), and the join-back
-    * duplicates only the map-only gated-scan prefix (the F10 stage-0
-    * trade), never the dedup/decontamination lineage.
+    * from every gated doc. Exact dedup is the one-pass
+    * min(struct(id, ...)) content-hash aggregate
+    * ([[Dedup.dropExactDuplicates]]): it keeps the min-id row without
+    * a second corpus scan or join back.
+    *
+    * Scale shape: everything map-only except the key-local shuffles
+    * the semantics require (content-hash dedup, gram-keyed
+    * decontamination, DSIR's bucket stats, the screens' doc-keyed
+    * rebuilds and id-keyed join-backs, and the weight join). The eval
+    * gram set is bounded (benchmark-suite-sized, broadcast probe). Output
+    * columns: the doc row + split, quality_prob, n_bpe_tokens and
+    * log_weight (null→0 for sub-bigram docs) — exactly what a
+    * training-data writer shards.
     */
   def curationPipelineV2(docs: DataFrame, idCol: String, textCol: String,
-      model: org.apache.spark.ml.classification.LogisticRegressionModel,
+      model: LogisticRegressionModel,
       merges: Seq[(String, String)], dsirTargetPred: Column,
       minQuality: Double = 0.5, ngram: Int = 5, dsirBuckets: Int = 4096,
       gopherMinWords: Long = 50L, gopherMinStop: Long = 2L,
@@ -914,60 +980,18 @@ object Curation {
       htmlInput: Boolean = false,
       evalScrub: Option[DataFrame] = None,
       evalScrubMinLen: Int = 8): DataFrame = {
-    // r13 stage −1 (optional): crawl extraction. When the corpus is
-    // raw HTML, every downstream screen reads distorted statistics —
-    // tags and attribute soup inflate word counts past the Gopher
-    // gate, entity escapes perturb shingles and content hashes, and
-    // F10's line dedup sees no line structure at all (block tags, not
-    // newlines, delimit the boilerplate). htmlToText (H19) runs FIRST,
-    // as one narrow codegen'd map that pipelines inside the scan —
-    // zero new shuffles, zero new scans (plan budget unchanged,
-    // PipelineBench gate) — so stage 0's frequent-line table is mined
-    // over, and matched against, EXTRACTED text: the same train/serve
-    // discipline as the model and merges.
-    val input =
-      if (htmlInput)
-        docs.withColumn(textCol, TextAnalysis.htmlToText(col(textCol)))
-      else docs
-    // r9 stage 0 (optional): line-level boilerplate removal against a
-    // pre-mined frequent-line table (F10's train/serve split — the
-    // table is a versioned input like the model and merges). Runs
-    // BEFORE every filter, because boilerplate distorts the very
-    // statistics the filters read (a nav-bar-padded doc can clear the
-    // word-count gate on padding alone); text downstream is the
-    // cleaned text, other doc columns re-attach by the id-keyed join,
-    // and an all-boilerplate doc drops here.
-    val base = boilerplate.fold(input) { freq =>
-      val cleaned = Dedup.dropListedLines(input, idCol, textCol, freq)
-        .select(col("doc_id").as(idCol), col("clean_text").as(textCol))
-      input.drop(textCol).join(cleaned, idCol)
-    }
-    val g = base.where(TextAnalysis.gopherPass(col(textCol), gopherMinWords,
-      minStop = gopherMinStop))
-    // K37 span scrub (r15): see scaladoc — excise verbatim eval spans
-    // from the gated docs BEFORE every content-derived stage, so the
-    // hash dedup, quality gate, split grams, and scores read scrubbed
-    // text (the streaming ingest's screen position). Join-back
-    // duplicates only the map-only gated scan, the F10 trade.
-    val scrubbed = evalScrub.fold(g) { ev =>
-      g.drop(textCol).join(
-        Dedup.exactSubstrDecontaminate(g, idCol, textCol, ev,
-            textCol, evalScrubMinLen)
-          .where(col("n_kept") > 0 || col("n_tokens") === 0)
-          .select(col("doc_id").as(idCol),
-            col("clean_text").as(textCol)),
-        idCol)
-    }
-    val clean = curationPipeline(scrubbed, idCol, textCol, minQuality,
-      ngram)
+    val base = Chain(textCol, idCol, htmlInput, boilerplate)(docs)
     val weights = dsirWeights(base, idCol, textCol, dsirTargetPred,
         dsirBuckets)
       .select(col("doc_id").as(idCol), col("log_weight"))
-    val scored = QualityClassifier.scoreAll(clean, model, textCol)
-    scored.join(weights, Seq(idCol), "left")
+    Chain(textCol, idCol,
+        gate = Some(gopherGate(textCol, gopherMinWords, gopherMinStop)),
+        evalScrub = evalScrub, evalScrubMinLen = evalScrubMinLen,
+        minQuality = Some(minQuality), exactDedup = true, split = true,
+        decontaminate = Some(ngram), classifier = Some(model),
+        bpeMerges = Some(merges))(base)
+      .join(weights, Seq(idCol), "left")
       .withColumn("log_weight", coalesce(col("log_weight"), lit(0.0)))
-      .withColumn("n_bpe_tokens",
-        size(TextAnalysis.bpeEncode(col(textCol), merges)).cast(LongType))
   }
 
   /** Curriculum quartile/decile buckets (K24): rank documents by a

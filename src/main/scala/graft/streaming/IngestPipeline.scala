@@ -4,14 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{AnnIndex, Bm25Index, Dedup, DedupIndex}
+import graft.operators.{AnnIndex, Bm25Index, Curation, DedupIndex}
 
 /** The composed streaming ingest story (VERDICT r10 item 7): one
   * micro-batch loop running the full production intake —
   *
-  *   stream → quality gate (I14, map-only) → persisted-index dedup
-  *   screen (F12) → clean sink (exactly-once) → ANN upsert (G12/G13)
-  *   → lexical-index append (H18, optional — r13)
+  *   stream → the curation chain's screens (mined boilerplate, the
+  *   gate, the eval-span scrub) → persisted-index dedup screen (F12)
+  *   → clean sink (exactly-once) → ANN upsert (G12/G13) →
+  *   lexical-index append (H18, optional — r13)
   *
   * — with every leg REPLAY-IDEMPOTENT, so a query killed anywhere
   * inside a batch and restarted from its checkpoint converges to
@@ -35,7 +36,7 @@ import graft.operators.{AnnIndex, Bm25Index, Dedup, DedupIndex}
   *    no matter how many times the batch replays (append would
   *    double-serve — the reason the composed pipeline upserts).
   *
-  * `gate` is the map-only screen applied first (the I14 shape —
+  * `gate` is the map-only screen (the I14 shape —
   * [[Streams.qualityGate]] for the full Gopher-kernel → classifier →
   * BPE battery, or any stateless filter); running it before the
   * dedup screen keeps rejected docs out of the signature index, so
@@ -67,11 +68,11 @@ object IngestPipeline {
     * while the stream is stopped or between committed batches.
     *
     * `frequentLinesDir` (r14, VERDICT r13 item 7): when set, the F10
-    * mined-boilerplate screen ([[Dedup.dropListedLines]] against the
-    * pre-mined (h, line_df) table — mine it once with
-    * `Dedup.frequentLines` over a pilot corpus) runs BETWEEN the
-    * quality gate and the dedup screen: each surviving doc's text is
-    * REPLACED by its boilerplate-stripped rebuild, so the dedup
+    * mined-boilerplate screen ([[graft.operators.Dedup.dropListedLines]]
+    * against the pre-mined (h, line_df) table — mine it once with
+    * `Dedup.frequentLines` over a pilot corpus) runs first, BEFORE the
+    * gate (see the screen order above): each doc's text is
+    * REPLACED by its boilerplate-stripped rebuild, so the gate, the dedup
     * signatures, the clean sink, and both index appends all see
     * clean_text — boilerplate never pollutes near-dup signatures or
     * the lexical postings. A doc whose every line is mined boilerplate
@@ -81,14 +82,31 @@ object IngestPipeline {
     * stay IMMUTABLE while the stream runs — republish it only between
     * committed batches, like the BM25 index above.
     */
-  /** `evalScrubDir` (r15, VERDICT r14 item 5): when set, the K37
+  /** Screen order: the batch's screens are the curation chain's
+    * ([[graft.operators.Curation.Chain]]), in the batch pipeline's
+    * order: mined boilerplate → `gate` → eval-span scrub. Boilerplate
+    * runs BEFORE the gate because padding distorts the statistics the
+    * gate reads (a nav-bar-padded doc can clear a word-count gate on
+    * padding alone), so a stream and
+    * [[graft.operators.Curation.curationPipelineV2]] keep the same docs
+    * with the same text. The cost: the screen's doc-keyed rebuild
+    * aggregate runs over the whole micro-batch, not over gate survivors
+    * only. Both screens hold the chain's NULL contract: a NULL-text
+    * doc flows through them as empty text.
+    *
+    * Exact dedup: the batch chain's one-pass min(struct(id, ...))
+    * content-hash dedup does not run per micro-batch; the stream's
+    * dedup is the persisted-index screen, which also sees the
+    * screened text.
+    *
+    * `evalScrubDir` (r15, VERDICT r14 item 5): when set, the K37
     * cross-corpus ExactSubstr decontamination
-    * ([[Dedup.exactSubstrDecontaminate]] against the immutable eval
-    * table at this path — (doc_id, `textCol`) parquet, the benchmark
-    * suite) runs AFTER the F10 screen and before the dedup screen:
-    * each surviving doc's text is replaced by its scrubbed rebuild, so
-    * the dedup signatures, the clean sink, and both index appends
-    * never carry a verbatim eval span. A doc whose every token is
+    * ([[graft.operators.Dedup.exactSubstrDecontaminate]] against the
+    * immutable eval table at this path — (doc_id, `textCol`) parquet,
+    * the benchmark suite) runs after the gate and before the dedup
+    * screen: each surviving doc's text is replaced by its scrubbed
+    * rebuild, so the dedup signatures, the clean sink, and both index
+    * appends never carry a verbatim eval span. A doc whose every token is
     * eval-covered (n_kept = 0 with n_tokens > 0 — pure leaked
     * benchmark) vanishes here, the F10 all-boilerplate rule applied to
     * contamination; empty/NULL-text survivors flow through as
@@ -114,41 +132,11 @@ object IngestPipeline {
     val writer = docs.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        // F10 leg (r14): after the cheap map-only gate, strip mined
-        // boilerplate lines — the doc's text column is replaced by the
-        // rebuild, so the dedup signatures, the sink, and both index
-        // legs all consume clean_text; all-boilerplate docs vanish
-        // here (see scaladoc). The screen's doc-keyed rebuild
-        // aggregate runs on gate SURVIVORS only.
-        val gatedRaw = gate(batch)
-        val deboiled = frequentLinesDir.fold(gatedRaw) { fdir =>
-          val mined = spark.read.parquet(fdir).select("h")
-          // NULL contract (r15 ADVICE): split(NULL) explodes to zero
-          // rows, so a gate-surviving NULL-text doc would emit no
-          // rebuild group and silently vanish in the inner join below —
-          // coalesce to '' (the F13/K5 rule) so it flows through as
-          // empty-text, same as when the screen is off
-          val norm = gatedRaw.withColumn(textCol,
-            coalesce(col(textCol), lit("")))
-          norm.drop(textCol).join(
-            Dedup.dropListedLines(norm, idCol, textCol, mined)
-              .select(col("doc_id").as(idCol),
-                col("clean_text").as(textCol)),
-            idCol)
-        }
-        // K37 leg (r15): excise verbatim eval spans from the survivors
-        // (see scaladoc) — pure-leak docs (had tokens, kept none) drop;
-        // empty-text docs pass (nothing was leaked, the NULL contract)
-        val screened = evalScrubDir.fold(deboiled) { edir =>
-          val evalDocs = spark.read.parquet(edir)
-          deboiled.drop(textCol).join(
-            Dedup.exactSubstrDecontaminate(deboiled, idCol, textCol,
-                evalDocs, textCol)
-              .where(col("n_kept") > 0 || col("n_tokens") === 0)
-              .select(col("doc_id").as(idCol),
-                col("clean_text").as(textCol)),
-            idCol)
-        }
+        // the screens, in the curation chain's order (see scaladoc)
+        val screened = Curation.Chain(textCol, idCol,
+          boilerplate = frequentLinesDir.map(spark.read.parquet(_)),
+          gate = Some(gate),
+          evalScrub = evalScrubDir.map(spark.read.parquet(_)))(batch)
         val gated = screened.persist()
         try {
           val idx = DedupIndex.open(spark, dedupIndexDir)

@@ -54,29 +54,25 @@ object Streams {
     events.join(broadcast(dim), Seq(key), "left")
 
   /** Streaming quality gate (I14): the round-8 curation screens
-    * applied at INGEST over a document stream — Gopher rule kernel
-    * (H16) → trained classifier score (K32, model broadcast) → real
-    * BPE token count (H17), then a probability floor. Every stage is
-    * map-only, so the gate runs inside each micro-batch with NO state,
-    * no watermark, no shuffle — the crawl-firehose filter shape, and
-    * the same Column pipeline works verbatim on a batch frame (the
-    * spec asserts stream == batch row-for-row and that the streaming
-    * plan is stateless).
+    * applied at INGEST over a document stream — the curation chain's
+    * Gopher gate (H16) → trained classifier score (K32, model
+    * broadcast) → real BPE token count (H17), then a probability
+    * floor. Every stage is map-only, so the gate runs inside each
+    * micro-batch with NO state, no watermark, no shuffle — the
+    * crawl-firehose filter shape, and the same Column pipeline works
+    * verbatim on a batch frame (the spec asserts stream == batch
+    * row-for-row and that the streaming plan is stateless).
     */
   def qualityGate(docs: DataFrame, textCol: String,
                   model: org.apache.spark.ml.classification.LogisticRegressionModel,
                   merges: Seq[(String, String)],
                   minWords: Long = 50L, minStop: Long = 2L,
                   minProb: Double = 0.5): DataFrame = {
-    import graft.operators.{QualityClassifier, TextAnalysis}
-    QualityClassifier.scoreAll(
-        docs.where(TextAnalysis.gopherPass(col(textCol), minWords,
-          minStop = minStop)),
-        model, textCol)
+    import graft.operators.Curation
+    Curation.Chain(textCol,
+        gate = Some(Curation.gopherGate(textCol, minWords, minStop)),
+        classifier = Some(model), bpeMerges = Some(merges))(docs)
       .where(col("quality_prob") >= minProb)
-      .withColumn("n_bpe_tokens",
-        size(TextAnalysis.bpeEncode(col(textCol), merges))
-          .cast("long"))
   }
 
   /** Stream–stream interval join: each click pairs with the same

@@ -58,6 +58,9 @@ class PlanBudgetSpec extends SparkSpec {
     // the gram agg (histogram, pair expansion, n_grams window) all
     // carry <= 2^n_sources (or n_sources^2) rows — the r15 form's 3
     // exchanges included a SECOND corpus-scale shingle pass instead
+    "q_curation_pipeline" -> (2, 1, 1), // the curation chain's quality
+    // gate + one-pass exact dedup (ONE md5-keyed aggregate carrying the
+    // kept row, no join back) + the per-lang agg: ONE corpus scan
     "q_shard_plan" -> (1, 1, 1), // pure map + one agg
     "q_source_drift" -> (5, 1, 1), // ONE tokenize pass feeds all aggs
     "q_dedup_simhash" -> (6, 1, 6), // static view: 6 signature consumers;

@@ -253,6 +253,43 @@ class CurationPipelineSpec extends SparkSpec {
     } finally { off.unpersist(); on.unpersist() }
   }
 
+  test("v1 and v2 hold the broadcast-free static plan gates") {
+    // the composed jobs' static gates: AQE off and broadcast off, so
+    // the counts are the scale-invariant worst-case shape (size
+    // estimates grow with sf, and a broadcast that fires here becomes
+    // a sort-merge at scale). Ceilings at today's counts: v1 scans the
+    // corpus ONCE, since the chain's dedup aggregate carries the kept
+    // row and nothing joins back.
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // the CacheManager is shared across sessions: `out` (v1's very
+    // plan) would replace v1 by its cached, broadcast-planned tree
+    s2.catalog.clearCache()
+    val sdocs = Tables.documents(s2, sfDir)
+    val model = QualityClassifier.train(docs, "text",
+      length($"text") > 250, buckets = 512, maxIter = 10)
+    val merges = TextAnalysis.bpeTrain(docs, "text", numMerges = 50)
+    // (hash exchanges, parquet scans, nested-loop joins)
+    def census(df: org.apache.spark.sql.DataFrame): (Int, Int, Int) = {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("CartesianProduct"), plan)
+      val lines = plan.linesIterator
+        .filterNot(_.contains("ReusedExchange")).toSeq
+      (lines.count(_.contains("Exchange hashpartitioning")),
+        lines.count(_.contains("Scan parquet")),
+        lines.count(_.contains("BroadcastNestedLoopJoin")))
+    }
+    def within(got: (Int, Int, Int), max: (Int, Int, Int)) =
+      got._1 <= max._1 && got._2 <= max._2 && got._3 <= max._3
+    val v1 = census(Curation.curationPipeline(sdocs, "doc_id", "text"))
+    assert(within(v1, (5, 1, 0)), s"v1 census $v1")
+    val v2 = census(Curation.curationPipelineV2(sdocs, "doc_id", "text",
+      model, merges, dsirTargetPred = col("lang") === "en",
+      gopherMinStop = 0L))
+    assert(within(v2, (6, 2, 0)), s"v2 census $v2")
+  }
+
   test("sharded write is complete, disjoint, and deterministic") {
     val dir = java.nio.file.Files.createTempDirectory("graft-pipe-shards").toString
     Curation.writeSharded(out, "doc_id", 16, dir)

@@ -30,6 +30,25 @@ class DedupSpec extends SparkSpec {
     assert(kept.sameElements(Array(0L, 2L, 3L, 4L)))
   }
 
+  test("exact dedup edge cases: a hash hot in every partition, a NULL " +
+      "text and a string id keep the min-id row, in dropExactDuplicates " +
+      "and in the curation chain") {
+    val edge = DedupSpec.edgeDocs(spark)
+    val hotParts = edge.where($"text" === DedupSpec.hotBody)
+      .select(spark_partition_id()).distinct().count()
+    assert(hotParts == edge.rdd.getNumPartitions && hotParts > 1,
+      "fixture: the hot hash must sit in every input partition")
+    val rows = edge.collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
+    val expected = rows.groupBy(_._2).values.map(_.minBy(_._1)).toSet
+    assert(expected.size == 3 + 1 + 1, "fixture: 3 other bodies, the hot one, NULL")
+    for (kept <- Seq(Dedup.dropExactDuplicates(edge, "doc_id", "text"),
+        Curation.Chain("text", "doc_id", exactDedup = true)(edge))) {
+      assert(kept.columns.toSeq == edge.columns.toSeq)
+      assert(kept.collect().map(r =>
+        (r.getString(0), r.getString(1), r.getInt(2))).toSet == expected)
+    }
+  }
+
   test("minhash near-dups finds exact and near pairs, not unrelated ones") {
     val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -682,5 +701,28 @@ class DedupSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Dedup.exactSubstrDedup(substrDocs, "doc_id", "text", minLen = 1)
     }
+  }
+}
+
+object DedupSpec {
+  val hotBody = "the same viral boilerplate body"
+
+  /** 200 rows over 8 partitions: string ids, one body shared by every
+    * row but six (so it sits in every partition), three other bodies
+    * (one of them twice), two rows whose text is NULL and a payload
+    * column.
+    */
+  def edgeDocs(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    (0 until 200).map { i =>
+      val text = i match {
+        case 7 | 150 => null
+        case 3 | 42 | 199 => s"unique body $i"
+        case 120 => "unique body 3"
+        case _ => hotBody
+      }
+      (f"d$i%04d", text, i % 7)
+    }.toDF("doc_id", "text", "payload").repartition(8)
   }
 }

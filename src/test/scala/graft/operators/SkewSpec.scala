@@ -322,9 +322,17 @@ class SkewSpec extends SparkSpec {
     val kept = Dedup.dropExactDuplicates(docs, "doc_id", "text")
     assert(kept.collect().map(_.toSeq).toSet == ref)
     assert(kept.count() == 31) // 1 family rep + 30 uniques
-    val plan = kept.queryExecution.executedPlan.toString()
-    assert(!plan.contains("Window"),
-      s"dropExactDuplicates must not window at all:\n$plan")
+    // the chain's dedup stage, and DedupSpec's edge input (a hash hot
+    // in every partition, NULL text, a string id), plan no window either
+    val edge = DedupSpec.edgeDocs(spark)
+    for (df <- Seq(kept,
+        Curation.Chain("text", "doc_id", exactDedup = true)(docs),
+        Dedup.dropExactDuplicates(edge, "doc_id", "text"),
+        Curation.Chain("text", "doc_id", exactDedup = true)(edge))) {
+      val plan = df.queryExecution.executedPlan.toString()
+      assert(!plan.contains("Window"),
+        s"dropExactDuplicates must not window at all:\n$plan")
+    }
   }
 
   test("chunk dedup never windows over the chunk hash: planted " +

@@ -35,14 +35,9 @@ class SortedCollectSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] = df.collect().toSeq.map(render)
 
   test("every root-sorted oracle query collects identically with and without the extensions") {
-    // Tables.partsuppBucketed keeps one warehouse table per data dir:
-    // a session with its own catalog (this GraftExtensions one) would
-    // rebuild it and delete the files the plain session's memo reads,
-    // so its four consumers run on the plain session only
     val sorted = SparkEntry.registry.filter(_.oracle.isDefined).filter { q =>
       val plan = q.fn(spark, sfDir).queryExecution.optimizedPlan
-      plan.isInstanceOf[Sort] && plan.asInstanceOf[Sort].global &&
-        !plan.toString.contains("graft_partsupp_b")
+      plan.isInstanceOf[Sort] && plan.asInstanceOf[Sort].global
     }
     assert(sorted.size > 50, s"only ${sorted.size} root-sorted oracle queries")
     val differ = sorted.filter(q => rows(q.fn(ext, sfDir)) != rows(q.fn(spark, sfDir)))

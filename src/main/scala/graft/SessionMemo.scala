@@ -34,12 +34,9 @@ private[graft] object SessionMemo {
   // an ACTIVE workload's memo GC-proof, while entries beyond the LRU
   // bound (and any dropped session's, once they age out) fall back to
   // the collectable soft reference — the weak-key design keeps
-  // working, the leak is bounded by MaxPinned small objects.
-  // Env-tunable (r12) so the bench A/B can run the soft-only r10 form
-  // (GRAFT_MEMO_MAX_PINNED=0) against the pinned default in otherwise
-  // identical sittings — the q_embed_neardup regression attribution.
-  private val MaxPinned = scala.util.Try(
-    sys.env.getOrElse("GRAFT_MEMO_MAX_PINNED", "512").toInt).getOrElse(512)
+  // working, the leak is bounded by MaxPinned small objects. The r12
+  // A/B of 512 pins against none measured both at ~3.3 s (SURVEY.md).
+  private val MaxPinned = 512
   // value → its owning session (weak: the pin must not ADD a session
   // edge — the pinned DataFrame already strongly references its own
   // session, which is why dead sessions need active eviction at all)
@@ -52,7 +49,7 @@ private[graft] object SessionMemo {
         size() > MaxPinned
     }
   private def pin(v: AnyRef, s: SparkSession): Unit =
-    if (MaxPinned > 0) pinned.synchronized {
+    pinned.synchronized {
       // Evict pins whose session is STOPPED (r12, r11 ADVICE): a pinned
       // DataFrame reaches its SparkSession, so a stopped session's
       // whole memo — weak-keyed and soft-valued by design — stayed
@@ -71,47 +68,24 @@ private[graft] object SessionMemo {
       pinned.put(v, new java.lang.ref.WeakReference(s)); ()
     }
 
+  /** One store for every memo value: DataFrames and driver-side
+    * training artifacts (PQ codebooks, SQ quantization ranges: bounded
+    * values whose builds nonetheless run Spark jobs).
+    */
   private val store = new java.util.WeakHashMap[
     SparkSession,
-    scala.collection.concurrent.TrieMap[Any, java.lang.ref.SoftReference[DataFrame]]]()
+    scala.collection.concurrent.TrieMap[Any, java.lang.ref.SoftReference[AnyRef]]]()
 
-  def apply(s: SparkSession, key: Any)(build: => DataFrame): DataFrame = {
+  def apply(s: SparkSession, key: Any)(build: => DataFrame): DataFrame =
+    any(s, key)(build)
+
+  def any[T <: AnyRef](s: SparkSession, key: Any)(build: => T): T = {
     val perSession = store.synchronized {
       var t = store.get(s)
       if (t == null) {
         t = scala.collection.concurrent.TrieMap
-          .empty[Any, java.lang.ref.SoftReference[DataFrame]]
-        store.put(s, t)
-      }
-      t
-    }
-    perSession.get(key).flatMap(r => Option(r.get())) match {
-      case Some(df) => hitCounter.incrementAndGet(); pin(df, s); df
-      case None =>
-        val df = build
-        buildCounter.incrementAndGet()
-        perSession.put(key, new java.lang.ref.SoftReference(df))
-        pin(df, s)
-        df
-    }
-  }
-
-  /** Same memo discipline for non-DataFrame training artifacts (PQ
-    * codebooks, SQ quantization ranges — bounded driver-side values
-    * whose builds nonetheless run Spark jobs). Kept in a separate
-    * store so the DataFrame map stays monomorphic.
-    */
-  private val anyStore = new java.util.WeakHashMap[
-    SparkSession,
-    scala.collection.concurrent.TrieMap[Any, java.lang.ref.SoftReference[AnyRef]]]()
-
-  def any[T <: AnyRef](s: SparkSession, key: Any)(build: => T): T = {
-    val perSession = anyStore.synchronized {
-      var t = anyStore.get(s)
-      if (t == null) {
-        t = scala.collection.concurrent.TrieMap
           .empty[Any, java.lang.ref.SoftReference[AnyRef]]
-        anyStore.put(s, t)
+        store.put(s, t)
       }
       t
     }

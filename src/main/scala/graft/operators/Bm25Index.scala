@@ -94,7 +94,7 @@ object Bm25Index {
     * reads its input exactly once, then re-reads only the compact
     * post-aggregate relation. Set `persistRelation = false` when the
     * corpus is a GENERATED or otherwise IO-free relation (the
-    * AnnGenServe discipline): cheap recomputes beat materializing a
+    * `IndexServe --gen-rows` discipline): cheap recomputes beat materializing a
     * corpus-sized relation to local disk.
     *
     * The salted repartition before the write is the AnnIndex

@@ -111,12 +111,14 @@ object Dedup {
     transform(keys, (k, i) => struct(i.as("band"), k.as("bh")))
   }
 
-  /** All (a &lt; b) pairs from a sorted id array, as array expressions. */
-  private def pairsOf(ids: Column): Column = {
-    val sorted = sort_array(ids)
+  /** Every (a &lt; b) pair of a sorted `entries` array, each built by
+    * `pair(a, b)`, as array expressions.
+    */
+  private def pairsOf(entries: Column)(pair: (Column, Column) => Column): Column = {
+    val sorted = sort_array(entries)
     flatten(transform(sorted, (x, i) =>
       transform(slice(sorted, i + 2, greatest(size(sorted) - i - 1, lit(0))),
-        y => struct(x.as("id_a"), y.as("id_b")))))
+        y => pair(x, y))))
   }
 
   /** Candidate pairs from LSH: docs sharing any band bucket.
@@ -145,7 +147,8 @@ object Dedup {
     banded.groupBy("band", "bh")
       .agg(collect_list(col("doc_id")).as("ids"))
       .where(size(col("ids")).between(2, maxBucket))
-      .select(explode(pairsOf(col("ids"))).as("p"))
+      .select(explode(pairsOf(col("ids"))((a, b) =>
+        struct(a.as("id_a"), b.as("id_b")))).as("p"))
       .select(col("p.id_a"), col("p.id_b"))
       .distinct()
   }
@@ -249,13 +252,9 @@ object Dedup {
       }: _*)).as("bk"))
       .select(col("doc_id"), col("simhash"),
         col("bk.band").as("band"), col("bk.bits").as("bits"))
-    val sorted = sort_array(col("entries"))
-    val pairs = flatten(transform(sorted, (x, i) =>
-      transform(slice(sorted, i + 2, greatest(size(sorted) - i - 1, lit(0))),
-        y => struct(x.getField("doc_id").as("id_a"),
-          x.getField("simhash").as("sh_a"),
-          y.getField("doc_id").as("id_b"),
-          y.getField("simhash").as("sh_b")))))
+    val pairs = pairsOf(col("entries"))((a, b) =>
+      struct(a.getField("doc_id").as("id_a"), a.getField("simhash").as("sh_a"),
+        b.getField("doc_id").as("id_b"), b.getField("simhash").as("sh_b")))
     banded.groupBy("band", "bits")
       .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("entries"))
       .where(size(col("entries")).between(2, maxBucket))

@@ -37,6 +37,20 @@ private[graft] object Measure {
       java.nio.file.Paths.get("/proc/loadavg"))).trim
       .split(" ").take(3).mkString(",")).getOrElse("")
 
+  /** One JSON object line. An Option is its value or null, a Double is
+    * rounded to 3 places (null when not finite), a String is quoted.
+    */
+  def json(fields: Seq[(String, Any)]): String = {
+    def value(v: Any): String = v match {
+      case None | null => "null"
+      case Some(x) => value(x)
+      case d: Double => if (d.isNaN || d.isInfinite) "null" else r3(d).toString
+      case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      case x => x.toString
+    }
+    fields.map { case (k, v) => s"\"$k\":${value(v)}" }.mkString("{", ",", "}")
+  }
+
   /** Best-effort page-cache drop; true when the kernel accepted it. */
   def dropPageCache(): Boolean = {
     import scala.sys.process._

@@ -68,6 +68,10 @@ private[graft] object SessionMemo {
       pinned.put(v, new java.lang.ref.WeakReference(s)); ()
     }
 
+  /** Whether `v` is held strongly by the pin LRU. */
+  private[graft] def isPinned(v: AnyRef): Boolean =
+    pinned.synchronized(pinned.containsKey(v))
+
   /** One store for every memo value: DataFrames and driver-side
     * training artifacts (PQ codebooks, SQ quantization ranges: bounded
     * values whose builds nonetheless run Spark jobs).

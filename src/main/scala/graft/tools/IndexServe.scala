@@ -38,8 +38,8 @@ import graft.tools.Measure.{dropPageCache, loadavg, median, time, timed, times}
   *  - dedup: `DedupIndex.screenBatch`, which reads only the batch's
   *    collision buckets, against `IncrementalDedup.dedupBatch` over a
   *    raw signature store, re-banded per batch (`dedup_serve`). The
-  *    batch is `--batch` fresh ids: the even ones exact copies of store
-  *    docs, the odd ones salted.
+  *    batch is 10 fresh ids: the even ones exact copies of store docs,
+  *    the odd ones salted.
   *    Gate: both screens drop the same pairs, and so does an index
   *    re-sized by `DedupIndex.autoSize` for this batch.
   *  - neg: epoch-scale hard-negative mining, `hardNegativesFrom` over
@@ -49,11 +49,9 @@ import graft.tools.Measure.{dropPageCache, loadavg, median, time, timed, times}
   *    scale, with exhaustive probes and full refine, the index chain
   *    equals the brute chain.
   *
-  * The corpus is `sfDir`'s table replicated `--mult` times with ids
-  * offset by the table's id span (embedding replicas get a small
-  * deterministic jitter), or `--gen-rows` deterministic rows that never
-  * materialize: sin-mixed vectors, or Zipf-ish text whose head words
-  * land in most docs. A generated corpus trains on its 1% sample.
+  * The corpus is `sfDir`'s tables replicated `--mult` times with ids
+  * offset (`SfReplica`), or `--gen-rows` deterministic rows that never
+  * materialize (`Generated`).
   *
   * Every leg runs once untimed (code generation, planning, partition
   * discovery), then reports the median of `--reps` runs. Under `--cold`
@@ -62,30 +60,37 @@ import graft.tools.Measure.{dropPageCache, loadavg, median, time, timed, times}
   * whether every drop took) and time one more run.
   *
   * Usage: IndexServe <ann|bm25|dedup|neg> <sfDir | --gen-rows N>
-  *   [--reps 3] [--mult 1] [--shuffle N]                 every mode
+  *   [--reps 3] [--shuffle N]                            every mode
+  *   [--mult 1]                                          with an sfDir
   *   [--cold]                                            ann, bm25 --gen-rows
   *   [--cells 16] [--nprobe 4]                           ann, neg
   *   [--queries 10000] [--brute-queries min(queries, 100)]     neg
-  *   [--buckets B]                                       bm25 (B 64), dedup (B 1024)
-  *   [--files-per-bucket 4]                              bm25
-  *   [--batch 10]                                        dedup
-  *   [--words-per-doc 12] [--vocab 100000] [--max-df-share S]
-  *   [--slices 1] [--compact-groups 0]                   bm25 --gen-rows
-  * `--mult` needs an sfDir. `--shuffle` sets spark.sql.shuffle.partitions
-  * for the run; by default the session's (one per core) stands.
+  *   [--buckets 64] [--files-per-bucket 4] [--words-per-doc 12]
+  *   [--vocab 100000] [--max-df-share S] [--slices 1]
+  *   [--compact-groups 0]                                bm25 --gen-rows
+  * Only ann and bm25 take `--gen-rows`. `--shuffle` sets
+  * spark.sql.shuffle.partitions for the run; by default the session's
+  * (one per core) stands.
   */
 object IndexServe {
 
   private val Usage = "usage: IndexServe <ann|bm25|dedup|neg> <sfDir | --gen-rows N> [--flag value ...]"
-  private val Shared = Set("gen-rows", "reps", "mult", "shuffle")
+  private val Common = Set("reps", "shuffle")
   private val ModeFlags = Map(
     "ann" -> Set("cold", "cells", "nprobe"),
-    "bm25" -> Set("cold", "buckets", "files-per-bucket", "words-per-doc",
-      "vocab", "max-df-share", "slices", "compact-groups"),
-    "dedup" -> Set("buckets", "batch"),
+    "bm25" -> Set.empty[String],
+    "dedup" -> Set.empty[String],
     "neg" -> Set("cells", "nprobe", "queries", "brute-queries"))
-  private val GenOnly = Set("words-per-doc", "vocab", "max-df-share", "slices", "compact-groups")
+  /** The flags a generated corpus adds; only ann and bm25 serve one. */
+  private val GenFlags = Map(
+    "ann" -> Set.empty[String],
+    "bm25" -> Set("cold", "buckets", "files-per-bucket", "words-per-doc", "vocab",
+      "max-df-share", "slices", "compact-groups"))
   private val (dim, stride, k) = (64, 7L, 5)
+  /** dedup screens 10 fresh docs against 1024 band buckets: pruning
+    * bites when nBuckets >> batch·bands, and 10 docs × 16 bands ≤ 160.
+    */
+  private val (dedupBatch, dedupBuckets) = (10, 1024)
 
   private final class Opts(args: Seq[String]) {
     require(args.nonEmpty && ModeFlags.contains(args.head), Usage)
@@ -102,29 +107,25 @@ object IndexServe {
       }
       go(args.tail.toList, Map.empty, Nil)
     }
-    private def reject(names: Set[String], why: String): Unit =
-      require(names.isEmpty, s"${names.map("--" + _).mkString(", ")}: $why\n$Usage")
-    reject(flags.keySet -- Shared -- ModeFlags(mode), s"not a $mode flag")
     val genRows: Option[Long] = flags.get("gen-rows").map(_.toLong)
     require(positional.size + genRows.size == 1, s"give one sfDir or --gen-rows\n$Usage")
-    require(genRows.isEmpty || Set("ann", "bm25")(mode), s"$mode serves an sf table, not --gen-rows")
-    private val needsGen = if (mode == "bm25") GenOnly + "cold" else GenOnly
-    reject(flags.keySet & (if (genRows.isDefined) Set("mult") else needsGen),
-      "not with this corpus source")
+    require(genRows.isEmpty || GenFlags.contains(mode), s"$mode serves an sf table, not --gen-rows")
+    private val unknown = flags.keySet -- Common -- ModeFlags(mode) --
+      (if (genRows.isDefined) GenFlags(mode) + "gen-rows" else Set("mult"))
+    require(unknown.isEmpty,
+      s"${unknown.map("--" + _).mkString(", ")}: not a flag of $mode over this corpus source\n$Usage")
     val sfDir: Option[String] = positional.headOption
     private def int(f: String, default: Int) = flags.get(f).fold(default)(_.toInt)
     val reps: Int = int("reps", 3)
     val mult: Int = int("mult", 1)
-    val batch: Int = int("batch", 10)
-    require(reps >= 1 && mult >= 1 && batch >= 1, s"--reps, --mult and --batch must be at least 1\n$Usage")
+    require(reps >= 1 && mult >= 1, s"--reps and --mult must be at least 1\n$Usage")
     val shuffle: Option[Int] = flags.get("shuffle").map(_.toInt)
     val cold: Boolean = flags.contains("cold")
     val cells: Int = int("cells", 16)
     val nprobe: Int = int("nprobe", 4)
     val queries: Int = int("queries", 10000)
     val bruteQueries: Int = int("brute-queries", math.min(queries, 100))
-    /** The index's bucket count; each index has its own default. */
-    val buckets: Option[Int] = flags.get("buckets").map(_.toInt)
+    val buckets: Int = int("buckets", 64)
     val filesPerBucket: Int = int("files-per-bucket", 4)
     val wordsPerDoc: Int = int("words-per-doc", 12)
     val vocab: Int = int("vocab", 100000)
@@ -133,21 +134,73 @@ object IndexServe {
     val compactGroups: Int = int("compact-groups", 0)
   }
 
+  /** Where a mode's rows come from, picked once from the flags. The
+    * modes read these members and test the source only to name their
+    * metric and to run a generated corpus's extra legs.
+    */
+  private sealed abstract class Source(spark: SparkSession, val codebookIters: Int,
+                                       val persistRelation: Boolean) {
+    /** (vec_id, embedding) */
+    def embeddings: DataFrame
+    /** `embeddings` as the codes-only legs read them. */
+    def servedEmbeddings(dir: String): DataFrame
+    /** `n` query vectors of `corpus`, sorted by id, as a local relation
+      * (broadcast in every leg).
+      */
+    def queryEmbeddings(corpus: DataFrame, n: Int): DataFrame
+    /** (doc_id, text) */
+    def documents: DataFrame
+    /** The BM25 query batch over `docs`, (doc_id, text). */
+    def bm25Queries(docs: DataFrame): DataFrame
+    /** What the index geometry trains on. */
+    def sample(df: DataFrame, idCol: String): DataFrame
+    /** The row count of `df`, one of this source's relations. */
+    def count(df: DataFrame): Long
+
+    protected def local(rows: DataFrame): DataFrame = {
+      import spark.implicits._
+      rows.as[(Long, Array[Float])].collect().sortBy(_._1).toSeq.toDF("vec_id", "embedding")
+    }
+  }
+
   /** One sf table, replicated `mult` times with ids offset by its id span. */
-  private final class Replica(val base: DataFrame, idCol: String, mult: Int) {
+  private final class Replicated(val base: DataFrame, idCol: String, mult: Int) {
     lazy val span: Long = base.agg(max(col(idCol))).head().getLong(0) + 1L
     def rows(payload: Int => Column): DataFrame = (0 until mult).map(m =>
       base.select((col(idCol) + lit(m * span)).as(idCol), payload(m)))
       .reduce(_ unionAll _)
   }
 
-  /** The one corpus source: an sf replica or a generated relation. */
-  private final class Corpus(spark: SparkSession, o: Opts) {
+  /** `sfDir`'s tables replicated `mult` times; embedding replicas get a
+    * small deterministic jitter. The codes-only legs read the replica
+    * back from parquet, so both legs start from disk.
+    */
+  private final class SfReplica(spark: SparkSession, val sfDir: String, val mult: Int)
+      extends Source(spark, codebookIters = 2, persistRelation = true) {
+    lazy val embeddingTable = new Replicated(
+      Tables.embeddings(spark, sfDir).select("vec_id", "embedding"), "vec_id", mult)
+    lazy val documentTable = new Replicated(
+      Tables.documents(spark, sfDir).select("doc_id", "text"), "doc_id", mult)
+    def embeddings: DataFrame = embeddingTable.rows(m => transform(col("embedding"), (x, i) =>
+      (x + sin(col("vec_id") * 31 + i * 7 + lit(m * 13)) * lit(0.01d)).cast(FloatType))
+      .as("embedding"))
+    def servedEmbeddings(dir: String): DataFrame = { embeddings.write.parquet(dir); spark.read.parquet(dir) }
+    def queryEmbeddings(corpus: DataFrame, n: Int): DataFrame = local(corpus.where(col("vec_id") < n))
+    def documents: DataFrame = documentTable.rows(_ => col("text"))
+    def bm25Queries(docs: DataFrame): DataFrame = docs.where(col("doc_id") < 3)
+    def sample(df: DataFrame, idCol: String): DataFrame = df
+    def count(df: DataFrame): Long = df.count()
+  }
+
+  /** `rows` deterministic rows that never materialize: sin-mixed
+    * vectors, or Zipf-ish text whose head words land in most docs. The
+    * index geometry trains on the 1% sample, with one codebook pass; a
+    * generated corpus is cheaper to regenerate than to persist.
+    */
+  private final class Generated(spark: SparkSession, val rows: Long, val wordsPerDoc: Int,
+                                val vocab: Int)
+      extends Source(spark, codebookIters = 1, persistRelation = false) {
     private val cpus = GraftSession.cpus
-    lazy val embeddingTable = new Replica(
-      Tables.embeddings(spark, o.sfDir.get).select("vec_id", "embedding"), "vec_id", o.mult)
-    lazy val documentTable = new Replica(
-      Tables.documents(spark, o.sfDir.get).select("doc_id", "text"), "doc_id", o.mult)
 
     /** 64 sin-mixed dims keyed by the id: cluster structure from the
       * coarse term, per-row jitter from the fine one.
@@ -159,65 +212,33 @@ object IndexServe {
       * [0, 1): w0..w9 land in most docs (the stopword head), the tail
       * is rare.
       */
-    def genText(id: Column): Column =
-      concat_ws(" ", transform(sequence(lit(0), lit(o.wordsPerDoc - 1)), j => {
+    private def genText(id: Column): Column =
+      concat_ws(" ", transform(sequence(lit(0), lit(wordsPerDoc - 1)), j => {
         val u = abs(sin(id * 131.7d + j.cast("double") * 73.3d))
-        concat(lit("w"), floor(u * u * u * u * lit(o.vocab.toDouble)).cast("long").cast("string"))
+        concat(lit("w"), floor(u * u * u * u * lit(vocab.toDouble)).cast("long").cast("string"))
       }))
 
-    /** (vec_id, embedding) */
-    def embeddings: DataFrame = o.genRows match {
-      case Some(n) => spark.range(n).toDF("vec_id").repartition(cpus * 4)
-        .select(col("vec_id"), genEmbedding(col("vec_id")).as("embedding"))
-      case None => embeddingTable.rows(m => transform(col("embedding"), (x, i) =>
-        (x + sin(col("vec_id") * 31 + i * 7 + lit(m * 13)) * lit(0.01d)).cast(FloatType))
-        .as("embedding"))
-    }
-
-    /** `embeddings` as the codes-only legs read it: a replica is written
-      * to parquet first, a generated corpus is regenerated per read.
-      */
-    def servedEmbeddings(dir: String): DataFrame =
-      if (o.genRows.isDefined) embeddings
-      else { embeddings.write.parquet(dir); spark.read.parquet(dir) }
-
-    /** The vectors of `corpus` with ids below `n`, sorted by id, to be
-      * served as a local relation. Generated ones are relabelled past
-      * the corpus ids.
-      */
-    def queryEmbeddings(corpus: DataFrame, n: Int): Seq[(Long, Array[Float])] = {
-      import spark.implicits._
-      val rows = o.genRows match {
-        case Some(total) => spark.range(n).select((col("id") + total + 1L).as("vec_id"),
-          genEmbedding(col("id")).as("embedding"))
-        case None => corpus.where(col("vec_id") < n)
-      }
-      rows.as[(Long, Array[Float])].collect().sortBy(_._1).toSeq
-    }
-
-    def local(rows: Seq[(Long, Array[Float])]): DataFrame = {
-      import spark.implicits._
-      rows.toDF("vec_id", "embedding")
-    }
-
-    /** (doc_id, text) */
-    def documents: DataFrame = o.genRows match {
-      case Some(n) => docRange(0L, n)
-      case None => documentTable.rows(_ => col("text"))
-    }
-
+    def embeddings: DataFrame = spark.range(rows).toDF("vec_id").repartition(cpus * 4)
+      .select(col("vec_id"), genEmbedding(col("vec_id")).as("embedding"))
+    def servedEmbeddings(dir: String): DataFrame = embeddings
+    /** Generated vectors, relabelled past the corpus ids. */
+    def queryEmbeddings(corpus: DataFrame, n: Int): DataFrame =
+      local(spark.range(n).select((col("id") + rows + 1L).as("vec_id"),
+        genEmbedding(col("id")).as("embedding")))
+    def documents: DataFrame = docRange(0L, rows)
     def docRange(from: Long, until: Long): DataFrame = spark.range(from, until)
       .repartition(cpus * 8).select(col("id").as("doc_id"), genText(col("id")).as("text"))
-
-    /** What the index geometry trains on. */
+    def bm25Queries(docs: DataFrame): DataFrame = spark.range(4).select(
+      (col("id") + 1000000000L).as("doc_id"), genText(col("id") * 7L + 3L).as("text"))
     def sample(df: DataFrame, idCol: String): DataFrame =
-      if (o.genRows.isDefined) df.where(pmod(col(idCol), lit(100L)) === 0L) else df
+      df.where(pmod(col(idCol), lit(100L)) === 0L)
+    def count(df: DataFrame): Long = rows
   }
 
   private final case class Leg(warm: Double, cold: Option[Double], rows: Long)
 
-  private final class Ctx(val spark: SparkSession, val o: Opts, val work: String) {
-    val corpus = new Corpus(spark, o)
+  private final class Ctx(val spark: SparkSession, val o: Opts, val src: Source,
+                          val work: String) {
     val cpus: Int = GraftSession.cpus
     private var dropped = true
     def pageCacheDropped: Boolean = o.cold && dropped
@@ -258,13 +279,16 @@ object IndexServe {
     val work = tempDir("graft-indexserve")
     o.shuffle.foreach(n => spark.conf.set(shuffleKey, n.toLong))
     try {
-      val c = new Ctx(spark, o, work)
-      o.mode match {
-        case "ann" if o.genRows.isEmpty && !o.cold => annInMemory(c)
-        case "ann" => annCodesOnly(c)
-        case "bm25" => bm25(c)
-        case "dedup" => dedup(c)
-        case "neg" => neg(c)
+      val src = o.genRows.fold[Source](new SfReplica(spark, o.sfDir.get, o.mult))(n =>
+        new Generated(spark, n, o.wordsPerDoc, o.vocab))
+      val c = new Ctx(spark, o, src, work)
+      // Opts admits --gen-rows for ann and bm25 only
+      ((o.mode, src): @unchecked) match {
+        case ("ann", r: SfReplica) if !o.cold => annInMemory(c, r)
+        case ("ann", _) => annCodesOnly(c)
+        case ("bm25", _) => bm25(c)
+        case ("dedup", r: SfReplica) => dedup(c, r)
+        case ("neg", r: SfReplica) => neg(c, r)
       }
     } finally {
       spark.conf.set(shuffleKey, prior)
@@ -278,9 +302,9 @@ object IndexServe {
     finally spark.stop()
   }
 
-  private def annInMemory(c: Ctx): Seq[(String, Any)] = {
+  private def annInMemory(c: Ctx, r: SfReplica): Seq[(String, Any)] = {
     val o = c.o
-    val emb = c.corpus.embeddings
+    val emb = r.embeddings
     val queries = emb.where(col("vec_id") < 10)
     val cents = Similarity.trainIvfCentroids(emb, o.cells, stride)
     val (idx, buildSec) = timed(AnnIndex.write(emb, s"${c.work}/index", dim = dim,
@@ -288,8 +312,8 @@ object IndexServe {
     val recompute = c.leg()(Similarity.ivfTopK(emb, queries, k, o.cells, stride, o.nprobe,
       centroids = Some(cents)).count())
     val fromDisk = c.leg()(AnnIndex.searchExact(idx, queries, k, o.nprobe).count())
-    Seq("metric" -> "ann_serve", "unit" -> "sec", "sf_dir" -> o.sfDir.get,
-      "mult" -> o.mult, "corpus_rows" -> emb.count(), "reps" -> o.reps,
+    Seq("metric" -> "ann_serve", "unit" -> "sec", "sf_dir" -> r.sfDir,
+      "mult" -> r.mult, "corpus_rows" -> emb.count(), "reps" -> o.reps,
       "index_build" -> buildSec, "search_recompute_ivf" -> recompute.warm,
       "search_from_disk" -> fromDisk.warm, "speedup" -> recompute.warm / fromDisk.warm,
       "nprobe" -> o.nprobe, "n_cells" -> o.cells, "cpus" -> c.cpus)
@@ -304,11 +328,10 @@ object IndexServe {
                                      buildSec: Double)
 
   private def codesOnly(c: Ctx, corpus: DataFrame): CodesOnly = {
-    val train = c.corpus.sample(corpus, "vec_id")
+    val train = c.src.sample(corpus, "vec_id")
     val cents = Similarity.trainIvfCentroids(train, c.o.cells, stride)
-    // one codebook pass on a generated corpus's sample
     val books = Similarity.trainPqCodebooks(train, dim = dim, stride = stride,
-      iters = if (c.o.genRows.isDefined) 1 else 2)
+      iters = c.src.codebookIters)
     val filesPerCell = math.max(1, c.cpus / c.o.nprobe)
     val (idx, buildSec) = timed(AnnIndex.write(corpus, s"${c.work}/index", dim = dim,
       nCells = c.o.cells, stride = stride, centroids = Some(cents), codebooks = Some(books),
@@ -317,56 +340,53 @@ object IndexServe {
   }
 
   private def annCodesOnly(c: Ctx): Seq[(String, Any)] = {
-    val o = c.o
-    val corpus = c.corpus.servedEmbeddings(s"${c.work}/corpus")
+    val (o, src) = (c.o, c.src)
+    val corpus = src.servedEmbeddings(s"${c.work}/corpus")
     val ivf = codesOnly(c, corpus)
-    val queries = c.corpus.local(c.corpus.queryEmbeddings(corpus, 10))
+    val queries = src.queryEmbeddings(corpus, 10)
     val fromDisk = c.leg(coldField = true)(AnnIndex.searchAdc(ivf.index, queries, k,
       o.nprobe, refine = 0).count())
     val recompute = c.leg(coldField = true)(Similarity.ivfPqTopK(corpus, queries, k,
       dim = dim, nCells = o.cells, stride = stride, nprobe = o.nprobe, refine = 0,
       centroids = Some(ivf.centroids), codebooks = Some(ivf.codebooks)).count())
-    val shared = Seq("unit" -> "sec", "corpus_rows" -> o.genRows.getOrElse(corpus.count()),
+    val shared = Seq("unit" -> "sec", "corpus_rows" -> src.count(corpus),
       "reps" -> o.reps, "codes_only" -> true, "refine" -> 0,
       "page_cache_dropped" -> c.pageCacheDropped, "n_cells" -> o.cells, "nprobe" -> o.nprobe,
       "files_per_cell" -> ivf.filesPerCell, "index_build" -> ivf.buildSec,
       "cold_from_disk" -> fromDisk.cold, "warm_from_disk" -> fromDisk.warm,
       "cold_speedup" -> ratio(recompute.cold, fromDisk.cold), "cpus" -> c.cpus)
-    if (o.genRows.isDefined)
-      Seq("metric" -> "ann_serve_gen") ++ shared ++ Seq("generated_corpus" -> true,
-        "index_bytes" -> c.bytesUnder(s"${c.work}/index"),
-        "cold_recompute_gen_ivfpq" -> recompute.cold, "warm_recompute_gen_ivfpq" -> recompute.warm)
-    else
-      Seq("metric" -> "ann_serve_cold") ++ shared ++ Seq("sf_dir" -> o.sfDir.get,
-        "mult" -> o.mult, "cold_recompute_ivfpq" -> recompute.cold,
-        "warm_recompute_ivfpq" -> recompute.warm, "warm_speedup" -> recompute.warm / fromDisk.warm)
+    src match {
+      case _: Generated =>
+        Seq("metric" -> "ann_serve_gen") ++ shared ++ Seq("generated_corpus" -> true,
+          "index_bytes" -> c.bytesUnder(s"${c.work}/index"),
+          "cold_recompute_gen_ivfpq" -> recompute.cold, "warm_recompute_gen_ivfpq" -> recompute.warm)
+      case r: SfReplica =>
+        Seq("metric" -> "ann_serve_cold") ++ shared ++ Seq("sf_dir" -> r.sfDir,
+          "mult" -> r.mult, "cold_recompute_ivfpq" -> recompute.cold,
+          "warm_recompute_ivfpq" -> recompute.warm, "warm_speedup" -> recompute.warm / fromDisk.warm)
+    }
   }
 
   private def bm25(c: Ctx): Seq[(String, Any)] = {
-    val (spark, o) = (c.spark, c.o)
+    val (spark, o, src) = (c.spark, c.o, c.src)
     import spark.implicits._
-    val docs = c.corpus.documents
-    val queries = (o.genRows match {
-      case Some(_) => spark.range(4).select((col("id") + 1000000000L).as("doc_id"),
-        c.corpus.genText(col("id") * 7L + 3L).as("text"))
-      case None => docs.where(col("doc_id") < 3)
-    }).cache()
+    val docs = src.documents
+    val queries = src.bm25Queries(docs).cache()
     def search(index: Bm25Index.Index, share: Option[Double] = None) =
       Bm25Index.search(index, queries, "doc_id", "text", topK = 20, maxDfShare = share)
     def freeGb = new java.io.File(c.work).getUsableSpace / 1e9
     try {
       val dir = s"${c.work}/index"
-      // a generated corpus is cheaper to regenerate than to persist
       def write(d: DataFrame) = Bm25Index.write(d, "doc_id", "text", dir,
-        nBuckets = o.buckets.getOrElse(64),
-        filesPerBucket = o.filesPerBucket, persistRelation = o.genRows.isEmpty)
-      val (index, buildWall) = timed(o.genRows match {
-        case Some(n) if o.slices > 1 =>
-          val per = n / o.slices
-          val seed = write(c.corpus.docRange(0L, per))
+        nBuckets = o.buckets, filesPerBucket = o.filesPerBucket,
+        persistRelation = src.persistRelation)
+      val (index, buildWall) = timed(src match {
+        case g: Generated if o.slices > 1 =>
+          val per = g.rows / o.slices
+          val seed = write(g.docRange(0L, per))
           (1 until o.slices).foreach { i =>
-            Bm25Index.appendDocsBatch(seed, c.corpus.docRange(i * per,
-              if (i == o.slices - 1) n else (i + 1) * per), "doc_id", "text",
+            Bm25Index.appendDocsBatch(seed, g.docRange(i * per,
+              if (i == o.slices - 1) g.rows else (i + 1) * per), "doc_id", "text",
               batchId = i.toLong, filesPerBucket = o.filesPerBucket)
             System.gc() // lets the ContextCleaner drop the slice's shuffle files
             Thread.sleep(2000)
@@ -396,14 +416,14 @@ object IndexServe {
       val fromIndex = c.leg(coldField = true)(search(index).count())
       val recompute = c.leg()(TextAnalysis.bm25Retrieve(docs, queries, "doc_id", "text",
         topK = 20).count())
-      val nDocs = o.genRows.getOrElse(docs.count())
-      o.genRows match {
-        case None =>
-          Seq("metric" -> "bm25_serve", "sf_dir" -> o.sfDir.get, "n_docs" -> nDocs,
+      val nDocs = src.count(docs)
+      src match {
+        case r: SfReplica =>
+          Seq("metric" -> "bm25_serve", "sf_dir" -> r.sfDir, "n_docs" -> nDocs,
             "reps" -> o.reps, "build_wall" -> buildWall, "recompute_med" -> recompute.warm,
             "index_med" -> fromIndex.warm, "speedup" -> recompute.warm / fromIndex.warm,
             "cpus" -> c.cpus)
-        case Some(_) =>
+        case g: Generated =>
           // resident: ONE search DataFrame re-executed per rep, as a
           // server holds it: plan and file listing are paid once, so the
           // per-request partition discovery separates from the data cost
@@ -430,8 +450,8 @@ object IndexServe {
             Some((wall, minFree.get, c.leg()(search(folded).count()),
               o.maxDfShare.map(sh => c.leg()(search(folded, Some(sh)).count()))))
           }
-          Seq("metric" -> "bm25_gen_serve", "n_docs" -> nDocs, "words_per_doc" -> o.wordsPerDoc,
-            "vocab" -> o.vocab, "build_wall" -> buildWall, "index_gb" -> c.bytesUnder(dir) / 1e9,
+          Seq("metric" -> "bm25_gen_serve", "n_docs" -> nDocs, "words_per_doc" -> g.wordsPerDoc,
+            "vocab" -> g.vocab, "build_wall" -> buildWall, "index_gb" -> c.bytesUnder(dir) / 1e9,
             "cold" -> fromIndex.cold, "warm_med" -> fromIndex.warm, "recompute_med" -> recompute.warm,
             "speedup_vs_recompute" -> recompute.warm / fromIndex.warm,
             "warm_resident_med" -> warmResident.warm, "n_cold_rows" -> fromIndex.cold.map(_ => fromIndex.rows),
@@ -451,20 +471,19 @@ object IndexServe {
     } finally queries.unpersist()
   }
 
-  private def dedup(c: Ctx): Seq[(String, Any)] = {
+  private def dedup(c: Ctx, r: SfReplica): Seq[(String, Any)] = {
     val (spark, o) = (c.spark, c.o)
-    val store = c.corpus.documents
+    val store = r.documents
     val nStore = store.count()
-    val table = c.corpus.documentTable
+    val table = r.documentTable
     // fresh ids past the store's: the even ones exact copies of store
-    // docs (dropped), the odd ones salted (mostly kept). Pruning bites
-    // when nBuckets >> batch·bands: 10 docs × 16 bands ≤ 160 of 1024
-    val batch = table.base.where(col("doc_id") < o.batch)
+    // docs (dropped), the odd ones salted (mostly kept)
+    val batch = table.base.where(col("doc_id") < dedupBatch)
       .withColumn("text", when(col("doc_id") % 2 === 0, col("text"))
         .otherwise(concat(col("text"), lit(" zzsalt"), col("doc_id").cast("string"))))
-      .withColumn("doc_id", col("doc_id") + lit(o.mult * table.span))
+      .withColumn("doc_id", col("doc_id") + lit(r.mult * table.span))
     val (index, buildWall) = timed(DedupIndex.write(store, "doc_id", "text",
-      s"${c.work}/index", nBuckets = o.buckets.getOrElse(1024), nSigBuckets = 256))
+      s"${c.work}/index", nBuckets = dedupBuckets, nSigBuckets = 256))
     // the raw store pays its signature pass once, as a deployment that
     // persists signatures would, so the legs time the per-batch cost
     Dedup.minhashSignature(store, "doc_id", "text").write.parquet(s"${c.work}/rawsigs")
@@ -486,7 +505,7 @@ object IndexServe {
     // the auto-sized index for this batch's observed footprint: at high
     // mult the fixed nSigBuckets saturates while the auto-sized verify
     // read stays a slice
-    val (autoB, autoS) = DedupIndex.autoSize(batchDocs = o.batch.toLong,
+    val (autoB, autoS) = DedupIndex.autoSize(batchDocs = dedupBatch.toLong,
       matchesPerBatch = nMatched, storeDocs = nStore)
     val auto = if (autoB == index.nBuckets && autoS == index.nSigBuckets) None else {
       val (idx2, wall) = timed(DedupIndex.write(store, "doc_id", "text",
@@ -495,7 +514,7 @@ object IndexServe {
       require(screen(idx2)(pairs) == dropped, "auto-sized index diverges from fixed config")
       Some((med.warm, wall))
     }
-    Seq("metric" -> "dedup_serve", "sf_dir" -> o.sfDir.get, "mult" -> o.mult,
+    Seq("metric" -> "dedup_serve", "sf_dir" -> r.sfDir, "mult" -> r.mult,
       "n_store" -> nStore, "reps" -> o.reps, "build_wall" -> buildWall,
       "recompute_med" -> recompute.warm, "index_med" -> fromIndex.warm,
       "speedup" -> recompute.warm / fromIndex.warm, "n_dropped" -> dropped.size,
@@ -504,9 +523,9 @@ object IndexServe {
       "loadavg" -> loadavg, "utc" -> java.time.Instant.now().toString)
   }
 
-  private def neg(c: Ctx): Seq[(String, Any)] = {
+  private def neg(c: Ctx, r: SfReplica): Seq[(String, Any)] = {
     val o = c.o
-    val table = c.corpus.embeddingTable
+    val table = r.embeddingTable
     val base = table.base
     val candDepth = 100
     val (margin, dropAbove) = (Some(0.05), true)
@@ -531,15 +550,14 @@ object IndexServe {
 
     // scale leg: the epoch batch and its bounded brute subset are local
     // relations, broadcast in every leg
-    val corpus = c.corpus.servedEmbeddings(s"${c.work}/corpus")
+    val corpus = r.servedEmbeddings(s"${c.work}/corpus")
     val ivf = codesOnly(c, corpus)
-    val qRows = c.corpus.queryEmbeddings(corpus, o.queries)
-    val qAll = c.corpus.local(qRows)
-    val qBrute = c.corpus.local(qRows.take(o.bruteQueries))
+    val qAll = r.queryEmbeddings(corpus, o.queries)
+    val qBrute = qAll.limit(o.bruteQueries) // the first of the id-sorted batch
     // positives wrap modulo the id SPAN, not the row count: replica ids
     // are base_id + m·span, so with sparse base ids a row-count modulus
     // would name missing nids and weaken the measured screen
-    val idSpan = o.mult.toLong * table.span
+    val idSpan = r.mult.toLong * table.span
     val posAll = positives(qAll, idSpan)
     val posBrute = positives(qBrute, idSpan)
     val indexChain = c.leg()(Similarity.hardNegativesFrom(
@@ -550,7 +568,7 @@ object IndexServe {
       margin, dropAbove).count())
     val idxPerK = indexChain.warm / o.queries * 1000
     val brutePerK = bruteChain.warm / o.bruteQueries * 1000
-    Seq("metric" -> "neg_serve", "unit" -> "sec", "sf_dir" -> o.sfDir.get, "mult" -> o.mult,
+    Seq("metric" -> "neg_serve", "unit" -> "sec", "sf_dir" -> r.sfDir, "mult" -> r.mult,
       "corpus_rows" -> corpus.count(), "reps" -> o.reps, "sanity_gate" -> "pass",
       "codes_only" -> true, "cand_depth" -> candDepth, "k" -> k, "n_queries" -> o.queries,
       "brute_queries" -> o.bruteQueries, "n_cells" -> o.cells, "nprobe" -> o.nprobe,

@@ -1,8 +1,8 @@
 package graft
 
 /** SessionMemo keeps DataFrames and driver-side artifacts in one store:
-  * the first lookup of a key builds, later ones hit, and the counters
-  * Bench reads move by exactly one per lookup.
+  * the first lookup of a key builds, later ones hit, the counters
+  * Bench reads move by exactly one per lookup, and the value is pinned.
   */
 class SessionMemoSpec extends SparkSpec {
 
@@ -39,14 +39,19 @@ class SessionMemoSpec extends SparkSpec {
     assert(second eq first)
   }
 
-  test("a pinned value survives a full GC") {
+  test("a looked-up value is pinned strongly, so a full GC cannot clear it") {
+    // a full GC leaves soft references alone unless memory is short, so
+    // the pin is observed directly: with no pin, or a bound of 0, the
+    // value would be held only by its soft reference
     val k = key("pinned")
     var builds = 0
     def lookup() = SessionMemo.any(spark, k) { builds += 1; new Array[Byte](1 << 10) }
-    val hash = System.identityHashCode(lookup())
+    val first = lookup()
+    assert(SessionMemo.isPinned(first))
     (1 to 3).foreach(_ => System.gc())
     val (again, c) = counted(lookup())
     assert(c == ((1L, 0L)) && builds == 1)
-    assert(System.identityHashCode(again) == hash)
+    assert(again eq first)
+    assert(SessionMemo.isPinned(again))
   }
 }

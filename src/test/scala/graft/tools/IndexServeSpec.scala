@@ -66,8 +66,7 @@ class IndexServeSpec extends SparkSpec {
   }
 
   test("bm25 over an sf table prints bm25_serve") {
-    assertFields(serve("bm25", sfDir, "--reps", "1", "--files-per-bucket", "1"), "bm25_serve",
-      bm25Serve)
+    assertFields(serve("bm25", sfDir, "--reps", "1"), "bm25_serve", bm25Serve)
   }
 
   test("bm25 over a sliced, compacted generated corpus passes the pruned-read gate") {
@@ -82,14 +81,13 @@ class IndexServeSpec extends SparkSpec {
   test("dedup screens identically from the raw store and the index, and restores --shuffle") {
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
-    // a 1-doc batch auto-sizes to 256 buckets: the fixed 16 and the
-    // auto-sized index are both built and screened
-    val out = serve("dedup", sfDir, "--reps", "1", "--shuffle", "3", "--batch", "1",
-      "--buckets", "16")
+    // the 10-doc batch auto-sizes to 4096 buckets: the fixed 1024 and
+    // the auto-sized index are both built and screened
+    val out = serve("dedup", sfDir, "--reps", "1", "--shuffle", "3")
     assert(spark.conf.get(key) == before)
     assertFields(out, "dedup_serve", dedupServe)
     assert(out("n_dropped").asInstanceOf[Int] > 0)
-    assert(out("auto_n_buckets") == 256 && out("auto_index_med") != None)
+    assert(out("auto_n_buckets") == 4096 && out("auto_index_med") != None)
   }
 
   test("neg passes its base-scale sanity gate") {
@@ -101,6 +99,8 @@ class IndexServeSpec extends SparkSpec {
   test("flags outside a mode or its corpus source are rejected before any work") {
     Seq(Seq("dedup", "--gen-rows", "10"), Seq("neg", sfDir, "--cold"),
       Seq("bm25", sfDir, "--cold"), Seq("bm25", sfDir, "--slices", "2"),
+      Seq("bm25", sfDir, "--buckets", "16"), Seq("bm25", sfDir, "--files-per-bucket", "1"),
+      Seq("dedup", sfDir, "--batch", "1"), Seq("dedup", sfDir, "--buckets", "16"),
       Seq("ann", "--gen-rows", "10", "--mult", "2"), Seq("ann", sfDir, "--celss", "8"),
       Seq("ann"), Seq("ann", sfDir, "--gen-rows", "10"), Seq("neg", sfDir, "--batch", "2"),
       Seq("knn", sfDir))

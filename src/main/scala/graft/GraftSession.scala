@@ -14,6 +14,18 @@ import org.apache.spark.sql.SparkSession
   * built inside the operator, at the cost of one extra per-partition
   * sort. [[local]] sessions carry no extensions and keep Spark's plan.
   *
+  * Both [[builder]] and [[local]] size Spark's generated-class cache
+  * (`spark.sql.codegen.cache.maxEntries`, default 100) to graft's
+  * working set. One pass over the registry fills ~2,170 entries, and
+  * the seven perfbench corpus queries more than 100, so under the
+  * default LRU bound every class was evicted before its query came
+  * round again and each warm pass recompiled (and re-JITted) all of
+  * them. The bound is JVM-wide and fixed once: `CodeGenerator` reads
+  * it in its static initializer from `SQLConf.get`, so the first
+  * session that generates code decides it for every later session in
+  * the JVM. A caller's own `.config("spark.sql.codegen.cache.maxEntries",
+  * n)` on the returned Builder still overrides it.
+  *
   * Returns a Builder so callers can still override anything:
   *
   * {{{
@@ -25,6 +37,12 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Generated-class cache bound: ~1.9x the 2,171 entries one registry
+    * pass fills at sf0.001, so the few classes that differ per run age
+    * out without evicting the reused ones.
+    */
+  private[graft] val CodegenCacheEntries = 4096
+
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
@@ -33,6 +51,8 @@ object GraftSession {
       // tensor_pack / tensor_unpack + the codec-elimination rule and
       // the SortedCollect strategy
       .withExtensions(new GraftExtensions)
+      // generated-class cache sized to the working set (see above)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       // runtime re-planning: partition coalescing + skew-join split
       // are load-bearing for the shuffle-heavy operators (SURVEY §4)
       .config("spark.sql.adaptive.enabled", "true")
@@ -56,8 +76,9 @@ object GraftSession {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The bare local session the mains run on: `local[cpus]`, one
-    * shuffle partition per core, no UI. No graft defaults are added;
-    * each main chains the configs it needs.
+    * shuffle partition per core, no UI. No graft defaults are added
+    * except the JVM-wide generated-class cache bound (see above); each
+    * main chains the configs it needs.
     */
   def local(appName: String): SparkSession.Builder =
     SparkSession.builder()
@@ -65,4 +86,5 @@ object GraftSession {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
 }

@@ -160,6 +160,15 @@ object DedupIndex {
     * instead: few big files (~2·fileCostRows rows each), clamped to
     * [256, 4096]. storeDocs = 0 (unobserved) keeps the match-only
     * rule.
+    *
+    * The band side follows the same file-cost rule over the store's
+    * storeDocs·bands band rows: a batch's pruned read opens ~batchDocs·
+    * bands bucket files, so pruning pays only while storeDocs /
+    * batchDocs exceeds `fileCostRows`; otherwise the read is a full
+    * one, sized at ~2·fileCostRows rows a bucket (a 10-doc batch over
+    * a 500-doc store gets 1 bucket, where the batch-only rule gave 4096:
+    * 8,192 write tasks for ~8,000 rows). An observed store never gets
+    * more than pow2Above(storeDocs·bands) buckets.
     */
   def autoSize(batchDocs: Long, matchesPerBatch: Long, bands: Int = 16,
                headroom: Int = 16, maxBuckets: Int = 1 << 16,
@@ -180,7 +189,12 @@ object DedupIndex {
       else // matches cover the store: full read, minimize file count
         math.min(4096, math.max(256,
           pow2Above(storeDocs / (2L * fileCostRows))))
-    (pow2Above(batchDocs * bands * headroom), nSig)
+    val nBand =
+      if (storeDocs <= 0L) pow2Above(batchDocs * bands * headroom)
+      else if (storeDocs / batchDocs >= fileCostRows) // pruning pays
+        pow2Above(math.min(batchDocs * headroom, storeDocs) * bands)
+      else pow2Above(storeDocs * bands / (2L * fileCostRows)) // full read
+    (nBand, nSig)
   }
 
   /** Build from a corpus and publish as the next version. One

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** What the measurement mains share: starting a session, wall-clock
@@ -21,6 +22,16 @@ private[graft] object Measure {
   }
 
   def time(f: => Any): Double = timed(f)._2
+
+  /** `f`'s value and the number of classes Spark's code generator
+    * compiled (generated-class cache misses, JVM-wide) while it ran.
+    */
+  def compiled[A](f: => A): (A, Long) = {
+    def count = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val c0 = count
+    val a = f
+    (a, count - c0)
+  }
 
   def times(reps: Int)(f: => Any): Seq[Double] = (1 to reps).map(_ => time(f))
 

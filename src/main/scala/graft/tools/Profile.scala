@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.{Bench, SparkEntry}
-import graft.tools.Measure.{median, r3, times}
+import graft.tools.Measure.{compiled, median, r3, time, times}
 
 /** Per-query profile of registry queries, on Bench's session. For each
   * query, on a fresh DataFrame every rep:
@@ -16,6 +16,13 @@ import graft.tools.Measure.{median, r3, times}
   *    generation once per plan shape);
   *  - t_warm: median of the remaining reps' count()s, so t_warm - t_plan
   *    isolates execution and scheduling;
+  *  - compiles_first / compiles_warm: classes the code generator
+  *    compiled during the first count() and during all the remaining
+  *    ones. A warm rep finds its classes in the generated-class cache,
+  *    so compiles_warm > 0 marks a query whose generated code changes
+  *    from run to run (a run-varying value inlined in the code, such
+  *    as the codegen stage id adaptive execution assigns as it
+  *    re-plans);
   *  - the census of the final adaptive plan of one collect(): scans
   *    (file and DataSource V2 batch scans), hash and range exchanges,
   *    broadcasts and reused exchanges.
@@ -75,7 +82,8 @@ object Profile {
       val fn = SparkEntry.queries(name)
       def fresh(): DataFrame = fn(spark, sfDir)
       val tPlan = median(times(reps)(fresh().queryExecution.executedPlan))
-      val totals = times(reps)(fresh().count())
+      val (totals, compiles) =
+        (1 to reps).map(_ => compiled(time(fresh().count()))).unzip
       val c = executedCensus(fresh())
       planDir.foreach { d =>
         Files.writeString(Paths.get(d, s"$name.txt"),
@@ -83,7 +91,9 @@ object Profile {
       }
       println(s"""{"query":"$name","sf_dir":"$sfDir","reps":$reps,""" +
         s""""t_plan":${r3(tPlan)},"t_first":${r3(totals.head)},""" +
-        s""""t_warm":${r3(median(totals.tail))},"scans":${c.scans},""" +
+        s""""t_warm":${r3(median(totals.tail))},""" +
+        s""""compiles_first":${compiles.head},"compiles_warm":${compiles.tail.sum},""" +
+        s""""scans":${c.scans},""" +
         s""""hash_exchanges":${c.hashExchanges},""" +
         s""""range_exchanges":${c.rangeExchanges},""" +
         s""""broadcasts":${c.broadcasts},""" +

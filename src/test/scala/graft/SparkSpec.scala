@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session —
-  * Spark session startup dominates test time otherwise).
+  * Spark session startup dominates test time otherwise). It is the
+  * first session in the test JVM, so it carries GraftSession's
+  * generated-class cache bound: the bound is fixed by the first session
+  * that generates code (see GraftSession).
   */
 object TestSession {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -13,6 +16,7 @@ object TestSession {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toLong)
     .getOrCreate()
 
   /** A second session on the shared SparkContext, built by

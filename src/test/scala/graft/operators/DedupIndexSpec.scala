@@ -206,6 +206,25 @@ class DedupIndexSpec extends SparkSpec {
     assert(DedupIndex.autoSize(10L, 10000L)._2 == 65536)
   }
 
+  test("autoSize: an observed store caps the band-bucket count") {
+    // IndexServe's dedup case at sf0.001: a 10-doc batch over the
+    // 500-doc store. The batch-only rule gave 4096 buckets, 8192 write
+    // tasks for ~8,000 band rows; 50 store docs per batch doc cannot
+    // pay for pruned file opens, so the band side is one full-read file
+    assert(DedupIndex.autoSize(10L, 5L, storeDocs = 500L)._1 == 1)
+    // a store large enough to prune keeps the batch footprint rule
+    assert(DedupIndex.autoSize(10L, 5L, storeDocs = 1000000000L)._1 == 4096)
+    // the full-read branch: ~2·8192 band rows a bucket
+    assert(DedupIndex.autoSize(10L, 5L, storeDocs = 80000L)._1 == 128) // 1.28M/16384 = 78
+    for (store <- Seq(1L, 7L, 500L, 81920L, 1L << 20, 1L << 30);
+         batch <- Seq(1L, 10L, 1000L);
+         headroom <- Seq(1, 16, 1 << 14)) {
+      val n = DedupIndex.autoSize(batch, 5L, headroom = headroom, storeDocs = store)._1
+      assert(n >= 1 && java.lang.Integer.bitCount(n) == 1, s"$batch/$store: $n")
+      assert(n < 2L * store * 16, s"$batch/$store/$headroom: $n over the store's band rows")
+    }
+  }
+
   test("appendBatch invalidates the cached listing: the same Index " +
       "object sees appended rows without re-opening") {
     val dir = Files.createTempDirectory("graft-dedupidx-inval").toString

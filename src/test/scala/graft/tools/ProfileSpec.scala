@@ -66,6 +66,10 @@ class ProfileSpec extends SparkSpec {
         .!(ProcessLogger(s => out.append(s).append('\n'), _ => ()))
       assert(exit == 0, s"Profile exited $exit:\n$out")
       assert(out.toString.contains("\"query\":\"q_arrow_roundtrip\""), out.toString)
+      // every line counts compiles; a fresh JVM compiles the first query's classes
+      val firsts = """"compiles_first":(\d+),"compiles_warm":\d+""".r
+        .findAllMatchIn(out.toString).map(_.group(1).toLong).toSeq
+      assert(firsts.size == 2 && firsts.head > 0, out.toString)
       val left = Option(tmp.listFiles).toSeq.flatten.map(_.getName)
         .filter(_.startsWith("graft-"))
       assert(left.isEmpty, s"left behind in java.io.tmpdir: $left")

@@ -25,10 +25,15 @@ class CodegenCacheSpec extends SparkSpec {
     assert(second == 0, s"$second of $first classes recompiled")
   }
 
-  test("the perfbench corpus queries: the second pass compiles nothing") {
+  test("the perfbench corpus queries: the second pass reuses their classes") {
     val corpus = Seq("q_embed_neardup", "q_dedup_minhash", "q_dedup_simhash",
       "q_bpe_tokenize", "q_bigram_lm", "q_gopher_rules", "q_lang_id")
     val (first, second) = twice(corpus.foreach(q => SparkEntry.queries(q)(spark, sfDir).collect()))
-    assert(second == 0, s"$second of $first classes recompiled")
+    // Not 0: adaptive execution numbers whole-stage codegen stages per
+    // run and the id is part of the generated source, so a stage that
+    // gets a new id recompiles identical code (4 classes in some runs).
+    // At Spark's default bound every class of the pass recompiles: it
+    // touches more than 100 (107 in perfbench's corpus pass).
+    assert(second <= 8, s"$second of $first classes recompiled")
   }
 }
